@@ -1245,6 +1245,12 @@ def _estate_params() -> tuple[str, str, str, str, str]:
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.text_index import (
         _TEXT_FORMAT,
     )
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
+        verified_gate_meta,
+    )
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
+        media_gate_meta,
+    )
 
     text = _json.dumps(
         {"format": _TEXT_FORMAT, "kind": "ivfpq", "d": 8, "n": 2, "salt": "emb"},
@@ -1254,20 +1260,8 @@ def _estate_params() -> tuple[str, str, str, str, str]:
         {"format": _MEDIA_FORMAT, "kind": "binary", "codec": "fake"},
         sort_keys=True,
     )
-    gate = _json.dumps(
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": 3,
-            "num_hashes": 12,
-            "bands": 4,
-            "threshold": 0.5,
-        },
-        sort_keys=True,
-    )
-    mgate = _json.dumps(
-        {"format": "media-gate/v1", "bits": 60, "max_hamming": 5},
-        sort_keys=True,
-    )
+    gate = _json.dumps(verified_gate_meta(3, 12, 4, 0.5), sort_keys=True)
+    mgate = _json.dumps(media_gate_meta(60, 5), sort_keys=True)
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.counting_state import (
         CORPUS_FORMAT,
     )
@@ -1343,6 +1337,7 @@ def _build_estate_into(
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
         _sig_schema,
         gate_batch_verified_attributed,
+        verified_gate_meta,
     )
 
     root = os.path.dirname(roots["text_idx"])
@@ -1380,16 +1375,7 @@ def _build_estate_into(
 
     # gate state + decision logs: the standard 3-generation verified
     # replay, persisted in the drain's own layout
-    _cs.stamp_meta(
-        roots["gate_state"],
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": 3,
-            "num_hashes": 12,
-            "bands": 4,
-            "threshold": 0.5,
-        },
-    )
+    _cs.stamp_meta(roots["gate_state"], verified_gate_meta(3, 12, 4, 0.5))
     _cs.stamp_corpus_meta(roots["gate_corpus"], "doc_id", "text")
     sig_all = minhash_signature(docs, "doc_id", "text", 3, 12).localCheckpoint()
     state = spark.createDataFrame([], _sig_schema(12))
@@ -1424,12 +1410,10 @@ def _build_estate_into(
     )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
         gate_media_batch_attributed,
+        media_gate_meta,
     )
 
-    _cs.stamp_meta(
-        roots["media_gate_state"],
-        {"format": "media-gate/v1", "bits": 60, "max_hamming": 5},
-    )
+    _cs.stamp_meta(roots["media_gate_state"], media_gate_meta(60, 5))
     all_media = _mm.media_from_documents(docs)
     msig_all = ahash_signatures(all_media, n=60).select(
         F.col("media_id").alias("doc"), "sig"
@@ -1535,6 +1519,12 @@ def _estate_catalog_sql(
     from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_mm import (
         _media_gate_sig_ctes,
     )
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
+        VERIFIED_GATE_FORMAT,
+    )
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
+        MEDIA_GATE_FORMAT,
+    )
 
     p_text, p_media, p_gate, p_mgate, p_corpus = _estate_params()
     text_pred = (
@@ -1579,7 +1569,7 @@ def _estate_catalog_sql(
              (SELECT COUNT(*) FROM tblk), 3, CAST(NULL AS BIGINT),
              CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
       UNION ALL
-      SELECT 'gate_state', 'gate-state', 'verified-dedup-gate/v1', 'text',
+      SELECT 'gate_state', 'gate-state', '{VERIFIED_GATE_FORMAT}', 'text',
              '{p_gate}',
              (SELECT COUNT(*) FROM adm WHERE doc IN (SELECT doc FROM sig)),
              {gate_dirs}, CAST(NULL AS BIGINT),
@@ -1596,7 +1586,7 @@ def _estate_catalog_sql(
              (SELECT COUNT(*) FROM mblk), 3, CAST(NULL AS BIGINT),
              CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
       UNION ALL
-      SELECT 'media_gate_state', 'gate-state', 'media-gate/v1', 'media',
+      SELECT 'media_gate_state', 'gate-state', '{MEDIA_GATE_FORMAT}', 'media',
              '{p_mgate}',
              (SELECT COUNT(*) FROM madm), {gate_dirs}, CAST(NULL AS BIGINT),
              CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)

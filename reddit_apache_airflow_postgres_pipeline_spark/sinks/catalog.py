@@ -32,6 +32,12 @@ from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as 
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+    dedup_gate as _dg,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+    media_gate as _mg,
+)
 
 CATALOG_SCHEMA = (
     "name string, category string, kind string, modality string, "
@@ -40,9 +46,9 @@ CATALOG_SCHEMA = (
 )
 
 _GATE_MODALITY = {
-    "dedup-gate/v1": "text",
-    "verified-dedup-gate/v1": "text",
-    "media-gate/v1": "media",
+    _dg.GATE_FORMAT: "text",
+    _dg.VERIFIED_GATE_FORMAT: "text",
+    _mg.MEDIA_GATE_FORMAT: "media",
 }
 
 # the drains stamp their out_dir with this marker

@@ -42,10 +42,14 @@ def write_atomic_csv(
     # embedded quotes RFC4180 quote-DOUBLED ("" not \") — the dialect
     # Postgres `COPY ... WITH (FORMAT csv, QUOTE '"')` and Python's csv
     # module (the reference's writer) both speak; Spark's default
-    # backslash escape corrupts such values on the PG wire path.
+    # backslash escape corrupts such values on the PG wire path. Spark's
+    # writer also trims whitespace at field ends by default; Python's
+    # csv module keeps it, so both trims are switched off.
     writer.write.option("header", header).option("emptyValue", "").option(
         "nullValue", ""
-    ).option("escape", '"').mode("overwrite").csv(out_dir)
+    ).option("escape", '"').option("ignoreLeadingWhiteSpace", False).option(
+        "ignoreTrailingWhiteSpace", False
+    ).mode("overwrite").csv(out_dir)
     try:
         if single_file:
             parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))

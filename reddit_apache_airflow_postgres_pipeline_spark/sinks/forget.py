@@ -87,9 +87,9 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
 )
 
 _GATE_LOADERS = {
-    "dedup-gate/v1": lambda sp, sd: _dg._load_state(sp, sd),
-    "verified-dedup-gate/v1": None,  # needs num_hashes from the meta
-    "media-gate/v1": lambda sp, sd: _mg._load_media_state(sp, sd),
+    _dg.GATE_FORMAT: lambda sp, sd: _dg._load_state(sp, sd),
+    _dg.VERIFIED_GATE_FORMAT: None,  # needs num_hashes from the meta
+    _mg.MEDIA_GATE_FORMAT: lambda sp, sd: _mg._load_media_state(sp, sd),
 }
 
 _INDEX_READERS = {
@@ -120,7 +120,7 @@ def _erase_gate_state(
     rename, subsumed dirs deleted after. Skips the fold entirely when
     no forgotten row is present (the re-sweep passes' cheap probe).
     Returns rows removed."""
-    if kind == "verified-dedup-gate/v1":
+    if kind == _dg.VERIFIED_GATE_FORMAT:
         loader = lambda sp, sd: _dg._load_sig_state(  # noqa: E731
             sp, sd, int(params["num_hashes"])
         )
@@ -136,7 +136,7 @@ def _erase_gate_state(
     next_gen = min(min(ids_of.values(), default=0), 0) - 1
     _clean_stray_tmps(path)
     tmp = os.path.join(path, _TMP_PREFIX + "fold")
-    key = "bk" if kind == "dedup-gate/v1" else "doc"
+    key = "bk" if kind == _dg.GATE_FORMAT else "doc"
     survivors.distinct().repartition(key).write.mode("overwrite").parquet(tmp)
     os.replace(tmp, os.path.join(path, f"batch_id={next_gen}"))
     for d in all_dirs:

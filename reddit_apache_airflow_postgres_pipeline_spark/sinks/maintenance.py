@@ -144,7 +144,7 @@ def _compact_for(spark: SparkSession, row, path: str) -> None:
             _vi.COMPACTORS[row["kind"]](spark, path, None)
         return
     if row["category"] == "gate-state":
-        if row["kind"] == "verified-dedup-gate/v1":
+        if row["kind"] == _dg.VERIFIED_GATE_FORMAT:
             # the signature fold needs the store's frozen num_hashes —
             # read it from the same stamped meta the loaders verify
             # (caught by q_ops_maintenance_fixedpoint: the in-process
@@ -161,8 +161,8 @@ def _compact_for(spark: SparkSession, row, path: str) -> None:
             _dg.compact_sig_state(spark, path, int(meta["num_hashes"]))
             return
         folder = {
-            "dedup-gate/v1": _dg.compact_state,
-            "media-gate/v1": _mg.compact_media_state,
+            _dg.GATE_FORMAT: _dg.compact_state,
+            _mg.MEDIA_GATE_FORMAT: _mg.compact_media_state,
         }[row["kind"]]
         folder(spark, path)
         return

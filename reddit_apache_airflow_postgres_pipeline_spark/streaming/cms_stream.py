@@ -28,21 +28,21 @@ streaming or sketches; this extends the engine per the build brief.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import cms_build
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
+)
 
 _CELLS = "row int, col int, c long"
 _KEYS = ["row", "col"]
 _MANIFEST = _cs.MANIFEST
-
-# Compact once the store accumulates this many batch_id=* dirs (same
-# listing-cliff rationale as dedup_gate._COMPACT_AFTER_DIRS).
-_COMPACT_AFTER_DIRS = 16
 
 # thin aliases: tests and callers address the store through this module
 _state_subdirs = _cs.state_subdirs
@@ -115,7 +115,7 @@ def run_cms_available_now(
     text_col: str | None = None,
     d: int = 4,
     w: int = 256,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain ``input_dir`` (parquet files) into the sketch store with an
     availableNow trigger. When ``text_col`` is given, each row's text is
@@ -124,26 +124,13 @@ def run_cms_available_now(
     its ``key_col`` value. Per-batch overwrite + the checkpoint give
     exactly-once counting across restarts and retries."""
     _cs.stamp_meta(state_dir, _meta(d, w))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
         occ = occurrences_from_batch(batch_df, key_col, text_col)
-        cms_build(occ, key_col, d=d, w=w).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
+        write_batch(cms_build(occ, key_col, d=d, w=w), state_dir, batch_id)
+        compact_if_due(
+            state_dir, compact_after_dirs, compact_state,
+            batch_df.sparkSession, state_dir, exclude_from=batch_id,
         )
-        if _cs.live_dir_count(state_dir) > compact_after_dirs:
-            compact_state(
-                batch_df.sparkSession, state_dir, exclude_from=batch_id
-            )
 
-    (
-        stream.writeStream.foreachBatch(_update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _update)

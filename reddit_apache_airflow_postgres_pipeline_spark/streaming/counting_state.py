@@ -3,7 +3,7 @@ the generation-folding layout behind the CMS stream (cms_stream.py)
 and the quantile-sketch stream (qsketch_stream.py), generalized over
 the cell key columns.
 
-Layout contract (identical to the dedup gate's, plus the manifest):
+Layout contract (streaming/drain.py's, plus the manifest):
 per-micro-batch parquet dirs under ``state_dir/batch_id=<i>`` with
 idempotent overwrite; compaction folds live dirs into a new generation
 dir (negative batch_id). Because SUM-merged counting state has no
@@ -29,7 +29,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-MANIFEST = "_subsumed.json"
+# the per-batch layout lives in streaming/drain.py; re-exported here
+# because the counting stores' callers address it through this module
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (  # noqa: F401
+    MANIFEST,
+    live_dir_count,
+    state_subdirs,
+    subsumed_ids,
+)
+
 META = "_meta.json"
 
 # every gate drain stamps its out_dir with this marker so the admitted
@@ -107,37 +115,6 @@ def check_meta(state_dir: str, expected: dict) -> None:
             f"state store {state_dir} format mismatch ({detail}) — "
             "rebuild the store instead of merging incompatible state"
         )
-
-
-def state_subdirs(state_dir: str) -> dict[str, int]:
-    """{path: batch_id} for every ``batch_id=*`` dir in the store."""
-    if not os.path.isdir(state_dir):
-        return {}
-    out = {}
-    for d in os.listdir(state_dir):
-        p = os.path.join(state_dir, d)
-        if d.startswith("batch_id=") and os.path.isdir(p):
-            out[p] = int(d.split("=", 1)[1])
-    return out
-
-
-def subsumed_ids(state_dir: str) -> set[int]:
-    """Exclusion set = the NEWEST (most negative id) generation's
-    manifest. Older generations are in that manifest by construction,
-    so one file answers for the whole history; no generations → empty.
-    Driver-side and file-count sized, like the dedup gate's listing.
-    Generations written by a manifest-FREE store (max-merge state
-    tolerates duplicate dirs and has no raw readers) carry no manifest
-    file and exclude nothing."""
-    gens = {p: i for p, i in state_subdirs(state_dir).items() if i < 0}
-    if not gens:
-        return set()
-    newest = min(gens, key=gens.get)
-    path = os.path.join(newest, MANIFEST)
-    if not os.path.exists(path):
-        return set()
-    with open(path) as f:
-        return set(json.load(f))
 
 
 def read_counts(
@@ -269,10 +246,3 @@ def compact_counts(
         if i in fold_ids:
             shutil.rmtree(p, ignore_errors=True)
     return True
-
-
-def live_dir_count(state_dir: str) -> int:
-    """Number of dirs a reader would actually fold — the compaction
-    trigger metric."""
-    excluded = subsumed_ids(state_dir)
-    return sum(1 for i in state_subdirs(state_dir).values() if i not in excluded)

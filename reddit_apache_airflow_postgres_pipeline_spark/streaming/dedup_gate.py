@@ -30,8 +30,10 @@ matching buckets.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,45 +44,72 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
     minhash_band_keys,
     minhash_signature,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+    counting_state as _cs,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    state_subdirs as _state_subdirs,  # tests and sinks/forget.py use it
+)
 
 _BK_SCHEMA = "doc long, bk string"
 
-# Compact once the state store accumulates this many batch_id=* dirs.
-# Without compaction the store grows one directory per micro-batch
-# forever and every batch re-lists + re-opens all of them — a listing
-# cliff around 10^5 batches.
-_COMPACT_AFTER_DIRS = 16
+# the state stores' format markers (counting_state.stamp_meta); the
+# estate sinks classify, fold and erase gate state by these names
+GATE_FORMAT = "dedup-gate/v1"
+VERIFIED_GATE_FORMAT = "verified-dedup-gate/v1"
+
+
+def gate_meta(n: int, num_hashes: int, bands: int) -> dict:
+    """The raw bucket gate's state marker: format plus geometry."""
+    return {
+        "format": GATE_FORMAT, "n": n, "num_hashes": num_hashes,
+        "bands": bands,
+    }
+
+
+def verified_gate_meta(
+    n: int, num_hashes: int, bands: int, threshold: float
+) -> dict:
+    """The verified gate's state marker: format, geometry, threshold."""
+    return {
+        "format": VERIFIED_GATE_FORMAT, "n": n, "num_hashes": num_hashes,
+        "bands": bands, "threshold": threshold,
+    }
+
+
+def _read_state(
+    spark: SparkSession,
+    state_dir: str,
+    schema: str,
+    before_batch: int | None = None,
+) -> DataFrame:
+    """Read a gate's accepted-state store as ``schema`` — empty while
+    nothing was written. ``before_batch`` excludes state written by
+    batch ids ≥ that id: a RETRIED micro-batch must not see its own
+    failed attempt's rows (it would reject every one of its docs as a
+    duplicate of itself). Generations (negative ids) are always
+    included — they only ever fold batches that committed before the
+    current one."""
+    try:
+        df = spark.read.schema(schema + ", batch_id long").parquet(state_dir)
+    except AnalysisException:
+        return spark.createDataFrame([], schema)
+    if before_batch is not None:
+        df = df.filter(F.col("batch_id") < before_batch)
+    return df.drop("batch_id")
 
 
 def _load_state(
     spark: SparkSession, state_dir: str, before_batch: int | None = None
 ) -> DataFrame:
-    """Read the accepted-band-key store. ``before_batch`` excludes state
-    written by batch ids ≥ that id: a RETRIED micro-batch must not see
-    its own failed attempt's keys (it would reject every one of its
-    docs as a duplicate of itself). Generations (negative ids) are
-    always included — they only ever fold batches that committed before
-    the current one."""
-    try:
-        df = spark.read.schema(_BK_SCHEMA + ", batch_id long").parquet(
-            state_dir
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], _BK_SCHEMA)
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.select("doc", "bk")
-
-
-def _state_subdirs(state_dir: str) -> list[str]:
-    if not os.path.isdir(state_dir):
-        return []
-    return [
-        os.path.join(state_dir, d)
-        for d in os.listdir(state_dir)
-        if d.startswith("batch_id=")
-        and os.path.isdir(os.path.join(state_dir, d))
-    ]
+    """Read the accepted-band-key store (:func:`_read_state`)."""
+    return _read_state(spark, state_dir, _BK_SCHEMA, before_batch)
 
 
 def _fold_state_dirs(
@@ -129,10 +158,7 @@ def _fold_state_dirs(
     Repartitioning on the store's probe key also pre-clusters it for
     the bucketed-table layout the module docstring prescribes at scale.
     """
-    all_dirs = _state_subdirs(state_dir)
-    ids = {
-        d: int(os.path.basename(d).split("=", 1)[1]) for d in all_dirs
-    }
+    ids = _state_subdirs(state_dir)
     old_dirs = [
         d
         for d, i in ids.items()
@@ -213,22 +239,11 @@ def bucket_sig_state(
     per batch, the candidate join reads only matching ``bk`` buckets
     and the signature join only matching ``doc`` buckets, neither side
     re-shuffling the store. Returns (keys_table, sigs_table)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    return _write_bucketed_pair(
+        spark, _load_sig_state(spark, state_dir, num_hashes),
+        lambda t: band_keys_of_signature(t, num_hashes, bands),
+        table_prefix, path, num_buckets,
     )
-
-    sigs = _load_sig_state(spark, state_dir, num_hashes)
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    write_bucketed(
-        band_keys_of_signature(sigs_t, num_hashes, bands),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    return spark.table(f"{table_prefix}_keys"), sigs_t
 
 
 # -- hybrid bucketed + flat state for the VERIFIED drain ----------------------
@@ -245,12 +260,106 @@ _BUCKETED_MARKER = "_bucketed_gen.json"
 
 
 def _newest_gen_id(state_dir: str) -> int | None:
-    gens = [
-        int(os.path.basename(d).split("=", 1)[1])
-        for d in _state_subdirs(state_dir)
-        if os.path.basename(d).startswith("batch_id=-")
-    ]
-    return min(gens) if gens else None
+    gens = [i for i in _state_subdirs(state_dir).values() if i < 0]
+    return min(gens, default=None)
+
+
+def _write_bucketed_pair(
+    spark: SparkSession,
+    sigs: DataFrame,
+    band_keys: Callable[[DataFrame], DataFrame],
+    table_prefix: str,
+    path: str,
+    num_buckets: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Write a signature relation as the hybrid layout's two external
+    tables — ``<prefix>_sigs`` bucketed on ``doc`` and its derived
+    ``band_keys`` as ``<prefix>_keys`` bucketed on ``bk``. Shared by
+    the verified text gate and the media gate, which differ only in
+    the signature schema and band-key function. Returns (keys_table,
+    sigs_table)."""
+    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
+        write_bucketed,
+    )
+
+    write_bucketed(
+        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
+        os.path.join(path, "sigs"), sort_cols=["doc"],
+    )
+    sigs_t = spark.table(f"{table_prefix}_sigs")
+    write_bucketed(
+        band_keys(sigs_t), f"{table_prefix}_keys", ["bk"], num_buckets,
+        os.path.join(path, "keys"), sort_cols=["bk"],
+    )
+    return spark.table(f"{table_prefix}_keys"), sigs_t
+
+
+def _refresh_bucketed(
+    spark: SparkSession,
+    state_dir: str,
+    sig_schema: str,
+    band_keys: Callable[[DataFrame], DataFrame],
+    table_prefix: str,
+    path: str,
+    num_buckets: int,
+) -> None:
+    """Rebuild the bucketed tables from the CURRENT generation dirs
+    only (the folded history — per-batch tail dirs stay flat) and
+    stamp the marker with the generation id they mirror. A no-op when
+    the store has no generation yet."""
+    gen = _newest_gen_id(state_dir)
+    if gen is None:
+        return
+    sigs = (
+        spark.read.schema(sig_schema + ", batch_id long")
+        .parquet(state_dir)
+        .filter(F.col("batch_id") < 0)
+        .drop("batch_id")
+    )
+    _write_bucketed_pair(
+        spark, sigs, band_keys, table_prefix, path, num_buckets
+    )
+    tmp = os.path.join(path, _BUCKETED_MARKER + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"gen": gen}, f)
+    os.replace(tmp, os.path.join(path, _BUCKETED_MARKER))
+
+
+def _load_hybrid(
+    spark: SparkSession,
+    state_dir: str,
+    sig_schema: str,
+    load_flat: Callable[[int | None], DataFrame],
+    band_keys: Callable[[DataFrame], DataFrame],
+    table_prefix: str,
+    path: str,
+    before_batch: int | None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """(state_sigs, state_keys) for one gate batch: bucketed tables for
+    the folded generation + flat reads for the per-batch tail, IF the
+    marker proves the tables mirror the store's current generation;
+    otherwise ``load_flat(before_batch)`` (state_keys None → the
+    kernel derives them). The fallback means a crash between fold and
+    refresh degrades to the flat plan, never to a wrong admission."""
+    marker = os.path.join(path, _BUCKETED_MARKER)
+    gen = _newest_gen_id(state_dir)
+    if gen is None or not os.path.exists(marker):
+        return load_flat(before_batch), None
+    with open(marker) as f:
+        mirrored = json.load(f).get("gen")
+    if mirrored != gen:
+        return load_flat(before_batch), None
+    tail = (
+        spark.read.schema(sig_schema + ", batch_id long")
+        .parquet(state_dir)
+        .filter(F.col("batch_id") >= 0)
+    )
+    if before_batch is not None:
+        tail = tail.filter(F.col("batch_id") < before_batch)
+    tail = tail.drop("batch_id")
+    sigs_t = spark.table(f"{table_prefix}_sigs")
+    keys_t = spark.table(f"{table_prefix}_keys")
+    return sigs_t.unionByName(tail), keys_t.unionByName(band_keys(tail))
 
 
 def refresh_bucketed_sig_state(
@@ -262,40 +371,13 @@ def refresh_bucketed_sig_state(
     path: str,
     num_buckets: int = 8,
 ) -> None:
-    """Rebuild the verified gate's bucketed tables from the CURRENT
-    generation dirs only (the folded history — per-batch tail dirs stay
-    flat) and stamp the marker with the generation id they mirror. A
-    no-op when the store has no generation yet."""
-    import json as _json
-
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    """Rebuild the verified gate's bucketed tables from the current
+    generation (:func:`_refresh_bucketed`)."""
+    _refresh_bucketed(
+        spark, state_dir, _sig_schema(num_hashes),
+        lambda t: band_keys_of_signature(t, num_hashes, bands),
+        table_prefix, path, num_buckets,
     )
-
-    gen = _newest_gen_id(state_dir)
-    if gen is None:
-        return
-    sigs = (
-        spark.read.schema(_sig_schema(num_hashes) + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") < 0)
-        .drop("batch_id")
-    )
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    write_bucketed(
-        band_keys_of_signature(
-            spark.table(f"{table_prefix}_sigs"), num_hashes, bands
-        ),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    tmp = os.path.join(path, _BUCKETED_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"gen": gen}, f)
-    os.replace(tmp, os.path.join(path, _BUCKETED_MARKER))
 
 
 def _load_sig_state_hybrid(
@@ -307,37 +389,13 @@ def _load_sig_state_hybrid(
     path: str,
     before_batch: int | None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """(state_sigs, state_keys) for one gate batch: bucketed tables for
-    the folded generation + flat reads for the per-batch tail, IF the
-    marker proves the tables mirror the store's current generation;
-    otherwise the plain flat load (state_keys None → the kernel
-    derives them). The fallback means a crash between fold and refresh
-    degrades to the flat plan, never to a wrong admission."""
-    import json as _json
-
-    marker = os.path.join(path, _BUCKETED_MARKER)
-    gen = _newest_gen_id(state_dir)
-    if gen is None or not os.path.exists(marker):
-        return _load_sig_state(spark, state_dir, num_hashes, before_batch), None
-    with open(marker) as f:
-        mirrored = _json.load(f).get("gen")
-    if mirrored != gen:
-        return _load_sig_state(spark, state_dir, num_hashes, before_batch), None
-    tail = (
-        spark.read.schema(_sig_schema(num_hashes) + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") >= 0)
+    """The verified gate's hybrid state read (:func:`_load_hybrid`)."""
+    return _load_hybrid(
+        spark, state_dir, _sig_schema(num_hashes),
+        lambda bb: _load_sig_state(spark, state_dir, num_hashes, bb),
+        lambda t: band_keys_of_signature(t, num_hashes, bands),
+        table_prefix, path, before_batch,
     )
-    if before_batch is not None:
-        tail = tail.filter(F.col("batch_id") < before_batch)
-    tail = tail.drop("batch_id")
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    keys_t = spark.table(f"{table_prefix}_keys")
-    state_sigs = sigs_t.unionByName(tail)
-    state_keys = keys_t.unionByName(
-        band_keys_of_signature(tail, num_hashes, bands)
-    )
-    return state_sigs, state_keys
 
 
 def gate_batch(
@@ -438,7 +496,7 @@ def run_gate_available_now(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
     min_quality: float | None = None,
     decisions_dir: str | None = None,
     broadcast_batch: bool = False,
@@ -469,25 +527,8 @@ def run_gate_available_now(
     legacy state of unknown geometry — rebuild them, or stamp once via
     counting_state.stamp_meta(..., migrate=True) if their parameters
     are known."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        counting_state as _cs,
-    )
-
-    _cs.stamp_meta(
-        state_dir,
-        {
-            "format": "dedup-gate/v1",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-        },
-    )
+    _cs.stamp_meta(state_dir, gate_meta(n, num_hashes, bands))
     _cs.stamp_corpus_meta(out_dir, id_col, "text")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         state = _load_state(
@@ -497,11 +538,8 @@ def run_gate_available_now(
             batch_df, state, id_col, text_col, n, num_hashes, bands,
             min_quality=min_quality, broadcast_batch=broadcast_batch,
         )
-        out_sub = os.path.join(out_dir, f"batch_id={batch_id}")
-        accepted.write.mode("overwrite").parquet(out_sub)
-        accepted_keys.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
-        )
+        out_sub = write_batch(accepted, out_dir, batch_id)
+        write_batch(accepted_keys, state_dir, batch_id)
         if decisions_dir is not None:
             sp = batch_df.sparkSession
             gated = batch_df
@@ -527,21 +565,13 @@ def run_gate_available_now(
                     F.coalesce(F.col("__a"), F.lit(False)).alias("admitted"),
                 )
             )
-            dec.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
-        if len(_state_subdirs(state_dir)) > compact_after_dirs:
-            compact_state(
-                batch_df.sparkSession, state_dir, exclude_from=batch_id
-            )
+            write_batch(dec, decisions_dir, batch_id)
+        compact_if_due(
+            state_dir, compact_after_dirs, compact_state,
+            batch_df.sparkSession, state_dir, exclude_from=batch_id,
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, input_dir, schema, checkpoint_dir, _gate)
 
 
 # -- signature-VERIFIED admission -------------------------------------------
@@ -567,18 +597,8 @@ def _load_sig_state(
     num_hashes: int,
     before_batch: int | None = None,
 ) -> DataFrame:
-    """Read the accepted-signature store (same retry-exclusion contract
-    as :func:`_load_state`: a retried batch must not see its own failed
-    attempt's rows; negative generation ids are always included)."""
-    try:
-        df = spark.read.schema(
-            _sig_schema(num_hashes) + ", batch_id long"
-        ).parquet(state_dir)
-    except AnalysisException:
-        return spark.createDataFrame([], _sig_schema(num_hashes))
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.drop("batch_id")
+    """Read the accepted-signature store (:func:`_read_state`)."""
+    return _read_state(spark, state_dir, _sig_schema(num_hashes), before_batch)
 
 
 def _est_rejections(
@@ -829,7 +849,7 @@ def run_verified_gate_available_now(
     num_hashes: int = 12,
     bands: int = 4,
     threshold: float = 0.5,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
     min_quality: float | None = None,
     decisions_dir: str | None = None,
     dup_of_dir: str | None = None,
@@ -868,26 +888,10 @@ def run_verified_gate_available_now(
     drain cannot drift the policy. Compaction folds per-batch dirs into
     a negative-id generation exactly like the raw gate (the state is a
     SET of signature rows; duplicates never change a decision)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        counting_state as _cs,
-    )
-
     _cs.stamp_meta(
-        state_dir,
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "threshold": threshold,
-        },
+        state_dir, verified_gate_meta(n, num_hashes, bands, threshold)
     )
     _cs.stamp_corpus_meta(out_dir, id_col, "text")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -910,41 +914,23 @@ def run_verified_gate_available_now(
                 state_keys=skeys, broadcast_batch=broadcast_batch,
             )
         )
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        accepted_sigs.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
-        )
+        write_batch(accepted, out_dir, batch_id)
+        write_batch(accepted_sigs, state_dir, batch_id)
         if decisions_dir is not None:
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
+            write_batch(decisions, decisions_dir, batch_id)
         if dup_of_dir is not None:
-            blockers.write.mode("overwrite").parquet(
-                os.path.join(dup_of_dir, f"batch_id={batch_id}")
+            write_batch(blockers, dup_of_dir, batch_id)
+        if compact_if_due(
+            state_dir, compact_after_dirs, compact_sig_state,
+            sp, state_dir, num_hashes, exclude_from=batch_id,
+        ) and bucketed is not None:
+            refresh_bucketed_sig_state(
+                sp, state_dir, num_hashes, bands,
+                bucketed["table_prefix"], bucketed["path"],
+                bucketed.get("num_buckets", 8),
             )
-        if len(_state_subdirs(state_dir)) > compact_after_dirs:
-            compact_sig_state(
-                batch_df.sparkSession,
-                state_dir,
-                num_hashes,
-                exclude_from=batch_id,
-            )
-            if bucketed is not None:
-                refresh_bucketed_sig_state(
-                    sp, state_dir, num_hashes, bands,
-                    bucketed["table_prefix"], bucketed["path"],
-                    bucketed.get("num_buckets", 8),
-                )
 
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, input_dir, schema, checkpoint_dir, _gate)
 
 
 def compact_sig_state(

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +49,10 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
     psi_drift_counts,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import token_count
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    drain,
+    write_batch,
+)
 
 _PSI_THRESHOLD = 0.25  # the "major drift" alerting line
 
@@ -70,10 +75,17 @@ def token_length_bins(
     binary payload sizes, and any never-NULL integer Column works. The
     metric is part of the reference's identity exactly like bin_width:
     a reference and its gate must bin the same scalar."""
+    return df.select(_bin(text_col, bin_width, bins, metric))
+
+
+def _bin(
+    text_col: str, bin_width: int, bins: int, metric: Column | None = None
+) -> Column:
+    """The gates' ``bin`` column: ``metric`` (default the token count
+    of ``text_col``) in fixed-width integer bins, the last one
+    open-ended."""
     m = metric if metric is not None else token_count(text_col)
-    return df.select(
-        F.least((m / bin_width).cast("int"), F.lit(bins - 1)).alias("bin")
-    )
+    return F.least((m / bin_width).cast("int"), F.lit(bins - 1)).alias("bin")
 
 
 def payload_size_metric(payload_col: str = "payload") -> Column:
@@ -113,6 +125,26 @@ def write_reference(
     ).parquet(ref_path)
 
 
+def _admitted_rows(
+    spark: SparkSession, out_dir: str, window: int, min_batches: int
+) -> DataFrame | None:
+    """A refresh's input: the gate's admitted rows, ``batch_id``
+    inferred from the partition dirs — None while nothing was
+    admitted."""
+    if window <= 0 or min_batches <= 0:
+        # mirror curation.refreshed_reference_counts: min_batches<=0
+        # would make the hysteresis check pass vacuously and overwrite
+        # the frozen reference with counts from zero batches
+        raise ValueError(
+            f"window and min_batches must be positive, got {window}, "
+            f"{min_batches}"
+        )
+    adm_dir = os.path.join(out_dir, "admitted")
+    if not os.path.isdir(adm_dir):
+        return None
+    return spark.read.parquet(adm_dir)
+
+
 def refresh_reference(
     spark: SparkSession,
     out_dir: str,
@@ -148,18 +180,9 @@ def refresh_reference(
     per admitted batch), the refresh itself is one aggregate over the
     window's rows, and the written reference is pre-aggregated — same
     scan economics as :func:`write_reference`."""
-    if window <= 0 or min_batches <= 0:
-        # mirror curation.refreshed_reference_counts: min_batches<=0
-        # would make the hysteresis check pass vacuously and overwrite
-        # the frozen reference with counts from zero batches
-        raise ValueError(
-            f"window and min_batches must be positive, got {window}, "
-            f"{min_batches}"
-        )
-    adm_dir = os.path.join(out_dir, "admitted")
-    if not os.path.isdir(adm_dir):
+    adm = _admitted_rows(spark, out_dir, window, min_batches)
+    if adm is None:
         return False
-    adm = spark.read.parquet(adm_dir)
     ids = sorted(
         (int(r["batch_id"]) for r in adm.select("batch_id").distinct().collect()),
         reverse=True,
@@ -315,79 +338,103 @@ def run_drift_gate_available_now(
     decision commit and the refresh skips that boundary, and the next
     one re-derives from the same windows; decisions themselves stay
     exactly-once via the per-dir overwrite + checkpoint."""
-    ref_holder = [spark.read.parquet(ref_path)]
-    if "n" not in ref_holder[0].columns:
-        # the r5 format persisted one (bin) row per DOCUMENT; rather
-        # than crash opaquely on every micro-batch, say what to do
-        raise ValueError(
-            f"reference at {ref_path!r} has columns "
-            f"{ref_holder[0].columns} — expected the pre-aggregated "
-            "(bin, n) counts form. Rebuild it once with "
-            "write_reference() on the validated snapshot."
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    ref = _load_reference(
+        spark, ref_path, ["n"], "pre-aggregated (bin, n) counts",
+        "write_reference",
     )
 
+    def _judge(batch_df: DataFrame, ref_counts: DataFrame):
+        stats = batch_psi_stats if ks_threshold is None else batch_drift_stats
+        psi, *ks, n = stats(
+            batch_df, ref_counts, text_col, bin_width, bins, metric
+        )
+        admitted = psi <= threshold and all(k <= ks_threshold for k in ks)
+        dest = "admitted" if admitted else "quarantined"
+        return [(dest, batch_df)], [(psi, *ks, admitted, n)]
+
+    _drift_drain(
+        spark, input_dir, schema, out_dir, ref_path, checkpoint_dir, ref,
+        _judge, _decision_schema("", ks_threshold is not None),
+        refresh_every,
+        lambda sp: refresh_reference(
+            sp, out_dir, ref_path, window=refresh_window,
+            min_batches=refresh_min_batches, text_col=text_col,
+            bin_width=bin_width, bins=bins, metric=metric,
+        ),
+    )
+
+
+def _load_reference(
+    spark: SparkSession, ref_path: str, cols: list[str], form: str,
+    writer: str,
+) -> DataFrame:
+    """Read a gate's frozen reference, failing loud when it lacks
+    ``cols`` — the r5 format persisted one (bin) row per DOCUMENT, and
+    rather than crash opaquely on every micro-batch, say what to do."""
+    ref = spark.read.parquet(ref_path)
+    if not set(cols) <= set(ref.columns):
+        raise ValueError(
+            f"reference at {ref_path!r} has columns {ref.columns} — "
+            f"expected the {form} form. Rebuild it once with {writer}() "
+            "on the validated snapshot."
+        )
+    return ref
+
+
+def _decision_schema(key: str, ks: bool) -> str:
+    """Decision-log row schema: the grouped gate's ``key`` column
+    (``"<group> string, "``, empty for the scalar gate), psi, ks when
+    armed, the admission flag and the batch's document count."""
+    return (
+        f"{key}psi double, {'ks double, ' if ks else ''}"
+        "admitted boolean, n_docs long"
+    )
+
+
+def _drift_drain(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    out_dir: str,
+    ref_path: str,
+    checkpoint_dir: str,
+    ref: DataFrame,
+    judge: Callable[[DataFrame, DataFrame], tuple[list, list]],
+    dschema: str,
+    refresh_every: int | None,
+    refresh: Callable[[SparkSession], bool],
+) -> None:
+    """The drift runners' shared batch body. ``judge(batch_df, ref)``
+    returns ``(routes, decision)``: ``routes`` pairs each output subdir
+    (``admitted``/``quarantined``) with the rows it receives, and
+    ``decision`` holds the decision-log rows (``dschema``). The batch
+    is persisted while it is judged and routed: the decision aggregate
+    populates the cache and the writes replay from it — ONE scan of
+    the batch's source files instead of three (ADVICE r5). After every
+    ``refresh_every``-th batch ``refresh(spark)`` re-baselines the
+    reference, and a True return swaps the refreshed file in for the
+    batches that follow."""
+
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        ref_counts = ref_holder[0]
-        # persist: the decision aggregate populates the cache and the
-        # admit/quarantine write replays from it — ONE scan of the
-        # batch's source files instead of three (ADVICE r5)
+        nonlocal ref
         batch_df.persist()
         try:
-            if ks_threshold is None:
-                psi, n = batch_psi_stats(
-                    batch_df, ref_counts, text_col, bin_width, bins, metric
-                )
-                admitted = psi <= threshold
-                decision, dschema = [(psi, admitted, n)], (
-                    "psi double, admitted boolean, n_docs long"
-                )
-            else:
-                psi, ks, n = batch_drift_stats(
-                    batch_df, ref_counts, text_col, bin_width, bins, metric
-                )
-                admitted = psi <= threshold and ks <= ks_threshold
-                decision, dschema = [(psi, ks, admitted, n)], (
-                    "psi double, ks double, admitted boolean, n_docs long"
-                )
-            dest = "admitted" if admitted else "quarantined"
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, dest, f"batch_id={batch_id}")
-            )
+            routes, decision = judge(batch_df, ref)
+            for dest, rows in routes:
+                write_batch(rows, os.path.join(out_dir, dest), batch_id)
             # batch_id lives in the partition dir name — readers of the
             # decisions log get it back as the inferred partition column
-            batch_df.sparkSession.createDataFrame(
-                decision, dschema
-            ).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "decisions", f"batch_id={batch_id}")
+            write_batch(
+                batch_df.sparkSession.createDataFrame(decision, dschema),
+                os.path.join(out_dir, "decisions"), batch_id,
             )
         finally:
             batch_df.unpersist()
         if refresh_every and (batch_id + 1) % refresh_every == 0:
-            if refresh_reference(
-                batch_df.sparkSession,
-                out_dir,
-                ref_path,
-                window=refresh_window,
-                min_batches=refresh_min_batches,
-                text_col=text_col,
-                bin_width=bin_width,
-                bins=bins,
-                metric=metric,
-            ):
-                ref_holder[0] = batch_df.sparkSession.read.parquet(ref_path)
+            if refresh(batch_df.sparkSession):
+                ref = batch_df.sparkSession.read.parquet(ref_path)
 
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _gate)
 
 
 # -- per-group gating (multi-source ingest) ---------------------------------
@@ -404,13 +451,7 @@ def group_reference_counts(
     ≤ (groups × bins)-row ``(group, bin, n)`` relation — the grouped
     gate's persisted-reference form."""
     return (
-        df.select(
-            F.col(group_col),
-            F.least(
-                (token_count(text_col) / bin_width).cast("int"),
-                F.lit(bins - 1),
-            ).alias("bin"),
-        )
+        df.select(F.col(group_col), _bin(text_col, bin_width, bins))
         .groupBy(group_col, "bin")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
@@ -459,23 +500,14 @@ def refresh_group_reference(
         refreshed_reference_counts_by_group,
     )
 
-    if window <= 0 or min_batches <= 0:
-        raise ValueError(
-            f"window and min_batches must be positive, got {window}, "
-            f"{min_batches}"
-        )
-    adm_dir = os.path.join(out_dir, "admitted")
-    if not os.path.isdir(adm_dir):
+    adm = _admitted_rows(spark, out_dir, window, min_batches)
+    if adm is None:
         return False
-    adm = spark.read.parquet(adm_dir)  # batch_id inferred (partition dirs)
     per_batch = (
         adm.select(
             F.col(group_col),
             F.col("batch_id").alias("b"),
-            F.least(
-                (token_count(text_col) / bin_width).cast("int"),
-                F.lit(bins - 1),
-            ).alias("bin"),
+            _bin(text_col, bin_width, bins),
         )
         .groupBy(group_col, "b", "bin")
         .agg(F.count("*").cast("bigint").alias("n"))
@@ -596,102 +628,39 @@ def run_group_drift_gate_available_now(
     (no reference to judge them against). The per-group decision
     relation is ≤ |groups| rows — decision-sized — and is the only
     thing collected; binning and PSI run distributed."""
-    ref_holder = [spark.read.parquet(ref_path)]
-    if "n" not in ref_holder[0].columns or group_col not in ref_holder[0].columns:
-        raise ValueError(
-            f"reference at {ref_path!r} has columns {ref_holder[0].columns} — "
-            f"expected the ({group_col}, bin, n) grouped counts form. "
-            "Rebuild it once with write_group_reference() on the "
-            "validated snapshot."
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    ref = _load_reference(
+        spark, ref_path, ["n", group_col],
+        f"({group_col}, bin, n) grouped counts", "write_group_reference",
     )
 
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        ref_counts = ref_holder[0]
-        batch_df.persist()
-        try:
-            if ks_threshold is None:
-                stats = batch_group_psi(
-                    batch_df, ref_counts, group_col, text_col, bin_width, bins
-                ).collect()
-                ok = {r[group_col]: r["psi"] <= threshold for r in stats}
-                decision = [
-                    (
-                        r[group_col],
-                        float(r["psi"]),
-                        bool(ok[r[group_col]]),
-                        int(r["n_docs"]),
-                    )
-                    for r in stats
-                ]
-                dschema = (
-                    f"{group_col} string, psi double, admitted boolean, "
-                    "n_docs long"
-                )
-            else:
-                stats = batch_group_drift_stats(
-                    batch_df, ref_counts, group_col, text_col, bin_width, bins
-                ).collect()
-                ok = {
-                    r[group_col]: r["psi"] <= threshold
-                    and r["ks"] <= ks_threshold
-                    for r in stats
-                }
-                decision = [
-                    (
-                        r[group_col],
-                        float(r["psi"]),
-                        float(r["ks"]),
-                        bool(ok[r[group_col]]),
-                        int(r["n_docs"]),
-                    )
-                    for r in stats
-                ]
-                dschema = (
-                    f"{group_col} string, psi double, ks double, "
-                    "admitted boolean, n_docs long"
-                )
-            admitted_groups = [g for g, good in ok.items() if good]
-            adm = batch_df.filter(F.col(group_col).isin(admitted_groups))
-            qua = batch_df.filter(
-                ~F.col(group_col).isin(admitted_groups)
-                | F.col(group_col).isNull()
+    def _judge(batch_df: DataFrame, ref_counts: DataFrame):
+        stats = (
+            batch_group_psi if ks_threshold is None else batch_group_drift_stats
+        )
+        decision = []
+        for r in stats(
+            batch_df, ref_counts, group_col, text_col, bin_width, bins
+        ).collect():
+            ks = [] if ks_threshold is None else [float(r["ks"])]
+            ok = r["psi"] <= threshold and all(k <= ks_threshold for k in ks)
+            decision.append(
+                (r[group_col], float(r["psi"]), *ks, bool(ok), int(r["n_docs"]))
             )
-            adm.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "admitted", f"batch_id={batch_id}")
-            )
-            qua.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "quarantined", f"batch_id={batch_id}")
-            )
-            batch_df.sparkSession.createDataFrame(
-                decision, dschema
-            ).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "decisions", f"batch_id={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-        if refresh_every and (batch_id + 1) % refresh_every == 0:
-            if refresh_group_reference(
-                batch_df.sparkSession,
-                out_dir,
-                ref_path,
-                group_col=group_col,
-                window=refresh_window,
-                min_batches=refresh_min_batches,
-                text_col=text_col,
-                bin_width=bin_width,
-                bins=bins,
-            ):
-                ref_holder[0] = batch_df.sparkSession.read.parquet(ref_path)
+        admitted_groups = [d[0] for d in decision if d[-2]]
+        adm = batch_df.filter(F.col(group_col).isin(admitted_groups))
+        qua = batch_df.filter(
+            ~F.col(group_col).isin(admitted_groups) | F.col(group_col).isNull()
+        )
+        return [("admitted", adm), ("quarantined", qua)], decision
 
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drift_drain(
+        spark, input_dir, schema, out_dir, ref_path, checkpoint_dir, ref,
+        _judge,
+        _decision_schema(f"{group_col} string, ", ks_threshold is not None),
+        refresh_every,
+        lambda sp: refresh_group_reference(
+            sp, out_dir, ref_path, group_col=group_col,
+            window=refresh_window, min_batches=refresh_min_batches,
+            text_col=text_col, bin_width=bin_width, bins=bins,
+        ),
     )

@@ -42,8 +42,13 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import (
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import cms_stream
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
+)
 
-_COMPACT_AFTER_DIRS = 16
 _CAND_SCHEMA = "key string"
 
 
@@ -157,7 +162,7 @@ def run_hh_available_now(
     text_col: str | None = None,
     d: int = 4,
     w: int = 256,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain ``input_dir`` (parquet files) through the tracker with an
     availableNow trigger: per batch, fold the batch's sketch into the
@@ -167,11 +172,6 @@ def run_hh_available_now(
     batch's reads exclude its own failed attempt in BOTH stores."""
     _cs.stamp_meta(_cms_dir(state_dir), cms_stream._meta(d, w))
     _cs.stamp_meta(_cand_dir(state_dir), _cand_meta(phi))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
         # persist: the sketch write and the candidate flagging both
@@ -186,9 +186,7 @@ def run_hh_available_now(
         ).persist()
         try:
             cmsd = _cms_dir(state_dir)
-            cms_build(occ, "key", d=d, w=w).write.mode("overwrite").parquet(
-                os.path.join(cmsd, f"batch_id={batch_id}")
-            )
+            write_batch(cms_build(occ, "key", d=d, w=w), cmsd, batch_id)
             # probe against the sketch INCLUDING this batch (its own dir
             # just landed); on retry the overwrite makes this idempotent
             sketch = cms_stream.read_sketch(
@@ -200,20 +198,16 @@ def run_hh_available_now(
                 .filter(_meets_bar(F.col("est"), F.col("N"), phi))
                 .select("key")
             )
-            flagged.write.mode("overwrite").parquet(
-                os.path.join(_cand_dir(state_dir), f"batch_id={batch_id}")
-            )
+            write_batch(flagged, _cand_dir(state_dir), batch_id)
         finally:
             occ.unpersist()
-        if _cs.live_dir_count(cmsd) > compact_after_dirs:
-            cms_stream.compact_state(spark, cmsd, exclude_from=batch_id)
-        if len(_cs.state_subdirs(_cand_dir(state_dir))) > compact_after_dirs:
-            compact_candidates(spark, state_dir, exclude_from=batch_id)
+        compact_if_due(
+            cmsd, compact_after_dirs, cms_stream.compact_state,
+            spark, cmsd, exclude_from=batch_id,
+        )
+        compact_if_due(
+            _cand_dir(state_dir), compact_after_dirs, compact_candidates,
+            spark, state_dir, exclude_from=batch_id,
+        )
 
-    (
-        stream.writeStream.foreachBatch(_update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _update)

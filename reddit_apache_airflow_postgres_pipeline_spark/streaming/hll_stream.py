@@ -33,17 +33,17 @@ extends the engine per the build brief.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import _HLL_BITS, hll_build
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
-
-# Compact once the store accumulates this many batch_id=* dirs (same
-# listing-cliff rationale as cms_stream._COMPACT_AFTER_DIRS).
-_COMPACT_AFTER_DIRS = 16
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
+)
 
 
 def _registers_schema(group_cols: list[str] | None) -> str:
@@ -132,7 +132,7 @@ def run_hll_available_now(
     text_col: str | None = None,
     group_cols: list[str] | None = None,
     p: int = 5,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain ``input_dir`` (parquet files) into the sketch store with an
     availableNow trigger. When ``text_col`` is given, each row's text is
@@ -143,11 +143,6 @@ def run_hll_available_now(
     would forgive even a double-applied batch."""
     group_cols = group_cols or []
     _cs.stamp_meta(state_dir, _meta(p))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
         if text_col is not None:
@@ -158,21 +153,10 @@ def run_hll_available_now(
             )
         else:
             occ = batch_df.select(*group_cols, key_col)
-        hll_build(occ, key_col, group_cols, p=p).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"batch_id={batch_id}"))
-        if len(_state_subdirs(state_dir)) > compact_after_dirs:
-            compact_state(
-                batch_df.sparkSession,
-                state_dir,
-                group_cols,
-                exclude_from=batch_id,
-            )
+        write_batch(hll_build(occ, key_col, group_cols, p=p), state_dir, batch_id)
+        compact_if_due(
+            state_dir, compact_after_dirs, compact_state,
+            batch_df.sparkSession, state_dir, group_cols, exclude_from=batch_id,
+        )
 
-    (
-        stream.writeStream.foreachBatch(_update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _update)

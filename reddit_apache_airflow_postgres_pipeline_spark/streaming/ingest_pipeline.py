@@ -26,6 +26,7 @@ state — how multi-stage ingest is actually operated at 100 TB/day.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -38,10 +39,14 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
 )
 
 
-def _has_batches(path: str) -> bool:
-    return os.path.isdir(path) and any(
+def _batches(path: str) -> str | None:
+    """The glob over ``path``'s batch dirs — the next stage's input —
+    or None while the previous stage has written no batch there."""
+    if os.path.isdir(path) and any(
         d.startswith("batch_id=") for d in os.listdir(path)
-    )
+    ):
+        return os.path.join(path, "batch_id=*")
+    return None
 
 
 def _paths(work_dir: str, names: tuple[str, ...]) -> dict[str, str]:
@@ -80,8 +85,8 @@ def _run_dedup_stage(
         raise ValueError(
             f"unknown dedup_policy {dedup_policy!r} (bucket | verified)"
         )
-    admitted = os.path.join(p["drift"], "admitted")
-    if _has_batches(admitted):
+    admitted = _batches(os.path.join(p["drift"], "admitted"))
+    if admitted:
         runner = (
             dedup_gate.run_gate_available_now
             if dedup_policy == "bucket"
@@ -89,7 +94,7 @@ def _run_dedup_stage(
         )
         runner(
             spark,
-            os.path.join(admitted, "batch_id=*"),
+            admitted,
             schema,
             p["accepted"],
             p["dedup_state"],
@@ -111,10 +116,11 @@ def _run_span_stage(
     """Stage 3 of the full chains: the exact duplicated-substring gate
     drains ``accepted/`` into ``spanned/`` — first-wins passage cuts
     with state shared across whatever feeds produced the corpus."""
-    if _has_batches(p["accepted"]):
+    accepted = _batches(p["accepted"])
+    if accepted:
         span_gate.run_span_gate_available_now(
             spark,
-            os.path.join(p["accepted"], "batch_id=*"),
+            accepted,
             schema,
             p["spanned"],
             p["span_state"],
@@ -131,6 +137,11 @@ def _run_span_stage(
 # resolve to an all-null column
 _SPANNED_SCHEMA = (
     "doc_id long, n_tokens long, dropped_tokens long, text_clean string"
+)
+
+_CHAIN_PATHS = (
+    "drift", "accepted", "dedup_state", "cms", "hll",
+    "ckpt_drift", "ckpt_dedup", "ckpt_cms", "ckpt_hll",
 )
 
 _FULL_CHAIN_PATHS = (
@@ -182,10 +193,11 @@ def _run_index_stage(
         vector_index_stream,
     )
 
-    if index_path is not None and _has_batches(p["spanned"]):
+    spanned = _batches(p["spanned"])
+    if index_path is not None and spanned:
         vector_index_stream.run_text_index_append_available_now(
             spark,
-            os.path.join(p["spanned"], "batch_id=*"),
+            spanned,
             _SPANNED_SCHEMA,
             index_path,
             p["ckpt_index"],
@@ -203,8 +215,8 @@ def _run_sketch_stage(
 ) -> None:
     """Stage N of every chain: CMS + HLL maintenance over whatever
     corpus directory the previous stage produced."""
-    if _has_batches(corpus_dir):
-        corpus_glob = os.path.join(corpus_dir, "batch_id=*")
+    corpus_glob = _batches(corpus_dir)
+    if corpus_glob:
         cms_stream.run_cms_available_now(
             spark, corpus_glob, schema, p["cms"], p["ckpt_cms"],
             text_col=text_col,
@@ -213,6 +225,66 @@ def _run_sketch_stage(
             spark, corpus_glob, schema, p["hll"], p["ckpt_hll"],
             text_col=text_col,
         )
+
+
+def _chain(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    work_dir: str,
+    ref_path: str,
+    drift_runner: Callable[..., None],
+    drift_kwargs: dict,
+    id_col: str,
+    text_col: str,
+    psi_threshold: float,
+    dedup_policy: str,
+    dedup_kwargs: dict | None,
+) -> dict[str, str]:
+    """The ingest chain's body, shared by its scalar and grouped forms,
+    which differ only in stage 1: ``drift_runner`` (the scalar or the
+    grouped drift gate, called with ``drift_kwargs``). Drift → dedup →
+    sketches over ``accepted/``. Returns the path map."""
+    p = _paths(work_dir, _CHAIN_PATHS)
+    drift_runner(
+        spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
+        text_col=text_col, threshold=psi_threshold, **drift_kwargs,
+    )
+    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
+    _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
+    return p
+
+
+def _full_chain(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    work_dir: str,
+    ref_path: str,
+    drift_runner: Callable[..., None],
+    drift_kwargs: dict,
+    id_col: str,
+    text_col: str,
+    psi_threshold: float,
+    dedup_policy: str,
+    dedup_kwargs: dict | None,
+    span_k: int,
+    index_path: str | None,
+) -> dict[str, str]:
+    """The full chain's body, shared by its scalar and grouped forms
+    exactly as :func:`_chain` is: drift → dedup → span gate → sketches
+    over the span-cleaned corpus → the optional index stage. Returns
+    the path map."""
+    p = _paths(work_dir, _FULL_CHAIN_PATHS)
+    drift_runner(
+        spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
+        text_col=text_col, threshold=psi_threshold, **drift_kwargs,
+    )
+    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
+    _run_span_stage(spark, schema, p, id_col, text_col, span_k)
+    _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
+    _run_index_stage(spark, p, index_path)
+    return p
 
 
 def run_ingest_pipeline_available_now(
@@ -234,33 +306,11 @@ def run_ingest_pipeline_available_now(
     ``cms``, ``hll`` + one checkpoint dir per stage. Returns the path
     map. Later stages are skipped cleanly when an earlier gate admitted
     nothing yet (their input dir has no batches)."""
-    p = _paths(
-        work_dir,
-        (
-            "drift",
-            "accepted",
-            "dedup_state",
-            "cms",
-            "hll",
-            "ckpt_drift",
-            "ckpt_dedup",
-            "ckpt_cms",
-            "ckpt_hll",
-        ),
+    return _chain(
+        spark, input_dir, schema, work_dir, ref_path,
+        drift_gate.run_drift_gate_available_now, {},
+        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
     )
-    drift_gate.run_drift_gate_available_now(
-        spark,
-        input_dir,
-        schema,
-        p["drift"],
-        ref_path,
-        p["ckpt_drift"],
-        text_col=text_col,
-        threshold=psi_threshold,
-    )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
-    _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
-    return p
 
 
 def run_group_ingest_available_now(
@@ -288,34 +338,12 @@ def run_group_ingest_available_now(
     :func:`run_ingest_pipeline_available_now`; batch form replayed by
     plans/registry_ingest.q_ingest_chain_by_group (oracle-paired),
     parity-pinned by tests/test_ingest_pipeline.py."""
-    p = _paths(
-        work_dir,
-        (
-            "drift",
-            "accepted",
-            "dedup_state",
-            "cms",
-            "hll",
-            "ckpt_drift",
-            "ckpt_dedup",
-            "ckpt_cms",
-            "ckpt_hll",
-        ),
+    return _chain(
+        spark, input_dir, schema, work_dir, ref_path,
+        drift_gate.run_group_drift_gate_available_now,
+        {"group_col": group_col},
+        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
     )
-    drift_gate.run_group_drift_gate_available_now(
-        spark,
-        input_dir,
-        schema,
-        p["drift"],
-        ref_path,
-        p["ckpt_drift"],
-        group_col=group_col,
-        text_col=text_col,
-        threshold=psi_threshold,
-    )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
-    _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
-    return p
 
 
 def run_full_ingest_available_now(
@@ -349,22 +377,12 @@ def run_full_ingest_available_now(
     plans/registry_ingest.q_ingest_chain_spans_audit
     (full DuckDB oracle), parity-pinned by
     tests/test_ingest_pipeline.py."""
-    p = _paths(work_dir, _FULL_CHAIN_PATHS)
-    drift_gate.run_drift_gate_available_now(
-        spark,
-        input_dir,
-        schema,
-        p["drift"],
-        ref_path,
-        p["ckpt_drift"],
-        text_col=text_col,
-        threshold=psi_threshold,
+    return _full_chain(
+        spark, input_dir, schema, work_dir, ref_path,
+        drift_gate.run_drift_gate_available_now, {},
+        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
+        span_k, index_path,
     )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
-    _run_span_stage(spark, schema, p, id_col, text_col, span_k)
-    _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
-    _run_index_stage(spark, p, index_path)
-    return p
 
 
 def run_group_full_ingest_available_now(
@@ -394,23 +412,13 @@ def run_group_full_ingest_available_now(
     exactly-once/restart contract as the other chains; batch form
     replayed by plans/registry_ingest.q_ingest_chain_group_spans (full
     DuckDB oracle), parity-pinned by tests/test_ingest_pipeline.py."""
-    p = _paths(work_dir, _FULL_CHAIN_PATHS)
-    drift_gate.run_group_drift_gate_available_now(
-        spark,
-        input_dir,
-        schema,
-        p["drift"],
-        ref_path,
-        p["ckpt_drift"],
-        group_col=group_col,
-        text_col=text_col,
-        threshold=psi_threshold,
+    return _full_chain(
+        spark, input_dir, schema, work_dir, ref_path,
+        drift_gate.run_group_drift_gate_available_now,
+        {"group_col": group_col},
+        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
+        span_k, index_path,
     )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
-    _run_span_stage(spark, schema, p, id_col, text_col, span_k)
-    _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
-    _run_index_stage(spark, p, index_path)
-    return p
 
 
 # -- media modality chain -----------------------------------------------------
@@ -494,11 +502,11 @@ def run_media_ingest_available_now(
         threshold=psi_threshold,
         metric=drift_gate.payload_size_metric(),
     )
-    admitted = os.path.join(p["drift"], "admitted")
-    if _has_batches(admitted):
+    admitted = _batches(os.path.join(p["drift"], "admitted"))
+    if admitted:
         media_gate.run_media_gate_available_now(
             spark,
-            os.path.join(admitted, "batch_id=*"),
+            admitted,
             schema,
             p["accepted"],
             p["media_state"],
@@ -508,10 +516,11 @@ def run_media_ingest_available_now(
             max_hamming=max_hamming,
             **(gate_kwargs or {}),
         )
-    if index_path is not None and _has_batches(p["accepted"]):
+    accepted = _batches(p["accepted"])
+    if index_path is not None and accepted:
         vector_index_stream.run_media_index_append_available_now(
             spark,
-            os.path.join(p["accepted"], "batch_id=*"),
+            accepted,
             schema,
             index_path,
             p["ckpt_index"],
@@ -595,11 +604,11 @@ def run_multimodal_ingest_available_now(
         text_col=text_col,
         threshold=psi_threshold,
     )
-    adm_text = os.path.join(p["drift"], "admitted")
-    if _has_batches(adm_text):
+    adm_text = _batches(os.path.join(p["drift"], "admitted"))
+    if adm_text:
         drift_gate.run_drift_gate_available_now(
             spark,
-            os.path.join(adm_text, "batch_id=*"),
+            adm_text,
             schema,
             p["mdrift"],
             media_ref_path,
@@ -609,11 +618,11 @@ def run_multimodal_ingest_available_now(
             threshold=psi_threshold,
             metric=drift_gate.payload_size_metric(),
         )
-    adm_both = os.path.join(p["mdrift"], "admitted")
-    if _has_batches(adm_both):
+    adm_both = _batches(os.path.join(p["mdrift"], "admitted"))
+    if adm_both:
         multimodal_gate.run_multimodal_gate_available_now(
             spark,
-            os.path.join(adm_both, "batch_id=*"),
+            adm_both,
             schema,
             p["accepted"],
             p["text_state"],
@@ -628,20 +637,21 @@ def run_multimodal_ingest_available_now(
             max_hamming=max_hamming,
             **(gate_kwargs or {}),
         )
-    if text_index_path is not None and _has_batches(p["accepted"]):
+    accepted = _batches(p["accepted"])
+    if text_index_path is not None and accepted:
         vector_index_stream.run_text_index_append_available_now(
             spark,
-            os.path.join(p["accepted"], "batch_id=*"),
+            accepted,
             schema,
             text_index_path,
             p["ckpt_tindex"],
             id_col=id_col,
             text_col=text_col,
         )
-    if media_index_path is not None and _has_batches(p["accepted"]):
+    if media_index_path is not None and accepted:
         vector_index_stream.run_media_index_append_available_now(
             spark,
-            os.path.join(p["accepted"], "batch_id=*"),
+            accepted,
             schema,
             media_index_path,
             p["ckpt_mindex"],

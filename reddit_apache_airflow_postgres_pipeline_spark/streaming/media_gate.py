@@ -24,11 +24,8 @@ Batch replay oracle-paired as plans/registry_mm.q_media_gate_replay.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import ahash_signatures
 from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
@@ -36,31 +33,39 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-    _BUCKETED_MARKER,
-    _COMPACT_AFTER_DIRS,
     _fold_state_dirs,
-    _newest_gen_id,
-    _state_subdirs,
+    _load_hybrid,
+    _read_state,
+    _refresh_bucketed,
+    _write_bucketed_pair,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
 )
 
 _SIG_SCHEMA = "doc long, sig long"
+
+# the state store's format marker (counting_state.stamp_meta); the
+# estate sinks classify, fold and erase media gate state by it
+MEDIA_GATE_FORMAT = "media-gate/v1"
+
+
+def media_gate_meta(bits: int, max_hamming: int) -> dict:
+    """The media gate's state marker: format plus banding geometry."""
+    return {
+        "format": MEDIA_GATE_FORMAT, "bits": bits, "max_hamming": max_hamming,
+    }
 
 
 def _load_media_state(
     spark: SparkSession, state_dir: str, before_batch: int | None = None
 ) -> DataFrame:
     """Read the accepted-signature store (the family's retry-exclusion
-    contract: a retried batch must not see its own failed attempt's
-    rows; negative generation ids always included)."""
-    try:
-        df = spark.read.schema(_SIG_SCHEMA + ", batch_id long").parquet(
-            state_dir
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], _SIG_SCHEMA)
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.select("doc", "sig")
+    contract — dedup_gate._read_state)."""
+    return _read_state(spark, state_dir, _SIG_SCHEMA, before_batch)
 
 
 def _ham_blockers(
@@ -243,7 +248,7 @@ def run_media_gate_available_now(
     id_col: str = "media_id",
     bits: int = 60,
     max_hamming: int = 5,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
     decisions_dir: str | None = None,
     dup_of_dir: str | None = None,
     min_bytes: int | None = None,
@@ -272,16 +277,8 @@ def run_media_gate_available_now(
     back to the flat read, so the hybrid can change the physical plan
     but never an admission. ``broadcast_batch`` flips the cross-state
     probes so the state streams map-side (see :func:`_ham_blockers`)."""
-    _cs.stamp_meta(
-        state_dir,
-        {"format": "media-gate/v1", "bits": bits, "max_hamming": max_hamming},
-    )
+    _cs.stamp_meta(state_dir, media_gate_meta(bits, max_hamming))
     _cs.stamp_corpus_meta(out_dir, id_col, "media")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -302,38 +299,23 @@ def run_media_gate_available_now(
                 broadcast_batch=broadcast_batch,
             )
         )
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        accepted_sigs.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
-        )
+        write_batch(accepted, out_dir, batch_id)
+        write_batch(accepted_sigs, state_dir, batch_id)
         if decisions_dir is not None:
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
+            write_batch(decisions, decisions_dir, batch_id)
         if dup_of_dir is not None:
-            blockers.write.mode("overwrite").parquet(
-                os.path.join(dup_of_dir, f"batch_id={batch_id}")
+            write_batch(blockers, dup_of_dir, batch_id)
+        if compact_if_due(
+            state_dir, compact_after_dirs, compact_media_state,
+            sp, state_dir, exclude_from=batch_id,
+        ) and bucketed is not None:
+            refresh_bucketed_media_state(
+                sp, state_dir, bits, max_hamming,
+                bucketed["table_prefix"], bucketed["path"],
+                bucketed.get("num_buckets", 8),
             )
-        if len(_state_subdirs(state_dir)) > compact_after_dirs:
-            compact_media_state(
-                batch_df.sparkSession, state_dir, exclude_from=batch_id
-            )
-            if bucketed is not None:
-                refresh_bucketed_media_state(
-                    sp, state_dir, bits, max_hamming,
-                    bucketed["table_prefix"], bucketed["path"],
-                    bucketed.get("num_buckets", 8),
-                )
 
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _gate)
 
 
 def compact_media_state(
@@ -376,22 +358,11 @@ def bucket_media_state(
     tables (``<prefix>_keys`` on bk, ``<prefix>_sigs`` on doc); pass
     them to :func:`gate_media_batch_attributed` as (state_keys,
     state_sigs). Returns (keys_table, sigs_table)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    return _write_bucketed_pair(
+        spark, _load_media_state(spark, state_dir),
+        lambda t: signature_band_keys(t, bits, max_hamming),
+        table_prefix, path, num_buckets,
     )
-
-    sigs = _load_media_state(spark, state_dir)
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    write_bucketed(
-        signature_band_keys(sigs_t, bits, max_hamming),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    return spark.table(f"{table_prefix}_keys"), sigs_t
 
 
 def refresh_bucketed_media_state(
@@ -407,36 +378,11 @@ def refresh_bucketed_media_state(
     generation dirs only and stamp the marker with the generation id
     they mirror — dedup_gate.refresh_bucketed_sig_state's contract for
     the media layout. A no-op when the store has no generation yet."""
-    import json as _json
-
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
-        write_bucketed,
+    _refresh_bucketed(
+        spark, state_dir, _SIG_SCHEMA,
+        lambda t: signature_band_keys(t, bits, max_hamming),
+        table_prefix, path, num_buckets,
     )
-
-    gen = _newest_gen_id(state_dir)
-    if gen is None:
-        return
-    sigs = (
-        spark.read.schema(_SIG_SCHEMA + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") < 0)
-        .drop("batch_id")
-    )
-    write_bucketed(
-        sigs, f"{table_prefix}_sigs", ["doc"], num_buckets,
-        os.path.join(path, "sigs"), sort_cols=["doc"],
-    )
-    write_bucketed(
-        signature_band_keys(
-            spark.table(f"{table_prefix}_sigs"), bits, max_hamming
-        ),
-        f"{table_prefix}_keys", ["bk"], num_buckets,
-        os.path.join(path, "keys"), sort_cols=["bk"],
-    )
-    tmp = os.path.join(path, _BUCKETED_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"gen": gen}, f)
-    os.replace(tmp, os.path.join(path, _BUCKETED_MARKER))
 
 
 def _load_media_state_hybrid(
@@ -454,28 +400,9 @@ def _load_media_state_hybrid(
     generation; otherwise the plain flat load (state_keys None → the
     kernel derives them). A crash between fold and refresh degrades to
     the flat plan, never to a wrong admission."""
-    import json as _json
-
-    marker = os.path.join(path, _BUCKETED_MARKER)
-    gen = _newest_gen_id(state_dir)
-    if gen is None or not os.path.exists(marker):
-        return _load_media_state(spark, state_dir, before_batch), None
-    with open(marker) as f:
-        mirrored = _json.load(f).get("gen")
-    if mirrored != gen:
-        return _load_media_state(spark, state_dir, before_batch), None
-    tail = (
-        spark.read.schema(_SIG_SCHEMA + ", batch_id long")
-        .parquet(state_dir)
-        .filter(F.col("batch_id") >= 0)
+    return _load_hybrid(
+        spark, state_dir, _SIG_SCHEMA,
+        lambda bb: _load_media_state(spark, state_dir, bb),
+        lambda t: signature_band_keys(t, bits, max_hamming),
+        table_prefix, path, before_batch,
     )
-    if before_batch is not None:
-        tail = tail.filter(F.col("batch_id") < before_batch)
-    tail = tail.drop("batch_id")
-    sigs_t = spark.table(f"{table_prefix}_sigs")
-    keys_t = spark.table(f"{table_prefix}_keys")
-    state_sigs = sigs_t.unionByName(tail)
-    state_keys = keys_t.unionByName(
-        signature_band_keys(tail, bits, max_hamming)
-    )
-    return state_sigs, state_keys

@@ -29,8 +29,6 @@ generation chain over the UNION of the two candidate relations).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,16 +44,22 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-    _COMPACT_AFTER_DIRS,
     _est_blockers,
     _load_sig_state,
-    _state_subdirs,
     compact_sig_state,
+    verified_gate_meta,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
     _ham_blockers,
     _load_media_state,
     compact_media_state,
+    media_gate_meta,
 )
 
 
@@ -173,7 +177,7 @@ def run_multimodal_gate_available_now(
     threshold: float = 0.5,
     bits: int = 60,
     max_hamming: int = 5,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
     decisions_dir: str | None = None,
     dup_of_dir: str | None = None,
     broadcast_batch: bool = False,
@@ -191,25 +195,10 @@ def run_multimodal_gate_available_now(
     so "what blocked my doc" distinguishes a text dup from a media
     dup."""
     _cs.stamp_meta(
-        text_state_dir,
-        {
-            "format": "verified-dedup-gate/v1",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "threshold": threshold,
-        },
+        text_state_dir, verified_gate_meta(n, num_hashes, bands, threshold)
     )
-    _cs.stamp_meta(
-        media_state_dir,
-        {"format": "media-gate/v1", "bits": bits, "max_hamming": max_hamming},
-    )
+    _cs.stamp_meta(media_state_dir, media_gate_meta(bits, max_hamming))
     _cs.stamp_corpus_meta(out_dir, id_col, "multimodal")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -223,34 +212,20 @@ def run_multimodal_gate_available_now(
             checkpoint_blockers=dup_of_dir is not None,
             broadcast_batch=broadcast_batch,
         )
-        acc.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        tsigs.write.mode("overwrite").parquet(
-            os.path.join(text_state_dir, f"batch_id={batch_id}")
-        )
-        msigs.write.mode("overwrite").parquet(
-            os.path.join(media_state_dir, f"batch_id={batch_id}")
-        )
+        write_batch(acc, out_dir, batch_id)
+        write_batch(tsigs, text_state_dir, batch_id)
+        write_batch(msigs, media_state_dir, batch_id)
         if decisions_dir is not None:
-            dec.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch_id={batch_id}")
-            )
+            write_batch(dec, decisions_dir, batch_id)
         if dup_of_dir is not None:
-            blk.write.mode("overwrite").parquet(
-                os.path.join(dup_of_dir, f"batch_id={batch_id}")
-            )
-        if len(_state_subdirs(text_state_dir)) > compact_after_dirs:
-            compact_sig_state(
-                sp, text_state_dir, num_hashes, exclude_from=batch_id
-            )
-        if len(_state_subdirs(media_state_dir)) > compact_after_dirs:
-            compact_media_state(sp, media_state_dir, exclude_from=batch_id)
+            write_batch(blk, dup_of_dir, batch_id)
+        compact_if_due(
+            text_state_dir, compact_after_dirs, compact_sig_state,
+            sp, text_state_dir, num_hashes, exclude_from=batch_id,
+        )
+        compact_if_due(
+            media_state_dir, compact_after_dirs, compact_media_state,
+            sp, media_state_dir, exclude_from=batch_id,
+        )
 
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _gate)

@@ -19,17 +19,19 @@ only shuffle and every store dir is bounded by construction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import qsketch_build
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
+)
 
 _CELLS = "bin int, n long"
 _KEYS = ["bin"]
-
-_COMPACT_AFTER_DIRS = 16
 
 _state_subdirs = _cs.state_subdirs
 _subsumed_ids = _cs.subsumed_ids
@@ -89,7 +91,7 @@ def run_qsketch_available_now(
     lo: float,
     hi: float,
     bins: int = 256,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain ``input_dir`` (parquet files) into the sketch store with an
     availableNow trigger: each batch's values bin into [lo, hi) (edge
@@ -97,25 +99,14 @@ def run_qsketch_available_now(
     overwrite + the checkpoint give exactly-once counting across
     restarts and retries."""
     _cs.stamp_meta(state_dir, _meta(lo, hi, bins))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
-        qsketch_build(batch_df, value_col, lo, hi, bins).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"batch_id={batch_id}"))
-        if _cs.live_dir_count(state_dir) > compact_after_dirs:
-            compact_state(
-                batch_df.sparkSession, state_dir, exclude_from=batch_id
-            )
+        write_batch(
+            qsketch_build(batch_df, value_col, lo, hi, bins), state_dir, batch_id
+        )
+        compact_if_due(
+            state_dir, compact_after_dirs, compact_state,
+            batch_df.sparkSession, state_dir, exclude_from=batch_id,
+        )
 
-    (
-        stream.writeStream.foreachBatch(_update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _update)

@@ -28,20 +28,20 @@ grams, the dedup_gate posture.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import dedup_spans, kgrams
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+    write_batch,
+)
 
 _GRAM_SCHEMA = "gram string, c long"
 _KEYS = ["gram"]
-
-# Compact once the store accumulates this many batch_id=* dirs (same
-# listing-cliff rationale as dedup_gate._COMPACT_AFTER_DIRS).
-_COMPACT_AFTER_DIRS = 16
 
 
 def _meta(k: int, min_occurrences: int) -> dict:
@@ -131,7 +131,7 @@ def run_span_gate_available_now(
     text_col: str = "text",
     k: int = 8,
     min_occurrences: int = 2,
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain ``input_dir`` (parquet files) through the span gate with an
     availableNow trigger. Cleaned docs land under
@@ -142,12 +142,6 @@ def run_span_gate_available_now(
     input file is gated exactly once across restarts."""
     _cs.stamp_meta(state_dir, _meta(k, min_occurrences))
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
@@ -157,23 +151,13 @@ def run_span_gate_available_now(
             cleaned, counts = gate_batch(
                 batch_df, prior, id_col, text_col, k, min_occurrences
             )
-            cleaned.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
+            write_batch(cleaned, out_dir, batch_id)
+            write_batch(counts, state_dir, batch_id)
+            compact_if_due(
+                state_dir, compact_after_dirs, compact_state,
+                batch_df.sparkSession, state_dir, exclude_from=batch_id,
             )
-            counts.write.mode("overwrite").parquet(
-                os.path.join(state_dir, f"batch_id={batch_id}")
-            )
-            if _cs.live_dir_count(state_dir) > compact_after_dirs:
-                compact_state(
-                    batch_df.sparkSession, state_dir, exclude_from=batch_id
-                )
         finally:
             batch_df.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_dir, schema, checkpoint_dir, _gate)

@@ -22,13 +22,41 @@ q_sim_ivfpq_recall) are the rebuild signal.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    COMPACT_AFTER_DIRS,
+    compact_if_due,
+    drain,
+)
 
-_COMPACT_AFTER_DIRS = 16
+
+def _drain_into_index(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    store: str,
+    write: Callable[[DataFrame, int], None],
+    compact: Callable[[SparkSession, int], None],
+    compact_after_dirs: int,
+) -> None:
+    """The index drains' shared batch body: micro-batch ``i`` goes to
+    ``write(batch_df, sid)`` under the stream id ``sid =
+    STREAM_ID_BASE + i``, then ``compact(spark, sid)`` runs once
+    ``store`` holds more than ``compact_after_dirs`` live dirs."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        sid = _vi.STREAM_ID_BASE + batch_id
+        write(batch_df, sid)
+        compact_if_due(
+            store, compact_after_dirs, compact, batch_df.sparkSession, sid
+        )
+
+    drain(spark, input_dir, schema, checkpoint_dir, _batch)
 
 
 def run_index_append_available_now(
@@ -40,7 +68,7 @@ def run_index_append_available_now(
     kind: str = "ivfpq",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain ``input_dir`` (parquet files of (id, vector) rows) into a
     persisted index with an availableNow trigger. ``kind``: "ivf"
@@ -54,26 +82,12 @@ def run_index_append_available_now(
     _vi.check_kind(kind)
     append = _vi.APPENDERS[kind]
     compact = _vi.COMPACTORS[kind]
-    store = os.path.join(index_path, _vi.STORE_SUBDIR[kind])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        sid = _vi.STREAM_ID_BASE + batch_id
-        append(batch_df, index_path, id_col, vec_col, batch_id=sid)
-        if _cs.live_dir_count(store) > compact_after_dirs:
-            compact(batch_df.sparkSession, index_path, exclude_from=sid)
-
-    (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_into_index(
+        spark, input_dir, schema, checkpoint_dir,
+        os.path.join(index_path, _vi.STORE_SUBDIR[kind]),
+        lambda df, sid: append(df, index_path, id_col, vec_col, batch_id=sid),
+        lambda sp, sid: compact(sp, index_path, exclude_from=sid),
+        compact_after_dirs,
     )
 
 
@@ -85,7 +99,7 @@ def run_text_index_append_available_now(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain arriving DOCUMENT files (raw text, no vectors) into a
     persisted text index, exactly-once — the composition the r10
@@ -107,31 +121,16 @@ def run_text_index_append_available_now(
     from reddit_apache_airflow_postgres_pipeline_spark.sinks import text_index as _ti
 
     _ti.text_index_meta(index_path)  # fail loud before starting
-    store = _ti.text_index_store(index_path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        sid = _vi.STREAM_ID_BASE + batch_id
-        _ti.append_text_to_index(
-            batch_df, index_path, id_col=id_col, text_col=text_col,
-            batch_id=sid,
-        )
-        if _cs.live_dir_count(store) > compact_after_dirs:
-            _ti.compact_text_index(
-                batch_df.sparkSession, index_path, exclude_from=sid
-            )
-
-    (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_into_index(
+        spark, input_dir, schema, checkpoint_dir,
+        _ti.text_index_store(index_path),
+        lambda df, sid: _ti.append_text_to_index(
+            df, index_path, id_col=id_col, text_col=text_col, batch_id=sid
+        ),
+        lambda sp, sid: _ti.compact_text_index(
+            sp, index_path, exclude_from=sid
+        ),
+        compact_after_dirs,
     )
 
 
@@ -142,7 +141,7 @@ def run_media_index_append_available_now(
     index_path: str,
     checkpoint_dir: str,
     id_col: str = "media_id",
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain arriving MEDIA files (binary payloads + typed metadata, no
     vectors) into a persisted media index, exactly-once — the media twin
@@ -162,30 +161,16 @@ def run_media_index_append_available_now(
     from reddit_apache_airflow_postgres_pipeline_spark.sinks import media_index as _mi
 
     _mi.media_index_meta(index_path)  # fail loud before starting
-    store = _mi.media_index_store(index_path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        sid = _vi.STREAM_ID_BASE + batch_id
-        _mi.append_media_to_index(
-            batch_df, index_path, id_col=id_col, batch_id=sid
-        )
-        if _cs.live_dir_count(store) > compact_after_dirs:
-            _mi.compact_media_index(
-                batch_df.sparkSession, index_path, exclude_from=sid
-            )
-
-    (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_into_index(
+        spark, input_dir, schema, checkpoint_dir,
+        _mi.media_index_store(index_path),
+        lambda df, sid: _mi.append_media_to_index(
+            df, index_path, id_col=id_col, batch_id=sid
+        ),
+        lambda sp, sid: _mi.compact_media_index(
+            sp, index_path, exclude_from=sid
+        ),
+        compact_after_dirs,
     )
 
 
@@ -197,7 +182,7 @@ def run_index_delete_available_now(
     checkpoint_dir: str,
     kind: str = "ivfpq",
     id_col: str = "vec_id",
-    compact_after_dirs: int = _COMPACT_AFTER_DIRS,
+    compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain erasure requests (parquet files of id rows) into a
     persisted index's tombstone store, exactly-once — the streaming
@@ -219,24 +204,12 @@ def run_index_delete_available_now(
     compaction concurrently with an append stream on the same store
     (same rule as the batch API's exclude_from contract)."""
     compact = _vi.COMPACTORS[_vi.check_kind(kind)]
-    tomb = _vi._tomb_store(index_path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def _delete(batch_df: DataFrame, batch_id: int) -> None:
-        sid = _vi.STREAM_ID_BASE + batch_id
-        _vi.delete_from_index(batch_df, index_path, id_col, batch_id=sid)
-        if _cs.live_dir_count(tomb) > compact_after_dirs:
-            compact(batch_df.sparkSession, index_path)
-
-    (
-        stream.writeStream.foreachBatch(_delete)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_into_index(
+        spark, input_dir, schema, checkpoint_dir,
+        _vi._tomb_store(index_path),
+        lambda df, sid: _vi.delete_from_index(
+            df, index_path, id_col, batch_id=sid
+        ),
+        lambda sp, sid: compact(sp, index_path),
+        compact_after_dirs,
     )

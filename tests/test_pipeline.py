@@ -324,6 +324,8 @@ def test_csv_quote_dialect_pg_and_python_csv_parity(spark, tmp_path):
         "back\\slash",
         'tricky ""double"" start"',
         "plain",
+        "  padded title  ",
+        "\tlead tab",
     ]
     df = spark.createDataFrame(
         [(str(i), v) for i, v in enumerate(vals)], "id string, title string"
