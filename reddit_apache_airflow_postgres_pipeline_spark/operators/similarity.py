@@ -1296,6 +1296,44 @@ def binary_hamming_topk(
     )
 
 
+def _l2_sides(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(corpus as (neighbor_id, __c), queries as (query_id, __q)), the
+    vectors cast to array<double> for an exact L2 stage."""
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("__c"),
+    )
+    qv = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("__q"),
+    )
+    return cv, qv
+
+
+def _exact_l2_rerank(
+    cand: DataFrame, cv: DataFrame, qv: DataFrame, k: int
+) -> DataFrame:
+    """(query_id, neighbor_id, dist): the second stage of the staged
+    funnels — the (query_id, neighbor_id) candidates re-scored with
+    exact 6dp L2² over the _l2_sides vectors, top-k per query with
+    id-asc ties."""
+    from pyspark.sql import Window
+
+    scored = (
+        cand.join(cv, "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .withColumn("dist", F.round(l2sq("__c", "__q"), 6))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select("query_id", "neighbor_id", "dist")
+    )
+
+
 def binary_rerank_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1311,30 +1349,11 @@ def binary_rerank_topk(
     floats. This is how binary embeddings are actually served: the
     expensive metric touches a bounded candidate set, never the
     corpus. Recall vs exact L2 is pinned by the registry audit."""
-    from pyspark.sql import Window
-
     cand = binary_hamming_topk(corpus, queries, rerank, id_col, vec_col).select(
         "query_id", "neighbor_id"
     )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__c"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__q"),
-    )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("dist", F.round(l2sq("__c", "__q"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
-    )
+    cv, qv = _l2_sides(corpus, queries, id_col, vec_col)
+    return _exact_l2_rerank(cand, cv, qv, k)
 
 
 def matryoshka_topk(
@@ -1357,14 +1376,7 @@ def matryoshka_topk(
     with the prefix metric swapped in."""
     from pyspark.sql import Window
 
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__c"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__q"),
-    )
+    cv, qv = _l2_sides(corpus, queries, id_col, vec_col)
     coarse = (
         cv.select(
             "neighbor_id", F.slice("__c", 1, prefix_dims).alias("__cp")
@@ -1385,17 +1397,7 @@ def matryoshka_topk(
         .filter(F.col("__rn") <= rerank)
         .select("query_id", "neighbor_id")
     )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("dist", F.round(l2sq("__c", "__q"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
-    )
+    return _exact_l2_rerank(cand, cv, qv, k)
 
 
 def ivfsq_topk(

@@ -1121,26 +1121,17 @@ def q_ingest_chain_by_group_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from reddit_apache_airflow_postgres_pipeline_spark.plans import registry_ml as _ML
 
-_CHAIN_QPRED = "vec_id IN (SELECT vec_id FROM qids)"
 
-
-def _chain_serve_sql(tail: str) -> str:
-    """The composed oracle: the FULL chain replay nested inside a
-    ``sdocs`` subquery (its own WITH scope — the chain's unrolled
+def _chain_sdocs_cte() -> str:
+    """The serving oracle's corpus: the FULL chain replay nested inside
+    an ``sdocs`` subquery (its own WITH scope — the chain's unrolled
     stage CTEs s1/s2 would otherwise collide with the PQ pipeline's),
-    the surviving corpus featurized by the shared embed CTEs, and the
-    composed-index chain over it. Queries are the 8 lowest SURVIVING
-    ids (``qids``) — admission decides who gets to ask, too."""
-    return f"""
-    WITH sdocs AS MATERIALIZED (
+    which registry_ml's chain corpus then featurizes and indexes."""
+    return f"""sdocs AS MATERIALIZED (
       SELECT doc_id, text FROM (
         WITH {_chain_ctes()}
         SELECT acc.doc AS doc_id, t.text
-        FROM acc JOIN t ON t.doc = acc.doc AND t.b = acc.b) z),
-    {_ML._embed_ctes(src="sdocs")},
-    qids AS (SELECT vec_id FROM temb ORDER BY vec_id LIMIT 8),
-    {_ML._ivfpq_ctes(src="temb", qpred=_CHAIN_QPRED)}{tail}
-    """
+        FROM acc JOIN t ON t.doc = acc.doc AND t.b = acc.b) z)"""
 
 
 def _chain_text_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1161,7 +1152,7 @@ def _chain_text_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc.select(F.col("doc").alias("doc_id")), "doc_id", "left_semi"
         )
         return (
-            embed_text(surv, d=8, n=2, salt="emb")
+            embed_text(surv, **_ML._EMB_KW)
             .withColumnRenamed("doc_id", "vec_id")
             .localCheckpoint()
         )
@@ -1169,52 +1160,11 @@ def _chain_text_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo_replay(spark, sf_dir, "text-emb-chain", build)
 
 
-@_q(
-    "q_ingest_chain_text_serve",
-    _chain_serve_sql("\n    SELECT query_id, neighbor_id, dist FROM ivfpqtop"),
-)
-def q_ingest_chain_text_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Admission composed with serving, end to end in one declarative
-    plan — the batch replay of the full-chain index stage
-    (ingest_pipeline._run_index_stage): drift gate → near-dup gate →
-    surviving corpus → embed_text → IVFPQ (16 cells / 4 probes / m=4 /
-    16 codes) → top-5 for the 8 lowest surviving ids. A quarantined or
-    dup-rejected document can neither be SERVED nor ASK — exactly what
-    the streaming chain's stage-5 store serves after a drain
-    (parity of the store itself: tests/test_text_index_stream.py).
-    Scale shape: the replay's checkpointed skinny relations feed one
-    embed shuffle; everything downstream is the audited composed-index
-    plan (broadcast quantizers, banded candidate pruning)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import ivfpq_topk
-
-    e = _chain_text_emb(spark, sf_dir)
-    q = e.orderBy("vec_id").limit(8)
-    return ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=4, n_codes=16, k=5, iters=1
-    )
-
-
-@_q(
-    "q_ingest_chain_text_serve_recall",
-    _chain_serve_sql(
-        ",\n    " + _ML._exl2_recall_sql("ivfpqtop", src="temb", qpred=_CHAIN_QPRED)
-    ),
-)
-def q_ingest_chain_text_serve_recall(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Recall@5 of the chain-composed served index against exact L2
-    over the same surviving featurized corpus — the end-to-end audit:
-    admission filtering, featurization, coarse cells, and code
-    compression all under one measured number."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import ivfpq_topk
-
-    e = _chain_text_emb(spark, sf_dir)
-    q = e.orderBy("vec_id").limit(8)
-    approx = ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=4, n_codes=16, k=5, iters=1
-    )
-    return _ML._recall_vs_exact_l2(e, q, approx)
+# the chain's rows of the serving matrix (registry_ml._SERVE_ROWS): a
+# quarantined or dup-rejected document can neither be served nor ask,
+# exactly what streaming stage 5's store serves after a drain (store
+# parity: tests/test_text_index_stream.py)
+_ML._serve("chain")
 
 
 # -- the serving-estate ops catalog (sinks/catalog.py) ------------------------
@@ -1355,14 +1305,14 @@ def _build_estate_into(
     build = docs.filter(mod3 == 0)
     _ti.write_text_index(
         build, roots["text_idx"], kind="ivfpq",
-        n_cells=16, m=4, n_codes=16, iters=1,
+        n_cells=_ML._IVF_CELLS, m=_ML._PQ_M, n_codes=_ML._PQ_CODES, iters=1,
     )
     _ti.append_text_to_index(
         docs.filter((mod3 == 1) & (F.col("doc_id") < _EST_APPEND_LT)),
         roots["text_idx"], batch_id=1,
     )
     tomb = (
-        embed_text(build, d=8, n=2, salt="emb")
+        embed_text(build, **_ML._EMB_KW)
         .select(F.col("doc_id").alias("vec_id"))
         .orderBy("vec_id")
         .limit(_EST_TOMBS)
@@ -1986,7 +1936,7 @@ def _snapshot_emb_prov(spark: SparkSession, sf_dir: str) -> DataFrame:
         roots = _build_estate(spark, sf_dir)
         pinned = _snap.read_snapshot(spark, roots["gate_corpus"], "all")
         emb = embed_text(
-            pinned.select("doc_id", "text"), d=8, n=2, salt="emb"
+            pinned.select("doc_id", "text"), **_ML._EMB_KW
         ).withColumnRenamed("doc_id", "vec_id")
         prov = pinned.select(
             F.col("doc_id").alias("vec_id"),
@@ -2011,8 +1961,8 @@ def _snapshot_provenance_sql() -> str:
         FROM documents d JOIN gens g ON g.doc = d.doc_id
         WHERE d.doc_id NOT IN (SELECT doc FROM rej)) z),
     {_embed_ctes(src="admd")},
-    qids AS (SELECT vec_id FROM temb ORDER BY vec_id LIMIT 8),
-    {_ivfpq_ctes(src="temb", qpred="vec_id IN (SELECT vec_id FROM qids)")}
+    {_ML._QIDS_CTE},
+    {_ivfpq_ctes(src="temb", qpred=_ML._QIDS_PRED)}
     SELECT t.query_id, t.neighbor_id, t.dist, a.src_batch,
            a.src_batch <= 1 AS in_g01
     FROM ivfpqtop t JOIN admd a ON a.doc_id = t.neighbor_id
@@ -2039,9 +1989,7 @@ def q_snapshot_provenance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ep = _snapshot_emb_prov(spark, sf_dir)
     e = ep.select("vec_id", "embedding")
     q = e.orderBy("vec_id").limit(8)
-    top = ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=4, n_codes=16, k=5, iters=1
-    )
+    top = ivfpq_topk(e, q, k=_ML._PQ_K, **_ML._IVFPQ_KW)
     prov = ep.select(F.col("vec_id").alias("neighbor_id"), "src_batch")
     return top.join(prov, "neighbor_id").select(
         "query_id",
@@ -2247,8 +2195,8 @@ def _incr_serve_sql() -> str:
     tremb AS MATERIALIZED (
       SELECT t.vec_id, t.embedding FROM temb t
       JOIN admd a ON a.doc_id = t.vec_id WHERE a.src_batch <= 1),
-    qids AS (SELECT vec_id FROM temb ORDER BY vec_id LIMIT 8),
-    {_ivfpq_ctes(src="temb", qpred="vec_id IN (SELECT vec_id FROM qids)", train_src="tremb")}
+    {_ML._QIDS_CTE},
+    {_ivfpq_ctes(src="temb", qpred=_ML._QIDS_PRED, train_src="tremb")}
     SELECT query_id, neighbor_id, dist FROM ivfpqtop
     """
 
@@ -2275,8 +2223,8 @@ def _build_incr_index(spark: SparkSession, sf_dir: str) -> str:
     os.makedirs(iroot)
     _snap.build_text_index_at_pin(
         spark, roots["gate_corpus"], "g01", idx,
-        kind="ivfpq", n_cells=16, m=4, n_codes=16, iters=1,
-        d=8, n=2, salt="emb",
+        kind="ivfpq", n_cells=_ML._IVF_CELLS, m=_ML._PQ_M,
+        n_codes=_ML._PQ_CODES, iters=1, **_ML._EMB_KW,
     )
     _snap.advance_text_index_to_pin(
         spark, roots["gate_corpus"], idx, "all", batch_id=1
@@ -2325,7 +2273,9 @@ def q_snapshot_incremental_serve(
         .limit(8)
     )
     qdocs = pinned.join(qids, "doc_id").select("doc_id", "text")
-    return query_text_index(spark, idx, qdocs, k=5, n_probe=4)
+    return query_text_index(
+        spark, idx, qdocs, k=_ML._PQ_K, n_probe=_ML._IVF_PROBES
+    )
 
 
 # -- maintenance fixed-point (r12 verdict #7) --------------------------------
@@ -2401,7 +2351,7 @@ def _incr_serve_recall_sql() -> str:
         _ivfpq_ctes,
     )
 
-    qp = "vec_id IN (SELECT vec_id FROM qids)"
+    qp = _ML._QIDS_PRED
     return f"""
     WITH admd AS MATERIALIZED (
       SELECT doc_id, text, src_batch FROM (
@@ -2413,7 +2363,7 @@ def _incr_serve_recall_sql() -> str:
     tremb AS MATERIALIZED (
       SELECT t.vec_id, t.embedding FROM temb t
       JOIN admd a ON a.doc_id = t.vec_id WHERE a.src_batch <= 1),
-    qids AS (SELECT vec_id FROM temb ORDER BY vec_id LIMIT 8),
+    {_ML._QIDS_CTE},
     {_ivfpq_ctes(src="temb", qpred=qp, train_src="tremb")},
     {_exl2_recall_sql("ivfpqtop", src="temb", qpred=qp)}
     """
@@ -2453,5 +2403,7 @@ def q_snapshot_incremental_serve_recall(
     qdocs = pinned.join(
         q.select(F.col("vec_id").alias("doc_id")), "doc_id"
     ).select("doc_id", "text")
-    approx = query_text_index(spark, idx, qdocs, k=5, n_probe=4)
+    approx = query_text_index(
+        spark, idx, qdocs, k=_ML._PQ_K, n_probe=_ML._IVF_PROBES
+    )
     return _recall_vs_exact_l2(e, q, approx)

@@ -6,6 +6,9 @@ of shingles / hash order / hyperplanes).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1584,7 +1587,29 @@ _L2SQ_SQL = (
     " * (CAST(zp[1] AS DOUBLE) - CAST(zp[2] AS DOUBLE))))"
 )
 
+# The serving configuration every index query shares: PQ subspaces /
+# codes / top-k, IVF coarse cells / probes, the binary rerank budget.
 _PQ_M, _PQ_CODES, _PQ_K = 4, 16, 5
+_IVF_CELLS, _IVF_PROBES = 16, 4
+_BIN_RERANK = 32
+_PQ_KW = dict(m=_PQ_M, n_codes=_PQ_CODES, iters=1)
+_IVFPQ_KW = dict(n_cells=_IVF_CELLS, n_probe=_IVF_PROBES, **_PQ_KW)
+
+
+def _topk_cte(
+    name: str, rel: str, col: str, k: int = _PQ_K, keep: bool = True
+) -> str:
+    """``name``: each query's top-``k`` rows of ``rel`` (query_id,
+    neighbor_id, ``col``) by ``col`` with id-asc ties, as one CTE with
+    a leading newline; ``keep=False`` drops ``col`` from the output."""
+    out = f"query_id, neighbor_id, {col}" if keep else "query_id, neighbor_id"
+    return f"""
+    {name} AS (
+      SELECT {out} FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                     ORDER BY {col}, neighbor_id) AS rn
+        FROM {rel}) z
+      WHERE rn <= {k})"""
 
 
 # THE exact-L2 truth baseline (brute-force L2 top-k, 6dp, id-asc
@@ -1600,13 +1625,7 @@ def _exl2_base_sql(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              round({_L2SQ_SQL.format(a="c.embedding", b="q.embedding")}, 6) AS d
       FROM {src} c, (SELECT * FROM {src} WHERE {qpred}) q
-      WHERE c.vec_id <> q.vec_id),
-    extop AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY d, neighbor_id) AS rn
-        FROM exl2) z
-      WHERE rn <= {_PQ_K})"""
+      WHERE c.vec_id <> q.vec_id),{_topk_cte("extop", "exl2", "d", keep=False)}"""
 
 
 _EXL2_BASE_SQL = _exl2_base_sql()
@@ -1660,7 +1679,10 @@ def _pq_ctes(
     contract: subspace split → per-sub seed codebooks → one Lloyd step
     (6dp distances and components, code-asc tie-break) → corpus codes →
     per-query distance table (9dp terms as DECIMAL(28,12)) → ADC top-k.
-    Mirrors similarity.pq_codebooks / pq_encode / pq_adc_topk.
+    Mirrors similarity.pq_codebooks / pq_encode / pq_adc_topk: the
+    memory side of 100 TB ANN (Jégou et al. 2011, FAISS IndexPQ), m
+    codes per vector instead of d floats, each query answered by summing
+    per-subspace lookup-table entries (DECIMAL-summed, so order-free).
     ``src`` names the (vec_id, embedding) relation to quantize —
     ``embeddings`` for raw PQ, the permuted ``pemb`` CTE for OPQ.
     ``train_src`` optionally names a SEPARATE relation the codebooks
@@ -1728,66 +1750,18 @@ def _pq_ctes(
              round(CAST(SUM(dt.term) AS DOUBLE), 6) AS dist
       FROM codes x JOIN dt ON dt.sub = x.sub AND dt.code = x.code
       WHERE x.vec_id <> dt.query_id
-      GROUP BY 1, 2),
-    pqtop AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM adc) z
-      WHERE rn <= {_PQ_K})"""
+      GROUP BY 1, 2),{_topk_cte("pqtop", "adc", "dist")}"""
 
 
-@_q(
-    "q_sim_pq_adc",
-    f"""
-    WITH {_pq_ctes()}
-    SELECT query_id, neighbor_id, dist FROM pqtop
-    """,
-)
-def q_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantized ANN (Jégou et al. 2011, the FAISS IndexPQ
-    design): per-subspace codebooks (m=4 subspaces, 16 codes, one
-    Lloyd step under the engine's k-means rounding contract), the
-    corpus compressed to 4 small codes per vector, and each query's
-    top-5 answered by summing per-subspace LOOKUP-TABLE entries —
-    DECIMAL-summed 9dp terms so the reduction is order-free exact.
-    The memory side of 100 TB ANN: m bytes per vector instead of d
-    floats; compose with the IVF postings store for IVFPQ."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.pq_adc_topk(
-        e, q, m=_PQ_M, n_codes=_PQ_CODES, k=_PQ_K, iters=1
-    )
-
-
-@_q(
-    "q_sim_pq_recall",
-    f"""
-    WITH {_pq_ctes()},
-    {_exl2_recall_sql("pqtop")}
-    """,
-)
-def q_sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ recall audit: per-query recall@5 of the ADC answer against
-    the EXACT L2 neighbors (same metric — quantization loss is the
-    only gap being measured, unlike a cosine baseline which would
-    conflate metric mismatch with code coarseness). The m / n_codes
-    knobs are tuned against exactly this curve, the PQ analog of
-    q_sim_ivf_recall's n_probe curve."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.pq_adc_topk(
-        e, q, m=_PQ_M, n_codes=_PQ_CODES, k=_PQ_K, iters=1
-    )
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-def _opq_ctes() -> str:
-    """The OPQ-permutation front end (similarity.pq_variance_perm /
-    apply_dim_perm): per-dimension corpus variance (6dp, dim-asc
-    tie-break), rank → round-robin subspace deal, and the corpus
-    re-projected in permuted order — ends at ``pemb``, the
-    (vec_id, embedding) relation _pq_ctes quantizes for OPQ."""
+def _opq_ctes(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
+    """OPQ-lite (similarity.pq_variance_perm / apply_dim_perm, Ge et
+    al. 2014's eigenvalue allocation restricted to a permutation):
+    per-dimension corpus variance (6dp, dim-asc tie-break), rank →
+    round-robin subspace deal so no codebook hoards the high-variance
+    block, and the corpus re-projected in permuted order as ``pemb``,
+    which _pq_ctes then quantizes — ends at ``pqtop``. L2 is
+    permutation-invariant, so the ADC dists estimate the same raw-space
+    L2² and the raw-space exact-L2 audit stays a valid baseline."""
     return f"""
     dvar AS (
       SELECT dim,
@@ -1795,7 +1769,7 @@ def _opq_ctes() -> str:
                    - AVG(CAST(v AS DOUBLE)) * AVG(CAST(v AS DOUBLE)), 6) AS var
       FROM (SELECT unnest(generate_series(0, len(embedding) - 1)) AS dim,
                    unnest(embedding) AS v
-            FROM embeddings) z
+            FROM {src}) z
       GROUP BY dim),
     dperm AS (
       SELECT ((r % {_PQ_M}) * (d // {_PQ_M}) + (r // {_PQ_M})) AS pos, dim
@@ -1806,82 +1780,36 @@ def _opq_ctes() -> str:
     pemb AS MATERIALIZED (
       SELECT e.vec_id,
              list(CAST(e.embedding[p.dim + 1] AS DOUBLE) ORDER BY p.pos) AS embedding
-      FROM embeddings e CROSS JOIN dperm p
-      GROUP BY e.vec_id)"""
+      FROM {src} e CROSS JOIN dperm p
+      GROUP BY e.vec_id),
+    {_pq_ctes("pemb", qpred)}"""
 
 
-@_q(
-    "q_sim_opq",
-    f"""
-    WITH {_opq_ctes()},
-    {_pq_ctes("pemb")}
-    SELECT query_id, neighbor_id, dist FROM pqtop
-    """,
-)
-def q_sim_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPQ-lite ANN: q_sim_pq_adc run in the variance-balanced
-    permuted space (Ge et al. 2014's eigenvalue allocation restricted
-    to a permutation — similarity.pq_variance_perm). Dimensions are
-    ranked by corpus variance and dealt round-robin across the m
-    subspaces, so no codebook hoards the high-variance block; L2 is
-    permutation-invariant so the ADC dists estimate the same raw-space
-    L2². The permutation is a d-row model parameter compiled into one
-    map-side projection (apply_dim_perm) — the training scan is the
-    only cost added over plain PQ."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.pq_opq_topk(
-        e, q, m=_PQ_M, n_codes=_PQ_CODES, k=_PQ_K, iters=1
-    )
-
-
-@_q(
-    "q_sim_opq_recall",
-    f"""
-    WITH {_opq_ctes()},
-    {_pq_ctes("pemb")},
-    {_exl2_recall_sql("pqtop")}
-    """,
-)
-def q_sim_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPQ recall audit: per-query recall@5 of the permuted-space ADC
-    answer against the EXACT raw-space L2 neighbors (valid baseline
-    because L2 is permutation-invariant). The fourth point on the
-    quantization audit curve (pq → opq → ivfpq → residual-ivfpq); on
-    variance-skewed layouts the permutation's win over q_sim_pq_recall
-    is pinned by tests/test_pq.py's skewed-corpus test."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.pq_opq_topk(
-        e, q, m=_PQ_M, n_codes=_PQ_CODES, k=_PQ_K, iters=1
-    )
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-def _ivfpq_ctes(
+def _ivf_cells_ctes(
     src: str = "embeddings",
     qpred: str = "vec_id < 8",
     train_src: str | None = None,
 ) -> str:
-    """The composed-index CTE chain: the PQ pipeline (_pq_ctes) plus
-    coarse seed cells, corpus cell assignment, query probes, and the
-    probed ADC ranking — ends at ``ivfpqtop``. Shared by q_sim_ivfpq,
-    q_sim_ivfpq_recall, and (via ``src="temb"``) the text-featurized
-    end-to-end loop q_text_embed_ivfpq(_recall). ``train_src``
-    (optional) trains the coarse cells and codebooks on a separate
-    relation — the frozen-quantizer form the pin-advanced index replay
-    (registry_ingest.q_snapshot_incremental_serve) needs."""
+    """The IVF coarse quantizer (similarity.ivf_assign's contract):
+    the lowest-id ``_IVF_CELLS`` vectors of ``train_src`` (default
+    ``src``) seed the cells, every corpus vector joins its best cell
+    (6dp cosine desc, cell-asc ties) as ``cells``, and each query
+    probes its best ``_IVF_PROBES`` as ``probes``. Starts with a
+    newline, ends without a comma."""
     ts = train_src if train_src is not None else src
-    return f"""{_pq_ctes(src, qpred, train_src)},
+    cos = (
+        f"round({_DOT_SQL.format(a='e.embedding', b='c.icv')}\n"
+        f"                 / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC"
+    )
+    return f"""
     icents AS (
       SELECT vec_id AS cell, embedding AS icv FROM {ts}
-      ORDER BY vec_id LIMIT 16),
+      ORDER BY vec_id LIMIT {_IVF_CELLS}),
     c_sc AS (
       SELECT e.vec_id AS neighbor_id, c.cell,
              ROW_NUMBER() OVER (
                PARTITION BY e.vec_id
-               ORDER BY round({_DOT_SQL.format(a='e.embedding', b='c.icv')}
-                 / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC,
+               ORDER BY {cos},
                c.cell) AS rn
       FROM {src} e CROSS JOIN icents c),
     cells AS (SELECT neighbor_id, cell FROM c_sc WHERE rn = 1),
@@ -1889,11 +1817,28 @@ def _ivfpq_ctes(
       SELECT e.vec_id AS query_id, c.cell,
              ROW_NUMBER() OVER (
                PARTITION BY e.vec_id
-               ORDER BY round({_DOT_SQL.format(a='e.embedding', b='c.icv')}
-                 / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC,
+               ORDER BY {cos},
                c.cell) AS rn
       FROM {src} e CROSS JOIN icents c WHERE e.{qpred}),
-    probes AS (SELECT query_id, cell FROM q_sc WHERE rn <= 4),
+    probes AS (SELECT query_id, cell FROM q_sc WHERE rn <= {_IVF_PROBES})"""
+
+
+def _ivfpq_ctes(
+    src: str = "embeddings",
+    qpred: str = "vec_id < 8",
+    train_src: str | None = None,
+) -> str:
+    """The composed-index CTE chain (similarity.ivfpq_topk, the FAISS
+    IVFPQ shape, non-residual): the PQ pipeline (_pq_ctes) plus the
+    coarse cells (_ivf_cells_ctes) and the probed ADC ranking — ends at
+    ``ivfpqtop``. The cells prune each query's candidates to
+    ~n_probe/n_cells of the corpus, the PQ tables score what remains;
+    both layers sit under their rounding contracts, so the oracle
+    replays the whole index bit-for-bit. ``train_src`` (optional)
+    trains the coarse cells and codebooks on a separate relation — the
+    frozen-quantizer form the pin-advanced index replay
+    (registry_ingest.q_snapshot_incremental_serve) needs."""
+    return f"""{_pq_ctes(src, qpred, train_src)},{_ivf_cells_ctes(src, qpred, train_src)},
     adcq AS (
       SELECT p.query_id, x.vec_id AS neighbor_id,
              round(CAST(SUM(dt.term) AS DOUBLE), 6) AS dist
@@ -1903,63 +1848,13 @@ def _ivfpq_ctes(
       JOIN dt ON dt.sub = x.sub AND dt.code = x.code
              AND dt.query_id = p.query_id
       WHERE x.vec_id <> p.query_id
-      GROUP BY 1, 2),
-    ivfpqtop AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM adcq) z
-      WHERE rn <= {_PQ_K})"""
+      GROUP BY 1, 2),{_topk_cte("ivfpqtop", "adcq", "dist")}"""
 
 
-@_q(
-    "q_sim_ivfpq",
-    f"""
-    WITH {_ivfpq_ctes()}
-    SELECT query_id, neighbor_id, dist FROM ivfpqtop
-    """,
-)
-def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF + PQ composed (similarity.ivfpq_topk, the FAISS IVFPQ shape,
-    non-residual): the coarse cells prune each query's candidates to
-    ~n_probe/n_cells of the corpus, the PQ lookup tables score what
-    remains at m additions per candidate — both approximation layers
-    under their proven rounding contracts, so the oracle replays the
-    whole index bit-for-bit. 16 cells / 4 probes / m=4 / 16 codes,
-    top-5 for 8 queries."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=_PQ_M, n_codes=_PQ_CODES,
-        k=_PQ_K, iters=1,
-    )
-
-
-@_q(
-    "q_sim_ivfpq_recall",
-    f"""
-    WITH {_ivfpq_ctes()},
-    {_exl2_recall_sql("ivfpqtop")}
-    """,
-)
-def q_sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the COMPOSED index against exact L2 — both
-    approximation layers (unprobed cells AND code coarseness) measured
-    on one curve, the number that decides n_probe and m/n_codes
-    together before a configuration serves traffic. Compare with
-    q_sim_pq_recall (codes only) to attribute the loss."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=_PQ_M, n_codes=_PQ_CODES,
-        k=_PQ_K, iters=1,
-    )
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-def _ivfpq_res_ctes() -> str:
-    """Residual IVFPQ unrolled: coarse seed cells → per-vector plain-double
-    residual against the assigned centroid (unrounded: one IEEE op is
+def _ivfpq_res_ctes(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
+    """Residual IVFPQ unrolled (the FAISS-default encoding): coarse
+    seed cells → per-vector plain-double residual against the assigned
+    centroid (unrounded: one IEEE op is
     bit-identical cross-engine, and rounding would park downstream
     roundings on exact halfway points) → PQ trained on NON-SEED
     residuals (a seed's residual is the zero vector; excluding them
@@ -1967,15 +1862,18 @@ def _ivfpq_res_ctes() -> str:
     degenerate codes) → codes over ALL residuals → per-(query, probed
     cell) residual distance tables → probed ADC. Mirrors
     similarity.ivfpq_topk(by_residual=True) CTE-for-operator; ends at
-    ``ivfpqrtop``."""
+    ``ivfpqrtop``. On clustered corpora residuals are small and
+    centered, so the same m/n_codes budget resolves within-cluster
+    neighbors raw codes blur; the query side pays one distance table
+    per probed cell."""
     l2 = _L2SQ_SQL
     rsub = "rvec[s.j*(len(rvec)//{m})+1 : (s.j+1)*(len(rvec)//{m})]".format(
         m=_PQ_M
     )
     return f"""
     icents AS MATERIALIZED (
-      SELECT vec_id AS cell, embedding AS icv FROM embeddings
-      ORDER BY vec_id LIMIT 16),
+      SELECT vec_id AS cell, embedding AS icv FROM {src}
+      ORDER BY vec_id LIMIT {_IVF_CELLS}),
     rasg AS (
       SELECT vec_id, cell FROM (
         SELECT e.vec_id, c.cell,
@@ -1984,13 +1882,13 @@ def _ivfpq_res_ctes() -> str:
                  ORDER BY round({_DOT_SQL.format(a='e.embedding', b='c.icv')}
                    / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC,
                  c.cell) AS rn
-        FROM embeddings e CROSS JOIN icents c) z
+        FROM {src} e CROSS JOIN icents c) z
       WHERE rn = 1),
     rcorp AS MATERIALIZED (
       SELECT a.vec_id, a.cell,
              list_transform(list_zip(e.embedding, c.icv),
                zp -> CAST(zp[1] AS DOUBLE) - CAST(zp[2] AS DOUBLE)) AS rvec
-      FROM rasg a JOIN embeddings e USING (vec_id) JOIN icents c USING (cell)),
+      FROM rasg a JOIN {src} e USING (vec_id) JOIN icents c USING (cell)),
     rsv AS MATERIALIZED (
       SELECT vec_id, s.j AS sub, {rsub} AS svec
       FROM rcorp, (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS j) s),
@@ -2037,13 +1935,13 @@ def _ivfpq_res_ctes() -> str:
                  ORDER BY round({_DOT_SQL.format(a='e.embedding', b='c.icv')}
                    / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC,
                  c.cell) AS rn
-        FROM embeddings e CROSS JOIN icents c WHERE e.vec_id < 8) z
-      WHERE rn <= 4),
+        FROM {src} e CROSS JOIN icents c WHERE e.{qpred}) z
+      WHERE rn <= {_IVF_PROBES}),
     rq AS (
       SELECT p.query_id, p.cell,
              list_transform(list_zip(e.embedding, c.icv),
                zp -> CAST(zp[1] AS DOUBLE) - CAST(zp[2] AS DOUBLE)) AS rvec
-      FROM rprobe p JOIN embeddings e ON e.vec_id = p.query_id
+      FROM rprobe p JOIN {src} e ON e.vec_id = p.query_id
       JOIN icents c USING (cell)),
     rqsv AS (
       SELECT query_id, cell, s.j AS sub, {rsub} AS svec
@@ -2059,71 +1957,16 @@ def _ivfpq_res_ctes() -> str:
       JOIN rcorp cl ON cl.vec_id = x.vec_id
       JOIN rdt dt ON dt.cell = cl.cell AND dt.sub = x.sub AND dt.code = x.code
       WHERE x.vec_id <> dt.query_id
-      GROUP BY 1, 2),
-    ivfpqrtop AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM radc) z
-      WHERE rn <= {_PQ_K})"""
-
-
-@_q(
-    "q_sim_ivfpq_residual",
-    f"""
-    WITH {_ivfpq_res_ctes()}
-    SELECT query_id, neighbor_id, dist FROM ivfpqrtop
-    """,
-)
-def q_sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual IVFPQ (similarity.ivfpq_topk(by_residual=True), the
-    FAISS-default encoding): PQ codes quantize (vector − assigned
-    coarse centroid) — the unrounded IEEE subtraction, bit-identical
-    cross-engine by construction. On
-    clustered corpora residuals are small and centered, so the same
-    m/n_codes budget resolves within-cluster neighbors raw codes blur
-    (tests pin a 2× recall win at m=8 on a clustered corpus); the
-    query side pays one distance table PER PROBED CELL. Same 16/4/
-    m=4/16-code configuration as q_sim_ivfpq so the two variants
-    differ only in encoding."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=_PQ_M, n_codes=_PQ_CODES,
-        k=_PQ_K, iters=1, by_residual=True,
-    )
-
-
-@_q(
-    "q_sim_ivfpq_residual_recall",
-    f"""
-    WITH {_ivfpq_res_ctes()},
-    {_exl2_recall_sql("ivfpqrtop")}
-    """,
-)
-def q_sim_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the residual-encoded composed index against exact
-    L2 — the third point on the audit curve (q_sim_pq_recall: codes
-    only; q_sim_ivfpq_recall: cells + raw codes; this: cells +
-    residual codes), which is how the by_residual knob gets decided
-    per corpus: on structure-free embeddings like the synthetic test
-    set it scores at or below non-residual, on clustered data it
-    wins."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=_PQ_M, n_codes=_PQ_CODES,
-        k=_PQ_K, iters=1, by_residual=True,
-    )
-    return _recall_vs_exact_l2(e, q, approx)
+      GROUP BY 1, 2),{_topk_cte("ivfpqrtop", "radc", "dist")}"""
 
 
 # -- SQ8 / binary-sign / Matryoshka: the remaining serving-layer shapes ------
 
 
-def _sq8_ctes(src: str = "embeddings") -> str:
-    """SQ8 unrolled: per-dim 6dp min/max (the trained params), encode
-    floor((v-mn)*256/(mx-mn)) clamped [0,255] (256 uniform buckets),
+def _sq8_ctes(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
+    """SQ8 unrolled (the FAISS IndexScalarQuantizer QT_8bit shape, one
+    uint8 code per dimension): per-dim 6dp min/max (the trained
+    params), encode floor((v-mn)*256/(mx-mn)) clamped [0,255] (256 uniform buckets),
     reconstruct at the bucket midpoint mn+(code+0.5)(mx-mn)/256, score raw queries
     against reconstructions — mirrors similarity.sq8_minmax /
     sq8_encode / sq8_dequant / sq8_topk. Ends at ``sq8top``. ``src``
@@ -2150,63 +1993,22 @@ def _sq8_ctes(src: str = "embeddings") -> str:
     sq8d AS (
       SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
              round({_L2SQ_SQL.format(a="r.rv", b="q.embedding")}, 6) AS dist
-      FROM recon r, (SELECT * FROM {src} WHERE vec_id < 8) q
-      WHERE r.vec_id <> q.vec_id),
-    sq8top AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM sq8d) z
-      WHERE rn <= {_PQ_K})"""
+      FROM recon r, (SELECT * FROM {src} WHERE {qpred}) q
+      WHERE r.vec_id <> q.vec_id),{_topk_cte("sq8top", "sq8d", "dist")}"""
 
 
-@_q(
-    "q_sim_sq8",
-    f"""
-    WITH {_sq8_ctes()}
-    SELECT query_id, neighbor_id, dist FROM sq8top
-    """,
-)
-def q_sim_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantized ANN (the FAISS IndexScalarQuantizer QT_8bit
-    shape): the corpus stored as one uint8 code per dimension (4x
-    memory compression) and scored asymmetrically — raw query against
-    bucket-midpoint reconstructions — under the engine's 6dp rounding
-    contract. The params are a d-row model parameter compiled into
-    map-side projections (no join to quantize); the scan is
-    brute-force by design — at 100 TB the operator composes with the
-    IVF cells exactly like ivfpq_topk."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.sq8_topk(e, q, k=_PQ_K)
-
-
-@_q(
-    "q_sim_sq8_recall",
-    f"""
-    WITH {_sq8_ctes()},
-    {_exl2_recall_sql("sq8top")}
-    """,
-)
-def q_sim_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8 recall audit vs exact L2 — with 256 buckets per dimension
-    the quantization error is tiny, so this audit is the family's
-    upper anchor: near-perfect recall at 4x compression, against
-    which the PQ points (m bytes, far lossier) are judged."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.sq8_topk(e, q, k=_PQ_K)
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-def _binary_ctes(src: str = "embeddings") -> str:
+def _binary_ctes(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
     """Sign signatures packed 32 bits per BIGINT word, Hamming
     XOR+popcount scan, and the exact-L2 rerank funnel — mirrors
     similarity.sign_signature / binary_hamming_topk /
     binary_rerank_topk. Ends at ``bhtop`` (hamming top-k) and
-    ``brtop`` (reranked top-k). ``src`` names the
-    (vec_id, embedding) relation — ``temb`` for the text-featurized
-    funnel."""
+    ``brtop`` (reranked top-k): the Hamming scan keeps
+    ``_BIN_RERANK`` candidates per query from 32x-compressed
+    signatures, and only those are re-scored with exact 6dp L2², so a
+    true neighbor is lost only when its signature misses that budget.
+    ``src`` names the (vec_id, embedding) relation — ``temb`` for the
+    text-featurized funnel."""
+    cand = _topk_cte("bcand", "ham", "hamming", k=_BIN_RERANK, keep=False)
     return f"""
     sigs AS MATERIALIZED (
       SELECT vec_id, list(word ORDER BY w) AS sig FROM (
@@ -2224,191 +2026,52 @@ def _binary_ctes(src: str = "embeddings") -> str:
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              CAST(list_sum(list_transform(list_zip(c.sig, q.sig),
                     zp -> bit_count(xor(zp[1], zp[2])))) AS INT) AS hamming
-      FROM sigs c, (SELECT * FROM sigs WHERE vec_id < 8) q
-      WHERE c.vec_id <> q.vec_id),
-    bhtop AS (
-      SELECT query_id, neighbor_id, hamming FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY hamming, neighbor_id) AS rn
-        FROM ham) z
-      WHERE rn <= {_PQ_K}),
-    bcand AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY hamming, neighbor_id) AS rn
-        FROM ham) z
-      WHERE rn <= 32),
+      FROM sigs c, (SELECT * FROM sigs WHERE {qpred}) q
+      WHERE c.vec_id <> q.vec_id),{_topk_cte("bhtop", "ham", "hamming")},{cand},
     brd AS (
       SELECT b.query_id, b.neighbor_id,
              round({_L2SQ_SQL.format(a="c.embedding", b="q.embedding")}, 6) AS dist
       FROM bcand b
       JOIN {src} c ON c.vec_id = b.neighbor_id
-      JOIN {src} q ON q.vec_id = b.query_id),
-    brtop AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM brd) z
-      WHERE rn <= {_PQ_K})"""
-
-
-@_q(
-    "q_sim_binary_hamming",
-    f"""
-    WITH {_binary_ctes()}
-    SELECT query_id, neighbor_id, hamming FROM bhtop
-    """,
-)
-def q_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-embedding ANN, coarse stage: sign signatures packed 32
-    bits per BIGINT word (32x compression), neighbors ranked by
-    XOR+popcount Hamming distance — integer-exact, so the only
-    contract needed is the id-asc tie-break (Hamming ties are dense).
-    The cheapest scan a vector store can run; q_sim_binary_rerank is
-    the production funnel built on it."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.binary_hamming_topk(e, q, k=_PQ_K)
-
-
-@_q(
-    "q_sim_binary_rerank",
-    f"""
-    WITH {_binary_ctes()}
-    SELECT query_id, neighbor_id, dist FROM brtop
-    """,
-)
-def q_sim_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary serving funnel: the Hamming scan keeps 32 candidates per
-    query from 32x-compressed signatures, then ONLY those |q|x32 rows
-    are re-scored with exact 6dp L2² on raw floats. The expensive
-    metric never touches the corpus — the staged-retrieval shape
-    production binary-embedding stores run."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.binary_rerank_topk(e, q, k=_PQ_K, rerank=32)
-
-
-@_q(
-    "q_sim_binary_rerank_recall",
-    f"""
-    WITH {_binary_ctes()},
-    {_exl2_recall_sql("brtop")}
-    """,
-)
-def q_sim_binary_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the binary rerank funnel vs exact L2: a true
-    neighbor is lost only when its sign signature isn't Hamming-top-32
-    — the audit that sizes the rerank budget, exactly like
-    q_sim_ivf_recall sizes n_probe."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.binary_rerank_topk(e, q, k=_PQ_K, rerank=32)
-    return _recall_vs_exact_l2(e, q, approx)
+      JOIN {src} q ON q.vec_id = b.query_id),{_topk_cte("brtop", "brd", "dist")}"""
 
 
 def _matryoshka_ctes(
-    src: str = "embeddings", prefix_dims: int = 16, rerank: int = 32
+    src: str = "embeddings",
+    qpred: str = "vec_id < 8",
+    prefix_dims: int = 16,
+    rerank: int = 32,
 ) -> str:
     """Prefix-dim coarse scan (first ``prefix_dims`` components, 6dp
     L2²) keeping ``rerank`` candidates, exact full-d rerank — mirrors
-    similarity.matryoshka_topk. Ends at ``mrtop``. ``src`` names the
-    (vec_id, embedding) relation — ``temb`` for the text tier, whose
-    8-dim space uses a 4-dim prefix."""
+    similarity.matryoshka_topk (Kusupati et al. 2022: on MRL-trained
+    embeddings the prefix is a faithful coarse metric). Ends at
+    ``mrtop``. ``src`` names the (vec_id, embedding) relation —
+    ``temb`` for the text tier."""
     pfx = f"embedding[1:{prefix_dims}]"
     return f"""
     mrc AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              round({_L2SQ_SQL.format(a=f"c.{pfx}", b=f"q.{pfx}")}, 6) AS cd
-      FROM {src} c, (SELECT * FROM {src} WHERE vec_id < 8) q
-      WHERE c.vec_id <> q.vec_id),
-    mrcand AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cd, neighbor_id) AS rn
-        FROM mrc) z
-      WHERE rn <= {rerank}),
+      FROM {src} c, (SELECT * FROM {src} WHERE {qpred}) q
+      WHERE c.vec_id <> q.vec_id),{_topk_cte("mrcand", "mrc", "cd", k=rerank, keep=False)},
     mrd AS (
       SELECT b.query_id, b.neighbor_id,
              round({_L2SQ_SQL.format(a="c.embedding", b="q.embedding")}, 6) AS dist
       FROM mrcand b
       JOIN {src} c ON c.vec_id = b.neighbor_id
-      JOIN {src} q ON q.vec_id = b.query_id),
-    mrtop AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM mrd) z
-      WHERE rn <= {_PQ_K})"""
+      JOIN {src} q ON q.vec_id = b.query_id),{_topk_cte("mrtop", "mrd", "dist")}"""
 
 
-@_q(
-    "q_sim_matryoshka",
-    f"""
-    WITH {_matryoshka_ctes()}
-    SELECT query_id, neighbor_id, dist FROM mrtop
-    """,
-)
-def q_sim_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka staged retrieval (Kusupati et al. 2022): the coarse
-    scan reads only the first 16 of 64 components per vector (the I/O
-    win that matters when a 100 TB scan is storage-bound), keeps 32
-    candidates per query, and re-scores just those with the full-d
-    exact L2² — the same funnel as the binary rerank with the prefix
-    metric swapped in."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.matryoshka_topk(e, q, k=_PQ_K, prefix_dims=16, rerank=32)
-
-
-@_q(
-    "q_sim_matryoshka_recall",
-    f"""
-    WITH {_matryoshka_ctes()},
-    {_exl2_recall_sql("mrtop")}
-    """,
-)
-def q_sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the prefix-dim funnel vs exact full-d L2 — sizes
-    the (prefix_dims, rerank) budget; on MRL-trained embeddings the
-    prefix is a faithful coarse metric and this stays near 1, on
-    arbitrary embeddings it measures how much signal the first 16
-    dims actually carry."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.matryoshka_topk(e, q, k=_PQ_K, prefix_dims=16, rerank=32)
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-def _ivfsq_ctes(src: str = "embeddings") -> str:
-    """IVF coarse cells (the _ivfpq_ctes quantizer contract) composed
-    with the SQ8 reconstructions (_sq8_ctes' ``recon``): probed-cell
-    pruning × midpoint scoring — mirrors similarity.ivfsq_topk. Ends
-    at ``ivfsqtop``. The unreferenced sq8d/sq8top CTEs from _sq8_ctes
-    are pruned by DuckDB (not MATERIALIZED). ``src`` names the
-    (vec_id, embedding) relation — ``temb`` for the text tier."""
-    return f"""{_sq8_ctes(src)},
-    icents AS (
-      SELECT vec_id AS cell, embedding AS icv FROM {src}
-      ORDER BY vec_id LIMIT 16),
-    c_sc AS (
-      SELECT e.vec_id AS neighbor_id, c.cell,
-             ROW_NUMBER() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY round({_DOT_SQL.format(a='e.embedding', b='c.icv')}
-                 / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC,
-               c.cell) AS rn
-      FROM {src} e CROSS JOIN icents c),
-    cells AS (SELECT neighbor_id, cell FROM c_sc WHERE rn = 1),
-    q_sc AS (
-      SELECT e.vec_id AS query_id, c.cell,
-             ROW_NUMBER() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY round({_DOT_SQL.format(a='e.embedding', b='c.icv')}
-                 / ({_NORM_SQL.format(a='e.embedding')} * {_NORM_SQL.format(a='c.icv')}), 6) DESC,
-               c.cell) AS rn
-      FROM {src} e CROSS JOIN icents c WHERE e.vec_id < 8),
-    probes AS (SELECT query_id, cell FROM q_sc WHERE rn <= 4),
+def _ivfsq_ctes(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
+    """IVF coarse cells (_ivf_cells_ctes) composed with the SQ8
+    reconstructions (_sq8_ctes' ``recon``): probed-cell pruning ×
+    midpoint scoring (FAISS IndexIVFScalarQuantizer) — mirrors
+    similarity.ivfsq_topk. Ends at ``ivfsqtop``. The unreferenced
+    sq8d/sq8top CTEs from _sq8_ctes are pruned by DuckDB (not
+    MATERIALIZED). ``src`` names the (vec_id, embedding) relation —
+    ``temb`` for the text tier."""
+    return f"""{_sq8_ctes(src, qpred)},{_ivf_cells_ctes(src, qpred)},
     sqp AS (
       SELECT p.query_id, r.vec_id AS neighbor_id,
              round({_L2SQ_SQL.format(a="r.rv", b="q.embedding")}, 6) AS dist
@@ -2416,50 +2079,183 @@ def _ivfsq_ctes(src: str = "embeddings") -> str:
       JOIN cells cl ON cl.neighbor_id = r.vec_id
       JOIN probes p ON p.cell = cl.cell
       JOIN {src} q ON q.vec_id = p.query_id
-      WHERE r.vec_id <> p.query_id),
-    ivfsqtop AS (
-      SELECT query_id, neighbor_id, dist FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rn
-        FROM sqp) z
-      WHERE rn <= {_PQ_K})"""
+      WHERE r.vec_id <> p.query_id),{_topk_cte("ivfsqtop", "sqp", "dist")}"""
 
 
-@_q(
-    "q_sim_ivfsq",
-    f"""
-    WITH {_ivfsq_ctes()}
-    SELECT query_id, neighbor_id, dist FROM ivfsqtop
-    """,
-)
-def q_sim_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF + SQ8 composed (FAISS IndexIVFScalarQuantizer): the coarse
-    cells prune the scan to ~n_probe/n_cells of the corpus, the SQ8
-    codes shrink each touched posting to d bytes — the middle point of
-    the serving family between raw-posting IVF (4x the bytes) and
-    IVFPQ (far lossier m codes). Cell carried through encoding in one
-    corpus pass, same as ivfpq_topk."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.ivfsq_topk(e, q, n_cells=16, n_probe=4, k=_PQ_K)
+# ---------------------------------------------------------------------------
+# The serving matrix: every (corpus × index tier × form) top-k / recall
+# query, declared as one row of _SERVE_ROWS over the tier and corpus tables
+# ---------------------------------------------------------------------------
 
 
-@_q(
-    "q_sim_ivfsq_recall",
-    f"""
-    WITH {_ivfsq_ctes()},
-    {_exl2_recall_sql("ivfsqtop")}
-    """,
-)
-def q_sim_ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of IVFSQ vs exact L2 — on this family the cell-miss
-    term dominates (SQ8's midpoint error is tiny, see
-    q_sim_sq8_recall), so the curve tracks q_sim_ivf_recall's n_probe
-    knee at a quarter of the posting bytes."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.ivfsq_topk(e, q, n_cells=16, n_probe=4, k=_PQ_K)
-    return _recall_vs_exact_l2(e, q, approx)
+class _Tier(NamedTuple):
+    ctes: Callable[..., str]  # (src, qpred, **params) -> CTEs ending at top
+    top: str  # the final top-k CTE
+    col: str  # its order column
+    call: str  # similarity.<call>(corpus, queries, k=_PQ_K, **kw, **params)
+    kw: dict
+
+
+_TIERS = {
+    "pq": _Tier(_pq_ctes, "pqtop", "dist", "pq_adc_topk", _PQ_KW),
+    "opq": _Tier(_opq_ctes, "pqtop", "dist", "pq_opq_topk", _PQ_KW),
+    "ivfpq": _Tier(_ivfpq_ctes, "ivfpqtop", "dist", "ivfpq_topk", _IVFPQ_KW),
+    "ivfpq_res": _Tier(
+        _ivfpq_res_ctes, "ivfpqrtop", "dist", "ivfpq_topk",
+        {**_IVFPQ_KW, "by_residual": True},
+    ),
+    "sq8": _Tier(_sq8_ctes, "sq8top", "dist", "sq8_topk", {}),
+    "binary": _Tier(_binary_ctes, "bhtop", "hamming", "binary_hamming_topk", {}),
+    "binary_rerank": _Tier(
+        _binary_ctes, "brtop", "dist", "binary_rerank_topk",
+        {"rerank": _BIN_RERANK},
+    ),
+    "matryoshka": _Tier(_matryoshka_ctes, "mrtop", "dist", "matryoshka_topk", {}),
+    "ivfsq": _Tier(
+        _ivfsq_ctes, "ivfsqtop", "dist", "ivfsq_topk",
+        {"n_cells": _IVF_CELLS, "n_probe": _IVF_PROBES},
+    ),
+}
+
+
+class _Corpus(NamedTuple):
+    head: str  # oracle text before the first CTE
+    prefix: Callable[[], list[str]]  # CTEs that build ``src``
+    src: str  # the (vec_id, embedding) relation the tier CTEs read
+    qpred: str  # which ``src`` rows ask
+    load: Callable[[SparkSession, str], DataFrame]  # Spark twin of ``src``
+    queries: Callable[[DataFrame], DataFrame]  # Spark twin of ``qpred``
+
+
+def _late(module: str, attr: str):
+    """``attr`` of a sibling registry module that imports this one,
+    looked up at call time."""
+    import importlib
+
+    return getattr(
+        importlib.import_module(
+            f"reddit_apache_airflow_postgres_pipeline_spark.plans.{module}"
+        ),
+        attr,
+    )
+
+
+def _first8(e: DataFrame) -> DataFrame:
+    return e.filter(F.col("vec_id") < 8)
+
+
+# the chain corpus's queries: its 8 lowest SURVIVING ids
+_QIDS_CTE = "qids AS (SELECT vec_id FROM temb ORDER BY vec_id LIMIT 8)"
+_QIDS_PRED = "vec_id IN (SELECT vec_id FROM qids)"
+
+
+_CORPORA = {
+    "raw": _Corpus(
+        "\n    WITH ", lambda: [], "embeddings", "vec_id < 8",
+        lambda spark, sf_dir: load_table(spark, sf_dir, "embeddings"), _first8,
+    ),
+    "text": _Corpus(
+        "\n    WITH ", lambda: [_embed_ctes()], "temb", "vec_id < 8",
+        lambda spark, sf_dir: _text_emb_corpus(spark, sf_dir), _first8,
+    ),
+    "media": _Corpus(
+        "WITH ", lambda: [_late("registry_mm", "_MF_CTES")], "mf", "vec_id < 8",
+        lambda spark, sf_dir: _late("registry_mm", "_media_feat_df")(spark, sf_dir),
+        _first8,
+    ),
+    # the ingest chain's survivors: admission decides who gets to ask, too
+    "chain": _Corpus(
+        "\n    WITH ",
+        lambda: [
+            _late("registry_ingest", "_chain_sdocs_cte")(),
+            _embed_ctes(src="sdocs"),
+            _QIDS_CTE,
+        ],
+        "temb", _QIDS_PRED,
+        lambda spark, sf_dir: _late("registry_ingest", "_chain_text_emb")(spark, sf_dir),
+        lambda e: e.orderBy("vec_id").limit(8),
+    ),
+}
+
+_MRL_RAW = {"prefix_dims": 16, "rerank": 32}
+# a 4-dim prefix of the d=8 featurization: untrained hashed
+# projections, so the prefix carries half the signed-sum signal
+_MRL_TEXT = {"prefix_dims": 4, "rerank": 16}
+
+# (name, corpus, tier, form, params); ``params`` reach both the tier's
+# CTE builder and its similarity call. Registered per corpus by _serve,
+# at the point of each corpus's home module that keeps queries() order.
+_SERVE_ROWS = [
+    ("q_sim_pq_adc", "raw", "pq", "topk", {}),
+    ("q_sim_pq_recall", "raw", "pq", "recall", {}),
+    # OPQ's win over PQ on variance-skewed layouts: tests/test_pq.py
+    ("q_sim_opq", "raw", "opq", "topk", {}),
+    ("q_sim_opq_recall", "raw", "opq", "recall", {}),
+    ("q_sim_ivfpq", "raw", "ivfpq", "topk", {}),
+    ("q_sim_ivfpq_recall", "raw", "ivfpq", "recall", {}),
+    # residual codes score at or below raw codes on this structure-free
+    # set; tests/test_pq.py pins their 2x win on a clustered corpus
+    ("q_sim_ivfpq_residual", "raw", "ivfpq_res", "topk", {}),
+    ("q_sim_ivfpq_residual_recall", "raw", "ivfpq_res", "recall", {}),
+    ("q_sim_sq8", "raw", "sq8", "topk", {}),
+    ("q_sim_sq8_recall", "raw", "sq8", "recall", {}),
+    ("q_sim_binary_hamming", "raw", "binary", "topk", {}),
+    ("q_sim_binary_rerank", "raw", "binary_rerank", "topk", {}),
+    ("q_sim_binary_rerank_recall", "raw", "binary_rerank", "recall", {}),
+    ("q_sim_matryoshka", "raw", "matryoshka", "topk", _MRL_RAW),
+    ("q_sim_matryoshka_recall", "raw", "matryoshka", "recall", _MRL_RAW),
+    ("q_sim_ivfsq", "raw", "ivfsq", "topk", {}),
+    ("q_sim_ivfsq_recall", "raw", "ivfsq", "recall", {}),
+    ("q_text_embed_ivfpq", "text", "ivfpq", "topk", {}),
+    ("q_text_embed_ivfpq_recall", "text", "ivfpq", "recall", {}),
+    ("q_text_embed_binary_rerank", "text", "binary_rerank", "topk", {}),
+    ("q_text_embed_binary_recall", "text", "binary_rerank", "recall", {}),
+    ("q_text_embed_sq8", "text", "sq8", "topk", {}),
+    ("q_text_embed_sq8_recall", "text", "sq8", "recall", {}),
+    ("q_text_embed_matryoshka", "text", "matryoshka", "topk", _MRL_TEXT),
+    ("q_text_embed_matryoshka_recall", "text", "matryoshka", "recall", _MRL_TEXT),
+    ("q_text_embed_ivfsq", "text", "ivfsq", "topk", {}),
+    ("q_text_embed_ivfsq_recall", "text", "ivfsq", "recall", {}),
+    ("q_ingest_chain_text_serve", "chain", "ivfpq", "topk", {}),
+    ("q_ingest_chain_text_serve_recall", "chain", "ivfpq", "recall", {}),
+    ("q_media_ivfpq_topk", "media", "ivfpq", "topk", {}),
+    ("q_media_ivfpq_recall", "media", "ivfpq", "recall", {}),
+    ("q_media_binary_rerank", "media", "binary_rerank", "topk", {}),
+    ("q_media_binary_recall", "media", "binary_rerank", "recall", {}),
+]
+
+
+def _serve_oracle(corpus: str, tier: str, form: str, params: dict) -> str:
+    c, t = _CORPORA[corpus], _TIERS[tier]
+    if form == "topk":
+        tail = f"\n    SELECT query_id, neighbor_id, {t.col} FROM {t.top}"
+    else:
+        tail = ",\n    " + _exl2_recall_sql(t.top, c.src, c.qpred)
+    ctes = c.prefix() + [t.ctes(c.src, c.qpred, **params)]
+    return c.head + ",\n    ".join(ctes) + tail + "\n    "
+
+
+def _serve_spark(name: str, corpus: str, tier: str, form: str, params: dict):
+    c, t = _CORPORA[corpus], _TIERS[tier]
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        e = c.load(spark, sf_dir)
+        q = c.queries(e)
+        top = getattr(similarity, t.call)(e, q, k=_PQ_K, **t.kw, **params)
+        return top if form == "topk" else _recall_vs_exact_l2(e, q, top)
+
+    run.__name__ = run.__qualname__ = name
+    return run
+
+
+def _serve(corpus: str) -> None:
+    """Register the _SERVE_ROWS over ``corpus``, in table order."""
+    for row in _SERVE_ROWS:
+        if row[1] == corpus:
+            _q(row[0], _serve_oracle(*row[1:]))(_serve_spark(*row))
+
+
+_serve("raw")
 
 
 def _rank_metrics_sql(top_cte: str, order_col: str, desc: bool = False) -> str:
@@ -2510,7 +2306,9 @@ def q_sim_eval_funnel_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sim_eval_hamming_ranking where coarse ordering drags both."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.binary_rerank_topk(e, q, k=_PQ_K, rerank=32)
+    approx = similarity.binary_rerank_topk(
+        e, q, k=_PQ_K, rerank=_BIN_RERANK
+    )
     truth = _exact_l2_topk_set(e, q)
     return similarity.ranking_metrics(approx, truth, k=_PQ_K)
 
@@ -2656,6 +2454,7 @@ def q_sim_funnel_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _EMB_D, _EMB_N, _EMB_SALT = 8, 2, "emb"
+_EMB_KW = dict(d=_EMB_D, n=_EMB_N, salt=_EMB_SALT)
 
 
 def _embed_ctes(src: str = "documents", d: int = _EMB_D, n: int = _EMB_N) -> str:
@@ -2717,8 +2516,7 @@ def _text_emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo_replay(
         spark, sf_dir, "text-emb",
         lambda: similarity.embed_text(
-            load_table(spark, sf_dir, "documents"),
-            d=_EMB_D, n=_EMB_N, salt=_EMB_SALT,
+            load_table(spark, sf_dir, "documents"), **_EMB_KW
         )
         .withColumnRenamed("doc_id", "vec_id")
         .localCheckpoint(),
@@ -2742,60 +2540,13 @@ def q_text_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the featurizer's plan (map-side gram explode + one hash agg),
     which the plan audit should see raw."""
     e = similarity.embed_text(
-        load_table(spark, sf_dir, "documents"),
-        d=_EMB_D, n=_EMB_N, salt=_EMB_SALT,
+        load_table(spark, sf_dir, "documents"), **_EMB_KW
     )
     return (
         e.select("doc_id", F.posexplode("embedding").alias("dim", "val"))
         .withColumn("dim", F.col("dim").cast("long"))
         .withColumn("val", F.round("val", 6))
     )
-
-
-@_q(
-    "q_text_embed_ivfpq",
-    f"""
-    WITH {_embed_ctes()},
-    {_ivfpq_ctes(src="temb")}
-    SELECT query_id, neighbor_id, dist FROM ivfpqtop
-    """,
-)
-def q_text_embed_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end loop the engine previously could not close: raw
-    documents → deterministic text featurization → IVFPQ index →
-    served top-k, one declarative plan, zero pre-provided vectors.
-    Same index shape as q_sim_ivfpq (16 cells / 4 probes / m=4 / 16
-    codes / top-5 for 8 queries) so the two results isolate what the
-    featurizer changes. The embedded corpus is checkpointed ONCE
-    (_text_emb_corpus) and shared by every index-building branch."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=_PQ_M, n_codes=_PQ_CODES,
-        k=_PQ_K, iters=1,
-    )
-
-
-@_q(
-    "q_text_embed_ivfpq_recall",
-    f"""
-    WITH {_embed_ctes()},
-    {_ivfpq_ctes(src="temb")},
-    {_exl2_recall_sql("ivfpqtop", src="temb")}
-    """,
-)
-def q_text_embed_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the text-featurized composed index against exact L2
-    over the SAME embedded vectors — the audit that makes the
-    end-to-end loop trustworthy: featurization, coarse cells, and code
-    coarseness all sit under one measured number."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.ivfpq_topk(
-        e, q, n_cells=16, n_probe=4, m=_PQ_M, n_codes=_PQ_CODES,
-        k=_PQ_K, iters=1,
-    )
-    return _recall_vs_exact_l2(e, q, approx)
 
 
 @_q(
@@ -2828,167 +2579,7 @@ def q_text_embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "q_text_embed_binary_rerank",
-    f"""
-    WITH {_embed_ctes()},
-    {_binary_ctes(src="temb")}
-    SELECT query_id, neighbor_id, dist FROM brtop
-    """,
-)
-def q_text_embed_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw-text binary serving funnel: documents → embed_text →
-    sign signatures (32 bits/word, 32× compression) → Hamming-top-32
-    candidates → exact 6dp L2² rerank → top-5. With q_text_embed_ivfpq
-    and q_text_embed_semdedup this completes the text-native serving
-    ladder — every compression tier the engine offers now runs from
-    raw documents with no pre-provided vectors, over the same shared
-    checkpointed featurized corpus."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.binary_rerank_topk(e, q, k=_PQ_K, rerank=32)
-
-
-@_q(
-    "q_text_embed_binary_recall",
-    f"""
-    WITH {_embed_ctes()},
-    {_binary_ctes(src="temb")},
-    {_exl2_recall_sql("brtop", src="temb")}
-    """,
-)
-def q_text_embed_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the text-native binary funnel against exact L2 over
-    the SAME featurized vectors — the audit that says whether 32×
-    sign-bit compression of the hashed-n-gram geometry keeps enough
-    signal to serve (vs q_text_embed_ivfpq_recall's code-compression
-    loss on identical inputs: one corpus, two compression tiers, two
-    measured recalls)."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.binary_rerank_topk(e, q, k=_PQ_K, rerank=32)
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-@_q(
-    "q_text_embed_sq8",
-    f"""
-    WITH {_embed_ctes()},
-    {_sq8_ctes(src="temb")}
-    SELECT query_id, neighbor_id, dist FROM sq8top
-    """,
-)
-def q_text_embed_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The text-native SQ8 tier (r10 verdict #4): raw documents →
-    embed_text → per-dim 8-bit scalar quantization → asymmetric top-k.
-    Same quantizer contract as q_sim_sq8 (256 midpoint buckets, 6dp
-    min/max, d-row trained params compiled map-side) over the ONE
-    checkpointed featurized corpus every text serving branch shares
-    (_text_emb_corpus) — the 4× tier between IVFPQ codes and raw
-    floats now runs from raw text too."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.sq8_topk(e, q, k=_PQ_K)
-
-
-@_q(
-    "q_text_embed_sq8_recall",
-    f"""
-    WITH {_embed_ctes()},
-    {_sq8_ctes(src="temb")},
-    {_exl2_recall_sql("sq8top", src="temb")}
-    """,
-)
-def q_text_embed_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of text-native SQ8 vs exact L2 over the same featurized
-    vectors — the near-lossless upper anchor of the text ladder,
-    against which q_text_embed_ivfpq_recall's code-compression loss and
-    q_text_embed_binary_recall's sign-bit loss are judged on IDENTICAL
-    inputs: one corpus, three compression tiers, three recalls."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.sq8_topk(e, q, k=_PQ_K)
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-@_q(
-    "q_text_embed_matryoshka",
-    f"""
-    WITH {_embed_ctes()},
-    {_matryoshka_ctes(src="temb", prefix_dims=4, rerank=16)}
-    SELECT query_id, neighbor_id, dist FROM mrtop
-    """,
-)
-def q_text_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka staged retrieval over the text featurization: coarse
-    scan on the FIRST 4 of 8 hashed-projection components (halving the
-    coarse-stage read), 16 candidates, exact full-d rerank — completing
-    the text-native serving ladder (IVFPQ codes, SQ8 bytes, sign bits,
-    prefix dims) over the shared checkpointed corpus. The hashed
-    projection has no MRL training, so the prefix is an unbiased
-    random half of the geometry — the recall twin below measures
-    exactly what that costs."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.matryoshka_topk(e, q, k=_PQ_K, prefix_dims=4, rerank=16)
-
-
-@_q(
-    "q_text_embed_matryoshka_recall",
-    f"""
-    WITH {_embed_ctes()},
-    {_matryoshka_ctes(src="temb", prefix_dims=4, rerank=16)},
-    {_exl2_recall_sql("mrtop", src="temb")}
-    """,
-)
-def q_text_embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the 4-dim-prefix funnel vs exact full-d L2 on the
-    featurized corpus — on untrained hashed projections this is the
-    honest lower bound of the ladder (the prefix carries exactly half
-    the signed-sum signal), bracketing the text tiers: SQ8 ≥ IVFPQ ≥
-    binary ≥ prefix, all measured, all on one corpus."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.matryoshka_topk(e, q, k=_PQ_K, prefix_dims=4, rerank=16)
-    return _recall_vs_exact_l2(e, q, approx)
-
-
-@_q(
-    "q_text_embed_ivfsq",
-    f"""
-    WITH {_embed_ctes()},
-    {_ivfsq_ctes(src="temb")}
-    SELECT query_id, neighbor_id, dist FROM ivfsqtop
-    """,
-)
-def q_text_embed_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF pruning × SQ8 byte storage over the text featurization —
-    the last composed tier of the text-native ladder: coarse cells
-    prune to ~4/16 of the featurized corpus, survivors score against
-    midpoint reconstructions. With q_text_embed_{{ivfpq,sq8,
-    binary_rerank,matryoshka}} every serving shape the engine offers
-    now runs raw-text-in, over the ONE checkpointed corpus."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.ivfsq_topk(e, q, n_cells=16, n_probe=4, k=_PQ_K)
-
-
-@_q(
-    "q_text_embed_ivfsq_recall",
-    f"""
-    WITH {_embed_ctes()},
-    {_ivfsq_ctes(src="temb")},
-    {_exl2_recall_sql("ivfsqtop", src="temb")}
-    """,
-)
-def q_text_embed_ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of text-native IVFSQ vs exact L2 — isolates the cell
-    pruning loss on the text geometry (q_text_embed_sq8_recall is the
-    same quantizer unpruned; the delta is what 4/16 probes cost)."""
-    e = _text_emb_corpus(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 8)
-    approx = similarity.ivfsq_topk(e, q, n_cells=16, n_probe=4, k=_PQ_K)
-    return _recall_vs_exact_l2(e, q, approx)
+_serve("text")
 
 
 # ---------------------------------------------------------------------------

@@ -290,98 +290,11 @@ _MF_CTES = (
 )
 
 
-@_q(
-    "q_media_ivfpq_topk",
-    "WITH " + _MF_CTES + f""",
-    {_ML._ivfpq_ctes(src="mf")}
-    SELECT query_id, neighbor_id, dist FROM ivfpqtop
-    """,
-)
-def q_media_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The media modality served through the SAME composed index the
-    text path uses: payloads → byte-histogram features (mapInPandas,
-    the real-encoder stand-in) → IVFPQ (16 cells / 4 probes / m=4 /
-    16 codes) → top-5 ADC neighbors for the first 8 media items.
-    Replaces q_media_embed_ann's brute-force scan with the pruned +
-    compressed plan a billion-item media corpus actually runs; the
-    oracle replays featurization AND both quantizers bit-for-bit (the
-    histogram fractions are IEEE divisions of exact integer counts, so
-    the shared _ivfpq_ctes chain applies unchanged via src='mf')."""
-    feats = _media_feat_df(spark, sf_dir)
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import ivfpq_topk
-
-    q = feats.filter(F.col("vec_id") < 8)
-    return ivfpq_topk(
-        feats, q, n_cells=16, n_probe=4, m=4, n_codes=16, k=5, iters=1
-    )
-
-
-@_q(
-    "q_media_ivfpq_recall",
-    "WITH " + _MF_CTES + f""",
-    {_ML._ivfpq_ctes(src="mf")},
-    {_ML._exl2_recall_sql("ivfpqtop", src="mf")}
-    """,
-)
-def q_media_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the composed media index against exact L2 over the
-    same features — the audit that says whether 16-dim byte-histogram
-    geometry survives cell pruning + code compression, measured with
-    the identical machinery as the text and raw-embedding ladders (one
-    audit definition, three modalities)."""
-    feats = _media_feat_df(spark, sf_dir)
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import ivfpq_topk
-
-    q = feats.filter(F.col("vec_id") < 8)
-    approx = ivfpq_topk(
-        feats, q, n_cells=16, n_probe=4, m=4, n_codes=16, k=5, iters=1
-    )
-    return _ML._recall_vs_exact_l2(feats, q, approx)
-
-
-@_q(
-    "q_media_binary_rerank",
-    "WITH " + _MF_CTES + f""",
-    {_ML._binary_ctes(src="mf")}
-    SELECT query_id, neighbor_id, dist FROM brtop
-    """,
-)
-def q_media_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The media modality through the binary serving funnel: payloads →
-    byte-histogram features → sign signatures (32 bits/word) → Hamming
-    top-32 candidates → exact 6dp L2² rerank → top-5. With
-    q_media_ivfpq_topk this gives media the same two compression tiers
-    raw embeddings and text both serve from — one funnel definition
-    (_binary_ctes, src-parameterized), three modalities."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        binary_rerank_topk,
-    )
-
-    feats = _media_feat_df(spark, sf_dir)
-    q = feats.filter(F.col("vec_id") < 8)
-    return binary_rerank_topk(feats, q, k=5, rerank=32)
-
-
-@_q(
-    "q_media_binary_recall",
-    "WITH " + _MF_CTES + f""",
-    {_ML._binary_ctes(src="mf")},
-    {_ML._exl2_recall_sql("brtop", src="mf")}
-    """,
-)
-def q_media_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the media binary funnel vs exact L2 over the same
-    features — with q_media_ivfpq_recall, two measured compression
-    recalls on identical media inputs (the same bracketing the text
-    and raw-embedding ladders carry)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        binary_rerank_topk,
-    )
-
-    feats = _media_feat_df(spark, sf_dir)
-    q = feats.filter(F.col("vec_id") < 8)
-    approx = binary_rerank_topk(feats, q, k=5, rerank=32)
-    return _ML._recall_vs_exact_l2(feats, q, approx)
+# media's rows of the serving matrix (registry_ml._SERVE_ROWS): IVFPQ
+# and binary-rerank top-k and recall@5 over the features above. The
+# histogram fractions are IEEE divisions of exact integer counts, so
+# the oracle replays featurization and both quantizers bit-for-bit.
+_ML._serve("media")
 
 
 # -- media admission gate replay (streaming/media_gate.py) -------------------
@@ -862,9 +775,7 @@ def q_multimodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def ranked(feats: DataFrame) -> DataFrame:
         q = feats.filter(F.col("vec_id") < 8)
-        top = ivfpq_topk(
-            feats, q, n_cells=16, n_probe=4, m=4, n_codes=16, k=_XM_K, iters=1
-        )
+        top = ivfpq_topk(feats, q, k=_XM_K, **_ML._IVFPQ_KW)
         w = Window.partitionBy("query_id").orderBy(
             F.asc("dist"), F.asc("neighbor_id")
         )
