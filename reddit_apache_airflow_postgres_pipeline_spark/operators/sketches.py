@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
+
 
 def _cms_col(key: Column | str, row: int, w: int) -> Column:
     """Hash row ``row``'s column index in [0, w) for a key — the
@@ -412,7 +414,7 @@ def qsketch_quantiles(
         *group_cols, "bin", "n", F.sum("n").over(w).alias("cum")
     )
     total = sketch.groupBy(*group_cols).agg(F.sum("n").alias("__N"))
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_df(spark, [(float(q),) for q in qs], "q double")
     targets = qdf.crossJoin(F.broadcast(total)).select(
         *group_cols,
         "q",

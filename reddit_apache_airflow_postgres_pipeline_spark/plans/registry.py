@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from reddit_apache_airflow_postgres_pipeline_spark.operators import neardup, similarity, textstats
 from reddit_apache_airflow_postgres_pipeline_spark.operators.dedup import dedup_first
 from reddit_apache_airflow_postgres_pipeline_spark.operators.merge import upsert_merge
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sources.tables import load_table
 
 
@@ -2489,7 +2490,7 @@ def q_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scalable non-equi pattern (broadcast nested-loop over a tiny
     interval table; never a fact×fact theta join)."""
     p = load_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(_BANDS, ["lo", "hi", "band"])
+    bands = local_df(spark, _BANDS, "lo double, hi double, band string")
     return (
         p.join(
             F.broadcast(bands),

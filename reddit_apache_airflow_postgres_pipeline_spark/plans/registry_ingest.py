@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.plans.registry import _TOKENS_SQL, _q
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sources.tables import load_table
 
 _ING_B = 4            # replayed stream batches (batch 3 = the drifted feed)
@@ -586,7 +587,7 @@ def _dedup_unroll(spark: SparkSession, keys: DataFrame) -> DataFrame:
     dedup_gate.gate_batch two-join policy per batch, state extended
     only by each batch's accepted keys. Shared by the ungrouped and
     grouped replays."""
-    state = spark.createDataFrame([], "bk string")
+    state = local_df(spark, [], "bk string")
     rej_parts = []
     for i in range(_ING_B):
         kb = keys.filter(F.col("b") == i).select("doc", "bk")
@@ -1328,7 +1329,7 @@ def _build_estate_into(
     _cs.stamp_meta(roots["gate_state"], verified_gate_meta(3, 12, 4, 0.5))
     _cs.stamp_corpus_meta(roots["gate_corpus"], "doc_id", "text")
     sig_all = minhash_signature(docs, "doc_id", "text", 3, 12).localCheckpoint()
-    state = spark.createDataFrame([], _sig_schema(12))
+    state = local_df(spark, [], _sig_schema(12))
     for g in range(3):
         batch = docs.filter(mod3 == g)
         sig_g = sig_all.filter((F.col("doc") % 3).cast("int") == g)
@@ -1368,7 +1369,7 @@ def _build_estate_into(
     msig_all = ahash_signatures(all_media, n=60).select(
         F.col("media_id").alias("doc"), "sig"
     ).localCheckpoint()
-    mstate = spark.createDataFrame([], _M_SIG_SCHEMA)
+    mstate = local_df(spark, [], _M_SIG_SCHEMA)
     for g in range(3):
         mbatch = all_media.filter((F.col("media_id") % 3).cast("int") == g)
         msig_g = msig_all.filter((F.col("doc") % 3).cast("int") == g)

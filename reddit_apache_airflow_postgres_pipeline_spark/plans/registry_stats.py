@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.plans.registry import _q
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sources.tables import load_table
 
 _MEASURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -862,7 +863,7 @@ def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = v.select(
         "x", (F.row_number().over(Window.orderBy("x")) - 1).alias("rk")
     )
-    qdf = spark.createDataFrame([(float(q),) for q in _QSK_QS], "q double")
+    qdf = local_df(spark, [(float(q),) for q in _QSK_QS], "q double")
     t2 = qdf.crossJoin(F.broadcast(n)).select(
         "q", (F.col("q") * (F.col("__N") - 1)).alias("pos")
     )

@@ -10,16 +10,27 @@ with ``default_timezone = utc``, airflow.cfg:43).
 VERSION PIN: written and tested against PySpark 4.1.x (the container's
 baked-in build). Known 4.1-sensitive surfaces, each localized with a
 comment at the use site: the ``_jdf`` plan-stats reach-in
-(operators/neardup.py:_plan_size_bytes — guarded, safe fallback) and
-the ``PythonSQLUtils.explainString`` call in the plan tests/audit.
-Everything else is public DataFrame API.
+(operators/neardup.py:_plan_size_bytes — guarded, safe fallback), the
+``PythonSQLUtils.explainString`` call in the plan tests/audit, and
+:func:`local_df`. That helper relies on ``createDataFrame(pyarrow.Table)``
+becoming a JVM ``LocalRelation`` while the table is under
+``spark.sql.execution.arrow.localRelationThreshold`` (a JVM-side RDD of
+Arrow batches above it), and it reuses PySpark's row verifier
+``types._make_type_verifier``. Everything else is public DataFrame API.
 """
 
 from __future__ import annotations
 
 import os
+import re
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
+
+_LONE_SURROGATE = re.compile("[\ud800-\udfff]")
 
 
 def get_spark(
@@ -78,3 +89,53 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _arrow_column(values: list, typ: pa.DataType) -> pa.Array:
+    """``values`` as one Arrow array. Arrow refuses a lone UTF-16
+    surrogate (``json.loads`` yields one for an unpaired ``\\ud83d``
+    escape); the JVM decoder behind ``createDataFrame(list)`` turns each
+    into U+FFFD, and so does this."""
+    try:
+        return pa.array(values, typ)
+    except UnicodeEncodeError:
+        return pa.array(
+            [
+                _LONE_SURROGATE.sub("\ufffd", v) if isinstance(v, str) else v
+                for v in values
+            ],
+            typ,
+        )
+
+
+def local_df(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows (tuples, ``Row``s or dicts keyed by field name)
+    as a DataFrame of ``schema`` (a ``StructType`` or DDL string).
+
+    ``createDataFrame(list)`` pickles the rows into a Python RDD
+    (``Scan ExistingRDD``) that a Python worker decodes: 1.2-1.6 s of
+    process CPU per call whatever the row count (local[4], 4-core VM).
+    Here the rows become a ``pyarrow.Table`` that the JVM reads as a
+    ``LocalRelation`` (``LocalTableScan``) with no Python worker:
+    0.1-0.25 s. Rows pass the same verifier ``createDataFrame`` runs,
+    so a wrong-typed or out-of-range value raises the same error; a
+    non-string in a string column, which the pickled path turned into
+    Java's ``toString``, raises too."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    rows = list(rows)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        _arrow_column(
+            [r.get(f.name) if isinstance(r, dict) else r[i] for r in rows], f.type
+        )
+        for i, f in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )

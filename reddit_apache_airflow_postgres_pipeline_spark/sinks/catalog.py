@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
@@ -249,4 +250,4 @@ def catalog(spark: SparkSession, roots: dict[str, str] | list[str]) -> DataFrame
         catalog_entry(spark, name, path)
         for name, path in sorted(roots.items())
     ]
-    return spark.createDataFrame(entries, CATALOG_SCHEMA)
+    return local_df(spark, entries, CATALOG_SCHEMA)

@@ -69,6 +69,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import catalog as _cat
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
     media_index as _mi,
@@ -220,7 +221,7 @@ def _erase_index(
     if live == 0:
         return 0
     before = _vi.index_stats(spark, path, kind)["rows"]
-    id_df = spark.createDataFrame([(int(i),) for i in ids], "vec_id long")
+    id_df = local_df(spark, [(int(i),) for i in ids], "vec_id long")
     _vi.delete_from_index(id_df, path, id_col="vec_id")
     if modality == "text":
         _ti.compact_text_index(spark, path)
@@ -316,6 +317,7 @@ def forget(
         }
         for name in sorted(roots)
     ]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         out, "name string, category string, action string, rows_removed long"
     )

@@ -66,6 +66,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
+
 SNAPSHOTS_SUBDIR = "_snapshots"
 SNAPSHOT_FORMAT = "corpus-snapshot/v1"
 PIN_META = "pinned_snapshot.json"
@@ -287,7 +289,8 @@ def manifests_df(spark: SparkSession, corpus_dir: str) -> DataFrame:
                 "erasure_sha256": m.get("erasure_sha256"),
             }
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows,
         "snapshot string, n_batches int, rows long, "
         "supersedes string, erasure_sha256 string",
@@ -376,7 +379,8 @@ def verify_snapshot(
                 ),
             }
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows,
         "snapshot string, batch_id int, rows long, rows_actual long, ok boolean",
     )

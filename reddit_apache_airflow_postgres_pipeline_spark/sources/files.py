@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
+
 
 def decoded_input_file() -> F.Column:
     """``input_file_name()`` decoded to the local filesystem path.
@@ -156,7 +158,8 @@ def read_csv_paths(
         usable.append(p)
 
     if not usable:
-        empty = spark.createDataFrame(
+        empty = local_df(
+            spark,
             [],
             T.StructType(
                 [T.StructField(c, T.StringType()) for c in all_cols]
@@ -179,7 +182,7 @@ def read_csv_paths(
 
     file_seq_map = {p: i for i, p in enumerate(usable)}  # lexicographic rank
     seq_entries = [(p, i) for p, i in file_seq_map.items()]
-    seq_df = spark.createDataFrame(seq_entries, ["_file", "file_seq"])
+    seq_df = local_df(spark, seq_entries, "_file string, file_seq long")
 
     parts: list[DataFrame] = []
     for cols, group in by_schema.items():

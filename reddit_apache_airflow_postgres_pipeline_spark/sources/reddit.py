@@ -38,6 +38,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from reddit_apache_airflow_postgres_pipeline_spark.schemas import REDDIT_RAW
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 
 RETRYABLE_STATUS = {429, 403, 500, 502, 503, 504}
 MAX_ATTEMPTS = 8
@@ -218,7 +219,7 @@ def reddit_listing_df(
     spark: SparkSession, rows: list[dict[str, Any]]
 ) -> DataFrame:
     """Materialize fetched rows as the REDDIT_RAW relation."""
-    return spark.createDataFrame(rows, REDDIT_RAW)
+    return local_df(spark, rows, REDDIT_RAW)
 
 
 def listing_json_df(spark: SparkSession, payloads: list[str | bytes]) -> DataFrame:
@@ -235,7 +236,8 @@ def listing_json_df(spark: SparkSession, payloads: list[str | bytes]) -> DataFra
 
     from reddit_apache_airflow_postgres_pipeline_spark.schemas import REDDIT_LISTING
 
-    raw = spark.createDataFrame(
+    raw = local_df(
+        spark,
         [(p.decode() if isinstance(p, bytes) else p,) for p in payloads],
         "payload string",
     )

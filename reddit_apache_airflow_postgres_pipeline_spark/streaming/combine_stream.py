@@ -41,11 +41,17 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from reddit_apache_airflow_postgres_pipeline_spark.config import EngineConfig
 from reddit_apache_airflow_postgres_pipeline_spark.operators.merge import upsert_merge
 from reddit_apache_airflow_postgres_pipeline_spark.plans.pipelines import combine_pipeline
-from reddit_apache_airflow_postgres_pipeline_spark.schemas import DB_COLUMNS, UPSERT_UPDATE_COLUMNS
+from reddit_apache_airflow_postgres_pipeline_spark.schemas import (
+    DB_COLUMNS,
+    FETCH_CSV,
+    UPSERT_UPDATE_COLUMNS,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sinks.archive import archive_files
 from reddit_apache_airflow_postgres_pipeline_spark.sources.files import (
     decoded_input_file,
@@ -58,27 +64,32 @@ class MemoryUpsertTarget:
     """In-memory upsert target for tests/demos — the pure-Spark J1 merge
     applied batch-over-batch. Production uses a Postgres merge callback
     instead (sinks/postgres.py); both are idempotent on ``thing_key`` so
-    foreachBatch re-delivery after a crash converges (D2)."""
+    foreachBatch re-delivery after a crash converges (D2). The target
+    keeps the first batch's column types (all-string ``FETCH_CSV``
+    until one arrives): a column NULL in every held row has no Python
+    value to infer a type from."""
 
     key: str = "thing_key"
     update_cols: list[str] = field(default_factory=lambda: list(UPSERT_UPDATE_COLUMNS))
     _rows: list = field(default_factory=list)
-    _columns: list = field(default_factory=lambda: list(DB_COLUMNS))
+    _schema: StructType = FETCH_CSV
 
     def merge(self, batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.select(*self._columns)
+        batch_df = batch_df.select(*DB_COLUMNS)
         if self._rows:
-            target = spark.createDataFrame(self._rows, self._columns)
+            target = self.df(batch_df.sparkSession)
             merged = upsert_merge(target, batch_df, self.key, self.update_cols)
         else:
+            self._schema = StructType(
+                [StructField(f.name, f.dataType) for f in batch_df.schema]
+            )
             merged = batch_df
         # The *target table* lives driver-side here only because this is
         # the test double; the production target is Postgres.
-        self._rows = [tuple(r[c] for c in self._columns) for r in merged.collect()]
+        self._rows = [tuple(r) for r in merged.collect()]
 
     def df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self._rows, self._columns)
+        return local_df(spark, self._rows, self._schema)
 
 
 def start_combine_stream(

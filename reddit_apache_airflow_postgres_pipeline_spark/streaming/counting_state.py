@@ -31,6 +31,7 @@ from pyspark.sql.utils import AnalysisException
 
 # the per-batch layout lives in streaming/drain.py; re-exported here
 # because the counting stores' callers address it through this module
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (  # noqa: F401
     MANIFEST,
     live_dir_count,
@@ -142,7 +143,7 @@ def read_counts(
             cell_schema + ", batch_id long"
         ).parquet(state_dir)
     except AnalysisException:
-        return spark.createDataFrame([], cell_schema)
+        return local_df(spark, [], cell_schema)
     excluded = subsumed_ids(state_dir)
     if excluded:
         df = df.filter(~F.col("batch_id").isin([int(i) for i in excluded]))

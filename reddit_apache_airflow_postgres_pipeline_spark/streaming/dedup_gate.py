@@ -44,6 +44,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
     minhash_band_keys,
     minhash_signature,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
 )
@@ -99,7 +100,7 @@ def _read_state(
     try:
         df = spark.read.schema(schema + ", batch_id long").parquet(state_dir)
     except AnalysisException:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     if before_batch is not None:
         df = df.filter(F.col("batch_id") < before_batch)
     return df.drop("batch_id")

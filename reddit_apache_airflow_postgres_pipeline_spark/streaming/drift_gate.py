@@ -49,6 +49,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
     psi_drift_counts,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import token_count
+from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     drain,
     write_batch,
@@ -283,7 +284,8 @@ def batch_drift_stats(
         ks_drift_counts,
     )
 
-    cur = batch_df.sparkSession.createDataFrame(
+    cur = local_df(
+        batch_df.sparkSession,
         reference_counts(batch_df, text_col, bin_width, bins, metric).collect(),
         "bin int, n bigint",
     )
@@ -425,7 +427,7 @@ def _drift_drain(
             # batch_id lives in the partition dir name — readers of the
             # decisions log get it back as the inferred partition column
             write_batch(
-                batch_df.sparkSession.createDataFrame(decision, dschema),
+                local_df(batch_df.sparkSession, decision, dschema),
                 os.path.join(out_dir, "decisions"), batch_id,
             )
         finally:
@@ -567,7 +569,8 @@ def batch_group_drift_stats(
         psi_drift_counts_by_group,
     )
 
-    cur = batch_df.sparkSession.createDataFrame(
+    cur = local_df(
+        batch_df.sparkSession,
         group_reference_counts(
             batch_df, group_col, text_col, bin_width, bins
         ).collect(),
