@@ -1402,45 +1402,29 @@ def _build_estate_into(
 
 def _estate_blk_ctes() -> str:
     """Per-generation blocker CTEs for BOTH modalities — the dup_of
-    stores' PAIR relations (doc, odoc); conditions identical to the
-    dup_of oracles (registry_ml._gate_dup_of_sql /
-    registry_mm._media_gate_dup_of_sql). Shared by the catalog oracle
-    (which counts rows) and the forget-audit oracle (which needs the
-    odoc side too: a log row MENTIONING a forgotten id must go)."""
+    stores' PAIR relations (doc, odoc), eligible by the same rule as the
+    dup_of oracles (registry_ml._blocker_cte). Shared by the catalog
+    oracle (which counts rows) and the forget-audit oracle (which needs
+    the odoc side too: a log row MENTIONING a forgotten id must go)."""
     from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ml import (
         _GATE_GENS,
-        _GATE_T,
+        _GATE_MODS,
+        _blocker_cte,
+        _union_cte,
     )
 
-    def _blk(tag: str, rel: str, pred: str, sfx: str) -> list[str]:
-        parts, sels = [], []
-        for g in range(_GATE_GENS):
-            prev = (
-                "\nUNION ALL\n".join(
-                    f"SELECT doc FROM acc{j}{sfx}" for j in range(g)
-                )
-                if g
-                else None
+    parts = []
+    for tag, mod, sfx in (("tblk", "text", ""), ("mblk", "media", "_m")):
+        m = _GATE_MODS[mod]
+        names = [f"{tag}{g}" for g in range(_GATE_GENS)]
+        parts += [
+            _blocker_cte(
+                n, "e.id_a AS doc, e.id_b AS odoc", m.rel, g, m.pred, sfx
             )
-            in_batch = (
-                f"(e.id_b < e.id_a AND e.id_b IN"
-                f" (SELECT doc FROM gens WHERE gen = {g}))"
-            )
-            cond = f"(e.id_b IN ({prev}) OR {in_batch})" if prev else in_batch
-            parts.append(
-                f"{tag}{g} AS (SELECT e.id_a AS doc, e.id_b AS odoc"
-                f" FROM {rel} e"
-                f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
-                f" WHERE {pred}{cond}),"
-            )
-            sels.append(f"SELECT * FROM {tag}{g}")
-        parts.append(f"{tag} AS (" + "\nUNION ALL\n".join(sels) + "),")
-        return parts
-
-    return "\n".join(
-        _blk("tblk", "est", f"e.est >= {_GATE_T!r} AND ", "")
-        + _blk("mblk", "mdist", "", "_m")
-    )
+            for g, n in enumerate(names)
+        ]
+        parts.append(_union_cte(tag, names) + ",")
+    return "\n".join(parts)
 
 
 def _estate_catalog_sql(
@@ -1491,7 +1475,7 @@ def _estate_catalog_sql(
     {_gate_common_ctes(_GATE_K, _GATE_BANDS, _GATE_GENS)}
     vcand AS (SELECT id_a, id_b FROM est WHERE est >= {_GATE_T!r}),
     {_gate_chain_ctes("vcand", "", _GATE_GENS)},
-    {_media_gate_sig_ctes(60, 5)},
+    {_media_gate_sig_ctes()},
     mcand AS (SELECT id_a, id_b FROM mdist),
     {_gate_chain_ctes("mcand", "_m", _GATE_GENS)},
     adm AS (SELECT doc FROM gens WHERE doc NOT IN (SELECT doc FROM rej)),
@@ -1722,7 +1706,7 @@ def _forget_audit_sql() -> str:
     {_gate_common_ctes(_GATE_K, _GATE_BANDS, _GATE_GENS)}
     vcand AS (SELECT id_a, id_b FROM est WHERE est >= {_GATE_T!r}),
     {_gate_chain_ctes("vcand", "", _GATE_GENS)},
-    {_media_gate_sig_ctes(60, 5)},
+    {_media_gate_sig_ctes()},
     mcand AS (SELECT id_a, id_b FROM mdist),
     {_gate_chain_ctes("mcand", "_m", _GATE_GENS)},
     adm AS (SELECT doc FROM gens WHERE doc NOT IN (SELECT doc FROM rej)),

@@ -7,12 +7,14 @@ of shingles / hash order / hyperplanes).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators import neardup, similarity
+from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import quality_score
 from reddit_apache_airflow_postgres_pipeline_spark.plans.registry import (
     _TOKENS_SQL as _TOKENS_SQL_ML,
     _q,
@@ -1298,8 +1300,6 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics every hybrid search engine implements. Both legs are
     existing bounded plans (BM25 broadcasts idf/avgdl; kNN broadcasts
     the 1-vector query); the fusion itself is a 40-row join."""
-    from pyspark.sql import Window
-
     from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import bm25_scores
     from reddit_apache_airflow_postgres_pipeline_spark.plans.registry import _BM25_TERMS
 
@@ -1481,8 +1481,6 @@ def q_link_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the blocked pair plan and the iterative min-label propagation
     (localCheckpoint per round); the recursive-CTE oracle replays the
     fixpoint."""
-    from pyspark.sql import Window
-
     from reddit_apache_airflow_postgres_pipeline_spark.operators import linkage
     from reddit_apache_airflow_postgres_pipeline_spark.operators.clusters import (
         connected_components,
@@ -2398,8 +2396,6 @@ def q_sim_funnel_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-score of ≤|q|×budget rows). The marginal recall of each budget
     doubling is what decides the production setting — the same audit
     shape as q_neardup_threshold_sweep for MinHash."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
     ham = similarity.binary_hamming_topk(e, q, k=max(_FUNNEL_BUDGETS))
@@ -2583,34 +2579,23 @@ _serve("text")
 
 
 # ---------------------------------------------------------------------------
-# Verified incremental admission: the streaming dedup gate's policy as a
-# relational replay
+# The admission-gate replay family: the streaming gates' policies as
+# relational replays. Documents arrive in _GATE_GENS deterministic
+# generations (doc_id % _GATE_GENS); a generation's doc is rejected iff a
+# candidate pair links it to an ACCEPTED doc of an earlier generation or
+# to a smaller id of its own generation, admitted or not (the family's
+# pessimistic rule). Admission in g depends on admission in g-1, so the
+# oracle unrolls the generations as chained CTEs (_gate_chain_ctes) and
+# the Spark side mirrors them as semi-joins (_chain_from_pairs). Every
+# query is one _gate row: a source (_GATE_SOURCES: what is signed, which
+# pairs gate) under a form (replay, dup_of, admission_drift).
 # ---------------------------------------------------------------------------
 
+_GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS = 12, 4, 0.5, 3
 
-def _gate_replay_sql(
-    num_hashes: int, bands: int, threshold: float, n_gens: int
-) -> str:
-    """Unrolled-generation oracle for the VERIFIED dedup gate
-    (streaming/dedup_gate.gate_batch_verified): documents arrive in
-    ``n_gens`` deterministic generations (doc_id % n_gens); each
-    generation is gated against the signatures of earlier generations'
-    ACCEPTED docs (band-bucket candidates verified at matching-position
-    estimate ≥ threshold) plus the pessimistic smaller-id rule within
-    its own generation. Admission in generation g depends on admission
-    in g-1 — recursive in general, so the oracle unrolls a fixed number
-    of generations as chained CTEs, the same contract the k-means /
-    PageRank / BPE oracles use for their rounds."""
-    parts = [
-        "WITH " + _gate_common_ctes(num_hashes, bands, n_gens),
-        f"vcand AS (SELECT id_a, id_b FROM est WHERE est >= {threshold!r}),",
-        _gate_chain_ctes("vcand", "", n_gens),
-    ]
-    parts.append(
-        "SELECT g.doc AS doc, g.gen AS gen,"
-        " (g.doc NOT IN (SELECT doc FROM rej)) AS admitted FROM gens g"
-    )
-    return "\n".join(parts)
+
+def _gen_of(c: str):
+    return (F.col(c) % _GATE_GENS).cast("int")
 
 
 def _gate_common_ctes(
@@ -2671,6 +2656,36 @@ def _gate_common_ctes(
     )
 
 
+def _blocker_cte(
+    name: str, sel: str, rel: str, g: int, pred: str = "", sfx: str = ""
+) -> str:
+    """``name`` AS the rows of pair relation ``rel`` (id_a, id_b, ...)
+    whose id_b was ELIGIBLE to block generation ``g``'s id_a: a doc of
+    acc0{sfx}..acc{g-1}{sfx}, or a smaller id of ``g`` itself. ``pred``
+    prefixes the condition (the relation's candidate filter). Every
+    chain, dup_of and estate blocker CTE is one of these."""
+    cond = (
+        f"(e.id_b < e.id_a AND e.id_b IN"
+        f" (SELECT doc FROM gens WHERE gen = {g}))"
+    )
+    if g:
+        prev = "\nUNION ALL\n".join(
+            f"SELECT doc FROM acc{j}{sfx}" for j in range(g)
+        )
+        cond = f"(e.id_b IN ({prev}) OR {cond})"
+    return (
+        f"{name} AS (SELECT {sel} FROM {rel} e"
+        f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
+        f" WHERE {pred}{cond}),"
+    )
+
+
+def _union_cte(name: str, ctes: list[str]) -> str:
+    return f"{name} AS (" + "\nUNION ALL\n".join(
+        f"SELECT * FROM {c}" for c in ctes
+    ) + ")"
+
+
 def _gate_chain_ctes(rel: str, sfx: str, n_gens: int) -> str:
     """The unrolled generation-ordered admission chain over a candidate
     relation ``rel`` (columns id_a, id_b — symmetric): rej{g}{sfx} /
@@ -2680,22 +2695,10 @@ def _gate_chain_ctes(rel: str, sfx: str, n_gens: int) -> str:
     so a policy comparison differs ONLY in its candidate relation."""
     parts = []
     for g in range(n_gens):
-        if g == 0:
-            prev = None
-        else:
-            prev = "\nUNION ALL\n".join(
-                f"SELECT doc FROM acc{j}{sfx}" for j in range(g)
-            )
-        in_batch = (
-            f"(e.id_b < e.id_a AND e.id_b IN"
-            f" (SELECT doc FROM gens WHERE gen = {g}))"
-        )
-        vs_state = f"e.id_b IN ({prev})" if prev else None
-        cond = f"({vs_state} OR {in_batch})" if vs_state else in_batch
         parts.append(
-            f"rej{g}{sfx} AS (SELECT DISTINCT e.id_a AS doc FROM {rel} e"
-            f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
-            f" WHERE {cond}),"
+            _blocker_cte(
+                f"rej{g}{sfx}", "DISTINCT e.id_a AS doc", rel, g, sfx=sfx
+            )
         )
         parts.append(
             f"acc{g}{sfx} AS (SELECT doc FROM gens WHERE gen = {g}"
@@ -2779,235 +2782,55 @@ def _chain_from_pairs(
     return decs, blks
 
 
-def _gate_pairs(
-    sig_all: DataFrame,
-    num_hashes: int,
-    bands: int,
-    threshold: float | None,
-    n_gens: int,
-) -> DataFrame:
-    """(doc, odoc, gen_d, gen_o, est): the full DIRECTED verified-pair
-    relation over a corpus signature relation — band buckets propose
-    (both directions, self-pairs dropped: every doc arrives in exactly
-    one generation, so a self-pair can satisfy neither chain direction),
-    the matching-position estimate disposes at >= ``threshold``.
-    ``threshold=None`` skips verification and returns every banded
-    collision (the raw bucket policy's candidate relation, est-less) —
-    the policy-audit comparison differs only here, exactly as in the
-    oracle's cand/vcand split."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        band_keys_of_signature,
-    )
+def _union(dfs) -> DataFrame:
+    return reduce(DataFrame.unionByName, dfs)
+
+
+def _gate_pairs(sig_all: DataFrame, threshold: float = _GATE_T) -> DataFrame:
+    """(doc, odoc, est, gen_d, gen_o): the full DIRECTED verified-pair
+    relation over a corpus MinHash signature relation — band buckets
+    propose (both directions, self-pairs dropped: every doc arrives in
+    exactly one generation, so a self-pair can satisfy neither chain
+    direction), the matching-position estimate disposes at >=
+    ``threshold``. The standard LSH batch job: a banded equi-join and an
+    output-proportional verify, never a cross join."""
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
         _est_blockers,
     )
 
-    keys = band_keys_of_signature(sig_all, num_hashes, bands)
-    if threshold is None:
-        okeys = keys.select(F.col("doc").alias("odoc"), "bk")
-        p = keys.join(okeys, "bk").select("doc", "odoc").distinct()
-    else:
-        p = _est_blockers(
-            keys, sig_all, keys, sig_all, num_hashes, threshold, ordered=False
-        )
-    gen_of = lambda c: (F.col(c) % n_gens).cast("int")  # noqa: E731
+    keys = neardup.band_keys_of_signature(sig_all, _GATE_K, _GATE_BANDS)
+    p = _est_blockers(
+        keys, sig_all, keys, sig_all, _GATE_K, threshold, ordered=False
+    )
     return p.filter(F.col("doc") != F.col("odoc")).select(
-        "*", gen_of("doc").alias("gen_d"), gen_of("odoc").alias("gen_o")
+        "*", _gen_of("doc").alias("gen_d"), _gen_of("odoc").alias("gen_o")
     )
 
 
-_GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS = 12, 4, 0.5, 3
+def _spine(rows: DataFrame, id_col: str) -> DataFrame:
+    """(doc, gen): the docs of ``rows`` that get a decision."""
+    return rows.select(F.col(id_col).alias("doc"), _gen_of(id_col).alias("gen"))
 
 
-@_q(
-    "q_neardup_gate_replay",
-    _gate_replay_sql(_GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS),
-)
-def q_neardup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified streaming dedup gate replayed as a batch relation:
-    documents arrive in 3 deterministic generations (doc_id % 3); each
-    generation is admitted against the SIGNATURES of earlier
-    generations' accepted docs — band buckets propose candidates, the
-    matching-position MinHash estimate (the only verification possible
-    at 100 TB, where history's text is gone and signatures are the
-    retained state) disposes at ≥ 0.5, plus the pessimistic smaller-id
-    rule within a generation. The POLICY is the streams' batch kernel
-    (streaming/dedup_gate.gate_batch_verified — stream-vs-replay parity
-    against a real drained stream is pinned by tests/test_dedup_gate.py);
-    the batch REPLAY evaluates it in the oracle's own shape (r14, guide
-    §2.4): the full directed verified pair relation is computed ONCE
-    (one banded self-join + one estimate pass over the memoized corpus
-    signatures, lazily localCheckpointed) and the unrolled generation
-    chain (:func:`_chain_from_pairs` — the DataFrame mirror of
-    :func:`_gate_chain_ctes`) runs as semi-joins between that skinny
-    pair relation and the accumulating accepted-id sets. The r13 form
-    re-ran the band/verify joins twice per generation against a growing
-    state (6 blocker-join executions per replay); this form runs them
-    once — identical decisions, since per generation "rejected" is
-    exactly "has a pair to an earlier-gen ACCEPTED doc, or to a smaller
-    id in its own generation", which is how the SQL oracle has always
-    defined the chain.
-
-    Scale: the corpus is scanned + signature-aggregated ONCE (memoized
-    checkpoint, the chain_meta contract); the pair relation is the
-    standard LSH batch job (banded equi-join, output-proportional
-    estimate verify — never a cross join, never a text re-read of
-    history); the chain itself touches only true-pair-scale and
-    decision-scale rows."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        minhash_signature,
-    )
+def _text_gate_sigs(spark: SparkSession, sf_dir: str, docs: DataFrame, key: str):
+    """(spine, [signatures]) of ``docs``: the signature relation (doc,
+    mh_0..mh_{K-1}) is computed once per application × sf_dir and
+    ``key``, the history state a 100 TB gate keeps instead of text."""
     from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
         _memo_replay,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen")
-    )
-    sig_all = _memo_replay(
-        spark, sf_dir, "gate-replay-sigs",
-        lambda: minhash_signature(
+    sig = _memo_replay(
+        spark, sf_dir, key,
+        lambda: neardup.minhash_signature(
             docs, "doc_id", "text", 3, _GATE_K
         ).localCheckpoint(),
     )
-    pairs = _gate_pairs(
-        sig_all, _GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS
-    ).localCheckpoint(eager=False)
-    gens = docs.select(F.col("doc_id").alias("doc"), "gen")
-    decs, _blks = _chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        dec.select("doc", F.lit(g).cast("int").alias("gen"), "admitted")
-        for g, dec in enumerate(decs)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def _gate_policy_audit_sql(
-    num_hashes: int, bands: int, threshold: float, n_gens: int
-) -> str:
-    """Dual unrolled replay — the SAME generation chain run twice, once
-    over estimate-verified candidates and once over raw banded
-    collisions — aggregated per generation into the operating-point
-    audit (how many docs each policy rejects, and how many the
-    verification SAVES from a false bucket collision)."""
-    return "\n".join(
-        [
-            "WITH " + _gate_common_ctes(num_hashes, bands, n_gens),
-            f"vcand AS (SELECT id_a, id_b FROM est WHERE est >= {threshold!r}),",
-            _gate_chain_ctes("vcand", "", n_gens) + ",",
-            _gate_chain_ctes("cand", "_b", n_gens) + ",",
-            """flags AS (
-              SELECT g.doc, g.gen,
-                     (g.doc IN (SELECT doc FROM rej)) AS rej_v,
-                     (g.doc IN (SELECT doc FROM rej_b)) AS rej_b
-              FROM gens g)
-            SELECT gen,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(SUM(CASE WHEN rej_v THEN 1 ELSE 0 END) AS BIGINT)
-                     AS rejected_verified,
-                   CAST(SUM(CASE WHEN rej_b THEN 1 ELSE 0 END) AS BIGINT)
-                     AS rejected_bucket,
-                   CAST(SUM(CASE WHEN rej_b AND NOT rej_v THEN 1 ELSE 0 END)
-                     AS BIGINT) AS saved_by_verify
-            FROM flags GROUP BY gen""",
-        ]
-    )
-
-
-@_q(
-    "q_neardup_gate_policy_audit",
-    _gate_policy_audit_sql(_GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS),
-)
-def q_neardup_gate_policy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The operating-point audit behind the verified gate: BOTH
-    admission policies — raw bucket-collision (streaming/dedup_gate.
-    gate_batch) and signature-verified (gate_batch_verified) — replayed
-    over the same 3-generation arrival, aggregated per generation into
-    (n_docs, rejected_verified, rejected_bucket, saved_by_verify).
-    ``saved_by_verify`` counts docs a single band collision would have
-    thrown away that the signature estimate exonerates — the number a
-    data-curation owner reads before picking a gate for a 100 TB
-    ingest, measured on their own corpus by the engine itself.
-
-    Both policies replay through the oracle's own all-pairs shape (r14,
-    see q_neardup_gate_replay): the corpus signatures are computed ONCE
-    (shared memoized checkpoint with q_neardup_gate_replay), ONE banded
-    self-join proposes every collision pair, and the two policies'
-    chains (:func:`_chain_from_pairs`, run twice) differ ONLY in their
-    candidate relation — the estimate-verified subset vs every banded
-    collision, exactly the oracle's vcand/cand split. The raw pair
-    relation is the verified one MINUS its estimate filter, so both
-    derive from the same join (the verified chain reads the est >= t
-    subset of the checkpointed collision pairs)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        band_keys_of_signature,
-        minhash_signature,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-        _est_blockers,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen")
-    )
-    sig_all = _memo_replay(
-        spark, sf_dir, "gate-replay-sigs",
-        lambda: minhash_signature(
-            docs, "doc_id", "text", 3, _GATE_K
-        ).localCheckpoint(),
-    )
-    # one banded self-join + estimate pass serves BOTH policies:
-    # threshold=0.0 keeps every collision pair with its estimate, the
-    # bucket chain uses them all, the verified chain filters est >= t
-    keys = band_keys_of_signature(sig_all, _GATE_K, _GATE_BANDS)
-    gen_of = lambda c: (F.col(c) % _GATE_GENS).cast("int")  # noqa: E731
-    pairs_all = (
-        _est_blockers(
-            keys, sig_all, keys, sig_all, _GATE_K, 0.0, ordered=False
-        )
-        .filter(F.col("doc") != F.col("odoc"))
-        .select(
-            "doc", "odoc", "est",
-            gen_of("doc").alias("gen_d"), gen_of("odoc").alias("gen_o"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    gens = docs.select(F.col("doc_id").alias("doc"), "gen")
-    decs_v, _ = _chain_from_pairs(
-        gens, pairs_all.filter(F.col("est") >= F.lit(float(_GATE_T))),
-        _GATE_GENS,
-    )
-    decs_b, _ = _chain_from_pairs(gens, pairs_all, _GATE_GENS)
-    outs = [
-        dv.select(
-            "doc",
-            F.lit(g).cast("int").alias("gen"),
-            (~F.col("admitted")).alias("rej_v"),
-        ).join(
-            db.select("doc", F.col("admitted").alias("__acc_b")), "doc"
-        )
-        for g, (dv, db) in enumerate(zip(decs_v, decs_b))
-    ]
-    flags = outs[0]
-    for o in outs[1:]:
-        flags = flags.unionByName(o)
-    return flags.groupBy("gen").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("rej_v").cast("long")).alias("rejected_verified"),
-        F.sum((~F.col("__acc_b")).cast("long")).alias("rejected_bucket"),
-        F.sum(
-            ((~F.col("__acc_b")) & (~F.col("rej_v"))).cast("long")
-        ).alias("saved_by_verify"),
-    )
+    return _spine(docs, "doc_id"), [sig]
 
 
 _GATE_QFLOOR = 0.5
+_MEDIA_MIN_BYTES = 200
 
 # The composite quality score, unrounded, operation-ordered to mirror
 # textstats.quality_score exactly (0.4*content + 0.3*(1-punct) +
@@ -3028,190 +2851,144 @@ _QUALITY_SQL = f"""
   WHERE quality >= {_GATE_QFLOOR!r}
 """
 
-
-@_q(
-    "q_neardup_gate_replay_quality",
-    "WITH goodq AS (" + _QUALITY_SQL + "),\n"
-    + _gate_common_ctes(_GATE_K, _GATE_BANDS, _GATE_GENS, restrict="goodq")
-    + f"\nvcand AS (SELECT id_a, id_b FROM est WHERE est >= {_GATE_T!r}),\n"
-    + _gate_chain_ctes("vcand", "", _GATE_GENS)
-    + "\nSELECT g.doc AS doc, g.gen AS gen,"
-    " (g.doc NOT IN (SELECT doc FROM rej)) AS admitted FROM gens g",
-)
-def q_neardup_gate_replay_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified gate replay under the chain's REAL configuration:
-    the curation quality floor (textstats.quality_score >= 0.5) runs
-    BEFORE admission, so a below-floor doc claims no buckets and a
-    later higher-quality near-copy can still be admitted — exactly the
-    min_quality contract both streaming kernels implement. Decisions
-    cover quality-surviving docs only (the kernels drop the rest before
-    signatures exist); the oracle replays the composite score with the
-    identical operation order, so the >= floor agrees bit-for-bit."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        minhash_signature,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import (
-        quality_score,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen")
-    )
-    good = docs.filter(quality_score("text") >= F.lit(_GATE_QFLOOR))
-    sig_all = _memo_replay(
-        spark, sf_dir, "gate-replay-quality-sigs",
-        lambda: minhash_signature(
-            good, "doc_id", "text", 3, _GATE_K
-        ).localCheckpoint(),
-    )
-    # all-pairs chain form (see q_neardup_gate_replay); the pair
-    # relation derives from the floor-filtered signature checkpoint and
-    # the decision spine covers floor-survivors only, so a below-floor
-    # doc claims no buckets and gets no decision — the kernels'
-    # min_quality contract unchanged
-    pairs = _gate_pairs(
-        sig_all, _GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS
-    ).localCheckpoint(eager=False)
-    gens = good.select(F.col("doc_id").alias("doc"), "gen")
-    decs, _blks = _chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        dec.select("doc", F.lit(g).cast("int").alias("gen"), "admitted")
-        for g, dec in enumerate(decs)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+_VCAND = f"vcand AS (SELECT id_a, id_b FROM est WHERE est >= {_GATE_T!r}),"
+_MCAND = "mcand AS (SELECT id_a, id_b FROM mdist),"
 
 
-def _gate_dup_of_sql(
-    num_hashes: int, bands: int, threshold: float, n_gens: int
-) -> str:
-    """Attribution oracle: for every REJECTED doc of the verified
-    replay, the blocker set is every above-threshold candidate that was
-    eligible to reject it (earlier-generation ACCEPTED docs, or
-    smaller ids in its own generation), and ``dup_of`` is the blocker
-    with the highest estimate (smallest id on ties) — deterministic,
-    so both engines agree exactly."""
-    parts = [
-        "WITH " + _gate_common_ctes(num_hashes, bands, n_gens),
-        f"vcand AS (SELECT id_a, id_b FROM est WHERE est >= {threshold!r}),",
-        _gate_chain_ctes("vcand", "", n_gens) + ",",
-    ]
-    blks = []
-    for g in range(n_gens):
-        prev = (
-            "\nUNION ALL\n".join(f"SELECT doc FROM acc{j}" for j in range(g))
-            if g
-            else None
-        )
-        in_batch = (
-            f"(e.id_b < e.id_a AND e.id_b IN"
-            f" (SELECT doc FROM gens WHERE gen = {g}))"
-        )
-        cond = (
-            f"(e.id_b IN ({prev}) OR {in_batch})" if prev else in_batch
-        )
-        parts.append(
-            f"blk{g} AS (SELECT e.id_a AS doc, {g} AS gen,"
-            " e.id_b AS blocker, e.est FROM est e"
-            f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
-            f" WHERE e.est >= {threshold!r} AND {cond}),"
-        )
-        blks.append(f"SELECT * FROM blk{g}")
-    parts.append("blk AS (" + "\nUNION ALL\n".join(blks) + "),")
-    parts.append(
-        """ranked AS (
-          SELECT doc, gen, blocker, est,
-                 ROW_NUMBER() OVER (PARTITION BY doc
-                                    ORDER BY est DESC, blocker ASC) AS rn
-          FROM blk)
-        SELECT doc, CAST(gen AS INT) AS gen, blocker AS dup_of,
-               round(est, 6) AS est
-        FROM ranked WHERE rn = 1"""
-    )
-    return "\n".join(parts)
-
-
-@_q(
-    "q_neardup_gate_dup_of",
-    _gate_dup_of_sql(_GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS),
-)
-def q_neardup_gate_dup_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rejection ATTRIBUTION for the verified gate replay: every
-    rejected doc with the accepted (or smaller in-batch) candidate that
-    blocked it — highest estimate wins, smallest id on ties. The
-    relation an ingest operator reads when a contributor asks why
-    their document was dropped, and the input to any dedup appeals /
-    cluster-canonicalization process downstream. Replays through the
-    oracle's own all-pairs shape (r14, see q_neardup_gate_replay) off
-    the ONE memoized signature checkpoint shared with it: the chain's
-    per-generation eligible-blocker subsets of the single checkpointed
-    pair relation ARE the output rows — the blocker machinery
-    (dedup_gate._est_blockers) runs once, not once per generation."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        minhash_signature,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen")
-    )
-    sig_all = _memo_replay(
-        spark, sf_dir, "gate-replay-sigs",
-        lambda: minhash_signature(
-            docs, "doc_id", "text", 3, _GATE_K
-        ).localCheckpoint(),
-    )
-    pairs = _gate_pairs(
-        sig_all, _GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS
-    ).localCheckpoint(eager=False)
-    gens = docs.select(F.col("doc_id").alias("doc"), "gen")
-    _decs, blks = _chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        b.select("doc", F.lit(g).cast("int").alias("gen"), "odoc", "est")
-        for g, b in enumerate(blks)
-    ]
-    blk = outs[0]
-    for o in outs[1:]:
-        blk = blk.unionByName(o)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc").orderBy(F.desc("est"), F.asc("odoc"))
+def _text_gate_prefix(floor: bool = False) -> str:
+    head = "WITH goodq AS (" + _QUALITY_SQL + "),\n" if floor else "WITH "
     return (
-        blk.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "doc", "gen", F.col("odoc").alias("dup_of"),
-            F.round("est", 6).alias("est"),
+        head
+        + _gate_common_ctes(
+            _GATE_K, _GATE_BANDS, _GATE_GENS, restrict="goodq" if floor else None
         )
+        + "\n" + _VCAND
     )
 
 
-def _gate_admission_drift_sql(
-    num_hashes: int, bands: int, threshold: float, n_gens: int
-) -> str:
-    """PSI between generation 0's and generation {n_gens-1}'s 2-bin
-    admitted/rejected distributions, with the family's exact smoothing
-    and rounding contract (q_media_size_drift / curation.psi_drift)."""
-    parts = [
-        "WITH " + _gate_common_ctes(num_hashes, bands, n_gens),
-        f"vcand AS (SELECT id_a, id_b FROM est WHERE est >= {threshold!r}),",
-        _gate_chain_ctes("vcand", "", n_gens) + ",",
+def _media_gate_prefix(min_bytes: int | None = None) -> str:
+    # media_id = doc_id by construction of the media fixture
+    gens_src = "documents"
+    if min_bytes is not None:
+        gens_src = "(SELECT media_id AS doc_id FROM s)"
+    return "\n".join(
+        [
+            "WITH "
+            + _late("registry_mm", "_media_gate_sig_ctes")(min_bytes) + ",",
+            _MCAND,
+            "gens AS (SELECT doc_id AS doc,"
+            f" CAST(doc_id % {_GATE_GENS} AS INT) AS gen FROM {gens_src}),",
+        ]
+    )
+
+
+def _mm_gate_head() -> str:
+    """Both modalities' CTEs: the text gate's, then the media gate's."""
+    return (
+        "WITH " + _gate_common_ctes(_GATE_K, _GATE_BANDS, _GATE_GENS) + "\n"
+        + _late("registry_mm", "_media_gate_sig_ctes")() + ","
+    )
+
+
+class _GateMod(NamedTuple):
+    rel: str  # the oracle's scored pair relation (id_a, id_b, <score>)
+    pred: str  # its candidate filter, as a blocker-condition prefix
+    score: str  # the score column, in both engines' pair relations
+    rank: str  # dup_of's order on it, best blocker first
+    out: str  # dup_of's score output, an expression both engines parse
+    tag: str  # the unified dup_of's score, SQL
+    pairs: Callable[[DataFrame], DataFrame]  # directed pairs over its sigs
+
+
+_GATE_MODS = {
+    "text": _GateMod(
+        "est", f"e.est >= {_GATE_T!r} AND ", "est", "DESC", "round(est, 6)",
+        "e.est", _gate_pairs,
+    ),
+    # the oracle's direct quadratic filter is the pigeonhole banding's
+    # pair set, which is lossless for distance <= d with d+1 bands
+    "media": _GateMod(
+        "mdist", "", "dist", "ASC", "CAST(dist AS INT)",
+        "CAST(e.dist AS DOUBLE)",
+        lambda sig: _late("registry_mm", "_media_pairs")(sig),
+    ),
+}
+
+
+class _GateSource(NamedTuple):
+    prefix: Callable[[], str]  # oracle CTEs up to the chain's, ending ","
+    cand: str  # the oracle's candidate relation, which the chain reads
+    mods: tuple[str, ...]  # the _GATE_MODS whose pairs gate
+    # (spark, sf_dir, documents) -> (spine, one signature relation per mod)
+    load: Callable[[SparkSession, str, DataFrame], tuple[DataFrame, list]]
+
+
+def _mm_gate_sigs(spark: SparkSession, sf_dir: str, docs: DataFrame):
+    gens, tsig = _GATE_SOURCES["text"].load(spark, sf_dir, docs)
+    _, msig = _GATE_SOURCES["media"].load(spark, sf_dir, docs)
+    return gens, tsig + msig
+
+
+_GATE_SOURCES = {
+    "text": _GateSource(
+        _text_gate_prefix, "vcand", ("text",),
+        lambda spark, sf_dir, docs: _text_gate_sigs(
+            spark, sf_dir, docs, "gate-replay-sigs"
+        ),
+    ),
+    # the curation floor runs before admission, as the kernels'
+    # min_quality does: a below-floor doc claims no buckets and gets no
+    # decision, so a later higher-quality near-copy can be admitted
+    "text_quality": _GateSource(
+        lambda: _text_gate_prefix(floor=True), "vcand", ("text",),
+        lambda spark, sf_dir, docs: _text_gate_sigs(
+            spark, sf_dir,
+            docs.filter(quality_score("text") >= F.lit(_GATE_QFLOOR)),
+            "gate-replay-quality-sigs",
+        ),
+    ),
+    "media": _GateSource(
+        _media_gate_prefix, "mcand", ("media",),
+        lambda spark, sf_dir, docs: _late("registry_mm", "_media_gate_sigs")(
+            spark, sf_dir, docs, "media-gate-sigs"
+        ),
+    ),
+    # the payload-size floor, media_gate's min_bytes
+    "media_quality": _GateSource(
+        lambda: _media_gate_prefix(_MEDIA_MIN_BYTES), "mcand", ("media",),
+        lambda spark, sf_dir, docs: _late("registry_mm", "_media_gate_sigs")(
+            spark, sf_dir, docs, "media-gate-quality-sigs", _MEDIA_MIN_BYTES
+        ),
+    ),
+    # either modality rejects, and a rejected doc enters neither state:
+    # the chain over the union of both candidate relations
+    "multimodal": _GateSource(
+        lambda: _mm_gate_head() + "\nxcand AS (SELECT id_a, id_b FROM est"
+        f" WHERE est >= {_GATE_T!r} UNION SELECT id_a, id_b FROM mdist),",
+        "xcand", ("text", "media"), _mm_gate_sigs,
+    ),
+}
+
+
+_ADMITTED_SQL = (
+    "SELECT g.doc AS doc, g.gen AS gen,"
+    " (g.doc NOT IN (SELECT doc FROM rej)) AS admitted FROM gens g"
+)
+
+# PSI between generation 0's (gated only within itself) and the last
+# generation's 2-bin admitted/rejected counts, with curation.psi_drift's
+# smoothing and rounding (the q_media_size_drift contract)
+_ADMISSION_PSI_SQL = "\n".join(
+    [
         "d AS (SELECT g.doc, g.gen,"
         " CASE WHEN g.doc NOT IN (SELECT doc FROM rej) THEN 1 ELSE 0 END"
         " AS bin FROM gens g),",
         "bins AS (SELECT unnest(generate_series(0, 1)) AS bin),",
         "r AS (SELECT bin, COUNT(*) AS n_ref FROM d WHERE gen = 0 GROUP BY bin),",
         f"c AS (SELECT bin, COUNT(*) AS n_cur FROM d"
-        f" WHERE gen = {n_gens - 1} GROUP BY bin),",
+        f" WHERE gen = {_GATE_GENS - 1} GROUP BY bin),",
         "tot AS (SELECT (SELECT COUNT(*) FROM d WHERE gen = 0) AS tr,"
-        f" (SELECT COUNT(*) FROM d WHERE gen = {n_gens - 1}) AS tc),",
+        f" (SELECT COUNT(*) FROM d WHERE gen = {_GATE_GENS - 1}) AS tc),",
         """p AS (
           SELECT b.bin,
                  COALESCE(r.n_ref, 0) AS n_ref, COALESCE(c.n_cur, 0) AS n_cur,
@@ -3229,30 +3006,118 @@ def _gate_admission_drift_sql(
                round((p_cur - p_ref) * ln(p_cur / p_ref), 6) AS psi_term
         FROM p""",
     ]
-    return "\n".join(parts)
-
-
-@_q(
-    "q_gate_admission_drift",
-    _gate_admission_drift_sql(_GATE_K, _GATE_BANDS, _GATE_T, _GATE_GENS),
 )
-def q_gate_admission_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Admission-RATE drift — the decision logs fed into the standard
-    PSI monitor: generation 0 of the verified-gate replay is the
-    reference admission distribution (gated only within itself), the
-    last generation the current one (gated against all accumulated
-    state, so its rejection share is structurally higher) — a pinned
-    drifted-vs-stable series. The streaming form
-    (dedup_gate.admission_rate_drift / admission_drift_alert) computes
-    the SAME relation from the drained decision logs
-    (tests/test_dedup_gate.py parity); a rejection spike — the #1
-    dedup-gate incident — is one decision-sized aggregate away from an
-    alert, never a gate replay."""
+
+
+def _gate_oracle(src: str, form: str) -> str:
+    s = _GATE_SOURCES[src]
+    chain = f"{s.prefix()}\n{_gate_chain_ctes(s.cand, '', _GATE_GENS)}"
+    if form == "replay":
+        return f"{chain}\n{_ADMITTED_SQL}"
+    if form == "admission_drift":
+        return f"{chain},\n{_ADMISSION_PSI_SQL}"
+    gs = range(_GATE_GENS)
+    if len(s.mods) > 1:
+        # every eligible blocker, modality-tagged: an estimate and a
+        # distance do not rank against each other
+        cells = [(f"x{m[0]}b{g}", g, m) for g in gs for m in s.mods]
+        blks = [
+            _blocker_cte(
+                n,
+                f"e.id_a AS doc, e.id_b AS odoc, '{m}' AS modality,"
+                f" {_GATE_MODS[m].tag} AS score",
+                _GATE_MODS[m].rel, g, _GATE_MODS[m].pred,
+            )
+            for n, g, m in cells
+        ]
+        union = _union_cte("xblk", [n for n, _, _ in cells])
+        return "\n".join(
+            [chain + ",", *blks, union, "SELECT doc, odoc, modality, score FROM xblk"]
+        )
+    m = _GATE_MODS[s.mods[0]]
+    blks = [
+        _blocker_cte(
+            f"blk{g}",
+            f"e.id_a AS doc, {g} AS gen, e.id_b AS blocker, e.{m.score}",
+            m.rel, g, m.pred,
+        )
+        for g in gs
+    ]
+    ranked = f"""ranked AS (
+          SELECT doc, gen, blocker, {m.score},
+                 ROW_NUMBER() OVER (PARTITION BY doc
+                                    ORDER BY {m.score} {m.rank}, blocker ASC) AS rn
+          FROM blk)
+        SELECT doc, CAST(gen AS INT) AS gen, blocker AS dup_of,
+               {m.out} AS {m.score}
+        FROM ranked WHERE rn = 1"""
+    union = _union_cte("blk", [f"blk{g}" for g in gs]) + ","
+    return "\n".join([chain + ",", *blks, union, ranked])
+
+
+_CHAIN_COLS = ("doc", "odoc", "gen_d", "gen_o")
+
+
+def _gate_chain(src: str, spark: SparkSession, sf_dir: str, replay: bool):
+    """Source ``src``'s chain over its pair relation, computed once and
+    lazily checkpointed: per-generation (decisions, blockers). Several
+    modalities' pairs are tagged (modality, score) and unioned; a replay
+    keeps only the chain's columns."""
+    s = _GATE_SOURCES[src]
+    gens, sigs = s.load(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    pairs = [_GATE_MODS[m].pairs(sig) for m, sig in zip(s.mods, sigs)]
+    if len(pairs) > 1:
+        pairs = [
+            p.select(
+                *_CHAIN_COLS, F.lit(m).alias("modality"),
+                F.col(_GATE_MODS[m].score).cast("double").alias("score"),
+            )
+            for m, p in zip(s.mods, pairs)
+        ]
+    pairs = _union(pairs)
+    if replay:
+        pairs = pairs.select(*_CHAIN_COLS)
+    return _chain_from_pairs(
+        gens, pairs.localCheckpoint(eager=False), _GATE_GENS
+    )
+
+
+def _gate_replay(src: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    decs, _ = _gate_chain(src, spark, sf_dir, replay=True)
+    return _union(
+        dec.select("doc", F.lit(g).cast("int").alias("gen"), "admitted")
+        for g, dec in enumerate(decs)
+    )
+
+
+def _gate_dup_of(src: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    s = _GATE_SOURCES[src]
+    _, blks = _gate_chain(src, spark, sf_dir, replay=False)
+    if len(s.mods) > 1:
+        return _union(b.select("doc", "odoc", "modality", "score") for b in blks)
+    m = _GATE_MODS[s.mods[0]]
+    blk = _union(
+        b.select("doc", F.lit(g).cast("int").alias("gen"), "odoc", m.score)
+        for g, b in enumerate(blks)
+    )
+    best = F.desc(m.score) if m.rank == "DESC" else F.asc(m.score)
+    w = Window.partitionBy("doc").orderBy(best, F.asc("odoc"))
+    return (
+        blk.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(
+            "doc", "gen", F.col("odoc").alias("dup_of"),
+            F.expr(m.out).alias(m.score),
+        )
+    )
+
+
+def _gate_admission_drift(src: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
         psi_drift,
     )
 
-    dec = q_neardup_gate_replay(spark, sf_dir).select(
+    dec = _gate_replay(src, spark, sf_dir).select(
         "gen", F.col("admitted").cast("int").alias("bin")
     )
     return psi_drift(
@@ -3260,3 +3125,102 @@ def q_gate_admission_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec.filter(F.col("gen") == _GATE_GENS - 1).select("bin"),
         bins=2,
     )
+
+
+_GATE_FORMS = {
+    "replay": _gate_replay,
+    "dup_of": _gate_dup_of,
+    "admission_drift": _gate_admission_drift,
+}
+
+
+def _gate(name: str, src: str, form: str):
+    """Register query ``name``, ``form`` over source ``src``; returns
+    its Spark side."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _GATE_FORMS[form](src, spark, sf_dir)
+
+    run.__name__ = run.__qualname__ = name
+    _q(name, _gate_oracle(src, form))(run)
+    return run
+
+
+# dedup_gate.gate_batch_verified as a batch (parity: tests/test_dedup_gate.py)
+q_neardup_gate_replay = _gate("q_neardup_gate_replay", "text", "replay")
+
+
+@_q(
+    "q_neardup_gate_policy_audit",
+    _text_gate_prefix()
+    + "\n" + _gate_chain_ctes("vcand", "", _GATE_GENS)
+    + ",\n" + _gate_chain_ctes("cand", "_b", _GATE_GENS)
+    + ",\n"
+    + """flags AS (
+              SELECT g.doc, g.gen,
+                     (g.doc IN (SELECT doc FROM rej)) AS rej_v,
+                     (g.doc IN (SELECT doc FROM rej_b)) AS rej_b
+              FROM gens g)
+            SELECT gen,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(CASE WHEN rej_v THEN 1 ELSE 0 END) AS BIGINT)
+                     AS rejected_verified,
+                   CAST(SUM(CASE WHEN rej_b THEN 1 ELSE 0 END) AS BIGINT)
+                     AS rejected_bucket,
+                   CAST(SUM(CASE WHEN rej_b AND NOT rej_v THEN 1 ELSE 0 END)
+                     AS BIGINT) AS saved_by_verify
+            FROM flags GROUP BY gen""",
+)
+def q_neardup_gate_policy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The operating-point audit behind the verified gate: BOTH
+    admission policies — raw bucket-collision (streaming/dedup_gate.
+    gate_batch) and signature-verified (gate_batch_verified) — replayed
+    over the same 3-generation arrival, aggregated per generation into
+    (n_docs, rejected_verified, rejected_bucket, saved_by_verify).
+    ``saved_by_verify`` counts docs a single band collision would have
+    thrown away that the signature estimate exonerates — the number a
+    data-curation owner reads before picking a gate for a 100 TB
+    ingest, measured on their own corpus by the engine itself.
+
+    The two chains differ ONLY in their candidate relation, exactly the
+    oracle's vcand/cand split: ONE banded self-join over the text
+    source's memoized signatures keeps every collision pair with its
+    estimate (threshold 0.0); the bucket chain reads them all, the
+    verified chain the est >= t subset."""
+    docs = load_table(spark, sf_dir, "documents")
+    gens, (sig_all,) = _GATE_SOURCES["text"].load(spark, sf_dir, docs)
+    pairs_all = _gate_pairs(sig_all, threshold=0.0).localCheckpoint(eager=False)
+    decs_v, _ = _chain_from_pairs(
+        gens, pairs_all.filter(F.col("est") >= F.lit(float(_GATE_T))),
+        _GATE_GENS,
+    )
+    decs_b, _ = _chain_from_pairs(gens, pairs_all, _GATE_GENS)
+    flags = _union(
+        dv.select(
+            "doc",
+            F.lit(g).cast("int").alias("gen"),
+            (~F.col("admitted")).alias("rej_v"),
+        ).join(
+            db.select("doc", F.col("admitted").alias("__acc_b")), "doc"
+        )
+        for g, (dv, db) in enumerate(zip(decs_v, decs_b))
+    )
+    return flags.groupBy("gen").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.col("rej_v").cast("long")).alias("rejected_verified"),
+        F.sum((~F.col("__acc_b")).cast("long")).alias("rejected_bucket"),
+        F.sum(
+            ((~F.col("__acc_b")) & (~F.col("rej_v"))).cast("long")
+        ).alias("saved_by_verify"),
+    )
+
+
+q_neardup_gate_replay_quality = _gate(
+    "q_neardup_gate_replay_quality", "text_quality", "replay"
+)
+# who blocked each rejected doc: highest estimate, smallest id on ties
+q_neardup_gate_dup_of = _gate("q_neardup_gate_dup_of", "text", "dup_of")
+# dedup_gate.admission_rate_drift computes it from the drained decision logs
+q_gate_admission_drift = _gate(
+    "q_gate_admission_drift", "text", "admission_drift"
+)

@@ -299,16 +299,15 @@ _ML._serve("media")
 
 # -- media admission gate replay (streaming/media_gate.py) -------------------
 
-_GATE_GENS = 3
 
-
-def _media_gate_sig_ctes(n: int, max_ham: int, min_bytes: int | None = None) -> str:
+def _media_gate_sig_ctes(min_bytes: int | None = None) -> str:
     """Shared CTE prefix of the media-gate oracles: media → byte list →
     aHash signature → within-distance pair relation ``mdist`` (with the
     popcount distance kept for attribution). Ends WITHOUT a trailing
     comma. ``min_bytes`` replays the kernels' payload-size quality
     floor: a below-floor item never signatures, so it claims no
     buckets — the media analog of the text gate's restrict contract."""
+    n = _AHASH_N
     src = "media"
     if min_bytes is not None:
         src = f"(SELECT * FROM media WHERE octet_length(payload) >= {min_bytes})"
@@ -330,48 +329,20 @@ def _media_gate_sig_ctes(n: int, max_ham: int, min_bytes: int | None = None) -> 
               SELECT a.media_id AS id_a, c.media_id AS id_b,
                      CAST(bit_count(xor(a.sig, c.sig)) AS INT) AS dist
               FROM s a JOIN s c ON c.media_id <> a.media_id
-              WHERE bit_count(xor(a.sig, c.sig)) <= {max_ham})""",
+              WHERE bit_count(xor(a.sig, c.sig)) <= {_AHASH_MAXHAM})""",
         ]
     )
 
 
-def _media_gate_replay_sql(
-    n: int, max_ham: int, n_gens: int, min_bytes: int | None = None
-) -> str:
-    """Unrolled-generation oracle for the media admission gate: the
-    SAME policy-agnostic generation chain the text gate replays
-    (registry_ml._gate_chain_ctes) over a candidate relation of aHash
-    pairs within ``max_ham`` bits — computed by the direct quadratic
-    filter, which defines the identical pair set as the gate's
-    pigeonhole banding (lossless for distance ≤ d with d+1 bands)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ml import (
-        _gate_chain_ctes,
-    )
-
-    gens_src = "documents"
-    if min_bytes is not None:
-        gens_src = "(SELECT media_id AS doc_id FROM s)"
-    return "\n".join(
-        [
-            "WITH " + _media_gate_sig_ctes(n, max_ham, min_bytes) + ",",
-            "mcand AS (SELECT id_a, id_b FROM mdist),",
-            "gens AS (SELECT doc_id AS doc,"
-            f" CAST(doc_id % {n_gens} AS INT) AS gen FROM {gens_src}),",
-            _gate_chain_ctes("mcand", "", n_gens),
-            "SELECT g.doc AS doc, g.gen AS gen,"
-            " (g.doc NOT IN (SELECT doc FROM rej)) AS admitted FROM gens g",
-        ]
-    )
-
-
-def _media_pairs(sig_all, bits: int, max_ham: int, n_gens: int):
-    """(doc, odoc, gen_d, gen_o, dist): the full DIRECTED within-Hamming
+def _media_pairs(sig_all: DataFrame) -> DataFrame:
+    """(doc, odoc, dist, gen_d, gen_o): the full DIRECTED within-Hamming
     pair relation over a corpus aHash signature relation — pigeonhole
     band buckets propose (both directions, self-pairs dropped: every
     item arrives in exactly one generation so a self-pair can satisfy
-    neither chain direction), popcount(xor) <= ``max_ham`` disposes.
-    The media analog of registry_ml._gate_pairs; band-equivalent to the
-    oracle's direct quadratic ``mdist`` filter by the pigeonhole bound.
+    neither chain direction), popcount(xor) <= ``_AHASH_MAXHAM``
+    disposes. The media analog of registry_ml._gate_pairs;
+    band-equivalent to the oracle's direct quadratic ``mdist`` filter by
+    the pigeonhole bound.
 
     Shape: the 8-byte sig is CARRIED through the band explode (one
     extra long per key row) so the popcount verify runs directly on
@@ -389,12 +360,11 @@ def _media_pairs(sig_all, bits: int, max_ham: int, n_gens: int):
         signature_band_keys,
     )
 
-    mk = signature_band_keys(sig_all, bits, max_ham, keep=("sig",))
+    mk = signature_band_keys(sig_all, _AHASH_N, _AHASH_MAXHAM, keep=("sig",))
     a = mk.select("doc", "bk", "sig")
     b = mk.select(
         F.col("doc").alias("odoc"), "bk", F.col("sig").alias("__sb")
     )
-    gen_of = lambda c: (F.col(c) % n_gens).cast("int")  # noqa: E731
     return (
         a.join(b, "bk")
         .filter(F.col("doc") != F.col("odoc"))
@@ -403,237 +373,47 @@ def _media_pairs(sig_all, bits: int, max_ham: int, n_gens: int):
             "odoc",
             F.bit_count(F.col("sig").bitwiseXOR(F.col("__sb"))).alias("dist"),
         )
-        .filter(F.col("dist") <= F.lit(max_ham))
+        .filter(F.col("dist") <= F.lit(_AHASH_MAXHAM))
         .distinct()
         .select(
             "doc", "odoc", "dist",
-            gen_of("doc").alias("gen_d"), gen_of("odoc").alias("gen_o"),
+            _ML._gen_of("doc").alias("gen_d"), _ML._gen_of("odoc").alias("gen_o"),
         )
     )
 
 
-@_q("q_media_gate_replay", _media_gate_replay_sql(_AHASH_N, _AHASH_MAXHAM, _GATE_GENS))
-def q_media_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The media admission gate (streaming/media_gate.gate_media_batch)
-    replayed as a batch relation: media arrives in 3 deterministic
-    generations (media_id % 3); each generation is admitted against the
-    aHash SIGNATURES of earlier generations' accepted items — banded
-    buckets propose, popcount(xor) ≤ 5 disposes — plus the family's
-    pessimistic smaller-id rule within a generation. The POLICY is the
-    stream's batch kernel (streaming/media_gate.gate_media_batch —
-    stream-vs-replay parity pinned by tests/test_media_gate.py); the
-    batch REPLAY evaluates it in the oracle's own all-pairs shape (r14,
-    registry_ml.q_neardup_gate_replay): corpus signatures computed ONCE
-    (one Arrow-batched aHash pass, memoized checkpoint), ONE banded
-    self-join + popcount pass builds the within-distance pair relation
-    (lazily localCheckpointed; band-equivalent to the oracle's direct
-    quadratic filter by the pigeonhole bound), and the unrolled
-    generation chain (registry_ml._chain_from_pairs) runs as semi-joins
-    between that skinny pair relation and the accepted-id sets —
-    blocker joins once, not twice per generation.
-
-    The media half of the incremental-admission story: 8 bytes of
-    signature per accepted item is the ONLY state history keeps, so
-    media dedup against all of history stays feasible at 100 TB."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-        ahash_signatures,
-    )
+def _media_gate_sigs(
+    spark: SparkSession, sf_dir: str, docs: DataFrame, key: str,
+    min_bytes: int = 0,
+):
+    """(spine, [signatures]) of the media of ``docs`` with at least
+    ``min_bytes`` of payload: one Arrow-batched aHash pass per
+    application × sf_dir and ``key``. 8 bytes of signature per accepted
+    item is the only state history keeps, so media dedup against all of
+    history stays feasible at 100 TB."""
     from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
         _memo_replay,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
     media = MM.media_from_documents(docs)
-    sig_all = _memo_replay(
-        spark, sf_dir, "media-gate-sigs",
-        lambda: ahash_signatures(media, n=_AHASH_N)
+    if min_bytes:
+        media = media.filter(F.length(F.col("payload")) >= F.lit(min_bytes))
+    sig = _memo_replay(
+        spark, sf_dir, key,
+        lambda: MM.ahash_signatures(media, n=_AHASH_N)
         .select(F.col("media_id").alias("doc"), "sig")
         .localCheckpoint(),
     )
-    pairs = _media_pairs(
-        sig_all, _AHASH_N, _AHASH_MAXHAM, _GATE_GENS
-    ).localCheckpoint(eager=False)
-    gens = docs.select(
-        F.col("doc_id").alias("doc"),
-        (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen"),
-    )
-    decs, _blks = _ML._chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        dec.select("doc", F.lit(g).cast("int").alias("gen"), "admitted")
-        for g, dec in enumerate(decs)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    return _ML._spine(media, "media_id"), [sig]
 
 
-def _media_gate_dup_of_sql(n: int, max_ham: int, n_gens: int) -> str:
-    """Attribution oracle for the media gate: for every REJECTED item
-    of the replay, every within-distance candidate eligible to reject
-    it (earlier-generation ACCEPTED items, or smaller ids in its own
-    generation), ranked smallest distance first (smallest id on ties) —
-    deterministic, so both engines agree exactly. Mirrors
-    registry_ml._gate_dup_of_sql over the aHash pair relation."""
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ml import (
-        _gate_chain_ctes,
-    )
-
-    parts = [
-        "WITH " + _media_gate_sig_ctes(n, max_ham) + ",",
-        "mcand AS (SELECT id_a, id_b FROM mdist),",
-        "gens AS (SELECT doc_id AS doc,"
-        f" CAST(doc_id % {n_gens} AS INT) AS gen FROM documents),",
-        _gate_chain_ctes("mcand", "", n_gens) + ",",
-    ]
-    blks = []
-    for g in range(n_gens):
-        prev = (
-            "\nUNION ALL\n".join(f"SELECT doc FROM acc{j}" for j in range(g))
-            if g
-            else None
-        )
-        in_batch = (
-            f"(e.id_b < e.id_a AND e.id_b IN"
-            f" (SELECT doc FROM gens WHERE gen = {g}))"
-        )
-        cond = f"(e.id_b IN ({prev}) OR {in_batch})" if prev else in_batch
-        parts.append(
-            f"blk{g} AS (SELECT e.id_a AS doc, {g} AS gen,"
-            " e.id_b AS blocker, e.dist FROM mdist e"
-            f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
-            f" WHERE {cond}),"
-        )
-        blks.append(f"SELECT * FROM blk{g}")
-    parts.append("blk AS (" + "\nUNION ALL\n".join(blks) + "),")
-    parts.append(
-        """ranked AS (
-          SELECT doc, gen, blocker, dist,
-                 ROW_NUMBER() OVER (PARTITION BY doc
-                                    ORDER BY dist ASC, blocker ASC) AS rn
-          FROM blk)
-        SELECT doc, CAST(gen AS INT) AS gen, blocker AS dup_of,
-               CAST(dist AS INT) AS dist
-        FROM ranked WHERE rn = 1"""
-    )
-    return "\n".join(parts)
-
-
-@_q(
-    "q_media_gate_dup_of",
-    _media_gate_dup_of_sql(_AHASH_N, _AHASH_MAXHAM, _GATE_GENS),
+# media_gate.gate_media_batch as a batch (parity: tests/test_media_gate.py)
+q_media_gate_replay = _ML._gate("q_media_gate_replay", "media", "replay")
+# who blocked each rejected item: minimum distance, smallest id on ties
+q_media_gate_dup_of = _ML._gate("q_media_gate_dup_of", "media", "dup_of")
+q_media_gate_replay_quality = _ML._gate(
+    "q_media_gate_replay_quality", "media_quality", "replay"
 )
-def q_media_gate_dup_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rejection ATTRIBUTION for the media gate replay: every rejected
-    item with the accepted (or smaller in-batch) candidate that blocked
-    it — minimum Hamming distance wins, smallest id on ties. Family
-    parity with q_neardup_gate_dup_of: the relation a media-ingest
-    operator reads when a contributor asks which accepted item their
-    upload duplicates. Replays through the oracle's own all-pairs
-    shape (r14, registry_ml.q_neardup_gate_replay) off the ONE memoized
-    aHash checkpoint shared with q_media_gate_replay: the chain's
-    per-generation eligible-blocker subsets of the single checkpointed
-    pair relation ARE the output rows — the blocker machinery
-    (streaming/media_gate._ham_blockers, the same machinery the drain
-    persists under dup_of_dir) runs once, not once per generation."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-        ahash_signatures,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = MM.media_from_documents(docs)
-    sig_all = _memo_replay(
-        spark, sf_dir, "media-gate-sigs",
-        lambda: ahash_signatures(media, n=_AHASH_N)
-        .select(F.col("media_id").alias("doc"), "sig")
-        .localCheckpoint(),
-    )
-    pairs = _media_pairs(
-        sig_all, _AHASH_N, _AHASH_MAXHAM, _GATE_GENS
-    ).localCheckpoint(eager=False)
-    gens = docs.select(
-        F.col("doc_id").alias("doc"),
-        (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen"),
-    )
-    _decs, blks = _ML._chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        b.select("doc", F.lit(g).cast("int").alias("gen"), "odoc", "dist")
-        for g, b in enumerate(blks)
-    ]
-    blk = outs[0]
-    for o in outs[1:]:
-        blk = blk.unionByName(o)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc").orderBy(F.asc("dist"), F.asc("odoc"))
-    return (
-        blk.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "doc", "gen", F.col("odoc").alias("dup_of"),
-            F.col("dist").cast("int").alias("dist"),
-        )
-    )
-
-
-_MEDIA_MIN_BYTES = 200
-
-
-@_q(
-    "q_media_gate_replay_quality",
-    _media_gate_replay_sql(
-        _AHASH_N, _AHASH_MAXHAM, _GATE_GENS, min_bytes=_MEDIA_MIN_BYTES
-    ),
-)
-def q_media_gate_replay_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The media gate replay under the composed QUALITY FLOOR — the
-    modality's cheapest health signal, payload size ≥ 200 bytes, the
-    min_bytes contract of streaming/media_gate.gate_media_batch: a
-    below-floor item is dropped before signatures exist, claims no
-    buckets, and a later full-size near-copy can still be admitted.
-    Decisions cover floor-surviving items only — family parity with
-    q_neardup_gate_replay_quality (text's quality_score floor)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-        ahash_signatures,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-
-    media = MM.media_from_documents(load_table(spark, sf_dir, "documents"))
-    good = media.filter(
-        F.length(F.col("payload")) >= F.lit(_MEDIA_MIN_BYTES)
-    )
-    sig_all = _memo_replay(
-        spark, sf_dir, "media-gate-quality-sigs",
-        lambda: ahash_signatures(good, n=_AHASH_N)
-        .select(F.col("media_id").alias("doc"), "sig")
-        .localCheckpoint(),
-    )
-    # all-pairs chain form (see q_media_gate_replay); the pair relation
-    # derives from the floor-filtered signature checkpoint and the
-    # decision spine covers floor-survivors only, so a below-floor item
-    # claims no buckets and gets no decision — the kernels' min_bytes
-    # contract unchanged
-    pairs = _media_pairs(
-        sig_all, _AHASH_N, _AHASH_MAXHAM, _GATE_GENS
-    ).localCheckpoint(eager=False)
-    gens = good.select(
-        F.col("media_id").alias("doc"),
-        (F.col("media_id") % _GATE_GENS).cast("int").alias("gen"),
-    )
-    decs, _blks = _ML._chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        dec.select("doc", F.lit(g).cast("int").alias("gen"), "admitted")
-        for g, dec in enumerate(decs)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
 
 
 _SIZE_BIN_W, _SIZE_BINS = 256, 10
@@ -818,319 +598,37 @@ def q_multimodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _media_admission_drift_sql(n: int, max_ham: int, n_gens: int) -> str:
-    """PSI between generation 0's and the last generation's 2-bin
-    admitted/rejected distributions of the MEDIA gate replay — the
-    family smoothing/rounding contract (q_gate_admission_drift's SQL
-    over the media candidate relation)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ml import (
-        _gate_chain_ctes,
-    )
-
-    return "\n".join(
-        [
-            "WITH " + _media_gate_sig_ctes(n, max_ham) + ",",
-            "mcand AS (SELECT id_a, id_b FROM mdist),",
-            "gens AS (SELECT doc_id AS doc,"
-            f" CAST(doc_id % {n_gens} AS INT) AS gen FROM documents),",
-            _gate_chain_ctes("mcand", "", n_gens) + ",",
-            "d AS (SELECT g.doc, g.gen,"
-            " CASE WHEN g.doc NOT IN (SELECT doc FROM rej) THEN 1 ELSE 0 END"
-            " AS bin FROM gens g),",
-            "bins AS (SELECT unnest(generate_series(0, 1)) AS bin),",
-            "r AS (SELECT bin, COUNT(*) AS n_ref FROM d WHERE gen = 0"
-            " GROUP BY bin),",
-            f"c AS (SELECT bin, COUNT(*) AS n_cur FROM d"
-            f" WHERE gen = {n_gens - 1} GROUP BY bin),",
-            "tot AS (SELECT (SELECT COUNT(*) FROM d WHERE gen = 0) AS tr,"
-            f" (SELECT COUNT(*) FROM d WHERE gen = {n_gens - 1}) AS tc),",
-            """p AS (
-              SELECT b.bin,
-                     COALESCE(r.n_ref, 0) AS n_ref,
-                     COALESCE(c.n_cur, 0) AS n_cur,
-                     round(greatest(CASE WHEN tot.tr > 0
-                                    THEN COALESCE(r.n_ref, 0) * 1.0 / tot.tr
-                                    ELSE 0.0 END, 0.0001), 6) AS p_ref,
-                     round(greatest(CASE WHEN tot.tc > 0
-                                    THEN COALESCE(c.n_cur, 0) * 1.0 / tot.tc
-                                    ELSE 0.0 END, 0.0001), 6) AS p_cur
-              FROM bins b LEFT JOIN r ON r.bin = b.bin
-                          LEFT JOIN c ON c.bin = b.bin
-              CROSS JOIN tot)
-            SELECT bin, CAST(n_ref AS BIGINT) AS n_ref,
-                   CAST(n_cur AS BIGINT) AS n_cur, p_ref, p_cur,
-                   round((p_cur - p_ref) * ln(p_cur / p_ref), 6) AS psi_term
-            FROM p""",
-        ]
-    )
-
-
-@_q(
-    "q_media_admission_drift",
-    _media_admission_drift_sql(_AHASH_N, _AHASH_MAXHAM, _GATE_GENS),
+# dedup_gate.admission_rate_drift reads any gate's (doc, admitted) log
+q_media_admission_drift = _ML._gate(
+    "q_media_admission_drift", "media", "admission_drift"
 )
-def q_media_admission_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Admission-rate drift for the MEDIA gate — the decision logs of
-    the media replay fed into the standard PSI monitor, exactly the
-    text gate's q_gate_admission_drift with the aHash candidate
-    relation swapped in: generation 0 (self-gated) is the reference
-    distribution, the last generation (gated against all accumulated
-    state) the current. The streaming hooks
-    (dedup_gate.admission_rate_drift / admission_drift_alert) are
-    modality-agnostic — they read any (doc, admitted) decision log, so
-    one monitor covers both gates."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
-        psi_drift,
-    )
-
-    dec = q_media_gate_replay(spark, sf_dir).select(
-        "gen", F.col("admitted").cast("int").alias("bin")
-    )
-    return psi_drift(
-        dec.filter(F.col("gen") == 0).select("bin"),
-        dec.filter(F.col("gen") == _GATE_GENS - 1).select("bin"),
-        bins=2,
-    )
 
 
 # -- unified multimodal admission gate (streaming/multimodal_gate.py) --------
 
+# multimodal_gate.gate_multimodal_batch (parity: tests/test_multimodal_gate.py)
+q_multimodal_gate_replay = _ML._gate(
+    "q_multimodal_gate_replay", "multimodal", "replay"
+)
+# the exact relation the unified drain persists under dup_of_dir
+q_multimodal_gate_dup_of = _ML._gate(
+    "q_multimodal_gate_dup_of", "multimodal", "dup_of"
+)
 
-def _multimodal_gate_replay_sql() -> str:
-    """Unrolled-generation oracle for the UNIFIED gate: the shared
-    policy-agnostic chain (registry_ml._gate_chain_ctes) over the UNION
-    of the two modalities' candidate relations — verified MinHash pairs
-    (est ≥ t) and within-Hamming aHash pairs — which IS the atomic
-    either-modality-rejects policy: one accepted set, one state spine.
-    Text CTEs come from registry_ml._gate_common_ctes, media CTEs from
-    _media_gate_sig_ctes (media_id = doc_id by construction of the
-    media fixture), exactly as the estate catalog oracle already
-    composes them."""
-    return "\n".join(
+
+@_q(
+    "q_multimodal_gate_policy_audit",
+    "\n".join(
         [
-            "WITH "
-            + _ML._gate_common_ctes(_ML._GATE_K, _ML._GATE_BANDS, _GATE_GENS),
-            _media_gate_sig_ctes(_AHASH_N, _AHASH_MAXHAM) + ",",
-            "xcand AS (SELECT id_a, id_b FROM est"
-            f" WHERE est >= {_ML._GATE_T!r}"
-            " UNION SELECT id_a, id_b FROM mdist),",
-            _ML._gate_chain_ctes("xcand", "", _GATE_GENS),
-            "SELECT g.doc AS doc, g.gen AS gen,"
-            " (g.doc NOT IN (SELECT doc FROM rej)) AS admitted FROM gens g",
-        ]
-    )
-
-
-@_q("q_multimodal_gate_replay", _multimodal_gate_replay_sql())
-def q_multimodal_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The unified multimodal admission gate
-    (streaming/multimodal_gate.gate_multimodal_batch) replayed as a
-    batch relation: every document arrives with BOTH its text and its
-    media payload in 3 deterministic generations (doc_id % 3) and is
-    admitted iff NEITHER modality blocks it — no verified MinHash
-    blocker (est ≥ 0.5) against the unified corpus's accepted text
-    signatures or a smaller in-batch id, and no aHash blocker (≤ 5
-    bits) against its accepted media signatures. Atomicity is the
-    point (and what running the two gates separately gets wrong): a
-    doc rejected by either modality enters NEITHER state, so the
-    accepted set is ONE corpus. The POLICY is the stream's batch
-    kernel (streaming/multimodal_gate.gate_multimodal_batch —
-    stream-vs-replay parity pinned by tests/test_multimodal_gate.py);
-    the batch REPLAY evaluates it in the oracle's own all-pairs shape
-    (r14, registry_ml.q_neardup_gate_replay): both signature relations
-    computed once (memoized checkpoints), each modality's full
-    directed pair relation computed ONCE (one banded self-join +
-    verify per modality instead of twice per generation per modality —
-    12 blocker-join executions down to 2), their union lazily
-    localCheckpointed, and the unrolled chain
-    (registry_ml._chain_from_pairs) run over it — the atomic
-    either-modality-rejects policy IS the chain over the unioned
-    candidate relation, exactly as the oracle composes it."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-        ahash_signatures,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        minhash_signature,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = MM.media_from_documents(docs)
-    tsig_all = _memo_replay(
-        spark, sf_dir, "mm-gate-tsigs",
-        lambda: minhash_signature(
-            docs, "doc_id", "text", 3, _ML._GATE_K
-        ).localCheckpoint(),
-    )
-    msig_all = _memo_replay(
-        spark, sf_dir, "media-gate-sigs",
-        lambda: ahash_signatures(media, n=_AHASH_N)
-        .select(F.col("media_id").alias("doc"), "sig")
-        .localCheckpoint(),
-    )
-    tpairs = _ML._gate_pairs(
-        tsig_all, _ML._GATE_K, _ML._GATE_BANDS, _ML._GATE_T, _GATE_GENS
-    ).select("doc", "odoc", "gen_d", "gen_o")
-    mpairs = _media_pairs(
-        msig_all, _AHASH_N, _AHASH_MAXHAM, _GATE_GENS
-    ).select("doc", "odoc", "gen_d", "gen_o")
-    pairs = tpairs.unionByName(mpairs).localCheckpoint(eager=False)
-    gens = docs.select(
-        F.col("doc_id").alias("doc"),
-        (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen"),
-    )
-    decs, _blks = _ML._chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        dec.select("doc", F.lit(g).cast("int").alias("gen"), "admitted")
-        for g, dec in enumerate(decs)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def _multimodal_gate_dup_of_sql() -> str:
-    """Attribution oracle for the UNIFIED gate: every blocking pair of
-    every rejected doc, tagged with the modality that fired — text
-    pairs with their MinHash estimate, media pairs with their Hamming
-    distance as the score. No cross-modal ranking is imposed (an
-    estimate and a distance are not comparable); the relation is the
-    full eligible-blocker SET, which is exactly what the drain
-    persists."""
-    parts = [
-        "WITH "
-        + _ML._gate_common_ctes(_ML._GATE_K, _ML._GATE_BANDS, _GATE_GENS),
-        _media_gate_sig_ctes(_AHASH_N, _AHASH_MAXHAM) + ",",
-        "xcand AS (SELECT id_a, id_b FROM est"
-        f" WHERE est >= {_ML._GATE_T!r}"
-        " UNION SELECT id_a, id_b FROM mdist),",
-        _ML._gate_chain_ctes("xcand", "", _GATE_GENS) + ",",
-    ]
-    sels = []
-    for g in range(_GATE_GENS):
-        prev = (
-            "\nUNION ALL\n".join(f"SELECT doc FROM acc{j}" for j in range(g))
-            if g
-            else None
-        )
-        in_batch = (
-            f"(e.id_b < e.id_a AND e.id_b IN"
-            f" (SELECT doc FROM gens WHERE gen = {g}))"
-        )
-        cond = f"(e.id_b IN ({prev}) OR {in_batch})" if prev else in_batch
-        parts.append(
-            f"xtb{g} AS (SELECT e.id_a AS doc, e.id_b AS odoc,"
-            " 'text' AS modality, e.est AS score FROM est e"
-            f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
-            f" WHERE e.est >= {_ML._GATE_T!r} AND {cond}),"
-        )
-        parts.append(
-            f"xmb{g} AS (SELECT e.id_a AS doc, e.id_b AS odoc,"
-            " 'media' AS modality, CAST(e.dist AS DOUBLE) AS score"
-            " FROM mdist e"
-            f" JOIN gens x ON x.doc = e.id_a AND x.gen = {g}"
-            f" WHERE {cond}),"
-        )
-        sels += [f"SELECT * FROM xtb{g}", f"SELECT * FROM xmb{g}"]
-    parts.append("xblk AS (" + "\nUNION ALL\n".join(sels) + ")")
-    parts.append("SELECT doc, odoc, modality, score FROM xblk")
-    return "\n".join(parts)
-
-
-@_q("q_multimodal_gate_dup_of", _multimodal_gate_dup_of_sql())
-def q_multimodal_gate_dup_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rejection ATTRIBUTION for the unified multimodal gate: every
-    eligible blocking pair of every rejected doc, tagged by modality —
-    'text' rows carry the MinHash estimate, 'media' rows the Hamming
-    distance — the exact relation the unified drain persists under
-    dup_of_dir, so 'what blocked my doc, and in WHICH modality' is a
-    read either way. Replays through the oracle's own all-pairs shape
-    (r14, registry_ml.q_neardup_gate_replay) off the memoized signature
-    checkpoints shared with q_multimodal_gate_replay: one banded
-    self-join + verify per modality builds the modality-tagged pair
-    union (lazily localCheckpointed), and the chain's per-generation
-    eligible-blocker subsets of it ARE the output rows. Blockers
-    eligible against state are the UNIFIED corpus's accepted items
-    (the atomicity that separates this from per-modality attribution):
-    one accepted set, derived from the unioned candidate relation,
-    gates BOTH modalities' pairs."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-        ahash_signatures,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        minhash_signature,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import (
-        _memo_replay,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = MM.media_from_documents(docs)
-    tsig_all = _memo_replay(
-        spark, sf_dir, "mm-gate-tsigs",
-        lambda: minhash_signature(
-            docs, "doc_id", "text", 3, _ML._GATE_K
-        ).localCheckpoint(),
-    )
-    msig_all = _memo_replay(
-        spark, sf_dir, "media-gate-sigs",
-        lambda: ahash_signatures(media, n=_AHASH_N)
-        .select(F.col("media_id").alias("doc"), "sig")
-        .localCheckpoint(),
-    )
-    tpairs = _ML._gate_pairs(
-        tsig_all, _ML._GATE_K, _ML._GATE_BANDS, _ML._GATE_T, _GATE_GENS
-    ).select(
-        "doc", "odoc", "gen_d", "gen_o",
-        F.lit("text").alias("modality"), F.col("est").alias("score"),
-    )
-    mpairs = _media_pairs(
-        msig_all, _AHASH_N, _AHASH_MAXHAM, _GATE_GENS
-    ).select(
-        "doc", "odoc", "gen_d", "gen_o",
-        F.lit("media").alias("modality"),
-        F.col("dist").cast("double").alias("score"),
-    )
-    pairs = tpairs.unionByName(mpairs).localCheckpoint(eager=False)
-    gens = docs.select(
-        F.col("doc_id").alias("doc"),
-        (F.col("doc_id") % _GATE_GENS).cast("int").alias("gen"),
-    )
-    _decs, blks = _ML._chain_from_pairs(gens, pairs, _GATE_GENS)
-    outs = [
-        b.select("doc", "odoc", "modality", "score") for b in blks
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def _multimodal_policy_audit_sql() -> str:
-    """Triple unrolled replay — the SAME 3-generation arrival run
-    through the unified (atomic) policy AND through the two gates as
-    independent drains — aggregated per generation into the policy
-    divergence audit. ``rejected_separate`` counts docs at least one
-    independent gate rejects (the separate-operation corpus admits a
-    doc only when BOTH gates do); the two *_only columns count where
-    the policies disagree — the cost of running the gates non-atomically
-    that the unified gate's module docstring claims, here measured on
-    the user's own corpus."""
-    parts = [
-        "WITH "
-        + _ML._gate_common_ctes(_ML._GATE_K, _ML._GATE_BANDS, _GATE_GENS),
-        _media_gate_sig_ctes(_AHASH_N, _AHASH_MAXHAM) + ",",
-        f"vcand AS (SELECT id_a, id_b FROM est WHERE est >= {_ML._GATE_T!r}),",
-        "mcand AS (SELECT id_a, id_b FROM mdist),",
-        "xcand AS (SELECT id_a, id_b FROM vcand"
-        " UNION SELECT id_a, id_b FROM mcand),",
-        _ML._gate_chain_ctes("vcand", "_t", _GATE_GENS) + ",",
-        _ML._gate_chain_ctes("mcand", "_m2", _GATE_GENS) + ",",
-        _ML._gate_chain_ctes("xcand", "_u", _GATE_GENS) + ",",
-        """flags AS (
+            _ML._mm_gate_head(),
+            _ML._VCAND,
+            _ML._MCAND,
+            "xcand AS (SELECT id_a, id_b FROM vcand"
+            " UNION SELECT id_a, id_b FROM mcand),",
+            _ML._gate_chain_ctes("vcand", "_t", _ML._GATE_GENS) + ",",
+            _ML._gate_chain_ctes("mcand", "_m2", _ML._GATE_GENS) + ",",
+            _ML._gate_chain_ctes("xcand", "_u", _ML._GATE_GENS) + ",",
+            """flags AS (
           SELECT g.doc, g.gen,
                  (g.doc IN (SELECT doc FROM rej_u)) AS rej_u,
                  (g.doc IN (SELECT doc FROM rej_t)
@@ -1146,11 +644,9 @@ def _multimodal_policy_audit_sql() -> str:
                CAST(SUM(CASE WHEN rej_u AND NOT rej_s THEN 1 ELSE 0 END)
                  AS BIGINT) AS rejected_unified_only
         FROM flags GROUP BY gen""",
-    ]
-    return "\n".join(parts)
-
-
-@_q("q_multimodal_gate_policy_audit", _multimodal_policy_audit_sql())
+        ]
+    ),
+)
 def q_multimodal_gate_policy_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1166,7 +662,7 @@ def q_multimodal_gate_policy_audit(
     entering a separate text gate's state blocks later text near-dups
     the unified corpus never admitted, and vice versa). All three
     replays run the streams' own batch kernels off the SAME memoized
-    signature checkpoints (mm-gate-tsigs / media-gate-sigs shared with
+    signature checkpoints (gate-replay-sigs / media-gate-sigs shared with
     the replay and dup_of oracles); the joins attach three skinny
     (doc, admitted) relations — no extra corpus pass."""
     uni = q_multimodal_gate_replay(spark, sf_dir).select(
