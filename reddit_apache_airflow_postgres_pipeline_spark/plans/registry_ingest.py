@@ -1190,11 +1190,8 @@ def _estate_params() -> tuple[str, str, str, str, str]:
     so the oracle literal can never drift from the writers."""
     import json as _json
 
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.media_index import (
-        _MEDIA_FORMAT,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.text_index import (
-        _TEXT_FORMAT,
+    from reddit_apache_airflow_postgres_pipeline_spark.sinks.served_index import (
+        MODALITIES,
     )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
         verified_gate_meta,
@@ -1204,11 +1201,12 @@ def _estate_params() -> tuple[str, str, str, str, str]:
     )
 
     text = _json.dumps(
-        {"format": _TEXT_FORMAT, "kind": "ivfpq", "d": 8, "n": 2, "salt": "emb"},
+        {"format": MODALITIES["text"].fmt, "kind": "ivfpq",
+         "d": 8, "n": 2, "salt": "emb"},
         sort_keys=True,
     )
     media = _json.dumps(
-        {"format": _MEDIA_FORMAT, "kind": "binary", "codec": "fake"},
+        {"format": MODALITIES["media"].fmt, "kind": "binary", "codec": "fake"},
         sort_keys=True,
     )
     gate = _json.dumps(verified_gate_meta(3, 12, 4, 0.5), sort_keys=True)
@@ -2206,12 +2204,12 @@ def _build_incr_index(spark: SparkSession, sf_dir: str) -> str:
         return idx
     _sh.rmtree(iroot, ignore_errors=True)
     os.makedirs(iroot)
-    _snap.build_text_index_at_pin(
-        spark, roots["gate_corpus"], "g01", idx,
+    _snap.build_index_at_pin(
+        spark, roots["gate_corpus"], "g01", idx, "text",
         kind="ivfpq", n_cells=_ML._IVF_CELLS, m=_ML._PQ_M,
         n_codes=_ML._PQ_CODES, iters=1, **_ML._EMB_KW,
     )
-    _snap.advance_text_index_to_pin(
+    _snap.advance_index_to_pin(
         spark, roots["gate_corpus"], idx, "all", batch_id=1
     )
     with open(done, "w") as f:
@@ -2225,9 +2223,9 @@ def q_snapshot_incremental_serve(
 ) -> DataFrame:
     """Pin-move → incremental index refresh, served (r12 verdict #4):
     a text IVFPQ index built FROM pin 'g01' (snapshots.
-    build_text_index_at_pin — manifest-pruned read, pin recorded beside
+    build_index_at_pin — manifest-pruned read, pin recorded beside
     the store) advances to pin 'all' by appending EXACTLY the snapshot
-    diff (advance_text_index_to_pin → append_text_to_index: frozen
+    diff (advance_index_to_pin → append_text_to_index: frozen
     featurizer, frozen quantizers, delta-dirs-only read), then serves
     top-5 for the 8 lowest embedable pinned docs. At 100 TB this is
     the serving loop's whole point: a daily pin advance costs the

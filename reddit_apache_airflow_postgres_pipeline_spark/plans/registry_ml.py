@@ -1685,7 +1685,7 @@ def _pq_ctes(
     ``embeddings`` for raw PQ, the permuted ``pemb`` CTE for OPQ.
     ``train_src`` optionally names a SEPARATE relation the codebooks
     train on (frozen-quantizer replays: build at pin A, encode/serve
-    pin B — the advance_text_index_to_pin spec); default None trains on
+    pin B — the advance_index_to_pin spec); default None trains on
     ``src`` itself, emitting byte-identical SQL to the single-relation
     form."""
     l2 = _L2SQ_SQL

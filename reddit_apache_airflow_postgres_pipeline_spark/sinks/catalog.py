@@ -6,10 +6,10 @@ state dirs × decision logs wants a single relation: what lives where,
 under which frozen parameters, how much of it is live, how big the
 tombstone backlog is, and what the gates have been admitting. This
 module classifies each root from its ON-DISK markers — the same
-markers the writers stamp and the readers verify (text_meta.json /
-media_meta.json, the store subdir layout, counting_state's _meta.json)
-— so the catalog can never disagree with the read path about what a
-store is.
+markers the writers stamp and the readers verify (the modality meta
+files of served_index.MODALITIES, the store subdirs of
+vector_index.KINDS, counting_state's _meta.json) — so the catalog can
+never disagree with the read path about what a store is.
 
 Scale posture: the catalog is decision-sized — one row per store, a
 handful of metadata aggregates each (row counts run as Spark jobs over
@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import served_index as _si
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import snapshots as _snap
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
@@ -60,8 +62,32 @@ _GATE_MODALITY = {
 _CORPUS_FORMAT = _cs.CORPUS_FORMAT
 
 
-def _params_json(meta: dict) -> str:
-    return json.dumps(meta, sort_keys=True)
+def _entry(
+    name: str,
+    category: str,
+    kind: str,
+    modality: str | None,
+    params: dict,
+    n_rows: int,
+    live_dirs: int,
+    tombstones: int | None = None,
+    n_admitted: int | None = None,
+    n_rejected: int | None = None,
+) -> dict:
+    """One catalog row, keyed by CATALOG_SCHEMA's columns; ``params``
+    is rendered as sorted-key JSON."""
+    return {
+        "name": name,
+        "category": category,
+        "kind": kind,
+        "modality": modality,
+        "params": json.dumps(params, sort_keys=True),
+        "n_rows": n_rows,
+        "live_dirs": live_dirs,
+        "tombstones": tombstones,
+        "n_admitted": n_admitted,
+        "n_rejected": n_rejected,
+    }
 
 
 def _batch_dirs(path: str) -> list[str]:
@@ -78,9 +104,9 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
     """Classify ONE estate root from its on-disk markers and summarize
     it. Recognized layouts, in probe order:
 
-    - ``text_meta.json`` / ``media_meta.json`` beside a vector store →
-      a modality-native served index (kind + frozen featurizer/codec
-      params from the meta, counts from index_stats);
+    - a modality meta file (served_index.modality_of) beside a vector
+      store → a modality-native served index (kind + frozen
+      featurizer/codec params from the meta, counts from index_stats);
     - a bare ``postings/`` | ``codes/`` | ``sigs/`` store → a raw
       vector index (infer_kind's exactly-one contract);
     - ``_meta.json`` stamped ``admitted-corpus/v1`` → the ADMITTED
@@ -98,88 +124,41 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
 
     Fail-loud on anything else — an unclassifiable root must not be
     silently reported healthy."""
-    tmeta = os.path.join(path, "text_meta.json")
-    mmeta = os.path.join(path, "media_meta.json")
-    if os.path.exists(tmeta) or os.path.exists(mmeta):
-        with open(tmeta if os.path.exists(tmeta) else mmeta) as f:
-            meta = json.load(f)
-        modality = "text" if os.path.exists(tmeta) else "media"
-        # a pin-built index (snapshots.build_text_index_at_pin) records
-        # the corpus version it serves — surface it in the catalog so
+    modality = _si.modality_of(path)
+    if modality != "raw":
+        meta = _si.index_meta(path, modality)
+        kind = meta["kind"]
+        # a pin-built index (snapshots.build_index_at_pin) records the
+        # corpus version it serves — surface it in the catalog so
         # "which pin is this index at" is a dashboard cell, not a
         # marker-file hunt
-        pin_p = os.path.join(path, "pinned_snapshot.json")
-        if os.path.exists(pin_p):
-            with open(pin_p) as f:
-                meta = {**meta, "pinned_snapshot": json.load(f)["snapshot"]}
-        stats = _vi.index_stats(spark, path, meta["kind"])
-        return {
-            "name": name,
-            "category": "vector-index",
-            "kind": meta["kind"],
-            "modality": modality,
-            "params": _params_json(meta),
-            "n_rows": stats["rows"],
-            "live_dirs": stats["live_dirs"],
-            "tombstones": stats["tombstones"],
-            "n_admitted": None,
-            "n_rejected": None,
-        }
-    found = [
-        k
-        for k, sub in _vi.STORE_SUBDIR.items()
-        if os.path.isdir(os.path.join(path, sub))
-    ]
-    if len(found) == 1:
-        stats = _vi.index_stats(spark, path, found[0])
-        return {
-            "name": name,
-            "category": "vector-index",
-            "kind": found[0],
-            "modality": "raw",
-            "params": _params_json(
-                _read_store_meta(os.path.join(path, _vi.STORE_SUBDIR[found[0]]))
-            ),
-            "n_rows": stats["rows"],
-            "live_dirs": stats["live_dirs"],
-            "tombstones": stats["tombstones"],
-            "n_admitted": None,
-            "n_rejected": None,
-        }
+        if os.path.exists(os.path.join(path, _snap.PIN_META)):
+            meta = {**meta, "pinned_snapshot": _snap.index_pin(path)["snapshot"]}
+    else:
+        found = _vi.built_kinds(path)
+        kind = found[0] if len(found) == 1 else None
+        meta = _vi.store_meta(path, kind) if kind else None
+    if kind is not None:
+        st = _vi.index_stats(spark, path, kind)
+        return _entry(
+            name, "vector-index", kind, modality, meta,
+            st["rows"], st["live_dirs"], st["tombstones"],
+        )
     gmeta_path = os.path.join(path, _cs.META)
     if os.path.exists(gmeta_path):
         with open(gmeta_path) as f:
             meta = json.load(f)
         fmt = meta.get("format", "")
-        if fmt == _CORPUS_FORMAT:
-            return {
-                "name": name,
-                "category": "corpus",
-                "kind": fmt,
-                "modality": meta.get("modality"),
-                "params": _params_json(meta),
-                "n_rows": (
-                    spark.read.parquet(path).count() if _batch_dirs(path) else 0
-                ),
-                "live_dirs": len(_batch_dirs(path)),
-                "tombstones": None,
-                "n_admitted": None,
-                "n_rejected": None,
-            }
-        if fmt in _GATE_MODALITY:
+        if fmt == _CORPUS_FORMAT or fmt in _GATE_MODALITY:
             rows = spark.read.parquet(path).count() if _batch_dirs(path) else 0
-            return {
-                "name": name,
-                "category": "gate-state",
-                "kind": fmt,
-                "modality": _GATE_MODALITY[fmt],
-                "params": _params_json(meta),
-                "n_rows": rows,
-                "live_dirs": len(_batch_dirs(path)),
-                "tombstones": None,
-                "n_admitted": None,
-                "n_rejected": None,
-            }
+            if fmt == _CORPUS_FORMAT:
+                category, modality = "corpus", meta.get("modality")
+            else:
+                category, modality = "gate-state", _GATE_MODALITY[fmt]
+            return _entry(
+                name, category, fmt, modality, meta, rows,
+                len(_batch_dirs(path)),
+            )
         raise ValueError(
             f"estate root {path!r} is a {fmt!r} state store — not a "
             "serving-estate member (index, gate state, or decision log)"
@@ -193,18 +172,10 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
             ).collect()[0]
             n = int(agg["n"])
             adm = int(agg["adm"] or 0)
-            return {
-                "name": name,
-                "category": "decision-log",
-                "kind": "decisions",
-                "modality": None,
-                "params": _params_json({}),
-                "n_rows": n,
-                "live_dirs": len(_batch_dirs(path)),
-                "tombstones": None,
-                "n_admitted": adm,
-                "n_rejected": n - adm,
-            }
+            return _entry(
+                name, "decision-log", "decisions", None, {}, n,
+                len(_batch_dirs(path)), n_admitted=adm, n_rejected=n - adm,
+            )
         if "odoc" in df.columns:
             modality = (
                 "multimodal" if "modality" in df.columns
@@ -212,31 +183,15 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
                 else "media" if "dist" in df.columns
                 else None
             )
-            return {
-                "name": name,
-                "category": "attribution-log",
-                "kind": "dup_of",
-                "modality": modality,
-                "params": _params_json({}),
-                "n_rows": df.count(),
-                "live_dirs": len(_batch_dirs(path)),
-                "tombstones": None,
-                "n_admitted": None,
-                "n_rejected": None,
-            }
+            return _entry(
+                name, "attribution-log", "dup_of", modality, {}, df.count(),
+                len(_batch_dirs(path)),
+            )
     raise ValueError(
         f"estate root {path!r} matches no known layout (text/media index "
         "meta, single vector store dir, gate _meta.json, or batch_id=* "
         "decision log) — refusing to catalog an unknown store as healthy"
     )
-
-
-def _read_store_meta(store: str) -> dict:
-    p = os.path.join(store, _cs.META)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
 
 
 def catalog(spark: SparkSession, roots: dict[str, str] | list[str]) -> DataFrame:

@@ -63,20 +63,17 @@ live batch dir (r12 advice).
 
 from __future__ import annotations
 
+import json
+import operator
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import catalog as _cat
-from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-    media_index as _mi,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-    text_index as _ti,
-)
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
     vector_index as _vi,
 )
@@ -87,16 +84,13 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     media_gate as _mg,
 )
 
+# (spark, state_dir, frozen params) -> the store's live rows
 _GATE_LOADERS = {
-    _dg.GATE_FORMAT: lambda sp, sd: _dg._load_state(sp, sd),
-    _dg.VERIFIED_GATE_FORMAT: None,  # needs num_hashes from the meta
-    _mg.MEDIA_GATE_FORMAT: lambda sp, sd: _mg._load_media_state(sp, sd),
-}
-
-_INDEX_READERS = {
-    "ivf": lambda sp, p: _vi.read_postings(sp, p),
-    "ivfpq": lambda sp, p: _vi.read_codes(sp, p),
-    "binary": lambda sp, p: _vi.read_sigs(sp, p),
+    _dg.GATE_FORMAT: lambda sp, sd, params: _dg._load_state(sp, sd),
+    _dg.VERIFIED_GATE_FORMAT: lambda sp, sd, params: _dg._load_sig_state(
+        sp, sd, int(params["num_hashes"])
+    ),
+    _mg.MEDIA_GATE_FORMAT: lambda sp, sd, params: _mg._load_media_state(sp, sd),
 }
 
 _TMP_PREFIX = "_forget_tmp_"
@@ -121,13 +115,7 @@ def _erase_gate_state(
     rename, subsumed dirs deleted after. Skips the fold entirely when
     no forgotten row is present (the re-sweep passes' cheap probe).
     Returns rows removed."""
-    if kind == _dg.VERIFIED_GATE_FORMAT:
-        loader = lambda sp, sd: _dg._load_sig_state(  # noqa: E731
-            sp, sd, int(params["num_hashes"])
-        )
-    else:
-        loader = _GATE_LOADERS[kind]
-    full = loader(spark, path)
+    full = _GATE_LOADERS[kind](spark, path, params)
     removed = full.filter(F.col("doc").isin(ids)).count()
     if removed == 0:
         return 0
@@ -145,44 +133,19 @@ def _erase_gate_state(
     return removed
 
 
-def _erase_log_rows(
-    spark: SparkSession, path: str, ids: list[int], also_odoc: bool
+def _erase_rows(
+    spark: SparkSession, path: str, ids: list[int], cols: list[str]
 ) -> int:
-    """Rewrite every batch dir of a decision/attribution log without
-    the rows mentioning a forgotten id. Per-dir tmp → rename keeps the
-    log readable throughout; dir names (and so batch attribution) are
-    preserved."""
-    _clean_stray_tmps(path)
-    removed = 0
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("batch_id="):
-            continue
-        sub = os.path.join(path, d)
-        df = spark.read.parquet(sub)
-        cond = F.col("doc").isin(ids)
-        if also_odoc and "odoc" in df.columns:
-            cond = cond | F.col("odoc").isin(ids)
-        n = df.filter(cond).count()
-        if n == 0:
-            continue
-        removed += n
-        tmp = os.path.join(path, _TMP_PREFIX + d.replace("=", "_"))
-        df.filter(~cond).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(sub)
-        os.replace(tmp, sub)
-    return removed
+    """Rewrite every batch dir of a log or corpus WITHOUT the rows whose
+    ``cols`` mention a forgotten id (a column a dir lacks is skipped).
+    Per-dir tmp → rename keeps the store readable throughout; dir names
+    (and so batch attribution) are preserved. Returns rows removed.
 
-
-def _erase_corpus_rows(
-    spark: SparkSession, path: str, id_col: str, ids: list[int]
-) -> int:
-    """Rewrite every corpus batch dir WITHOUT the forgotten documents —
-    this is where the payloads themselves die (signatures die in the
-    gate states, vectors in the indexes; a sweep that spares the
-    admitted corpus has erased everything except the document). Dir
-    names are preserved (batch provenance survives), so any snapshot
-    pinning a rewritten dir now FAILS its immutability audit
-    (sinks/snapshots.verify_snapshot) — the documented collision:
+    On the admitted corpus this is where the payloads themselves die
+    (signatures die in the gate states, vectors in the indexes; a sweep
+    that spares the corpus has erased everything except the document).
+    Any snapshot pinning a rewritten dir now FAILS its immutability
+    audit (sinks/snapshots.verify_snapshot) — the documented collision:
     the right to be forgotten beats reproducibility, loudly (and
     amend_snapshot pins the swept successor)."""
     _clean_stray_tmps(path)
@@ -192,7 +155,9 @@ def _erase_corpus_rows(
             continue
         sub = os.path.join(path, d)
         df = spark.read.parquet(sub)
-        cond = F.col(id_col).isin(ids)
+        cond = reduce(
+            operator.or_, [F.col(c).isin(ids) for c in cols if c in df.columns]
+        )
         n = df.filter(cond).count()
         if n == 0:
             continue
@@ -205,14 +170,14 @@ def _erase_corpus_rows(
 
 
 def _erase_index(
-    spark: SparkSession, path: str, modality: str, kind: str, ids: list[int]
+    spark: SparkSession, path: str, kind: str, ids: list[int]
 ) -> int:
     """Tombstone + FULL compaction: rows physically dropped, tombstone
     absorbed, ids re-addable. Probes the live rows first and no-ops at
     zero (a re-sweep pass must not accrete tombstones for absent ids).
     Returns rows removed (live rows the ids actually had)."""
     live = (
-        _INDEX_READERS[kind](spark, path)
+        _vi.read_store(spark, path, kind)
         .filter(F.col("neighbor_id").isin(ids))
         .select("neighbor_id")
         .distinct()
@@ -223,12 +188,7 @@ def _erase_index(
     before = _vi.index_stats(spark, path, kind)["rows"]
     id_df = local_df(spark, [(int(i),) for i in ids], "vec_id long")
     _vi.delete_from_index(id_df, path, id_col="vec_id")
-    if modality == "text":
-        _ti.compact_text_index(spark, path)
-    elif modality == "media":
-        _mi.compact_media_index(spark, path)
-    else:
-        _vi.COMPACTORS[kind](spark, path, None)
+    _vi.compact_store(spark, path, kind)
     return before - _vi.index_stats(spark, path, kind)["rows"]
 
 
@@ -254,8 +214,6 @@ def forget(
     — a progress hook, and the interleave point the stream-safety tests
     use. Classification happens ONCE (a drain cannot change what a
     store IS); only the erasure re-runs."""
-    import json as _json
-
     if not ids:
         raise ValueError("forget() with no ids — nothing to erase")
     ents = {
@@ -271,25 +229,21 @@ def forget(
             ent = ents[name]
             cat = ent["category"]
             if cat == "vector-index":
-                n = _erase_index(
-                    spark, path, ent["modality"], ent["kind"], ids
-                )
+                n = _erase_index(spark, path, ent["kind"], ids)
                 actions[name] = "tombstone+full-compact"
             elif cat == "gate-state":
                 n = _erase_gate_state(
-                    spark, path, ent["kind"], _json.loads(ent["params"]), ids
+                    spark, path, ent["kind"], json.loads(ent["params"]), ids
                 )
                 actions[name] = "filtered-fold"
-            elif cat == "decision-log":
-                n = _erase_log_rows(spark, path, ids, also_odoc=False)
-                actions[name] = "log-rewrite"
-            elif cat == "attribution-log":
-                n = _erase_log_rows(spark, path, ids, also_odoc=True)
+            elif cat in ("decision-log", "attribution-log"):
+                # "your upload duplicated document X" leaks X's existence
+                cols = ["doc", "odoc"] if cat == "attribution-log" else ["doc"]
+                n = _erase_rows(spark, path, ids, cols)
                 actions[name] = "log-rewrite"
             elif cat == "corpus":
-                n = _erase_corpus_rows(
-                    spark, path, _json.loads(ent["params"])["id_col"], ids
-                )
+                id_col = json.loads(ent["params"])["id_col"]
+                n = _erase_rows(spark, path, ids, [id_col])
                 actions[name] = "corpus-rewrite"
             else:  # pragma: no cover — catalog_entry fails loud first
                 raise ValueError(f"unclassifiable estate member {name!r}")

@@ -120,12 +120,6 @@ def maintenance_plan(cat: DataFrame, policy: dict | None = None) -> DataFrame:
 def _compact_for(spark: SparkSession, row, path: str) -> None:
     """Dispatch COMPACT to the store family's own primitive."""
     from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-        media_index as _mi,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-        text_index as _ti,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
         vector_index as _vi,
     )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
@@ -136,12 +130,7 @@ def _compact_for(spark: SparkSession, row, path: str) -> None:
     )
 
     if row["category"] == "vector-index":
-        if row["modality"] == "text":
-            _ti.compact_text_index(spark, path)
-        elif row["modality"] == "media":
-            _mi.compact_media_index(spark, path)
-        else:
-            _vi.COMPACTORS[row["kind"]](spark, path, None)
+        _vi.compact_store(spark, path, row["kind"])
         return
     if row["category"] == "gate-state":
         if row["kind"] == _dg.VERIFIED_GATE_FORMAT:

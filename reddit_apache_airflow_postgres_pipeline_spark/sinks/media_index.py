@@ -1,90 +1,28 @@
 """Persisted MEDIA index: build, append to, and query a served vector
 index straight from raw binary media — the featurization
-(:func:`operators.multimodal.byte_histogram_features`, the real-encoder
-stand-in with identical Arrow-batched plumbing) is part of the index,
-not the caller.
+(:func:`operators.multimodal.byte_histogram_features`) is part of the
+index, not the caller.
 
-The media twin of :mod:`sinks.text_index`, closing the same seam one
-modality over: batch-side, media already flows featurize → IVFPQ →
-serve in one plan (plans/registry_mm.q_media_ivfpq_topk), but the
-MAINTAINED stores took pre-featurized vectors only, so an arriving
-image/audio/video payload could not reach a served ANN index without a
-manual feature hop. This module closes it:
-
-* :func:`write_media_index` — featurize a validated media snapshot and
-  build any of the three store kinds (ivf | ivfpq | binary), FREEZING
-  the codec in ``<path>/media_meta.json`` beside the store. The
-  snapshot's features train the quantizers exactly as the raw-vector
-  builds train on theirs.
-* :func:`append_media_to_index` — featurize a media delta WITH THE
-  INDEX'S OWN frozen codec (read back from the meta — a caller cannot
-  accidentally mix a real-decoder geometry into a fake-codec store;
-  there is nothing to pass) and append through the store's standard
-  delta contract (disjoint ids, idempotent per-dir overwrite,
-  fail-loud live-tombstone guard).
-* :func:`query_media_index` — featurize raw query payloads with the
-  frozen codec and serve top-k from the persisted store: ask "nearest
-  neighbors of this image" with no vector in sight.
-
-Reference analog: the pipeline lands every fetched record — whatever
-its content — through one salted-hash identity + typed-column contract
-(dags/Combine_send_to_postgresql.py:58,301); this is that contract
-extended from text rows to binary payloads, with geometry frozen the
-way the text index froze its featurizer params.
-
-Scale: featurization is ONE Arrow-batched ``mapInPandas`` stage (the
-sanctioned Python surface — a real CLIP/wav2vec encoder slots into the
-same batch shape); everything after is the raw-vector stores'
-already-audited path (broadcast quantizers, cell-partitioned writes,
-pruned probes). Zero-byte payloads featurize to the zero vector, which
-has no direction — they are dropped here, symmetrical with
-``embed_text`` skipping empty documents.
+The media row of ``served_index.MODALITIES``: these are its names over
+the one lifecycle in sinks/served_index.py. :func:`write_media_index`
+freezes ``(codec, kind)`` in ``<path>/media_meta.json``;
+:func:`append_media_to_index` and :func:`query_media_index` featurize
+with the index's OWN frozen codec (a caller cannot mix a real-decoder
+geometry into a fake-codec store), so an arriving image/audio/video
+payload reaches a served ANN index with no manual feature hop.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from reddit_apache_airflow_postgres_pipeline_spark.operators import multimodal as _mm
-from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
-
-_MEDIA_META = "media_meta.json"
-_MEDIA_FORMAT = "media-index/v1"
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import served_index as _si
 
 
 def media_index_meta(path: str) -> dict:
-    """The index's frozen codec + kind record. Raises with a pointer to
-    :func:`write_media_index` when absent — an append or query against a
-    store that never declared its featurization must fail loudly, not
-    featurize with defaults and silently mix geometries."""
-    mp = os.path.join(path, _MEDIA_META)
-    if not os.path.exists(mp):
-        raise ValueError(
-            f"{path!r} has no {_MEDIA_META} — not a media index. Build it "
-            "with write_media_index(snapshot_media, path, kind=...) so the "
-            "codec is frozen beside the quantizers."
-        )
-    with open(mp) as f:
-        return json.load(f)
-
-
-def _featurize(media: DataFrame, meta: dict, id_col: str) -> DataFrame:
-    """Non-empty payloads → (id_col, embedding). The empty-payload drop
-    is a pushable length predicate (JVM-side, before the Python stage),
-    not a post-hoc vector-sum filter. ``id_col`` is resolved on the
-    INPUT (the codec stage's Arrow batches read ``media_id``, so a
-    custom id column is renamed into that slot first, not merely
-    relabeled on the output — r11 review)."""
-    if id_col != "media_id":
-        media = media.withColumnRenamed(id_col, "media_id")
-    nz = media.filter(F.length("payload") > 0)
-    return _mm.byte_histogram_features(nz, codec=str(meta["codec"])).select(
-        F.col("media_id").alias(id_col), F.col("feat").alias("embedding")
-    )
+    """The index's frozen codec + kind record (fail-loud when the path
+    is not a media index)."""
+    return _si.index_meta(path, "media")
 
 
 def write_media_index(
@@ -96,15 +34,10 @@ def write_media_index(
     **index_kwargs,
 ) -> None:
     """Featurize a validated media snapshot and build the ``kind`` store
-    at ``path``, freezing ``(codec, kind)`` in the index's
-    ``media_meta.json``. ``index_kwargs`` pass through to the underlying
-    build (n_cells/m/n_codes/iters/refine_iters)."""
-    _vi.check_kind(kind)
-    meta = {"format": _MEDIA_FORMAT, "kind": kind, "codec": codec}
-    feats = _featurize(media, meta, id_col)
-    _vi.WRITERS[kind](feats, path, id_col=id_col, vec_col="embedding", **index_kwargs)
-    with open(os.path.join(path, _MEDIA_META), "w") as f:
-        json.dump(meta, f)
+    at ``path``, freezing ``(codec, kind)`` in ``media_meta.json``."""
+    _si.ModalityIndex("media", path, id_col).write(
+        media, kind, {"codec": codec}, index_kwargs
+    )
 
 
 def append_media_to_index(
@@ -114,16 +47,8 @@ def append_media_to_index(
     batch_id: int | None = None,
 ) -> None:
     """Featurize a media delta with the INDEX'S frozen codec and append
-    it — the media form of the append contract (disjoint ids, idempotent
-    per-dir overwrite on an explicit ``batch_id``, live-tombstone
-    fail-loud guard, quantizer drift accepted until the next rebuild).
-    Zero-byte payloads featurize to no row and are skipped, matching the
-    build's contract."""
-    meta = media_index_meta(path)
-    feats = _featurize(media, meta, id_col)
-    _vi.APPENDERS[meta["kind"]](
-        feats, path, id_col=id_col, vec_col="embedding", batch_id=batch_id
-    )
+    it (served_index.ModalityIndex.append's contract)."""
+    _si.ModalityIndex("media", path, id_col).append(media, batch_id)
 
 
 def query_media_index(
@@ -134,51 +59,10 @@ def query_media_index(
     id_col: str = "media_id",
     **query_kwargs,
 ) -> DataFrame:
-    """Serve top-k for RAW query payloads: featurize them with the
-    index's frozen codec and run the store's probe (``n_probe`` etc.
-    pass through for the IVF kinds). Returns the underlying store's
-    result shape — (query_id, neighbor_id, score|dist|hamming)."""
-    meta = media_index_meta(path)
-    q = _featurize(query_media, meta, id_col)
-    return _vi.QUERIES[meta["kind"]](
-        spark, path, q, k=k, id_col=id_col, vec_col="embedding", **query_kwargs
-    )
-
-
-def media_index_store(path: str) -> str:
-    """The data store dir of a media index (kind-dispatched) — the
-    directory whose live-dir count the streaming maintainer watches."""
-    return os.path.join(path, _vi.STORE_SUBDIR[media_index_meta(path)["kind"]])
-
-
-def compact_media_index(
-    spark: SparkSession, path: str, exclude_from: int | None = None
-) -> None:
-    """Kind-dispatched compaction of a media index's data store — same
-    fold/tombstone/GC semantics as the raw-vector compactors."""
-    _vi.COMPACTORS[media_index_meta(path)["kind"]](spark, path, exclude_from)
-
-
-def media_index_recall(
-    spark: SparkSession,
-    path: str,
-    media: DataFrame,
-    query_media: DataFrame,
-    k: int = 5,
-    id_col: str = "media_id",
-    **probe_kwargs,
-) -> float:
-    """Recall@k of the media store's probe vs exact L2 over the SAME
-    frozen-codec features of ``media`` — the staleness audit lifted to
-    payloads-in/payloads-probed."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import index_recall
-
-    meta = media_index_meta(path)
-    feats = _featurize(media, meta, id_col)
-    q = _featurize(query_media, meta, id_col)
-    return index_recall(
-        spark, path, feats, q, k, kind=meta["kind"], id_col=id_col,
-        vec_col="embedding", **probe_kwargs,
+    """Top-k for RAW query payloads: ask "nearest neighbors of this
+    image" with no vector in sight."""
+    return _si.ModalityIndex("media", path, id_col).query(
+        spark, query_media, k, query_kwargs
     )
 
 
@@ -193,26 +77,8 @@ def rebuild_media_index_if_stale(
     probe_kwargs: dict | None = None,
     build_kwargs: dict | None = None,
 ) -> dict:
-    """Drift-triggered rebuild for a MEDIA index: retrain quantizers on
-    the surviving media corpus below ``min_recall``; the codec stays
-    FROZEN (the index's identity), tombstones are GC'd after the new
-    store lands — the text index's rebuild contract, one modality
-    over."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
-        staleness_rebuild,
-    )
-
-    meta = media_index_meta(path)
-    probe_kwargs = probe_kwargs or {}
-    return staleness_rebuild(
-        path,
-        meta["kind"],
-        min_recall,
-        lambda: media_index_recall(
-            spark, path, media, query_media, k, id_col, **probe_kwargs
-        ),
-        lambda: write_media_index(
-            media, path, kind=meta["kind"], codec=str(meta["codec"]),
-            id_col=id_col, **(build_kwargs or {}),
-        ),
+    """Drift-triggered rebuild: the quantizers retrain on ``media`` (the
+    surviving corpus), the codec stays frozen."""
+    return _si.ModalityIndex("media", path, id_col).rebuild_if_stale(
+        spark, media, query_media, min_recall, k, probe_kwargs, build_kwargs
     )

@@ -42,13 +42,14 @@ shrink or mutate in place. This module is that version layer:
 - :func:`snapshot_diff` — the admitted rows BETWEEN two pins: reads
   only the batch dirs in ``b`` and not in ``a`` (an incremental-
   training feed costs the delta, never a re-scan or an anti-join).
-- :func:`build_text_index_at_pin` / :func:`advance_text_index_to_pin`
-  — the serving side of the version layer: a text ANN index built FROM
-  a pin records that pin beside its store, and advances to a later pin
-  by appending EXACTLY the snapshot diff (frozen featurizer + frozen
-  quantizers, the store's own append contract) — the incremental
-  index refresh a pin-move implies, with no corpus re-read and no
-  manual bookkeeping of "which corpus version is this index serving".
+- :func:`build_index_at_pin` / :func:`advance_index_to_pin` — the
+  serving side of the version layer: a text or media ANN index built
+  FROM a pin records that pin beside its store, and advances to a
+  later pin by appending EXACTLY the snapshot diff (frozen featurizer
+  + frozen quantizers, the store's own append contract) — the
+  incremental index refresh a pin-move implies, with no corpus re-read
+  and no manual bookkeeping of "which corpus version is this index
+  serving".
 
 Reference analog: the pipeline's archive step freezes each combine
 run's exact input set by moving consumed files to ``archive/``
@@ -67,6 +68,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import served_index as _si
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
 
 SNAPSHOTS_SUBDIR = "_snapshots"
 SNAPSHOT_FORMAT = "corpus-snapshot/v1"
@@ -221,13 +224,8 @@ def amend_snapshot(
     hand-built pin with no lineage. Same cost shape as
     :func:`create_snapshot`: one pruned scan, decision-sized manifest.
     Idempotent-iff-identical under the same pinned-name contract."""
-    mb = load_manifest(corpus_dir, base)
-    ids = [e["batch_id"] for e in mb["batches"]]
-    missing = [
-        b
-        for b in ids
-        if not os.path.isdir(os.path.join(corpus_dir, f"batch_id={b}"))
-    ]
+    ids = _pinned_ids(corpus_dir, base)
+    missing = [b for b in ids if not _has_batch(corpus_dir, b)]
     if missing:
         raise ValueError(
             f"snapshot {base!r} pins batch dirs that no longer exist: "
@@ -260,6 +258,14 @@ def load_manifest(corpus_dir: str, name: str) -> dict:
             f"expected {SNAPSHOT_FORMAT!r}"
         )
     return manifest
+
+
+def _pinned_ids(corpus_dir: str, name: str) -> list[int]:
+    return [e["batch_id"] for e in load_manifest(corpus_dir, name)["batches"]]
+
+
+def _has_batch(corpus_dir: str, batch_id: int) -> bool:
+    return os.path.isdir(os.path.join(corpus_dir, f"batch_id={batch_id}"))
 
 
 def list_snapshots(corpus_dir: str) -> list[str]:
@@ -321,11 +327,7 @@ def read_snapshot(
                 "pins the swept successor)"
             )
     ids = [e["batch_id"] for e in manifest["batches"]]
-    missing = [
-        b
-        for b in ids
-        if not os.path.isdir(os.path.join(corpus_dir, f"batch_id={b}"))
-    ]
+    missing = [b for b in ids if not _has_batch(corpus_dir, b)]
     if missing:
         raise ValueError(
             f"snapshot {name!r} pins batch dirs that no longer exist: "
@@ -350,9 +352,9 @@ def verify_snapshot(
     catches what it exists to catch: in-place rewrites by the estate's
     own operators (forget sweeps, botched compactions, re-drains)."""
     manifest = load_manifest(corpus_dir, name)
-    ids = [e["batch_id"] for e in manifest["batches"]]
     present = [
-        b for b in ids if os.path.isdir(os.path.join(corpus_dir, f"batch_id={b}"))
+        e["batch_id"] for e in manifest["batches"]
+        if _has_batch(corpus_dir, e["batch_id"])
     ]
     actual = _batch_stats(spark, corpus_dir, present) if present else {}
     rows = []
@@ -395,10 +397,8 @@ def snapshot_diff(
     means the pins came from different corpora — fail loud, an id-level
     anti-join would silently 'work' and hide that). Reads ONLY the
     delta dirs."""
-    mb = load_manifest(corpus_dir, base)
-    mt = load_manifest(corpus_dir, target)
-    ids_b = {e["batch_id"] for e in mb["batches"]}
-    ids_t = {e["batch_id"] for e in mt["batches"]}
+    ids_b = set(_pinned_ids(corpus_dir, base))
+    ids_t = set(_pinned_ids(corpus_dir, target))
     if not ids_b <= ids_t:
         raise ValueError(
             f"snapshot {base!r} pins batches {sorted(ids_b - ids_t)} that "
@@ -410,166 +410,121 @@ def snapshot_diff(
     return _read_batches(spark, corpus_dir, delta)
 
 
-# -- pin-aware serving: a text index that knows which pin it serves ----------
+# -- pin-aware serving: an index that knows which pin it serves --------------
 
 
 def index_pin(index_dir: str) -> dict:
-    """The pin marker a pin-built store carries (text or media):
-    ``{"corpus_dir": ..., "snapshot": ...}``. Fail-loud when absent —
-    advancing an index that never declared its corpus version would
-    silently mix lineages."""
+    """The pin marker a pin-built index carries (text or media):
+    ``{"corpus_dir": ..., "snapshot": ...}``, plus ``"pending"`` while
+    an advance is in flight. Fail-loud when absent — advancing an index
+    that never declared its corpus version would silently mix
+    lineages."""
     p = os.path.join(index_dir, PIN_META)
     if not os.path.exists(p):
         raise ValueError(
             f"{index_dir!r} carries no {PIN_META} — not a pin-built "
-            "index. Build it with build_text_index_at_pin / "
-            "build_media_index_at_pin so the corpus version it serves "
-            "is recorded beside the store."
+            "index. Build it with build_index_at_pin so the corpus "
+            "version it serves is recorded beside the store."
         )
     with open(p) as f:
         return json.load(f)
 
 
-# the original (text-named) accessor; both modalities share the marker
-text_index_pin = index_pin
-
-
-def _write_pin(index_dir: str, corpus_dir: str, snapshot: str) -> None:
+def _write_pin(
+    index_dir: str, corpus_dir: str, snapshot: str, pending: dict | None = None
+) -> None:
+    marker = {"corpus_dir": os.path.abspath(corpus_dir), "snapshot": snapshot}
+    if pending is not None:
+        marker["pending"] = pending
     p = os.path.join(index_dir, PIN_META)
     tmp = p + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(
-            {"corpus_dir": os.path.abspath(corpus_dir), "snapshot": snapshot},
-            f,
-        )
+        json.dump(marker, f)
     os.replace(tmp, p)
 
 
-def build_text_index_at_pin(
+def build_index_at_pin(
     spark: SparkSession,
     corpus_dir: str,
     snapshot: str,
     index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    modality: str,
     **build_kwargs,
 ) -> None:
-    """Build a text ANN index (sinks/text_index.write_text_index) from
-    EXACTLY the pinned corpus — the manifest-pruned read, no corpus
-    listing — and record the pin beside the store. The quantizers train
-    on the pin's documents; later :func:`advance_text_index_to_pin`
-    appends with those parameters frozen (the store's documented
-    quantizer-drift trade, measured by text_index_recall and repaired
-    by rebuild_text_index_if_stale)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-        text_index as _ti,
-    )
-
+    """Build a ``modality`` ANN index (the modality's public writer,
+    sinks/text_index.write_text_index or sinks/media_index.
+    write_media_index, with ``build_kwargs``) from EXACTLY the pinned
+    corpus — the manifest-pruned read, no corpus listing — and record
+    the pin beside the store. The quantizers train on the pin's rows;
+    later :func:`advance_index_to_pin` appends with those parameters
+    frozen (the store's documented quantizer-drift trade, measured by
+    the recall audit and repaired by the rebuild-if-stale loop). For
+    media, the pinned rows must carry the columns the codec featurizes
+    (kind/payload/meta) — i.e. a multimodal drain's out_dir."""
     pinned = read_snapshot(spark, corpus_dir, snapshot)
-    _ti.write_text_index(
-        pinned.select(id_col, text_col), index_dir,
-        id_col=id_col, text_col=text_col, **build_kwargs,
-    )
+    _si.public(modality, "write")(pinned.drop("batch_id"), index_dir, **build_kwargs)
     _write_pin(index_dir, corpus_dir, snapshot)
 
 
-def build_media_index_at_pin(
-    spark: SparkSession,
-    corpus_dir: str,
-    snapshot: str,
-    index_dir: str,
-    id_col: str = "media_id",
-    **build_kwargs,
-) -> None:
-    """The media form of :func:`build_text_index_at_pin`: featurize the
-    pinned corpus's payloads with sinks/media_index.write_media_index
-    (frozen codec recorded in media_meta.json) and record the pin
-    beside the store. The pinned rows must carry the media columns the
-    codec featurizes (kind/payload/meta) — i.e. a multimodal drain's
-    out_dir, the corpus whose batch dirs hold both modalities."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-        media_index as _mi,
-    )
-
-    pinned = read_snapshot(spark, corpus_dir, snapshot)
-    _mi.write_media_index(
-        pinned.drop("batch_id"), index_dir, id_col=id_col, **build_kwargs
-    )
-    _write_pin(index_dir, corpus_dir, snapshot)
-
-
-def advance_media_index_to_pin(
+def advance_index_to_pin(
     spark: SparkSession,
     corpus_dir: str,
     index_dir: str,
     target: str,
     batch_id: int | None = None,
-    id_col: str = "media_id",
-) -> dict:
-    """The media form of :func:`advance_text_index_to_pin`: same pin
-    marker, same delta-only read, the append featurizing with the
-    index's frozen codec (media_index.append_media_to_index)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-        media_index as _mi,
-    )
-
-    base = index_pin(index_dir)["snapshot"]
-    if base == target:
-        return {"base": base, "target": target, "appended_batches": []}
-    delta = snapshot_diff(spark, corpus_dir, base, target)
-    ids_b = {e["batch_id"] for e in load_manifest(corpus_dir, base)["batches"]}
-    ids_t = {
-        e["batch_id"] for e in load_manifest(corpus_dir, target)["batches"]
-    }
-    appended = sorted(ids_t - ids_b)
-    if appended:
-        _mi.append_media_to_index(
-            delta.drop("batch_id"), index_dir, id_col=id_col,
-            batch_id=batch_id,
-        )
-    _write_pin(index_dir, corpus_dir, target)
-    return {"base": base, "target": target, "appended_batches": appended}
-
-
-def advance_text_index_to_pin(
-    spark: SparkSession,
-    corpus_dir: str,
-    index_dir: str,
-    target: str,
-    batch_id: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    **append_kwargs,
 ) -> dict:
     """Advance a pin-built index from the pin it serves to ``target``
     by appending ONLY the snapshot diff — the incremental refresh a
     pin-move implies, at the delta's cost: the diff read opens exactly
-    the new batch dirs, the append embeds them with the index's frozen
-    featurizer and encodes against its frozen quantizers
-    (text_index.append_text_to_index's contract, incl. the fail-loud
-    live-tombstone guard). A zero-delta move (e.g. onto an
-    :func:`amend_snapshot` successor, whose batch SET is unchanged)
-    advances the marker without touching the store — erasure reaches
-    indexes through sinks/forget.forget, not through pin-moves.
-    Non-lineage moves (target missing one of base's batches) fail loud
-    in :func:`snapshot_diff`. Returns
-    ``{"base", "target", "appended_batches"}``."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
-        text_index as _ti,
-    )
+    the new batch dirs, and the append (the public appender of the
+    modality the index's own meta names, with ``append_kwargs``)
+    featurizes them with the index's frozen featurizer and encodes
+    against its frozen quantizers, incl. the fail-loud live-tombstone
+    guard. A zero-delta move (e.g. onto an :func:`amend_snapshot`
+    successor, whose batch SET is unchanged) advances the marker
+    without touching the store — erasure reaches indexes through
+    sinks/forget.forget, not through pin-moves. Non-lineage moves
+    (target missing one of base's batches) fail loud in
+    :func:`snapshot_diff`.
 
-    base = text_index_pin(index_dir)["snapshot"]
+    Retry-safe: before appending, the marker records the target and
+    the delta's batch id as ``pending`` (an ad-hoc id is chosen up
+    front), and the final marker drops it. A process that dies between
+    the append and the marker move leaves ``pending`` behind, and the
+    retry rewrites the same batch dir instead of appending the diff a
+    second time. While an advance is pending, moving to another target
+    or under another explicit ``batch_id`` raises. Returns
+    ``{"base", "target", "appended_batches"}``."""
+    pin = index_pin(index_dir)
+    base, pending = pin["snapshot"], pin.get("pending")
+    if pending is not None and (
+        pending["target"] != target or batch_id not in (None, pending["batch_id"])
+    ):
+        raise ValueError(
+            f"{index_dir!r} has an interrupted advance to "
+            f"{pending['target']!r} (batch_id={pending['batch_id']}) — "
+            "re-run that advance before moving the pin elsewhere"
+        )
     if base == target:
         return {"base": base, "target": target, "appended_batches": []}
     delta = snapshot_diff(spark, corpus_dir, base, target)
-    ids_b = {e["batch_id"] for e in load_manifest(corpus_dir, base)["batches"]}
-    ids_t = {
-        e["batch_id"] for e in load_manifest(corpus_dir, target)["batches"]
-    }
-    appended = sorted(ids_t - ids_b)
+    appended = sorted(
+        set(_pinned_ids(corpus_dir, target)) - set(_pinned_ids(corpus_dir, base))
+    )
     if appended:
-        _ti.append_text_to_index(
-            delta.select(id_col, text_col), index_dir,
-            id_col=id_col, text_col=text_col, batch_id=batch_id,
+        modality = _si.modality_of(index_dir)
+        if pending is not None:
+            batch_id = pending["batch_id"]
+        elif batch_id is None:
+            kind = _si.index_meta(index_dir, modality)["kind"]
+            batch_id = _vi.next_batch_id(_vi.store_dir(index_dir, kind))
+        _write_pin(
+            index_dir, corpus_dir, base, {"target": target, "batch_id": batch_id}
+        )
+        _si.public(modality, "append")(
+            delta.drop("batch_id"), index_dir, batch_id=batch_id,
+            **append_kwargs,
         )
     _write_pin(index_dir, corpus_dir, target)
     return {"base": base, "target": target, "appended_batches": appended}

@@ -1,83 +1,30 @@
 """Persisted TEXT index: build, append to, and query a served vector
 index straight from raw documents — the featurization
-(:func:`similarity.embed_text`, the deterministic hashed-n-gram
-signed-random-projection) is part of the index, not the caller.
+(:func:`similarity.embed_text`) is part of the index, not the caller.
 
-The missing operational seam the r10 round left open: batch-side,
-documents already flow embed → index → serve in one plan
-(plans/registry_ml.q_text_embed_ivfpq), but the MAINTAINED stores
-(sinks/vector_index.py) took pre-embedded vectors only, so an admitted
-document could not reach a served ANN index without a manual embed hop.
-This module closes it:
-
-* :func:`write_text_index` — embed a validated document snapshot and
-  build any of the three store kinds (ivf | ivfpq | binary), FREEZING
-  the featurizer parameters ``(d, n, salt)`` in ``<path>/text_meta.json``
-  beside the store. The quantizers are trained on the snapshot's
-  embeddings exactly as the raw-vector builds train on theirs.
-* :func:`append_text_to_index` — embed a document delta WITH THE
-  INDEX'S OWN frozen featurizer params (read back from the meta — a
-  caller cannot accidentally mix geometries by passing different
-  ``d``/``n``/``salt``; there is nothing to pass) and append through the
-  store's standard delta contract (disjoint ids, idempotent per-dir
-  overwrite, fail-loud live-tombstone guard).
-* :func:`query_text_index` — embed raw query documents with the frozen
-  params and serve top-k from the persisted store: ask "nearest
-  neighbors of this raw text" with no vector in sight.
-
-Reference analog: the pipeline's cron loop lands fetched text in a
-served Postgres table every half hour
-(dags/Combine_send_to_postgresql.py:301, ``combine_and_load``); this is
-that loop lifted to the ANN store — text in, served index out — with
-the same determinism discipline (salted hashing of text fields,
-dags/Combine_send_to_postgresql.py:58) extended from identity to
-geometry by ``embed_text``.
-
-Scale: featurization is the map-side gram explode + one hash agg
-(similarity.embed_text's one-shuffle contract); everything after is the
-raw-vector stores' already-audited path (broadcast quantizers,
-cell-partitioned writes, pruned probes). Nothing here adds a shuffle.
+The text row of ``served_index.MODALITIES``: these are its names over
+the one lifecycle in sinks/served_index.py. :func:`write_text_index`
+freezes ``(d, n, salt, kind)`` in ``<path>/text_meta.json``;
+:func:`append_text_to_index` and :func:`query_text_index` embed with the
+index's OWN frozen params (there is nothing to pass), so an admitted
+document reaches a served ANN index with no manual embed hop.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import embed_text
-from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import served_index as _si
 
-_TEXT_META = "text_meta.json"
-_TEXT_FORMAT = "text-index/v1"
+
+def _text(path: str, id_col: str, text_col: str) -> _si.ModalityIndex:
+    return _si.ModalityIndex("text", path, id_col, {"text_col": text_col})
 
 
 def text_index_meta(path: str) -> dict:
-    """The index's frozen featurizer + kind record. Raises with a
-    pointer to :func:`write_text_index` when absent — an append or
-    query against a store that never declared its featurization must
-    fail loudly, not embed with defaults and silently mix geometries."""
-    mp = os.path.join(path, _TEXT_META)
-    if not os.path.exists(mp):
-        raise ValueError(
-            f"{path!r} has no {_TEXT_META} — not a text index. Build it "
-            "with write_text_index(snapshot_docs, path, kind=...) so the "
-            "featurizer params are frozen beside the quantizers."
-        )
-    with open(mp) as f:
-        return json.load(f)
-
-
-def _embed(docs: DataFrame, meta: dict, id_col: str, text_col: str) -> DataFrame:
-    return embed_text(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        d=int(meta["d"]),
-        n=int(meta["n"]),
-        salt=str(meta["salt"]),
-    )
+    """The index's frozen featurizer + kind record (fail-loud when the
+    path is not a text index)."""
+    return _si.index_meta(path, "text")
 
 
 def write_text_index(
@@ -92,18 +39,13 @@ def write_text_index(
     **index_kwargs,
 ) -> None:
     """Embed a validated document snapshot and build the ``kind`` store
-    at ``path``, freezing ``(d, n, salt, kind)`` in the index's
-    ``text_meta.json``. ``index_kwargs`` pass through to the underlying
-    build (n_cells/m/n_codes/iters/refine_iters). The snapshot trains
-    the quantizers — the same role the drift gate's validated snapshot
-    plays for the frozen reference, so one curated corpus can seed both
-    the admission gate and the serving index."""
-    _vi.check_kind(kind)
-    meta = {"format": _TEXT_FORMAT, "kind": kind, "d": d, "n": n, "salt": salt}
-    emb = _embed(docs, meta, id_col, text_col)
-    _vi.WRITERS[kind](emb, path, id_col=id_col, vec_col="embedding", **index_kwargs)
-    with open(os.path.join(path, _TEXT_META), "w") as f:
-        json.dump(meta, f)
+    at ``path``, freezing ``(d, n, salt, kind)`` in ``text_meta.json``.
+    The snapshot trains the quantizers — the same role the drift gate's
+    validated snapshot plays for the frozen reference, so one curated
+    corpus can seed both the admission gate and the serving index."""
+    _text(path, id_col, text_col).write(
+        docs, kind, {"d": d, "n": n, "salt": salt}, index_kwargs
+    )
 
 
 def append_text_to_index(
@@ -113,18 +55,9 @@ def append_text_to_index(
     text_col: str = "text",
     batch_id: int | None = None,
 ) -> None:
-    """Embed a document delta with the INDEX'S frozen featurizer params
-    and append it — the text-native form of the append contract
-    (disjoint ids, idempotent per-dir overwrite on an explicit
-    ``batch_id``, live-tombstone fail-loud guard, quantizer drift
-    accepted until the next rebuild). Documents whose text yields no
-    gram (empty/whitespace) embed to no row and are skipped, matching
-    the batch featurizer's contract."""
-    meta = text_index_meta(path)
-    emb = _embed(docs, meta, id_col, text_col)
-    _vi.APPENDERS[meta["kind"]](
-        emb, path, id_col=id_col, vec_col="embedding", batch_id=batch_id
-    )
+    """Embed a document delta with the INDEX'S frozen params and append
+    it (served_index.ModalityIndex.append's contract)."""
+    _text(path, id_col, text_col).append(docs, batch_id)
 
 
 def query_text_index(
@@ -136,29 +69,9 @@ def query_text_index(
     text_col: str = "text",
     **query_kwargs,
 ) -> DataFrame:
-    """Serve top-k for RAW query documents: embed them with the index's
-    frozen params and run the store's probe (``n_probe`` etc. pass
-    through for the IVF kinds). Returns the underlying store's result
-    shape — (query_id, neighbor_id, score|dist|hamming)."""
-    meta = text_index_meta(path)
-    q = _embed(query_docs, meta, id_col, text_col)
-    return _vi.QUERIES[meta["kind"]](
-        spark, path, q, k=k, id_col=id_col, vec_col="embedding", **query_kwargs
-    )
-
-
-def text_index_store(path: str) -> str:
-    """The data store dir of a text index (kind-dispatched) — the
-    directory whose live-dir count the streaming maintainer watches."""
-    return os.path.join(path, _vi.STORE_SUBDIR[text_index_meta(path)["kind"]])
-
-
-def compact_text_index(
-    spark: SparkSession, path: str, exclude_from: int | None = None
-) -> None:
-    """Kind-dispatched compaction of a text index's data store — same
-    fold/tombstone/GC semantics as the raw-vector compactors."""
-    _vi.COMPACTORS[text_index_meta(path)["kind"]](spark, path, exclude_from)
+    """Top-k for RAW query documents: ask "nearest neighbors of this
+    raw text" with no vector in sight."""
+    return _text(path, id_col, text_col).query(spark, query_docs, k, query_kwargs)
 
 
 def text_index_recall(
@@ -171,17 +84,10 @@ def text_index_recall(
     text_col: str = "text",
     **probe_kwargs,
 ) -> float:
-    """Recall@k of the text store's probe vs exact L2 over the SAME
-    frozen-featurizer embeddings of ``docs`` — the raw-vector staleness
-    audit (vector_index.index_recall) lifted to text-in/text-probed."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import index_recall
-
-    meta = text_index_meta(path)
-    emb = _embed(docs, meta, id_col, text_col)
-    q = _embed(query_docs, meta, id_col, text_col)
-    return index_recall(
-        spark, path, emb, q, k, kind=meta["kind"], id_col=id_col,
-        vec_col="embedding", **probe_kwargs,
+    """Recall@k of the text store's probe vs exact L2 over the same
+    frozen-featurizer embeddings of ``docs``."""
+    return _text(path, id_col, text_col).recall(
+        spark, docs, query_docs, k, probe_kwargs
     )
 
 
@@ -197,32 +103,8 @@ def rebuild_text_index_if_stale(
     probe_kwargs: dict | None = None,
     build_kwargs: dict | None = None,
 ) -> dict:
-    """Drift-triggered rebuild for a TEXT index: measure
-    :func:`text_index_recall` on raw probe documents; below
-    ``min_recall``, retrain the QUANTIZERS on ``docs`` (the surviving
-    document corpus) and replace the store — the featurizer params
-    ``(d, n, salt)`` stay FROZEN across rebuilds (they are the index's
-    identity: changing them would silently re-geometrize every future
-    query, the exact drift the meta file exists to prevent; build a new
-    index to change geometry). Tombstones are GC'd after the new store
-    lands, same contract as vector_index.rebuild_index_if_stale."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
-        staleness_rebuild,
-    )
-
-    meta = text_index_meta(path)
-    probe_kwargs = probe_kwargs or {}
-    return staleness_rebuild(
-        path,
-        meta["kind"],
-        min_recall,
-        lambda: text_index_recall(
-            spark, path, docs, query_docs, k, id_col, text_col,
-            **probe_kwargs,
-        ),
-        lambda: write_text_index(
-            docs, path, kind=meta["kind"], id_col=id_col, text_col=text_col,
-            d=int(meta["d"]), n=int(meta["n"]), salt=str(meta["salt"]),
-            **(build_kwargs or {}),
-        ),
+    """Drift-triggered rebuild: the quantizers retrain on ``docs`` (the
+    surviving corpus), ``(d, n, salt)`` stay frozen."""
+    return _text(path, id_col, text_col).rebuild_if_stale(
+        spark, docs, query_docs, min_recall, k, probe_kwargs, build_kwargs
     )

@@ -1,26 +1,32 @@
-"""Persisted IVF vector index: build once, query many times with
-partition pruning.
+"""Persisted vector indexes: build once, append deltas, query many times
+with partition pruning.
 
 ``ivf_knn`` (operators/similarity.py) recomputes centroids and the
 corpus assignment on every call — right for one-shot queries, wrong
-for a served index over a 100 TB corpus. This sink writes the index as
-two parquet relations:
+for a served index over a 100 TB corpus. This sink persists three
+store kinds, declared once in :data:`KINDS`:
 
-* ``<path>/centroids`` — (cell, cv), n_cells rows
-* ``<path>/postings``  — (neighbor_id, embedding, cell): a
-  counting_state SET store (``batch_id=<i>/cell=<k>/…`` dirs — build
-  writes batch 0, each append adds the next batch id) whose inner level
-  is partitioned **by cell**, so a query probing ``n_probe`` cells
-  reads only those directories — real partition pruning, verified by
-  plan assertions in tests/test_vector_index.py. The store carries
-  counting_state's ``_meta.json`` format marker, and
-  :func:`compact_postings` folds the batch dirs into one
-  cell-partitioned generation via
-  ``counting_state.compact_counts(agg="distinct",
-  partition_by=["cell"])`` — the dir listing stays bounded across
-  appends without giving up pruned probes, and the generation's
-  subsumption manifest keeps the probe path's RAW reader (no per-query
-  distinct shuffle) exact across a crash-interrupted GC.
+* ``ivf`` — ``<path>/centroids`` (cell, cv) plus ``<path>/postings``
+  (neighbor_id, embedding, cell);
+* ``ivfpq`` — ``centroids/``, ``codebooks/`` and ``<path>/codes``
+  (neighbor_id, sub, code, cell): m small ints per vector instead of d
+  floats;
+* ``binary`` — ``<path>/sigs`` (neighbor_id, sig array<bigint>), the
+  32x-compressed sign-bit form, with no trained parameters at all.
+
+Every data store is a counting_state SET store (``batch_id=<i>/…``
+dirs — build writes batch 0, each append adds the next batch id). The
+IVF stores partition each batch dir **by cell**, so a query probing
+``n_probe`` cells reads only those directories — real partition
+pruning, verified by plan assertions in tests/test_vector_index.py.
+The binary store keeps no inner partitioning: its Hamming scan reads
+every signature by design. Each store carries counting_state's
+``_meta.json`` format marker, and :func:`compact_store` folds the batch
+dirs into one generation via ``counting_state.compact_counts(
+agg="distinct")`` with the kind's partitioning — the dir listing stays
+bounded across appends without giving up pruned probes, and the
+generation's subsumption manifest keeps the probe path's RAW reader
+(no per-query distinct shuffle) exact across a crash-interrupted GC.
 
 Centroids come from :func:`kmeans_refine` (deterministic Lloyd steps)
 so a rebuilt index on the same corpus is byte-identical — the property
@@ -29,66 +35,101 @@ that makes index builds idempotent and diffable across runs.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
     cosine,
+    exact_l2_topk_set,
+    hamming,
     ivf_assign,
     ivf_centroids,
     kmeans_refine,
+    l2sq,
+    pq_codebooks,
+    pq_encode,
+    pq_subvectors,
+    sign_signature,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
+
+# Stream-owned batch ids live at STREAM_ID_BASE + <micro-batch id> so a
+# stream and ad-hoc appends can share one store without colliding: the
+# ad-hoc path allocates below the base, the stream's checkpoint-monotonic
+# ids map above it, and generations stay negative.
+STREAM_ID_BASE = 1_000_000_000
 
 
-def write_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    refine_iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def store_dir(path: str, kind: str) -> str:
+    """The data store dir of the ``kind`` index at ``path``."""
+    return f"{path}/{KINDS[kind].subdir}"
+
+
+def store_meta(path: str, kind: str) -> dict:
+    """The ``kind`` store's ``_meta.json`` format marker ({} for a
+    pre-marker store)."""
+    p = os.path.join(store_dir(path, kind), _cs.META)
+    if not os.path.exists(p):
+        return {}
+    with open(p) as f:
+        return json.load(f)
+
+
+def next_batch_id(store: str) -> int:
+    """The next free AD-HOC batch id of ``store`` (always below
+    STREAM_ID_BASE). It must clear the newest generation's manifest
+    too, not just the live listing: after a compaction the folded ids
+    are SUBSUMED (readers exclude them and the next compaction
+    GC-deletes their dirs), so reusing one would silently disappear the
+    delta."""
+    used = set(_cs.state_subdirs(store).values()) | _cs.subsumed_ids(store)
+    return max((i for i in used if 0 <= i < STREAM_ID_BASE), default=-1) + 1
+
+
+def _write_delta(
+    rows: DataFrame,
+    store: str,
+    batch_id: int | None,
+    partition_by: tuple[str, ...] = (),
 ) -> None:
-    """Build and persist the index. ``refine_iters=0`` keeps the raw
-    seeded centroids (cheapest build); ≥1 runs deterministic Lloyd
-    refinement first."""
-    if refine_iters > 0:
-        cents = kmeans_refine(corpus, n_cells, refine_iters, id_col, vec_col)
-        # seeds are float vectors, refined centroids double — store double
-        cents = cents.select("cell", F.col("cv").cast("array<double>").alias("cv"))
-    else:
-        cents = ivf_centroids(corpus, n_cells, id_col, vec_col).select(
-            "cell", F.col("cv").cast("array<double>").alias("cv")
-        )
-    assigned = ivf_assign(corpus, cents, id_col, vec_col, out_id="neighbor_id")
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    store = f"{path}/postings"
-    # a rebuild REPLACES the store: clear it so the fresh marker +
-    # batch 0 are the whole state (stamp before writing — stamp_meta
-    # refuses marker-less non-empty stores by design)
+    """Write a delta as a batch dir (``partition_by`` names the inner
+    partitioning). ``batch_id=None`` takes :func:`next_batch_id`; an
+    EXPLICIT id is the streaming caller's idempotence hook — a retried
+    micro-batch overwrites its own dir instead of minting a new one
+    (the counting_state retry contract)."""
+    if batch_id is None:
+        batch_id = next_batch_id(store)
+    writer = rows.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(os.path.join(store, f"batch_id={batch_id}"))
+
+
+def _replace_store(path: str, kind: str, rows: DataFrame, **marker) -> None:
+    """The writers' shared tail. A rebuild REPLACES the store: clear it
+    so the fresh marker + batch 0 are the whole state (stamp before
+    writing — stamp_meta refuses marker-less non-empty stores by
+    design)."""
+    store = store_dir(path, kind)
     shutil.rmtree(store, ignore_errors=True)
-    _cs.stamp_meta(store, {"format": _POSTINGS_FORMAT, "n_cells": n_cells})
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(os.path.join(store, "batch_id=0"))
-    )
-
-
-_POSTINGS_FORMAT = "ivf-postings/v1"
+    _cs.stamp_meta(store, {"format": KINDS[kind].fmt, **marker})
+    _write_delta(rows, store, 0, KINDS[kind].partition_by)
 
 
 def _reject_legacy_flat_store(store: str) -> None:
     """A pre-store index laid its postings out as top-level ``cell=*``
-    dirs with no ``batch_id=*`` level. :func:`read_postings` still
-    reads that layout, but APPENDING a batch dir beside it would give
-    the directory two conflicting partition structures ({cell} vs
+    dirs with no ``batch_id=*`` level. :func:`read_store` still reads
+    that layout, but APPENDING a batch dir beside it would give the
+    directory two conflicting partition structures ({cell} vs
     {batch_id, cell}) and brick every subsequent read — so refuse
-    loudly and direct the caller to rebuild."""
+    loudly and direct the caller to rebuild. A no-op for the flat sig
+    store, which never has ``cell=*`` dirs."""
     if not os.path.isdir(store):
         return
     has_cells = any(
@@ -104,74 +145,173 @@ def _reject_legacy_flat_store(store: str) -> None:
         )
 
 
-# Stream-owned batch ids live at STREAM_ID_BASE + <micro-batch id> so a
-# stream and ad-hoc appends can share one store without colliding: the
-# ad-hoc path allocates below the base, the stream's checkpoint-monotonic
-# ids map above it, and generations stay negative.
-STREAM_ID_BASE = 1_000_000_000
-
-
-def _write_delta(
-    rows: DataFrame,
-    store: str,
+def _append_delta(
+    new_vectors: DataFrame,
+    path: str,
+    kind: str,
+    id_col: str,
     batch_id: int | None,
-    partition_by: tuple[str, ...] = ("cell",),
+    encode: Callable[[SparkSession], DataFrame],
 ) -> None:
-    """Write a delta as a batch dir (``partition_by`` names the inner
-    partitioning — cell for the IVF stores, none for the flat binary
-    sig store). ``batch_id=None`` takes the next free AD-HOC id (always
-    below STREAM_ID_BASE); an EXPLICIT id is the streaming caller's
-    idempotence hook — a retried micro-batch overwrites its own dir
-    instead of minting a new one (the counting_state retry contract).
+    """The appends' shared frame: guard live tombstones, encode the
+    delta against the index's frozen parameters, refuse the legacy
+    layout, stamp, and write the delta as the store's next batch dir.
 
-    The next free id must clear the newest generation's manifest too,
-    not just the live listing: after a compaction the folded ids are
-    SUBSUMED (readers exclude them and the next compaction GC-deletes
-    their dirs), so reusing one would silently disappear the delta."""
-    if batch_id is None:
-        used = set(_cs.state_subdirs(store).values()) | _cs.subsumed_ids(store)
-        batch_id = (
-            max((i for i in used if 0 <= i < STREAM_ID_BASE), default=-1) + 1
-        )
-    writer = rows.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(store, f"batch_id={batch_id}"))
+    The append contract, for every kind: the delta is encoded against
+    the index's own persisted quantizers (broadcast, map-only), so an
+    append is exactly equivalent to having built with the union corpus
+    from the start — literally so for the binary store, which has no
+    trained parameters; for IVF/IVFPQ quantizer drift is the accepted
+    trade (same as FAISS's ``add`` after ``train``) until the recall
+    audit (:func:`index_recall`) triggers a rebuild. Prior batch dirs
+    and generations are never touched, and the idempotent per-dir
+    overwrite makes a retried append converge; :func:`compact_store`
+    folds the listing back to one generation. Caller contract: delta
+    ids must be disjoint from the indexed ids (dedup upstream, or the
+    reader sees duplicates, exactly as with any append-only store), and
+    appending an id with a LIVE tombstone raises (see
+    :func:`_guard_live_tombstones`)."""
+    _guard_live_tombstones(new_vectors, path, id_col)
+    rows = encode(new_vectors.sparkSession)
+    store = store_dir(path, kind)
+    _reject_legacy_flat_store(store)
+    _cs.stamp_meta(store, {"format": KINDS[kind].fmt})
+    _write_delta(rows, store, batch_id, KINDS[kind].partition_by)
 
 
-def read_postings(spark: SparkSession, path: str) -> DataFrame:
-    """The live postings relation (neighbor_id, embedding, cell): a
-    RAW scan over the store's live dirs — subsumed batch ids (named by
-    the newest generation's manifest) are excluded, nothing else is
-    folded. No per-query distinct shuffle: the append contract (delta
-    ids disjoint from indexed ids) plus the manifest keep live rows
-    exact, so a probe pays only the pruned scan. Also reads a plain
-    cell-partitioned directory (no ``batch_id=*`` level) unchanged —
-    the pre-store layout and hand-built test fixtures."""
-    store = f"{path}/postings"
+def _read_live(spark: SparkSession, store: str) -> DataFrame:
+    """A RAW scan over a store's live dirs: the batch ids the newest
+    generation's manifest subsumes are excluded, nothing else is
+    folded, and ``batch_id`` is dropped. No per-query distinct shuffle:
+    the append contract (delta ids disjoint from indexed ids) plus the
+    manifest keep live rows exact, so a probe pays only the pruned
+    scan. A plain directory with no ``batch_id=*`` level (the pre-store
+    layout, hand-built test fixtures) reads unchanged."""
     df = spark.read.parquet(store)
     excluded = _cs.subsumed_ids(store)
     if excluded:
         df = df.filter(~F.col("batch_id").isin([int(i) for i in excluded]))
     if "batch_id" in df.columns:
         df = df.drop("batch_id")
-    return _apply_tombstones(df, spark, path)
+    return df
 
 
-def compact_postings(
-    spark: SparkSession, path: str, exclude_from: int | None = None
+def read_store(spark: SparkSession, path: str, kind: str) -> DataFrame:
+    """The live relation of the ``kind`` index at ``path`` — postings
+    (neighbor_id, embedding, cell), codes (neighbor_id, sub, code,
+    cell) or sigs (neighbor_id, sig) — with live tombstones applied."""
+    return _apply_tombstones(_read_live(spark, store_dir(path, kind)), spark, path)
+
+
+def read_postings(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, "ivf")
+
+
+def read_codes(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, "ivfpq")
+
+
+def read_sigs(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, "binary")
+
+
+def compact_store(
+    spark: SparkSession, path: str, kind: str, exclude_from: int | None = None
 ) -> None:
-    """Fold the postings batch dirs into ONE cell-partitioned
-    generation — counting_state.compact_counts in ``distinct`` mode
-    with ``partition_by=["cell"]``: the dir listing stays bounded as
-    appends accumulate, probes keep their partition pruning (pinned by
-    tests/test_vector_index.py), and the generation's manifest keeps
-    :func:`read_postings` exact across a crash-interrupted GC. A full
-    compaction (``exclude_from=None``) also physically drops tombstoned
-    rows and GCs the absorbed tombstone dirs (see
-    :func:`delete_from_index`)."""
-    _compact_with_tombstones(
-        spark, path, f"{path}/postings", exclude_from, ["cell"]
+    """Fold the ``kind`` store's batch dirs into ONE generation —
+    counting_state.compact_counts in ``distinct`` mode, partitioned the
+    way the kind partitions its batch dirs (by cell for IVF/IVFPQ, so
+    probes keep their pruning), physically dropping tombstoned rows,
+    then GC the absorbed tombstone dirs — but ONLY when the fold covered
+    every live data dir (``exclude_from=None``): an excluded in-flight
+    dir keeps its rows raw, so its tombstones must stay live or the
+    delete would silently resurrect. Crash-safety: tombstone deletion is
+    pure GC — a crash before it leaves the tombstones live and the
+    anti-join re-applies them (idempotent)."""
+    store = store_dir(path, kind)
+    tdirs = _cs.state_subdirs(_tomb_store(path)) if exclude_from is None else {}
+    drop = (
+        spark.read.parquet(*tdirs.keys()).select("neighbor_id").distinct()
+        if tdirs
+        else None
+    )
+    df = spark.read.parquet(store)
+    fields = [f for f in df.schema.fields if f.name != "batch_id"]
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
+    folded = _cs.compact_counts(
+        spark,
+        store,
+        schema,
+        [f.name for f in fields],
+        None,
+        exclude_from=exclude_from,
+        agg="distinct",
+        partition_by=list(KINDS[kind].partition_by) or None,
+        drop_keys=drop,
+        drop_on=["neighbor_id"] if drop is not None else None,
+    )
+    if folded and tdirs:
+        # the folded generation no longer contains the dropped ids and
+        # the append contract forbids id reuse — the snapshot of
+        # tombstone dirs read above is fully absorbed. Dirs appended
+        # AFTER the snapshot stay live for the next cycle.
+        for p in tdirs:
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def _top_k(scored: DataFrame, k: int, metric: str, desc: bool = False) -> DataFrame:
+    """(query_id, neighbor_id, metric): the ``k`` best neighbors per
+    query, ties broken by ascending neighbor id."""
+    order = F.desc(metric) if desc else F.asc(metric)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select("query_id", "neighbor_id", metric)
+    )
+
+
+# -- ivf: raw vectors in cell-partitioned postings -----------------------------
+
+
+def write_ivf_index(
+    corpus: DataFrame,
+    path: str,
+    n_cells: int = 16,
+    refine_iters: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Build and persist the index. ``refine_iters=0`` keeps the raw
+    seeded centroids (cheapest build); ≥1 runs deterministic Lloyd
+    refinement first."""
+    if refine_iters > 0:
+        cents = kmeans_refine(corpus, n_cells, refine_iters, id_col, vec_col)
+    else:
+        cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
+    # seeds are float vectors, refined centroids double — store double
+    cents = cents.select("cell", F.col("cv").cast("array<double>").alias("cv"))
+    assigned = ivf_assign(corpus, cents, id_col, vec_col, out_id="neighbor_id")
+    cents.write.mode("overwrite").parquet(f"{path}/centroids")
+    _replace_store(path, "ivf", assigned, n_cells=n_cells)
+
+
+def append_to_ivf_index(
+    new_vectors: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    batch_id: int | None = None,
+) -> None:
+    """Assign a delta to the index's FROZEN centroids and append it
+    (the :func:`_append_delta` contract; ``tests/test_vector_index.py``
+    pins append == build with the union corpus)."""
+    _append_delta(
+        new_vectors, path, "ivf", id_col, batch_id,
+        lambda spark: ivf_assign(
+            new_vectors, spark.read.parquet(f"{path}/centroids"),
+            id_col, vec_col, out_id="neighbor_id",
+        ),
     )
 
 
@@ -189,8 +329,6 @@ def query_ivf_index(
     probed cells of a persisted index. The ``cell IN (probed)`` join
     key reaches the postings scan as a partition filter — only the
     probed directories are read."""
-    from pyspark.sql import Window
-
     cents = spark.read.parquet(f"{path}/centroids")
     postings = read_postings(spark, path)
     probes = ivf_assign(
@@ -204,62 +342,31 @@ def query_ivf_index(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("score", score)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "score")
+    return _top_k(scored, k, "score", desc=True)
+
+
+# -- ivfpq: the coarse cells prune, the PQ codes shrink each posting to m
+# small ints — the layout a billion-vector served index actually stores.
+
+
+def _pq_codes(
+    vectors: DataFrame,
+    cents: DataFrame,
+    cb: DataFrame,
+    m: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(neighbor_id, sub, code, cell): the cell assigned and carried
+    through encoding in ONE pass — no corpus-sized join to re-attach it
+    before the partitioned write."""
+    assigned = ivf_assign(
+        vectors, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
     )
-
-
-def append_to_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> None:
-    """Incrementally add vectors to a persisted index — the operational
-    path a served 100 TB index needs: a daily embedding delta cannot
-    afford a full rebuild, and the FROZEN centroids make the append
-    exactly equivalent to having built with the union corpus from the
-    start (``tests/test_vector_index.py`` pins that equality).
-
-    The delta is assigned against the index's own persisted centroids
-    (broadcast, map-only) and written as the store's NEXT batch dir
-    (cell-partitioned inside) — prior batch dirs and generations are
-    never touched, and the idempotent per-dir overwrite makes a
-    retried append converge. When appends accumulate,
-    :func:`compact_postings` folds the listing back to one generation.
-    Quantizer drift is the accepted trade (same as
-    FAISS's ``add`` after ``train``): as the corpus distribution moves,
-    recall decays until the next scheduled rebuild; the
-    :func:`reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ml.q_ivf_recall`-style
-    audit is the signal for when.
-
-    Caller contract: delta ids must be disjoint from the indexed ids
-    (dedup upstream — the engine's first-wins family — or the reader
-    sees duplicates, exactly as with any append-only store). Appending
-    an id with a LIVE tombstone raises (see
-    :func:`_guard_live_tombstones`).
-    """
-    spark = new_vectors.sparkSession
-    _guard_live_tombstones(new_vectors, path, id_col)
-    cents = spark.read.parquet(f"{path}/centroids")
-    assigned = ivf_assign(new_vectors, cents, id_col, vec_col, out_id="neighbor_id")
-    store = f"{path}/postings"
-    _reject_legacy_flat_store(store)
-    _cs.stamp_meta(store, {"format": _POSTINGS_FORMAT})
-    _write_delta(assigned, store, batch_id)
-
-
-# ---------------------------------------------------------------------------
-# Persisted IVFPQ index: the coarse cells prune, the PQ codes shrink
-# each posting to m small ints — the layout a billion-vector served
-# index actually stores (codes instead of raw floats: d×4 bytes → m).
-# ---------------------------------------------------------------------------
-
-_IVFPQ_FORMAT = "ivfpq-codes/v1"
+    return pq_encode(
+        assigned, cb, m, "neighbor_id", vec_col,
+        out_id="neighbor_id", carry=("cell",),
+    )
 
 
 def write_ivfpq_index(
@@ -274,39 +381,14 @@ def write_ivfpq_index(
 ) -> None:
     """Build and persist the IVFPQ index (similarity.ivfpq_topk's
     non-residual contract): ``centroids/`` (coarse seed cells),
-    ``codebooks/`` (per-subspace PQ codebooks), and ``codes/`` — the
-    corpus as (neighbor_id, sub, code, cell), a counting_state SET
-    store cell-partitioned inside each batch dir like the raw-vector
-    ``postings/`` store, but m ints per vector instead of d floats."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        pq_codebooks,
-        pq_encode,
-    )
-
+    ``codebooks/`` (per-subspace PQ codebooks), and the ``codes/``
+    store."""
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
     cb = pq_codebooks(corpus, m, n_codes, iters, id_col, vec_col)
-    # cell assigned and carried through encoding in ONE corpus pass —
-    # no corpus-sized join to re-attach it before the partitioned write
-    assigned = ivf_assign(
-        corpus, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
-    )
-    codes = pq_encode(
-        assigned, cb, m, "neighbor_id", vec_col,
-        out_id="neighbor_id", carry=("cell",),
-    )
+    codes = _pq_codes(corpus, cents, cb, m, id_col, vec_col)
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     cb.write.mode("overwrite").parquet(f"{path}/codebooks")
-    store = f"{path}/codes"
-    shutil.rmtree(store, ignore_errors=True)
-    _cs.stamp_meta(
-        store,
-        {"format": _IVFPQ_FORMAT, "n_cells": n_cells, "m": m, "n_codes": n_codes},
-    )
-    (
-        codes.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(os.path.join(store, "batch_id=0"))
-    )
+    _replace_store(path, "ivfpq", codes, n_cells=n_cells, m=m, n_codes=n_codes)
 
 
 def append_to_ivfpq_index(
@@ -317,69 +399,23 @@ def append_to_ivfpq_index(
     batch_id: int | None = None,
 ) -> None:
     """Encode a delta against the index's FROZEN centroids and
-    codebooks and write it as the codes store's next batch dir — the
-    same append contract as :func:`append_to_ivf_index` (disjoint ids,
-    prior dirs untouched, idempotent per-dir overwrite, quantizer
-    drift accepted until the next rebuild), including the fail-loud
-    live-tombstone guard."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import pq_encode
+    codebooks and append it (the :func:`_append_delta` contract)."""
 
-    spark = new_vectors.sparkSession
-    _guard_live_tombstones(new_vectors, path, id_col)
-    cents = spark.read.parquet(f"{path}/centroids")
-    cb = spark.read.parquet(f"{path}/codebooks")
-    m = _codes_m(spark, path, cb)
-    assigned = ivf_assign(
-        new_vectors, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
-    )
-    codes = pq_encode(
-        assigned, cb, m, "neighbor_id", vec_col,
-        out_id="neighbor_id", carry=("cell",),
-    )
-    store = f"{path}/codes"
-    _reject_legacy_flat_store(store)
-    _cs.stamp_meta(store, {"format": _IVFPQ_FORMAT})
-    _write_delta(codes, store, batch_id)
+    def encode(spark: SparkSession) -> DataFrame:
+        cents = spark.read.parquet(f"{path}/centroids")
+        cb = spark.read.parquet(f"{path}/codebooks")
+        m = _codes_m(spark, path, cb)
+        return _pq_codes(new_vectors, cents, cb, m, id_col, vec_col)
+
+    _append_delta(new_vectors, path, "ivfpq", id_col, batch_id, encode)
 
 
 def _codes_m(spark: SparkSession, path: str, cb: DataFrame) -> int:
     """The index's subspace count: from the codes store's format
     marker when present (no job), else one tiny distinct over the
     broadcastable codebooks (pre-marker stores)."""
-    import json
-
-    meta_path = os.path.join(path, "codes", _cs.META)
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if "m" in meta:
-            return int(meta["m"])
-    return cb.select("sub").distinct().count()
-
-
-def read_codes(spark: SparkSession, path: str) -> DataFrame:
-    """The live (neighbor_id, sub, code, cell) relation — same raw
-    pruned-scan contract as :func:`read_postings` (manifest-named
-    subsumed dirs excluded, no per-query distinct shuffle)."""
-    store = f"{path}/codes"
-    df = spark.read.parquet(store)
-    excluded = _cs.subsumed_ids(store)
-    if excluded:
-        df = df.filter(~F.col("batch_id").isin([int(i) for i in excluded]))
-    if "batch_id" in df.columns:
-        df = df.drop("batch_id")
-    return _apply_tombstones(df, spark, path)
-
-
-def compact_codes(
-    spark: SparkSession, path: str, exclude_from: int | None = None
-) -> None:
-    """Fold the codes batch dirs into one cell-partitioned generation —
-    identical machinery to :func:`compact_postings`, including the
-    physical tombstone drop on a full compaction."""
-    _compact_with_tombstones(
-        spark, path, f"{path}/codes", exclude_from, ["cell"]
-    )
+    m = store_meta(path, "ivfpq").get("m")
+    return int(m) if m is not None else cb.select("sub").distinct().count()
 
 
 def query_ivfpq_index(
@@ -398,13 +434,6 @@ def query_ivfpq_index(
     AND the compression of a served big-corpus index, with the same
     rounding ladder as similarity.ivfpq_topk (equality pinned by
     tests/test_vector_index.py)."""
-    from pyspark.sql import Window
-
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        l2sq,
-        pq_subvectors,
-    )
-
     cents = spark.read.parquet(f"{path}/centroids")
     cb = spark.read.parquet(f"{path}/codebooks")
     m = _codes_m(spark, path, cb)
@@ -426,26 +455,20 @@ def query_ivfpq_index(
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("__term").cast("double"), 6).alias("dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
+    return _top_k(scored, k, "dist")
+
+
+# -- binary: sign-bit signatures (operators/similarity.sign_signature). The
+# sign function is frozen by definition, so appends are EXACTLY a fresh
+# build on the union corpus, and the Hamming scan deliberately reads every
+# signature: XOR+popcount over m words is the cheapest whole-corpus metric,
+# which is why the store keeps no inner partitioning to prune by.
+
+
+def _signatures(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return sign_signature(vectors, vec_col, "sig").select(
+        F.col(id_col).alias("neighbor_id"), "sig"
     )
-
-
-# ---------------------------------------------------------------------------
-# Persisted binary signature index: the 32x-compressed sign-bit form
-# (operators/similarity.sign_signature) as a maintained store. No
-# trained parameters at all — the sign function is frozen by
-# definition — so appends are EXACTLY equivalent to a fresh build on
-# the union corpus (no quantizer-drift caveat, unlike IVF/IVFPQ), and
-# the Hamming scan deliberately reads every signature: the product IS
-# the cheapest whole-corpus metric (XOR+popcount over m words), which
-# is why the store keeps no inner partitioning to prune by.
-# ---------------------------------------------------------------------------
-
-_SIGS_FORMAT = "binary-sigs/v1"
 
 
 def write_binary_index(
@@ -454,21 +477,8 @@ def write_binary_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Build and persist the signature store: ``<path>/sigs`` holds
-    (neighbor_id, sig array<bigint>) as a counting_state SET store
-    (flat batch dirs — see module note on why there is no inner
-    partitioning)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        sign_signature,
-    )
-
-    sigs = sign_signature(corpus, vec_col, "sig").select(
-        F.col(id_col).alias("neighbor_id"), "sig"
-    )
-    store = f"{path}/sigs"
-    shutil.rmtree(store, ignore_errors=True)
-    _cs.stamp_meta(store, {"format": _SIGS_FORMAT, "word_bits": 32})
-    sigs.write.mode("overwrite").parquet(os.path.join(store, "batch_id=0"))
+    """Build and persist the ``sigs/`` signature store."""
+    _replace_store(path, "binary", _signatures(corpus, id_col, vec_col), word_bits=32)
 
 
 def append_to_binary_index(
@@ -478,47 +488,12 @@ def append_to_binary_index(
     vec_col: str = "embedding",
     batch_id: int | None = None,
 ) -> None:
-    """Add a delta as the store's next batch dir. Same append contract
-    as the IVF stores (disjoint ids, idempotent per-dir overwrite,
-    prior dirs untouched, fail-loud live-tombstone guard) with one
-    upgrade: since signatures have no trained parameters, an appended
-    store is EXACTLY a fresh build on the union corpus — pinned by
-    tests/test_vector_index.py."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        sign_signature,
-    )
-
-    _guard_live_tombstones(new_vectors, path, id_col)
-    sigs = sign_signature(new_vectors, vec_col, "sig").select(
-        F.col(id_col).alias("neighbor_id"), "sig"
-    )
-    store = f"{path}/sigs"
-    _cs.stamp_meta(store, {"format": _SIGS_FORMAT})
-    _write_delta(sigs, store, batch_id, partition_by=())
-
-
-def read_sigs(spark: SparkSession, path: str) -> DataFrame:
-    """The live (neighbor_id, sig) relation — raw scan over live batch
-    dirs, subsumed generations excluded (read_postings semantics)."""
-    store = f"{path}/sigs"
-    df = spark.read.parquet(store)
-    excluded = _cs.subsumed_ids(store)
-    if excluded:
-        df = df.filter(~F.col("batch_id").isin([int(i) for i in excluded]))
-    if "batch_id" in df.columns:
-        df = df.drop("batch_id")
-    return _apply_tombstones(df, spark, path)
-
-
-def compact_sigs(
-    spark: SparkSession, path: str, exclude_from: int | None = None
-) -> None:
-    """Fold the sig batch dirs into ONE generation (distinct-mode
-    counting_state compaction) so the listing stays bounded over an
-    unbounded append stream. Full compactions physically drop
-    tombstoned rows (see :func:`delete_from_index`)."""
-    _compact_with_tombstones(
-        spark, path, f"{path}/sigs", exclude_from, None
+    """Append a delta's signatures (the :func:`_append_delta` contract;
+    an appended store is EXACTLY a fresh build on the union corpus —
+    pinned by tests/test_vector_index.py)."""
+    _append_delta(
+        new_vectors, path, "binary", id_col, batch_id,
+        lambda spark: _signatures(new_vectors, id_col, vec_col),
     )
 
 
@@ -534,13 +509,6 @@ def query_binary_index(
     signatures against the stored corpus signatures (id-asc ties). For
     the exact-rerank funnel, feed these candidates to the caller's raw
     corpus exactly like similarity.binary_rerank_topk's second stage."""
-    from pyspark.sql import Window
-
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        hamming,
-        sign_signature,
-    )
-
     sigs = read_sigs(spark, path)
     q = sign_signature(queries, vec_col, "__sq").select(
         F.col(id_col).alias("query_id"), "__sq"
@@ -550,14 +518,7 @@ def query_binary_index(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("hamming", hamming("sig", "__sq"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "hamming")
-    )
+    return _top_k(scored, k, "hamming")
 
 
 # ---------------------------------------------------------------------------
@@ -600,13 +561,7 @@ def delete_from_index(
     rows = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
     store = _tomb_store(path)
     _cs.stamp_meta(store, {"format": _TOMB_FORMAT})
-    _write_delta(rows, store, batch_id, partition_by=())
-
-
-# explicit per-index names, mirroring the append_* surface
-delete_from_ivf_index = delete_from_index
-delete_from_ivfpq_index = delete_from_index
-delete_from_binary_index = delete_from_index
+    _write_delta(rows, store, batch_id)
 
 
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -615,11 +570,7 @@ def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     store = _tomb_store(path)
     if not _cs.state_subdirs(store):
         return None
-    df = spark.read.parquet(store)
-    excluded = _cs.subsumed_ids(store)
-    if excluded:
-        df = df.filter(~F.col("batch_id").isin([int(i) for i in excluded]))
-    return df.select("neighbor_id")
+    return _read_live(spark, store).select("neighbor_id")
 
 
 def _apply_tombstones(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
@@ -627,11 +578,11 @@ def _apply_tombstones(df: DataFrame, spark: SparkSession, path: str) -> DataFram
     broadcast: the erasure backlog is USUALLY tiny between compactions
     (AQE will pick a broadcast join on its own), but it is unbounded in
     the worst case — a quarter's GDPR queue drained right before a
-    compaction — and the compaction path (``_compact_with_tombstones``)
-    already lets AQE choose for exactly that reason; forcing the hint
-    here would pin two code paths to contradictory assumptions about
-    the same relation (r10 ADVICE). The data side's partition pruning
-    (cell dirs) is untouched by an anti-join on neighbor_id."""
+    compaction — and :func:`compact_store` already lets AQE choose for
+    exactly that reason; forcing the hint here would pin two code paths
+    to contradictory assumptions about the same relation (r10 ADVICE).
+    The data side's partition pruning (cell dirs) is untouched by an
+    anti-join on neighbor_id."""
     tomb = read_tombstones(spark, path)
     if tomb is None:
         return df
@@ -639,15 +590,15 @@ def _apply_tombstones(df: DataFrame, spark: SparkSession, path: str) -> DataFram
 
 
 def _guard_live_tombstones(new_vectors: DataFrame, path: str, id_col: str) -> None:
-    """Fail-loud re-add guard shared by the three appends: an appended
-    id whose tombstone is still live would be SILENTLY shadowed by
-    every read until the next full compaction physically drops it —
-    data loss from the caller's perspective. The documented contract
-    (erase → full compact → re-add) is therefore enforced, matching
-    the repo's fail-loud discipline for ragged/null vectors (r10
-    verdict #2). Cost: zero when the index has no live tombstone dirs
-    (one directory listing); otherwise one semi-join of the bounded
-    append batch against the bounded erasure backlog."""
+    """Fail-loud re-add guard shared by the appends: an appended id
+    whose tombstone is still live would be SILENTLY shadowed by every
+    read until the next full compaction physically drops it — data
+    loss from the caller's perspective. The documented contract (erase
+    → full compact → re-add) is therefore enforced, matching the repo's
+    fail-loud discipline for ragged/null vectors (r10 verdict #2).
+    Cost: zero when the index has no live tombstone dirs (one directory
+    listing); otherwise one semi-join of the bounded append batch
+    against the bounded erasure backlog."""
     spark = new_vectors.sparkSession
     tomb = read_tombstones(spark, path)
     if tomb is None:
@@ -668,89 +619,54 @@ def _guard_live_tombstones(new_vectors: DataFrame, path: str, id_col: str) -> No
         )
 
 
-def _compact_with_tombstones(
-    spark: SparkSession,
-    path: str,
-    store: str,
-    exclude_from: int | None,
-    partition_by: list[str] | None,
-) -> None:
-    """The shared compact body: fold the data store, physically
-    dropping tombstoned rows, then GC the absorbed tombstone dirs —
-    but ONLY when the fold covered every live data dir
-    (``exclude_from=None``): an excluded in-flight dir keeps its rows
-    raw, so its tombstones must stay live or the delete would silently
-    resurrect. Crash-safety: tombstone deletion is pure GC — a crash
-    before it leaves the tombstones live and the anti-join re-applies
-    them (idempotent)."""
-    tomb = _tomb_store(path)
-    tdirs = _cs.state_subdirs(tomb) if exclude_from is None else {}
-    drop = (
-        spark.read.parquet(*tdirs.keys()).select("neighbor_id").distinct()
-        if tdirs
-        else None
-    )
-    df = spark.read.parquet(store)
-    fields = [f for f in df.schema.fields if f.name != "batch_id"]
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
-    folded = _cs.compact_counts(
-        spark,
-        store,
-        schema,
-        [f.name for f in fields],
-        None,
-        exclude_from=exclude_from,
-        agg="distinct",
-        partition_by=partition_by,
-        drop_keys=drop,
-        drop_on=["neighbor_id"] if drop is not None else None,
-    )
-    if folded and tdirs:
-        # the folded generation no longer contains the dropped ids and
-        # the append contract forbids id reuse — the snapshot of
-        # tombstone dirs read above is fully absorbed. Dirs appended
-        # AFTER the snapshot stay live for the next cycle.
-        for p in tdirs:
-            shutil.rmtree(p, ignore_errors=True)
-
-
 # ---------------------------------------------------------------------------
-# Kind dispatch — THE one place the ivf | ivfpq | binary → function /
-# store-subdir mapping lives. The streaming drains
-# (streaming/vector_index_stream.py) and the text-index sink
-# (sinks/text_index.py) both consume these tables; encoding the mapping
-# locally in each consumer is how a fourth store kind ends up batch-
-# appendable but not streamable (r11 review catch).
+# The kind table — THE one place the ivf | ivfpq | binary → store layout /
+# function mapping lives. The streaming drains, the modality lifecycle
+# (sinks/served_index.py) and the estate catalog, forget sweep and
+# maintenance executor all consume it; encoding the mapping locally in
+# each consumer is how a fourth store kind ends up batch-appendable but
+# not streamable (r11 review catch).
 # ---------------------------------------------------------------------------
 
-STORE_SUBDIR = {"ivf": "postings", "ivfpq": "codes", "binary": "sigs"}
-WRITERS = {
-    "ivf": write_ivf_index,
-    "ivfpq": write_ivfpq_index,
-    "binary": write_binary_index,
-}
-APPENDERS = {
-    "ivf": append_to_ivf_index,
-    "ivfpq": append_to_ivfpq_index,
-    "binary": append_to_binary_index,
-}
-QUERIES = {
-    "ivf": query_ivf_index,
-    "ivfpq": query_ivfpq_index,
-    "binary": query_binary_index,
-}
-COMPACTORS = {
-    "ivf": compact_postings,
-    "ivfpq": compact_codes,
-    "binary": compact_sigs,
+
+@dataclass(frozen=True)
+class Kind:
+    subdir: str  # the data store dir under the index path
+    fmt: str  # the store's _meta.json format marker
+    partition_by: tuple[str, ...]  # inner partitioning of each batch dir
+    write: Callable[..., None]
+    append: Callable[..., None]
+    query: Callable[..., DataFrame]
+
+
+KINDS = {
+    "ivf": Kind(
+        "postings", "ivf-postings/v1", ("cell",),
+        write_ivf_index, append_to_ivf_index, query_ivf_index,
+    ),
+    "ivfpq": Kind(
+        "codes", "ivfpq-codes/v1", ("cell",),
+        write_ivfpq_index, append_to_ivfpq_index, query_ivfpq_index,
+    ),
+    "binary": Kind(
+        "sigs", "binary-sigs/v1", (),
+        write_binary_index, append_to_binary_index, query_binary_index,
+    ),
 }
 
 
 def check_kind(kind: str) -> str:
-    """Validate a store kind against the dispatch tables, fail-loud."""
-    if kind not in STORE_SUBDIR:
+    """Validate a store kind against the kind table, fail-loud."""
+    if kind not in KINDS:
         raise ValueError(f"unknown index kind {kind!r} (ivf | ivfpq | binary)")
     return kind
+
+
+def built_kinds(path: str) -> list[str]:
+    """The kinds whose store dir exists under ``path``."""
+    return [
+        k for k, row in KINDS.items() if os.path.isdir(os.path.join(path, row.subdir))
+    ]
 
 
 # -- staleness audit + drift-triggered rebuild --------------------------------
@@ -767,7 +683,7 @@ def infer_kind(path: str) -> str:
     (exactly one of postings/ codes/ sigs/ exists for a built index).
     Fail-loud on none or several — a path that isn't a single built
     index must not be silently audited as one."""
-    found = [k for k, sub in STORE_SUBDIR.items() if os.path.isdir(os.path.join(path, sub))]
+    found = built_kinds(path)
     if len(found) != 1:
         raise ValueError(
             f"{path!r} holds {found or 'no'} store dirs — expected exactly "
@@ -794,13 +710,9 @@ def index_recall(
     broadcasts the bounded query set; the returned scalar is the only
     driver-side materialization."""
     kind = check_kind(kind or infer_kind(path))
-    approx = QUERIES[kind](
+    approx = KINDS[kind].query(
         spark, path, queries, k=k, id_col=id_col, vec_col=vec_col, **probe_kwargs
     ).select("query_id", "neighbor_id")
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-        exact_l2_topk_set,
-    )
-
     exact = exact_l2_topk_set(corpus, queries, k, id_col, vec_col)
     # ONE action: the exact truth set (broadcast join + per-query window
     # over the full corpus) is the expensive relation here, and the
@@ -865,7 +777,7 @@ def rebuild_index_if_stale(
         kind,
         min_recall,
         _recall,
-        lambda: WRITERS[kind](
+        lambda: KINDS[kind].write(
             corpus, path, id_col=id_col, vec_col=vec_col,
             **(build_kwargs or {}),
         ),
@@ -911,10 +823,8 @@ def index_stats(spark: SparkSession, path: str, kind: str | None = None) -> dict
     {cell: n, ...} | None}`` — ``cells`` is None for the flat binary
     store (no cell level to skew)."""
     kind = check_kind(kind or infer_kind(path))
-    readers = {"ivf": read_postings, "ivfpq": read_codes, "binary": read_sigs}
-    df = readers[kind](spark, path)
-    store = os.path.join(path, STORE_SUBDIR[kind])
-    if kind == "binary":
+    df = read_store(spark, path, kind)
+    if not KINDS[kind].partition_by:
         rows = df.count()
         cells = None
     else:
@@ -932,7 +842,7 @@ def index_stats(spark: SparkSession, path: str, kind: str | None = None) -> dict
     return {
         "kind": kind,
         "rows": rows,
-        "live_dirs": _cs.live_dir_count(store),
+        "live_dirs": _cs.live_dir_count(store_dir(path, kind)),
         "tombstones": (
             0 if (tomb := read_tombstones(spark, path)) is None
             else tomb.count()

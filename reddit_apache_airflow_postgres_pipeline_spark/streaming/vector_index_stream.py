@@ -21,11 +21,11 @@ q_sim_ivfpq_recall) are the rebuild signal.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from reddit_apache_airflow_postgres_pipeline_spark.sinks import served_index as _si
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     COMPACT_AFTER_DIRS,
@@ -39,21 +39,28 @@ def _drain_into_index(
     input_dir: str,
     schema: str,
     checkpoint_dir: str,
-    store: str,
+    index_path: str,
+    kind: str,
     write: Callable[[DataFrame, int], None],
-    compact: Callable[[SparkSession, int], None],
     compact_after_dirs: int,
+    deletes: bool = False,
 ) -> None:
     """The index drains' shared batch body: micro-batch ``i`` goes to
     ``write(batch_df, sid)`` under the stream id ``sid =
-    STREAM_ID_BASE + i``, then ``compact(spark, sid)`` runs once
-    ``store`` holds more than ``compact_after_dirs`` live dirs."""
+    STREAM_ID_BASE + i``. Once the watched store — the ``kind`` data
+    store, or the tombstone store of a ``deletes`` drain — holds more
+    than ``compact_after_dirs`` live dirs, the ``kind`` store compacts:
+    everything but the in-flight dir after an append, FULLY after a
+    delete (the only compaction that physically drops tombstoned
+    rows)."""
+    store = _vi._tomb_store(index_path) if deletes else _vi.store_dir(index_path, kind)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         sid = _vi.STREAM_ID_BASE + batch_id
         write(batch_df, sid)
         compact_if_due(
-            store, compact_after_dirs, compact, batch_df.sparkSession, sid
+            store, compact_after_dirs, _vi.compact_store, batch_df.sparkSession,
+            index_path, kind, exclude_from=None if deletes else sid,
         )
 
     drain(spark, input_dir, schema, checkpoint_dir, _batch)
@@ -79,14 +86,34 @@ def run_index_append_available_now(
     binary kind has nothing to retrain at all). Caller contract
     unchanged from the batch appends: delta ids disjoint from indexed
     ids."""
-    _vi.check_kind(kind)
-    append = _vi.APPENDERS[kind]
-    compact = _vi.COMPACTORS[kind]
+    append = _vi.KINDS[_vi.check_kind(kind)].append
     _drain_into_index(
-        spark, input_dir, schema, checkpoint_dir,
-        os.path.join(index_path, _vi.STORE_SUBDIR[kind]),
+        spark, input_dir, schema, checkpoint_dir, index_path, kind,
         lambda df, sid: append(df, index_path, id_col, vec_col, batch_id=sid),
-        lambda sp, sid: compact(sp, index_path, exclude_from=sid),
+        compact_after_dirs,
+    )
+
+
+def _drain_modality(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    index_path: str,
+    checkpoint_dir: str,
+    modality: str,
+    compact_after_dirs: int,
+    **append_kwargs,
+) -> None:
+    """The text and media drains' one body. The featurizer params and
+    store kind come from the index's own meta file (read here, so a
+    path without one fails loud before the stream starts), and each
+    micro-batch goes through the modality's public appender, looked up
+    on its module at call time (``served_index.public``)."""
+    kind = _si.index_meta(index_path, modality)["kind"]
+    append = _si.public(modality, "append")
+    _drain_into_index(
+        spark, input_dir, schema, checkpoint_dir, index_path, kind,
+        lambda df, sid: append(df, index_path, batch_id=sid, **append_kwargs),
         compact_after_dirs,
     )
 
@@ -109,28 +136,17 @@ def run_text_index_append_available_now(
 
     The index must already exist (``sinks/text_index.write_text_index``
     on the validated snapshot — the same snapshot that froze the drift
-    gate's reference can train the quantizers). Featurizer params and
-    store kind come from the index's own ``text_meta.json``, so this
-    stream takes NO embedding arguments: a restarted or re-deployed
-    drain cannot drift the geometry. Micro-batch ids map above
-    ``STREAM_ID_BASE`` (idempotent per-dir overwrite on retry, no
-    collision with ad-hoc appends), and the live-dir threshold folds
-    the store exactly like the raw-vector append stream. Parity with
-    the batch path (same docs ⇒ identical served top-k) and restart
-    safety are pinned by tests/test_text_index_stream.py."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import text_index as _ti
-
-    _ti.text_index_meta(index_path)  # fail loud before starting
-    _drain_into_index(
-        spark, input_dir, schema, checkpoint_dir,
-        _ti.text_index_store(index_path),
-        lambda df, sid: _ti.append_text_to_index(
-            df, index_path, id_col=id_col, text_col=text_col, batch_id=sid
-        ),
-        lambda sp, sid: _ti.compact_text_index(
-            sp, index_path, exclude_from=sid
-        ),
-        compact_after_dirs,
+    gate's reference can train the quantizers). This stream takes NO
+    embedding arguments: a restarted or re-deployed drain cannot drift
+    the geometry. Micro-batch ids map above ``STREAM_ID_BASE``
+    (idempotent per-dir overwrite on retry, no collision with ad-hoc
+    appends), and the live-dir threshold folds the store exactly like
+    the raw-vector append stream. Parity with the batch path (same
+    docs ⇒ identical served top-k) and restart safety are pinned by
+    tests/test_text_index_stream.py."""
+    _drain_modality(
+        spark, input_dir, schema, index_path, checkpoint_dir, "text",
+        compact_after_dirs, id_col=id_col, text_col=text_col,
     )
 
 
@@ -144,33 +160,14 @@ def run_media_index_append_available_now(
     compact_after_dirs: int = COMPACT_AFTER_DIRS,
 ) -> None:
     """Drain arriving MEDIA files (binary payloads + typed metadata, no
-    vectors) into a persisted media index, exactly-once — the media twin
-    of the text drain: an arriving image/audio/video payload becomes
-    servable with no manual feature hop.
-
-    The index must already exist (``sinks/media_index.write_media_index``
-    on the validated snapshot). The codec and store kind come from the
-    index's own ``media_meta.json``, so this stream takes NO
-    featurization arguments: a restarted or re-deployed drain cannot
-    drift the geometry. Micro-batch ids map above ``STREAM_ID_BASE``
-    (idempotent per-dir overwrite on retry, no collision with ad-hoc
-    appends), and the live-dir threshold folds the store exactly like
-    the raw-vector and text append streams. Parity with the batch path
-    (same media ⇒ identical served top-k) and restart safety are pinned
-    by tests/test_media_index_stream.py."""
-    from reddit_apache_airflow_postgres_pipeline_spark.sinks import media_index as _mi
-
-    _mi.media_index_meta(index_path)  # fail loud before starting
-    _drain_into_index(
-        spark, input_dir, schema, checkpoint_dir,
-        _mi.media_index_store(index_path),
-        lambda df, sid: _mi.append_media_to_index(
-            df, index_path, id_col=id_col, batch_id=sid
-        ),
-        lambda sp, sid: _mi.compact_media_index(
-            sp, index_path, exclude_from=sid
-        ),
-        compact_after_dirs,
+    vectors) into a persisted media index, exactly-once — the media
+    form of the text drain (the index must already exist:
+    ``sinks/media_index.write_media_index`` on the validated snapshot).
+    Parity with the batch path and restart safety are pinned by
+    tests/test_media_index_stream.py."""
+    _drain_modality(
+        spark, input_dir, schema, index_path, checkpoint_dir, "media",
+        compact_after_dirs, id_col=id_col,
     )
 
 
@@ -203,13 +200,12 @@ def run_index_delete_available_now(
     kind-agnostic. Single-writer discipline: don't run the full
     compaction concurrently with an append stream on the same store
     (same rule as the batch API's exclude_from contract)."""
-    compact = _vi.COMPACTORS[_vi.check_kind(kind)]
     _drain_into_index(
-        spark, input_dir, schema, checkpoint_dir,
-        _vi._tomb_store(index_path),
+        spark, input_dir, schema, checkpoint_dir, index_path,
+        _vi.check_kind(kind),
         lambda df, sid: _vi.delete_from_index(
             df, index_path, id_col, batch_id=sid
         ),
-        lambda sp, sid: compact(sp, index_path),
         compact_after_dirs,
+        deletes=True,
     )

@@ -190,7 +190,7 @@ def test_index_stats_ops_view(spark, tmp_path):
     )
     st = vi.index_stats(spark, ix)
     assert st["tombstones"] == 3 and st["rows"] == 497
-    vi.compact_postings(spark, ix)  # FULL: physical drop + tombstone GC
+    vi.compact_store(spark, ix, "ivf")  # FULL: physical drop + tombstone GC
     st = vi.index_stats(spark, ix)
     assert st["tombstones"] == 0 and st["rows"] == 497
 

@@ -274,14 +274,14 @@ def test_media_vectors_through_persisted_stores(spark, tmp_path):
     assert got == want
 
     victim = got[0][1]
-    vi.delete_from_ivfpq_index(
+    vi.delete_from_index(
         feats.filter(F.col("vec_id") == victim).select("vec_id"), full
     )
     assert victim not in {
         r["neighbor_id"]
         for r in vi.query_ivfpq_index(spark, full, q, n_probe=4, k=5).collect()
     }
-    vi.compact_codes(spark, full)
+    vi.compact_store(spark, full, "ivfpq")
     raw = {r["neighbor_id"] for r in spark.read.parquet(f"{full}/codes").collect()}
     assert victim not in raw
 

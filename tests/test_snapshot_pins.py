@@ -1,6 +1,6 @@
 """Post-sweep successor pins (sinks/snapshots.amend_snapshot — r12
 verdict #3) and pin-move -> incremental index refresh
-(sinks/snapshots.build_text_index_at_pin / advance_text_index_to_pin —
+(sinks/snapshots.build_index_at_pin / advance_index_to_pin —
 r12 verdict #4): after an erasure sweep invalidates a pin, a sanctioned
 successor pin re-derives "S2 = S1 minus erasure E" as a verifiable
 manifest; and a served text index advances from pin A to pin B by
@@ -137,23 +137,23 @@ def test_build_and_advance_text_index_at_pins(spark, tmp_path):
     snap.create_snapshot(spark, corpus, "all")
 
     idx = str(tmp_path / "idx")
-    snap.build_text_index_at_pin(
-        spark, corpus, "g01", idx, kind="ivfpq", n_cells=2, m=4, n_codes=8
+    snap.build_index_at_pin(
+        spark, corpus, "g01", idx, "text", kind="ivfpq", n_cells=2, m=4, n_codes=8
     )
-    assert snap.text_index_pin(idx)["snapshot"] == "g01"
+    assert snap.index_pin(idx)["snapshot"] == "g01"
     assert {
         r["neighbor_id"] for r in vi.read_codes(spark, idx).collect()
     } == set(range(12))
 
-    out = snap.advance_text_index_to_pin(spark, corpus, idx, "all", batch_id=7)
+    out = snap.advance_index_to_pin(spark, corpus, idx, "all", batch_id=7)
     assert out == {"base": "g01", "target": "all", "appended_batches": [2]}
-    assert snap.text_index_pin(idx)["snapshot"] == "all"
+    assert snap.index_pin(idx)["snapshot"] == "all"
 
     # equivalence: the advanced store is row-identical to build-at-g01
     # + one manual append of the same diff (frozen quantizers both ways)
     idx2 = str(tmp_path / "idx2")
-    snap.build_text_index_at_pin(
-        spark, corpus, "g01", idx2, kind="ivfpq", n_cells=2, m=4, n_codes=8
+    snap.build_index_at_pin(
+        spark, corpus, "g01", idx2, "text", kind="ivfpq", n_cells=2, m=4, n_codes=8
     )
     ti.append_text_to_index(
         snap.snapshot_diff(spark, corpus, "g01", "all").select(
@@ -176,14 +176,14 @@ def test_build_and_advance_text_index_at_pins(spark, tmp_path):
     assert topk(idx) == topk(idx2)
 
     # no-op: advancing to the pin it is already at
-    out2 = snap.advance_text_index_to_pin(spark, corpus, idx, "all")
+    out2 = snap.advance_index_to_pin(spark, corpus, idx, "all")
     assert out2["appended_batches"] == []
     # backwards move refuses (not an append lineage)
     with pytest.raises(ValueError, match="refusing to diff"):
-        snap.advance_text_index_to_pin(spark, corpus, idx, "g01")
+        snap.advance_index_to_pin(spark, corpus, idx, "g01")
     # an index without a pin marker cannot be advanced
     with pytest.raises(ValueError, match="pin"):
-        snap.advance_text_index_to_pin(spark, corpus, idx2_nomarker(idx2), "all")
+        snap.advance_index_to_pin(spark, corpus, idx2_nomarker(idx2), "all")
 
 
 def idx2_nomarker(idx2: str) -> str:
@@ -199,14 +199,14 @@ def test_advance_after_amend_is_a_noop_with_lineage(spark, tmp_path):
     corpus = _write_corpus(spark, str(tmp_path), gens=2)
     snap.create_snapshot(spark, corpus, "v1")
     idx = str(tmp_path / "idx")
-    snap.build_text_index_at_pin(
-        spark, corpus, "v1", idx, kind="binary"
+    snap.build_index_at_pin(
+        spark, corpus, "v1", idx, "text", kind="binary"
     )
     _sweep(spark, corpus, 0, [1])
     snap.amend_snapshot(spark, corpus, "v1", "v2", erasure_ids=[1])
-    out = snap.advance_text_index_to_pin(spark, corpus, idx, "v2")
+    out = snap.advance_index_to_pin(spark, corpus, idx, "v2")
     assert out == {"base": "v1", "target": "v2", "appended_batches": []}
-    assert snap.text_index_pin(idx)["snapshot"] == "v2"
+    assert snap.index_pin(idx)["snapshot"] == "v2"
 
 
 def test_build_and_advance_media_index_at_pins(spark, tmp_path):
@@ -236,20 +236,20 @@ def test_build_and_advance_media_index_at_pins(spark, tmp_path):
     snap.create_snapshot(spark, corpus, "all")
 
     idx = str(tmp_path / "midx")
-    snap.build_media_index_at_pin(
-        spark, corpus, "g01", idx, kind="binary", codec="fake"
+    snap.build_index_at_pin(
+        spark, corpus, "g01", idx, "media", kind="binary", codec="fake"
     )
     assert snap.index_pin(idx)["snapshot"] == "g01"
     n_g01 = vi.read_sigs(spark, idx).count()
-    out = snap.advance_media_index_to_pin(spark, corpus, idx, "all", batch_id=7)
+    out = snap.advance_index_to_pin(spark, corpus, idx, "all", batch_id=7)
     assert out == {"base": "g01", "target": "all", "appended_batches": [2]}
     assert snap.index_pin(idx)["snapshot"] == "all"
     n_all = vi.read_sigs(spark, idx).count()
     assert n_all > n_g01
     # row-identical to build@g01 + one manual append of the same diff
     idx2 = str(tmp_path / "midx2")
-    snap.build_media_index_at_pin(
-        spark, corpus, "g01", idx2, kind="binary", codec="fake"
+    snap.build_index_at_pin(
+        spark, corpus, "g01", idx2, "media", kind="binary", codec="fake"
     )
     mi.append_media_to_index(
         snap.snapshot_diff(spark, corpus, "g01", "all").drop("batch_id"),

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import ivf_knn
 from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
-    compact_postings,
+    compact_store,
     query_ivf_index,
     read_postings,
     write_ivf_index,
@@ -151,7 +151,7 @@ def test_compaction_preserves_results_pruning_and_crash_gc(spark, tmp_path):
     keep = str(tmp_path / "copy")
     sh.copytree(os.path.join(store, "batch_id=1"), keep)
 
-    compact_postings(spark, path)
+    compact_store(spark, path, "ivf")
     assert set(cs.state_subdirs(store).values()) == {-1}
     assert cs.subsumed_ids(store) == {0, 1, 2}
     assert read_postings(spark, path).count() == e.count()
@@ -200,7 +200,7 @@ def test_ivfpq_append_and_compaction_preserve_results_and_pruning(spark, tmp_pat
 
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
         append_to_ivfpq_index,
-        compact_codes,
+        compact_store,
         query_ivfpq_index,
         read_codes,
         write_ivfpq_index,
@@ -226,7 +226,7 @@ def test_ivfpq_append_and_compaction_preserve_results_and_pruning(spark, tmp_pat
 
     store = f"{inc}/codes"
     assert set(cs.state_subdirs(store).values()) == {0, 1}
-    compact_codes(spark, inc)
+    compact_store(spark, inc, "ivfpq")
     assert set(cs.state_subdirs(store).values()) == {-1}
     assert cs.subsumed_ids(store) == {0, 1}
     assert sorted(map(tuple, query_ivfpq_index(spark, inc, q, n_probe=4, k=5).collect())) == before
@@ -247,7 +247,7 @@ def test_append_after_compaction_never_reuses_subsumed_ids(spark, tmp_path):
     allocator must clear the manifest too."""
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
         append_to_ivf_index,
-        compact_postings,
+        compact_store,
         read_postings,
         write_ivf_index,
     )
@@ -257,7 +257,7 @@ def test_append_after_compaction_never_reuses_subsumed_ids(spark, tmp_path):
     path = str(tmp_path / "ix")
     write_ivf_index(e.filter(F.col("vec_id") < 300), path, n_cells=16)
     append_to_ivf_index(e.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)), path)
-    compact_postings(spark, path)
+    compact_store(spark, path, "ivf")
     store = f"{path}/postings"
     assert cs.subsumed_ids(store) == {0, 1}
     append_to_ivf_index(e.filter(F.col("vec_id") >= 400), path)
@@ -267,7 +267,7 @@ def test_append_after_compaction_never_reuses_subsumed_ids(spark, tmp_path):
     assert read_postings(spark, path).count() == e.count()
     # and it survives the next compaction cycle
     append_to_ivf_index(e.limit(0), path)
-    compact_postings(spark, path)
+    compact_store(spark, path, "ivf")
     assert read_postings(spark, path).count() == e.count()
 
 
@@ -343,7 +343,7 @@ def test_binary_index_roundtrip_append_equality_and_compaction(spark, tmp_path):
         F.col("vec_id") >= 250
     ).count()
     # (4) compaction: one generation, same query answers
-    vi.compact_sigs(spark, split)
+    vi.compact_store(spark, split, "binary")
     assert len(cs.state_subdirs(f"{split}/sigs")) <= 2  # gen + nothing live
     got3 = sorted(
         map(
@@ -369,7 +369,7 @@ def test_ivf_delete_shadows_then_compaction_physically_drops(spark, tmp_path):
 
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
         append_to_ivf_index,
-        delete_from_ivf_index,
+        delete_from_index,
         read_tombstones,
     )
 
@@ -382,7 +382,7 @@ def test_ivf_delete_shadows_then_compaction_physically_drops(spark, tmp_path):
     # pick a victim that IS served before deletion so the test is live
     before = query_ivf_index(spark, ix, q, n_probe=8, k=5)
     victim = before.collect()[0]["neighbor_id"]
-    delete_from_ivf_index(
+    delete_from_index(
         e.filter(F.col("vec_id") == victim).select("vec_id"), ix
     )
 
@@ -396,7 +396,7 @@ def test_ivf_delete_shadows_then_compaction_physically_drops(spark, tmp_path):
     # post-compaction: physically dropped — raw parquet scan of the
     # folded store (bypassing the reader) must not contain the id, and
     # the absorbed tombstone dirs are GC'd
-    compact_postings(spark, ix)
+    compact_store(spark, ix, "ivf")
     raw = spark.read.parquet(f"{ix}/postings")
     assert victim not in {r["neighbor_id"] for r in raw.collect()}
     assert read_tombstones(spark, ix) is None
@@ -417,10 +417,8 @@ def test_ivf_delete_shadows_then_compaction_physically_drops(spark, tmp_path):
 
 def test_ivfpq_and_binary_deletes_survive_compaction(spark, tmp_path):
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
-        compact_codes,
-        compact_sigs,
-        delete_from_binary_index,
-        delete_from_ivfpq_index,
+        compact_store,
+        delete_from_index,
         query_binary_index,
         query_ivfpq_index,
         read_codes,
@@ -436,14 +434,14 @@ def test_ivfpq_and_binary_deletes_survive_compaction(spark, tmp_path):
     write_ivfpq_index(e, pq, n_cells=8, m=4, n_codes=16, iters=1)
     served = query_ivfpq_index(spark, pq, q, n_probe=8, k=5).collect()
     victim = served[0]["neighbor_id"]
-    delete_from_ivfpq_index(
+    delete_from_index(
         e.filter(F.col("vec_id") == victim).select("vec_id"), pq
     )
     assert victim not in {
         r["neighbor_id"]
         for r in query_ivfpq_index(spark, pq, q, n_probe=8, k=5).collect()
     }
-    compact_codes(spark, pq)
+    compact_store(spark, pq, "ivfpq")
     assert victim not in {
         r["neighbor_id"] for r in spark.read.parquet(f"{pq}/codes").collect()
     }
@@ -457,14 +455,14 @@ def test_ivfpq_and_binary_deletes_survive_compaction(spark, tmp_path):
     write_binary_index(e, bx)
     served_b = query_binary_index(spark, bx, q, k=5).collect()
     bvictim = served_b[0]["neighbor_id"]
-    delete_from_binary_index(
+    delete_from_index(
         e.filter(F.col("vec_id") == bvictim).select("vec_id"), bx
     )
     assert bvictim not in {
         r["neighbor_id"]
         for r in query_binary_index(spark, bx, q, k=5).collect()
     }
-    compact_sigs(spark, bx)
+    compact_store(spark, bx, "binary")
     assert bvictim not in {
         r["neighbor_id"] for r in spark.read.parquet(f"{bx}/sigs").collect()
     }
@@ -477,7 +475,7 @@ def test_delete_retry_is_idempotent_and_partial_compaction_keeps_tombstones(
     from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
         append_to_ivf_index,
-        delete_from_ivf_index,
+        delete_from_index,
         read_tombstones,
     )
 
@@ -489,17 +487,17 @@ def test_delete_retry_is_idempotent_and_partial_compaction_keeps_tombstones(
     )
     # retried delete with an explicit batch id overwrites its own dir
     ids = e.filter(F.col("vec_id") == 7).select("vec_id")
-    delete_from_ivf_index(ids, ix, batch_id=5)
-    delete_from_ivf_index(ids, ix, batch_id=5)
+    delete_from_index(ids, ix, batch_id=5)
+    delete_from_index(ids, ix, batch_id=5)
     assert read_tombstones(spark, ix).count() == 1
 
     # a PARTIAL compaction (exclude_from) must NOT GC the tombstones:
     # the excluded dir's rows stay raw, so dropping the tombstone would
     # resurrect a deleted id that lives there
-    delete_from_ivf_index(
+    delete_from_index(
         e.filter(F.col("vec_id") == 350).select("vec_id"), ix
     )
-    compact_postings(spark, ix, exclude_from=1)  # batch 1 stays raw
+    compact_store(spark, ix, "ivf", exclude_from=1)  # batch 1 stays raw
     assert read_tombstones(spark, ix) is not None
     assert {r["neighbor_id"] for r in read_tombstones(spark, ix).collect()} == {
         7,
@@ -509,7 +507,7 @@ def test_delete_retry_is_idempotent_and_partial_compaction_keeps_tombstones(
     live = {r["neighbor_id"] for r in read_postings(spark, ix).collect()}
     assert 7 not in live and 350 not in live
     # a FULL compaction then absorbs everything
-    compact_postings(spark, ix)
+    compact_store(spark, ix, "ivf")
     assert read_tombstones(spark, ix) is None
     raw = {r["neighbor_id"] for r in spark.read.parquet(f"{ix}/postings").collect()}
     assert 7 not in raw and 350 not in raw
@@ -528,8 +526,7 @@ def test_append_of_live_tombstoned_id_raises_for_all_stores(spark, tmp_path):
         append_to_binary_index,
         append_to_ivf_index,
         append_to_ivfpq_index,
-        compact_codes,
-        compact_sigs,
+        compact_store,
         delete_from_index,
         read_codes,
         read_sigs,
@@ -552,7 +549,7 @@ def test_append_of_live_tombstoned_id_raises_for_all_stores(spark, tmp_path):
         r["neighbor_id"] for r in read_postings(spark, ix).collect()
     }
     # erase → full compact → re-add works, and the row serves again
-    compact_postings(spark, ix)
+    compact_store(spark, ix, "ivf")
     append_to_ivf_index(victim, ix)
     live = [r["neighbor_id"] for r in read_postings(spark, ix).collect()]
     assert live.count(7) == 1
@@ -562,7 +559,7 @@ def test_append_of_live_tombstoned_id_raises_for_all_stores(spark, tmp_path):
     delete_from_index(victim.select("vec_id"), pq)
     with pytest.raises(ValueError, match="LIVE tombstones"):
         append_to_ivfpq_index(bad, pq)
-    compact_codes(spark, pq)
+    compact_store(spark, pq, "ivfpq")
     append_to_ivfpq_index(victim, pq)
     assert (
         read_codes(spark, pq).filter(F.col("neighbor_id") == 7).count() == 4
@@ -573,7 +570,7 @@ def test_append_of_live_tombstoned_id_raises_for_all_stores(spark, tmp_path):
     delete_from_index(victim.select("vec_id"), bx)
     with pytest.raises(ValueError, match="LIVE tombstones"):
         append_to_binary_index(bad, bx)
-    compact_sigs(spark, bx)
+    compact_store(spark, bx, "binary")
     append_to_binary_index(victim, bx)
     assert read_sigs(spark, bx).filter(F.col("neighbor_id") == 7).count() == 1
 
@@ -596,8 +593,7 @@ def test_full_compaction_equals_rebuild_from_survivors(spark, tmp_path):
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
         append_to_ivf_index,
         append_to_ivfpq_index,
-        compact_codes,
-        compact_sigs,
+        compact_store,
         delete_from_index,
         query_binary_index,
         query_ivfpq_index,
@@ -619,7 +615,7 @@ def test_full_compaction_equals_rebuild_from_survivors(spark, tmp_path):
     delete_from_index(
         e.filter(F.col("vec_id").isin(gone)).select("vec_id"), ix
     )
-    compact_postings(spark, ix)
+    compact_store(spark, ix, "ivf")
     cents = spark.read.parquet(f"{ix}/centroids")
     want = ivf_assign(survivors, cents, out_id="neighbor_id")
     got_rel = sorted(
@@ -641,7 +637,7 @@ def test_full_compaction_equals_rebuild_from_survivors(spark, tmp_path):
     delete_from_index(
         e.filter(F.col("vec_id").isin(gone)).select("vec_id"), pq
     )
-    compact_codes(spark, pq)
+    compact_store(spark, pq, "ivfpq")
     pcents = spark.read.parquet(f"{pq}/centroids")
     cb = spark.read.parquet(f"{pq}/codebooks")
     fresh = pq_encode(
@@ -666,7 +662,7 @@ def test_full_compaction_equals_rebuild_from_survivors(spark, tmp_path):
     delete_from_index(
         e.filter(F.col("vec_id").isin(gone)).select("vec_id"), bx
     )
-    compact_sigs(spark, bx)
+    compact_store(spark, bx, "binary")
     fresh_bx = str(tmp_path / "bx_fresh")
     write_binary_index(survivors, fresh_bx)
     got_sigs = sorted(
