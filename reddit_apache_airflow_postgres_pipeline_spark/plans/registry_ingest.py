@@ -1182,6 +1182,11 @@ _ML._serve("chain")
 _ESTATE_VERSION = "v5"
 _EST_APPEND_LT = 60  # text append slice: vec_id % 3 = 1 AND vec_id < 60
 _EST_TOMBS = 3  # lowest 3 embedable build ids get tombstoned
+# the estate's two gate stores: (signature_gate modality, frozen params)
+_ESTATE_GATES = (
+    ("text", {"n": 3, "num_hashes": 12, "bands": 4, "threshold": 0.5}),
+    ("media", {"bits": 60, "max_hamming": 5}),
+)
 
 
 def _estate_params() -> tuple[str, str, str, str, str]:
@@ -1193,11 +1198,8 @@ def _estate_params() -> tuple[str, str, str, str, str]:
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.served_index import (
         MODALITIES,
     )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-        verified_gate_meta,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
-        media_gate_meta,
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.signature_gate import (
+        MODALITIES as _GATES,
     )
 
     text = _json.dumps(
@@ -1209,8 +1211,10 @@ def _estate_params() -> tuple[str, str, str, str, str]:
         {"format": MODALITIES["media"].fmt, "kind": "binary", "codec": "fake"},
         sort_keys=True,
     )
-    gate = _json.dumps(verified_gate_meta(3, 12, 4, 0.5), sort_keys=True)
-    mgate = _json.dumps(media_gate_meta(60, 5), sort_keys=True)
+    gate, mgate = (
+        _json.dumps(_GATES[m].state.meta(p), sort_keys=True)
+        for m, p in _ESTATE_GATES
+    )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming.counting_state import (
         CORPUS_FORMAT,
     )
@@ -1265,9 +1269,6 @@ def _build_estate_into(
     from reddit_apache_airflow_postgres_pipeline_spark.operators import (
         multimodal as _mm,
     )
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
-        minhash_signature,
-    )
     from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
         embed_text,
     )
@@ -1283,10 +1284,8 @@ def _build_estate_into(
     from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
         counting_state as _cs,
     )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-        _sig_schema,
-        gate_batch_verified_attributed,
-        verified_gate_meta,
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+        signature_gate as _sg,
     )
 
     root = os.path.dirname(roots["text_idx"])
@@ -1322,69 +1321,38 @@ def _build_estate_into(
     media = _mm.media_from_documents(docs).filter((F.col("media_id") % 3) == 2)
     _mi.write_media_index(media, roots["media_idx"], kind="binary", codec="fake")
 
-    # gate state + decision logs: the standard 3-generation verified
-    # replay, persisted in the drain's own layout
-    _cs.stamp_meta(roots["gate_state"], verified_gate_meta(3, 12, 4, 0.5))
+    # gate states + decision logs, text and media: the standard
+    # 3-generation replay (id % 3 arrival order) persisted in the
+    # drain's own layout; the text gate's accepted rows are the corpus
     _cs.stamp_corpus_meta(roots["gate_corpus"], "doc_id", "text")
-    sig_all = minhash_signature(docs, "doc_id", "text", 3, 12).localCheckpoint()
-    state = local_df(spark, [], _sig_schema(12))
-    for g in range(3):
-        batch = docs.filter(mod3 == g)
-        sig_g = sig_all.filter((F.col("doc") % 3).cast("int") == g)
-        acc, acc_sigs, dec, blk = gate_batch_verified_attributed(
-            batch, state, sig=sig_g, checkpoint_blockers=True
-        )
-        acc.write.mode("overwrite").parquet(
-            os.path.join(roots["gate_corpus"], f"batch_id={g}")
-        )
-        acc_sigs.write.mode("overwrite").parquet(
-            os.path.join(roots["gate_state"], f"batch_id={g}")
-        )
-        dec.write.mode("overwrite").parquet(
-            os.path.join(roots["gate_decisions"], f"batch_id={g}")
-        )
-        blk.write.mode("overwrite").parquet(
-            os.path.join(roots["gate_dup_of"], f"batch_id={g}")
-        )
-        if g < 2:
-            state = state.unionByName(acc_sigs).localCheckpoint()
-    # media gate state + decision logs: the media replay's 3 generations
-    # (media_id % 3) in the drain's layout — the catalog's fifth
-    # classification branch (media-modality gate state)
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.multimodal import (
-        ahash_signatures,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
-        _SIG_SCHEMA as _M_SIG_SCHEMA,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
-        gate_media_batch_attributed,
-        media_gate_meta,
-    )
-
-    _cs.stamp_meta(roots["media_gate_state"], media_gate_meta(60, 5))
-    all_media = _mm.media_from_documents(docs)
-    msig_all = ahash_signatures(all_media, n=60).select(
-        F.col("media_id").alias("doc"), "sig"
-    ).localCheckpoint()
-    mstate = local_df(spark, [], _M_SIG_SCHEMA)
-    for g in range(3):
-        mbatch = all_media.filter((F.col("media_id") % 3).cast("int") == g)
-        msig_g = msig_all.filter((F.col("doc") % 3).cast("int") == g)
-        _, m_acc_sigs, mdec, mblk = gate_media_batch_attributed(
-            mbatch, mstate, sig=msig_g, checkpoint_blockers=True
-        )
-        m_acc_sigs.write.mode("overwrite").parquet(
-            os.path.join(roots["media_gate_state"], f"batch_id={g}")
-        )
-        mdec.write.mode("overwrite").parquet(
-            os.path.join(roots["media_gate_decisions"], f"batch_id={g}")
-        )
-        mblk.write.mode("overwrite").parquet(
-            os.path.join(roots["media_gate_dup_of"], f"batch_id={g}")
-        )
-        if g < 2:
-            mstate = mstate.unionByName(m_acc_sigs).localCheckpoint()
+    rows = {
+        "text": (docs, "doc_id"),
+        "media": (_mm.media_from_documents(docs), "media_id"),
+    }
+    for (modality, p), prefix in zip(_ESTATE_GATES, ("gate", "media_gate")):
+        mod = _sg.MODALITIES[modality]
+        batches, id_col = rows[modality]
+        _cs.stamp_meta(roots[f"{prefix}_state"], mod.state.meta(p))
+        sig_all = mod.sign(batches, id_col, "text", p).localCheckpoint()
+        state = local_df(spark, [], mod.state.schema(p))
+        for g in range(3):
+            side = _sg.Side(
+                mod, p, state,
+                sig=sig_all.filter((F.col("doc") % 3).cast("int") == g),
+            )
+            acc, (acc_sigs,), dec, blk = _sg.gate_signatures(
+                batches.filter((F.col(id_col) % 3).cast("int") == g), [side],
+                id_col, checkpoint_blockers=True,
+            )
+            sinks = {"state": acc_sigs, "decisions": dec, "dup_of": blk}
+            if modality == "text":
+                sinks["corpus"] = acc
+            for sink, df in sinks.items():
+                df.write.mode("overwrite").parquet(
+                    os.path.join(roots[f"{prefix}_{sink}"], f"batch_id={g}")
+                )
+            if g < 2:
+                state = state.unionByName(acc_sigs).localCheckpoint()
     # two pins over the admitted corpus: "g01" (generations 0-1) and
     # "all" — the snapshot/ledger/diff/training-mix oracles read these
     from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
@@ -1452,14 +1420,12 @@ def _estate_catalog_sql(
     from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_mm import (
         _media_gate_sig_ctes,
     )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-        VERIFIED_GATE_FORMAT,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.media_gate import (
-        MEDIA_GATE_FORMAT,
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.signature_gate import (
+        MODALITIES as _GATES,
     )
 
     p_text, p_media, p_gate, p_mgate, p_corpus = _estate_params()
+    fmt_text, fmt_media = (_GATES[m].state.fmt for m, _ in _ESTATE_GATES)
     text_pred = (
         f"(vec_id % 3 = 0 OR (vec_id % 3 = 1 AND vec_id < {_EST_APPEND_LT}))"
     )
@@ -1502,7 +1468,7 @@ def _estate_catalog_sql(
              (SELECT COUNT(*) FROM tblk), 3, CAST(NULL AS BIGINT),
              CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
       UNION ALL
-      SELECT 'gate_state', 'gate-state', '{VERIFIED_GATE_FORMAT}', 'text',
+      SELECT 'gate_state', 'gate-state', '{fmt_text}', 'text',
              '{p_gate}',
              (SELECT COUNT(*) FROM adm WHERE doc IN (SELECT doc FROM sig)),
              {gate_dirs}, CAST(NULL AS BIGINT),
@@ -1519,7 +1485,7 @@ def _estate_catalog_sql(
              (SELECT COUNT(*) FROM mblk), 3, CAST(NULL AS BIGINT),
              CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
       UNION ALL
-      SELECT 'media_gate_state', 'gate-state', '{MEDIA_GATE_FORMAT}', 'media',
+      SELECT 'media_gate_state', 'gate-state', '{fmt_media}', 'media',
              '{p_mgate}',
              (SELECT COUNT(*) FROM madm), {gate_dirs}, CAST(NULL AS BIGINT),
              CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)

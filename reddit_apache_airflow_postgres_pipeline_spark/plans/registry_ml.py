@@ -2794,13 +2794,15 @@ def _gate_pairs(sig_all: DataFrame, threshold: float = _GATE_T) -> DataFrame:
     direction), the matching-position estimate disposes at >=
     ``threshold``. The standard LSH batch job: a banded equi-join and an
     output-proportional verify, never a cross join."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming.dedup_gate import (
-        _est_blockers,
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming.signature_gate import (
+        MODALITIES,
+        blockers,
     )
 
     keys = neardup.band_keys_of_signature(sig_all, _GATE_K, _GATE_BANDS)
-    p = _est_blockers(
-        keys, sig_all, keys, sig_all, _GATE_K, threshold, ordered=False
+    p = blockers(
+        MODALITIES["text"], {"num_hashes": _GATE_K, "threshold": threshold},
+        keys, sig_all, keys, sig_all, ordered=False,
     )
     return p.filter(F.col("doc") != F.col("odoc")).select(
         "*", _gen_of("doc").alias("gen_d"), _gen_of("odoc").alias("gen_o")

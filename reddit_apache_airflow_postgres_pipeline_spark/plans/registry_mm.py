@@ -351,7 +351,7 @@ def _media_pairs(sig_all: DataFrame) -> DataFrame:
     cluster hard on them (measured at sf0.1: a 1,198-doc bucket; 7.9M
     collision rows, of which only 21k are within distance) — the
     streaming kernels' distinct-then-join-signatures shape
-    (_ham_blockers), built for state-pruned candidate volumes, would
+    (signature_gate.blockers), built for state-pruned candidate volumes, would
     put the 7.9M rows through a distinct and two joins first (measured
     6.7s for the distinct alone; guide §2.3/§2.5: filter before you
     shuffle, never materialize a hot bucket's quadratic blowup past

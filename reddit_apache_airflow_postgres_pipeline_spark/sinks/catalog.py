@@ -36,10 +36,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     counting_state as _cs,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    dedup_gate as _dg,
-)
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    media_gate as _mg,
+    signature_gate as _sg,
 )
 
 CATALOG_SCHEMA = (
@@ -47,12 +44,6 @@ CATALOG_SCHEMA = (
     "params string, n_rows long, live_dirs int, tombstones long, "
     "n_admitted long, n_rejected long"
 )
-
-_GATE_MODALITY = {
-    _dg.GATE_FORMAT: "text",
-    _dg.VERIFIED_GATE_FORMAT: "text",
-    _mg.MEDIA_GATE_FORMAT: "media",
-}
 
 # the drains stamp their out_dir with this marker
 # (counting_state.stamp_corpus_meta), so the admitted corpus — the
@@ -149,12 +140,12 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
         with open(gmeta_path) as f:
             meta = json.load(f)
         fmt = meta.get("format", "")
-        if fmt == _CORPUS_FORMAT or fmt in _GATE_MODALITY:
+        if fmt == _CORPUS_FORMAT or fmt in _sg.STATES:
             rows = spark.read.parquet(path).count() if _batch_dirs(path) else 0
             if fmt == _CORPUS_FORMAT:
                 category, modality = "corpus", meta.get("modality")
             else:
-                category, modality = "gate-state", _GATE_MODALITY[fmt]
+                category, modality = "gate-state", _sg.STATES[fmt].modality
             return _entry(
                 name, category, fmt, modality, meta, rows,
                 len(_batch_dirs(path)),

@@ -78,20 +78,11 @@ from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
     vector_index as _vi,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    dedup_gate as _dg,
+    signature_gate as _sg,
 )
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    media_gate as _mg,
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    state_subdirs,
 )
-
-# (spark, state_dir, frozen params) -> the store's live rows
-_GATE_LOADERS = {
-    _dg.GATE_FORMAT: lambda sp, sd, params: _dg._load_state(sp, sd),
-    _dg.VERIFIED_GATE_FORMAT: lambda sp, sd, params: _dg._load_sig_state(
-        sp, sd, int(params["num_hashes"])
-    ),
-    _mg.MEDIA_GATE_FORMAT: lambda sp, sd, params: _mg._load_media_state(sp, sd),
-}
 
 _TMP_PREFIX = "_forget_tmp_"
 
@@ -115,18 +106,18 @@ def _erase_gate_state(
     rename, subsumed dirs deleted after. Skips the fold entirely when
     no forgotten row is present (the re-sweep passes' cheap probe).
     Returns rows removed."""
-    full = _GATE_LOADERS[kind](spark, path, params)
+    state = _sg.STATES[kind]
+    full = state.load(spark, path, params)
     removed = full.filter(F.col("doc").isin(ids)).count()
     if removed == 0:
         return 0
     survivors = full.filter(~F.col("doc").isin(ids))
-    all_dirs = _dg._state_subdirs(path)
-    ids_of = {d: int(os.path.basename(d).split("=", 1)[1]) for d in all_dirs}
-    next_gen = min(min(ids_of.values(), default=0), 0) - 1
+    all_dirs = state_subdirs(path)
+    next_gen = min(min(all_dirs.values(), default=0), 0) - 1
     _clean_stray_tmps(path)
     tmp = os.path.join(path, _TMP_PREFIX + "fold")
-    key = "bk" if kind == _dg.GATE_FORMAT else "doc"
-    survivors.distinct().repartition(key).write.mode("overwrite").parquet(tmp)
+    folded = survivors.distinct().repartition(state.key)
+    folded.write.mode("overwrite").parquet(tmp)
     os.replace(tmp, os.path.join(path, f"batch_id={next_gen}"))
     for d in all_dirs:
         shutil.rmtree(d, ignore_errors=True)

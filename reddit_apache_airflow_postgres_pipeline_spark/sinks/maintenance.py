@@ -123,37 +123,17 @@ def _compact_for(spark: SparkSession, row, path: str) -> None:
         vector_index as _vi,
     )
     from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        dedup_gate as _dg,
-    )
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        media_gate as _mg,
+        signature_gate as _sg,
     )
 
     if row["category"] == "vector-index":
         _vi.compact_store(spark, path, row["kind"])
         return
     if row["category"] == "gate-state":
-        if row["kind"] == _dg.VERIFIED_GATE_FORMAT:
-            # the signature fold needs the store's frozen num_hashes —
-            # read it from the same stamped meta the loaders verify
-            # (caught by q_ops_maintenance_fixedpoint: the in-process
-            # loop test only exercised the unverified gate kind)
-            import json
-            import os
-
-            from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-                counting_state as _cs,
-            )
-
-            with open(os.path.join(path, _cs.META)) as f:
-                meta = json.load(f)
-            _dg.compact_sig_state(spark, path, int(meta["num_hashes"]))
-            return
-        folder = {
-            _dg.GATE_FORMAT: _dg.compact_state,
-            _mg.MEDIA_GATE_FORMAT: _mg.compact_media_state,
-        }[row["kind"]]
-        folder(spark, path)
+        # the fold's kind and frozen params come from the store's own
+        # stamped meta (caught by q_ops_maintenance_fixedpoint: a fold
+        # without the signature store's num_hashes cannot read it)
+        _sg.compact_gate_state(spark, path)
         return
     raise ValueError(
         f"COMPACT planned for uncompactable category {row['category']!r} "

@@ -32,7 +32,8 @@ RUN_FULL_TIER = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") == "1"
 # stream-vs-replay parity smoke (test_verified_gate_stream_matches_
 # batch_replay) guarding the replay-restructure surface. Names are
 # matched on file::test (parametrizations included), so a renamed test
-# silently falls back into the default tier — the safe direction.
+# would fall back into the default tier and eat its time window;
+# tests/test_tiers.py fails when an entry names no existing test.
 FULL_TIER_TESTS = {
     "test_dedup_gate.py::test_admission_rate_drift_stream_matches_replay",
     "test_dedup_gate.py::test_bucketed_sig_state_verified_gate_parity",

@@ -6,8 +6,10 @@ from __future__ import annotations
 import os
 
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import dedup_gate
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import signature_gate as sg
 
 SCHEMA = "doc_id long, text string"
+TEXT = sg.MODALITIES["text"]
 
 A = "the quick brown fox jumps over the lazy dog near the river bank today"
 B = "completely different content about spark shuffles and parquet footers"
@@ -287,7 +289,7 @@ def test_gate_verified_admits_bucket_collision_below_threshold(spark):
     )
     assert [r["doc_id"] for r in raw_acc.collect()] == [1]
 
-    state = spark.createDataFrame([], dedup_gate._sig_schema(12))
+    state = spark.createDataFrame([], TEXT.state.schema({"num_hashes": 12}))
     acc, sigs, dec = dedup_gate.gate_batch_verified(batch, state)
     assert sorted(r["doc_id"] for r in acc.collect()) == [1, 2]
     assert sorted(r["doc"] for r in sigs.collect()) == [1, 2]
@@ -560,10 +562,10 @@ def test_bucketed_sig_state_verified_gate_parity(spark, tmp_path):
         spark, inbox, SCHEMA, out, state, ckpt
     )
 
-    keys_t, sigs_t = dedup_gate.bucket_sig_state(
-        spark, state, 12, 4, "t_vgate", str(tmp_path / "bsig"), num_buckets=4
+    keys_t, sigs_t = sg.bucket_gate_state(
+        spark, state, "t_vgate", str(tmp_path / "bsig"), num_buckets=4
     )
-    flat = dedup_gate._load_sig_state(spark, state, 12)
+    flat = TEXT.state.load(spark, state, {"num_hashes": 12})
     batch = spark.createDataFrame(
         [(10, A), (11, "totally new doc text"), (12, BAND_BASE)], SCHEMA
     )
@@ -732,24 +734,24 @@ def test_hybrid_bucketed_drain_parity_refresh_and_fallback(spark, tmp_path):
     assert got_hybrid == got_flat
 
     # the fold refreshed the tables: marker mirrors the newest generation
-    marker = os.path.join(bopt["path"], dedup_gate._BUCKETED_MARKER)
+    marker = os.path.join(bopt["path"], sg.BUCKETED_MARKER)
     with open(marker) as f:
         mirrored = json.load(f)["gen"]
-    assert mirrored == dedup_gate._newest_gen_id(str(tmp_path / "state_hyb"))
+    assert mirrored == sg._newest_gen_id(str(tmp_path / "state_hyb"))
     assert spark.table("t_hybrid_sigs").count() > 0
 
     # stale marker → flat fallback, identical decisions
     with open(marker, "w") as f:
         json.dump({"gen": -999}, f)
     batch = spark.createDataFrame([(9001, A), (9002, "fresh text")], SCHEMA)
-    st, sk = dedup_gate._load_sig_state_hybrid(
-        spark, str(tmp_path / "state_hyb"), 12, 4,
-        bopt["table_prefix"], bopt["path"], before_batch=None,
+    st, sk = sg.load_state(
+        spark, str(tmp_path / "state_hyb"), TEXT,
+        {"num_hashes": 12, "bands": 4}, bucketed=bopt,
     )
     assert sk is None  # fell back to flat
     acc, _, _ = dedup_gate.gate_batch_verified(batch, st)
-    flat_state = dedup_gate._load_sig_state(
-        spark, str(tmp_path / "state_hyb"), 12
+    flat_state = TEXT.state.load(
+        spark, str(tmp_path / "state_hyb"), {"num_hashes": 12}
     )
     acc_flat, _, _ = dedup_gate.gate_batch_verified(batch, flat_state)
     assert sorted(r["doc_id"] for r in acc.collect()) == sorted(
@@ -843,9 +845,9 @@ def test_verified_broadcast_batch_parity_and_no_state_shuffle(spark):
     bsig = minhash_signature(batch, "doc_id", "text", 3, 12).localCheckpoint()
     bkeys = band_keys_of_signature(bsig, 12, 4).localCheckpoint()
     skeys = band_keys_of_signature(state, 12, 4)
-    blk = dedup_gate._est_blockers(
-        bkeys, bsig, skeys, state, 12, 0.5, ordered=False,
-        broadcast_batch=True,
+    blk = sg.blockers(
+        TEXT, {"num_hashes": 12, "threshold": 0.5}, bkeys, bsig, skeys, state,
+        ordered=False, broadcast_batch=True,
     )
     plan = spark._jvm.PythonSQLUtils.explainString(
         blk._jdf.queryExecution(), "formatted"

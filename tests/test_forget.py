@@ -15,10 +15,16 @@ from reddit_apache_airflow_postgres_pipeline_spark.sinks import text_index as ti
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as vi
 from reddit_apache_airflow_postgres_pipeline_spark.sinks.forget import forget
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import dedup_gate
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import signature_gate as sg
 
 DSCHEMA = "doc_id long, text string"
 NORMAL_A = "alpha beta gamma delta " * 10
 NORMAL_B = "epsilon zeta eta theta " * 10
+
+
+def _gate_sigs(spark, path):
+    """The verified gate store's signature rows (k = 12)."""
+    return sg.MODALITIES["text"].state.load(spark, path, {"num_hashes": 12})
 
 
 def _write_file(spark, df, path, age_s=0.0):
@@ -69,7 +75,7 @@ def test_forget_sweeps_every_estate_member(spark, tmp_path):
     assert 1 in {
         r["neighbor_id"] for r in vi.read_codes(spark, roots["ix"]).collect()
     }
-    state = dedup_gate._load_sig_state(spark, roots["gstate"], 12)
+    state = _gate_sigs(spark, roots["gstate"])
     assert 1 in {r["doc"] for r in state.collect()}
     dup = spark.read.parquet(roots["gdup"])
     assert {(r["doc"], r["odoc"]) for r in dup.collect()} == {(31, 1)}
@@ -116,9 +122,7 @@ def test_forget_sweeps_every_estate_member(spark, tmp_path):
     assert vi.index_stats(spark, roots["ix"], "ivfpq")["tombstones"] == 0
     assert 1 not in {
         r["doc"]
-        for r in dedup_gate._load_sig_state(
-            spark, roots["gstate"], 12
-        ).collect()
+        for r in _gate_sigs(spark, roots["gstate"]).collect()
     }
     dec = spark.read.parquet(roots["gdec"])
     assert 1 not in {r["doc"] for r in dec.collect()}
@@ -139,7 +143,7 @@ def test_forget_sweeps_every_estate_member(spark, tmp_path):
         [(41, NORMAL_A), (42, NORMAL_B)], DSCHEMA
     )
     _, _, dec2 = dedup_gate.gate_batch_verified(
-        probe, dedup_gate._load_sig_state(spark, roots["gstate"], 12)
+        probe, _gate_sigs(spark, roots["gstate"])
     )
     got = {r["doc"]: r["admitted"] for r in dec2.collect()}
     assert got == {41: True, 42: False}

@@ -15,11 +15,17 @@ from pyspark.sql import functions as F
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as vi
 from reddit_apache_airflow_postgres_pipeline_spark.sinks.forget import forget
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import dedup_gate
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import signature_gate as sg
 
 DSCHEMA = "doc_id long, text string"
 NORMAL_A = "alpha beta gamma delta " * 10
 NORMAL_B = "epsilon zeta eta theta " * 10
 NORMAL_C = "iota kappa lambda mu " * 10
+
+
+def _gate_sigs(spark, path):
+    """The verified gate store's signature rows (k = 12)."""
+    return sg.MODALITIES["text"].state.load(spark, path, {"num_hashes": 12})
 
 
 def _write_file(spark, df, path, age_s=0.0):
@@ -105,7 +111,7 @@ def test_drain_interleaved_mid_sweep_cannot_resurrect(spark, tmp_path):
     assert 1 not in {
         r["neighbor_id"] for r in vi.read_codes(spark, roots["ix"]).collect()
     }
-    state = dedup_gate._load_sig_state(spark, roots["gstate"], 12)
+    state = _gate_sigs(spark, roots["gstate"])
     assert 1 not in {r["doc"] for r in state.collect()}
     dec = spark.read.parquet(roots["gdec"])
     assert 1 not in {r["doc"] for r in dec.collect()}
@@ -127,7 +133,7 @@ def test_drain_interleaved_mid_sweep_cannot_resurrect(spark, tmp_path):
     # of doc 1 is admissible again (documented erasure consequence)
     _, _, dec2 = dedup_gate.gate_batch_verified(
         spark.createDataFrame([(61, NORMAL_A)], DSCHEMA),
-        dedup_gate._load_sig_state(spark, roots["gstate"], 12),
+        _gate_sigs(spark, roots["gstate"]),
     )
     assert {r["doc"]: r["admitted"] for r in dec2.collect()} == {61: True}
 

@@ -13,16 +13,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators import multimodal as mm
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as cs
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     ingest_pipeline,
     media_gate,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import signature_gate as sg
 
 SF = "/root/testdata/sf0.001"
 MSCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<width:int,height:int,sample_rate:int,n_frames:int,fmt:string>"
 )
+MEDIA = sg.MODALITIES["media"]
 
 
 def _media(spark):
@@ -51,7 +54,7 @@ def test_gate_media_batch_first_wins_and_state(spark):
     )
     other = media.filter(F.col("media_id") == 5)
     batch = m0.unionByName(copy).unionByName(other)
-    state = spark.createDataFrame([], media_gate._SIG_SCHEMA)
+    state = spark.createDataFrame([], MEDIA.state.schema({}))
     acc, sigs, dec = media_gate.gate_media_batch(batch, state)
     got = {r["doc"]: r["admitted"] for r in dec.collect()}
     assert got[0] is True and got[900] is False
@@ -64,6 +67,28 @@ def test_gate_media_batch_first_wins_and_state(spark):
         copy, sigs.filter(F.col("doc") == 0)
     )
     assert acc2.count() == 0
+
+
+def test_gate_media_batch_custom_id_col(spark):
+    """Any id column works: the codec stage reads it as ``media_id``, so
+    a batch keyed ``mid`` gets the same decisions as one keyed
+    ``media_id``."""
+    media = _media(spark)
+    m0 = media.filter(F.col("media_id") == 0)
+    batch = m0.unionByName(
+        m0.select(F.lit(900).alias("media_id"), "kind", "payload", "meta")
+    ).unionByName(media.filter(F.col("media_id") == 5))
+    state = spark.createDataFrame([], "doc long, sig long")
+    got = {}
+    for id_col in ("media_id", "mid"):
+        rows = batch.withColumnRenamed("media_id", id_col)
+        acc, _, dec = media_gate.gate_media_batch(rows, state, id_col=id_col)
+        got[id_col] = (
+            sorted(tuple(r) for r in dec.collect()),
+            sorted(r[id_col] for r in acc.collect()),
+        )
+    assert got["mid"] == got["media_id"]
+    assert got["mid"] == ([(0, True), (5, True), (900, False)], [0, 5])
 
 
 def test_media_gate_stream_matches_batch_replay(spark, tmp_path):
@@ -183,7 +208,7 @@ def test_media_gate_rejects_redelivered_accepted_id(spark):
     prior signature — the cross-state direction keeps the self-pair."""
     media = _media(spark)
     first = media.filter(F.col("media_id").isin(0, 5))
-    state = spark.createDataFrame([], media_gate._SIG_SCHEMA)
+    state = spark.createDataFrame([], MEDIA.state.schema({}))
     _, sigs0, _ = media_gate.gate_media_batch(first, state)
     # re-deliver item 0 verbatim alongside a novel item
     batch = media.filter(F.col("media_id").isin(0, 7))
@@ -264,7 +289,7 @@ def test_media_gate_min_bytes_floor_claims_no_buckets(spark):
     }
     small = next(i for i, n in sorted(sizes.items()) if n < 200)
     big = next(i for i, n in sorted(sizes.items()) if n >= 200)
-    state = spark.createDataFrame([], media_gate._SIG_SCHEMA)
+    state = spark.createDataFrame([], MEDIA.state.schema({}))
     # batch 1: a small item (below floor) — dropped, claims no buckets
     b1 = media.filter(F.col("media_id") == small)
     acc1, sigs1, dec1 = media_gate.gate_media_batch(
@@ -340,6 +365,7 @@ def test_media_bucketed_state_parity(spark, tmp_path):
     attribution as the flat store."""
     media = _media(spark)
     state_dir = str(tmp_path / "mstate")
+    cs.stamp_meta(state_dir, MEDIA.state.meta({"bits": 60, "max_hamming": 5}))
     sigs0 = mm.ahash_signatures(
         media.filter(F.col("media_id") % 2 == 0), n=60
     ).select(F.col("media_id").alias("doc"), "sig")
@@ -347,10 +373,10 @@ def test_media_bucketed_state_parity(spark, tmp_path):
         os.path.join(state_dir, "batch_id=0")
     )
 
-    keys_t, sigs_t = media_gate.bucket_media_state(
-        spark, state_dir, 60, 5, "t_mgate", str(tmp_path / "bm"), num_buckets=4
+    keys_t, sigs_t = sg.bucket_gate_state(
+        spark, state_dir, "t_mgate", str(tmp_path / "bm"), num_buckets=4
     )
-    flat = media_gate._load_media_state(spark, state_dir)
+    flat = MEDIA.state.load(spark, state_dir, {})
     batch = media.filter(F.col("media_id") % 2 == 1).limit(30)
     copy = media.filter(F.col("media_id") == 0).select(
         F.lit(901).alias("media_id"), "kind", "payload", "meta"
@@ -386,8 +412,6 @@ def test_media_hybrid_bucketed_drain_parity_refresh_and_fallback(
     generation; a stale marker falls back to the flat read."""
     import json
 
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import dedup_gate
-
     media = _media(spark)
 
     def _drain(tag, bucketed):
@@ -419,18 +443,18 @@ def test_media_hybrid_bucketed_drain_parity_refresh_and_fallback(
     got_flat = _drain("flat", None)
     assert got_hybrid == got_flat and got_hybrid
 
-    marker = os.path.join(bopt["path"], dedup_gate._BUCKETED_MARKER)
+    marker = os.path.join(bopt["path"], sg.BUCKETED_MARKER)
     with open(marker) as f:
         mirrored = json.load(f)["gen"]
-    assert mirrored == dedup_gate._newest_gen_id(str(tmp_path / "state_hyb"))
+    assert mirrored == sg._newest_gen_id(str(tmp_path / "state_hyb"))
     assert spark.table("t_mhybrid_sigs").count() > 0
 
     # stale marker → flat fallback, identical decisions
     with open(marker, "w") as f:
         json.dump({"gen": -999}, f)
-    st, sk = media_gate._load_media_state_hybrid(
-        spark, str(tmp_path / "state_hyb"), 60, 5,
-        bopt["table_prefix"], bopt["path"], before_batch=None,
+    st, sk = sg.load_state(
+        spark, str(tmp_path / "state_hyb"), MEDIA,
+        {"bits": 60, "max_hamming": 5}, bucketed=bopt,
     )
     assert sk is None
     probe = media.filter(F.col("media_id") == 1).select(
@@ -480,8 +504,9 @@ def test_media_broadcast_batch_parity_and_no_state_shuffle(spark):
     ).localCheckpoint()
     bkeys = signature_band_keys(bsig, 60, 5).localCheckpoint()
     skeys = signature_band_keys(state, 60, 5)
-    blk = media_gate._ham_blockers(
-        bkeys, bsig, skeys, state, 5, ordered=False, broadcast_batch=True
+    blk = sg.blockers(
+        MEDIA, {"max_hamming": 5}, bkeys, bsig, skeys, state, ordered=False,
+        broadcast_batch=True,
     )
     plan = spark._jvm.PythonSQLUtils.explainString(
         blk._jdf.queryExecution(), "formatted"

@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 from reddit_apache_airflow_postgres_pipeline_spark.operators import multimodal as mm
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     dedup_gate,
-    media_gate,
     multimodal_gate,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import signature_gate as sg
 
 SF = "/root/testdata/sf0.001"
 MMSCHEMA = (
@@ -55,8 +55,10 @@ def test_unified_gate_rejects_on_either_modality(spark):
     is admitted — and a rejected doc enters NEITHER state."""
     corpus = _mm_docs(spark)
     base = corpus.filter(F.col("doc_id") == 0)
-    tstate = spark.createDataFrame([], dedup_gate._sig_schema(12))
-    mstate = spark.createDataFrame([], media_gate._SIG_SCHEMA)
+    tstate = spark.createDataFrame(
+        [], sg.MODALITIES["text"].state.schema({"num_hashes": 12})
+    )
+    mstate = spark.createDataFrame([], sg.MODALITIES["media"].state.schema({}))
     _, tsigs, msigs, dec = multimodal_gate.gate_multimodal_batch(
         base, tstate, mstate
     )
@@ -112,8 +114,10 @@ def test_unified_differs_from_independent_gates(spark):
     admitted X, so Y is admitted."""
     corpus = _mm_docs(spark)
     base = corpus.filter(F.col("doc_id") == 0)
-    tstate = spark.createDataFrame([], dedup_gate._sig_schema(12))
-    mstate = spark.createDataFrame([], media_gate._SIG_SCHEMA)
+    tstate = spark.createDataFrame(
+        [], sg.MODALITIES["text"].state.schema({"num_hashes": 12})
+    )
+    mstate = spark.createDataFrame([], sg.MODALITIES["media"].state.schema({}))
     _, tsigs, msigs, _ = multimodal_gate.gate_multimodal_batch(
         base, tstate, mstate
     )
