@@ -1337,7 +1337,7 @@ def _drift_refresh_sql(min_batches: int) -> str:
 def _refresh_counts(spark: SparkSession, sf_dir: str):
     """The refresh chain's two input count relations — frozen ref
     (bin, n) and per-batch (b, bin, n) — as memoized localCheckpoints
-    (the chain_meta contract): the policy pipeline consumes them in
+    (the registry_ingest._meta contract): the policy pipeline consumes them in
     MANY lineage branches (per-batch psi ref+cur sides, admission,
     window, fallback, probe), and without the checkpoint each branch
     re-embeds the corpus scan + tokenize (the judged r7 multi-scan

@@ -2501,7 +2501,7 @@ def _embed_ctes(src: str = "documents", d: int = _EMB_D, n: int = _EMB_N) -> str
 def _text_emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The featurized documents corpus as a checkpointed (vec_id,
     embedding) relation, memoized per (application × sf_dir) — the
-    chain_meta contract: ivfpq_topk consumes its corpus in several
+    registry_ingest._meta contract: ivfpq_topk consumes its corpus in several
     lineage branches (cell training, assignment, PQ training, encode),
     and without the shared checkpoint each branch would re-run the
     tokenize + explode + hash-agg featurization (the judged r7

@@ -53,20 +53,10 @@ def _paths(work_dir: str, names: tuple[str, ...]) -> dict[str, str]:
     return {name: os.path.join(work_dir, name) for name in names}
 
 
-def _run_dedup_stage(
-    spark: SparkSession,
-    schema: str,
-    p: dict[str, str],
-    id_col: str,
-    text_col: str,
-    dedup_policy: str = "bucket",
-    dedup_kwargs: dict | None = None,
-) -> None:
-    """Stage 2 of every chain: the MinHash dedup gate drains the drift
-    gate's admitted dirs into ``accepted/`` — skipped cleanly when no
-    batch was admitted yet. Shared so the chaining contract (the
-    admitted glob, the skip guard, the state/checkpoint wiring) lives
-    in exactly one place across the three chain runners.
+def _dedup_runner(dedup_policy: str) -> Callable[..., None]:
+    """The dedup gate runner ``dedup_policy`` names, checked before any
+    stage runs so a bad policy leaves no drift output or checkpoint
+    behind.
 
     ``dedup_policy`` picks the admission rule: ``"bucket"`` (default,
     the raw band-collision gate — cheapest state, strictest rejects) or
@@ -85,13 +75,28 @@ def _run_dedup_stage(
         raise ValueError(
             f"unknown dedup_policy {dedup_policy!r} (bucket | verified)"
         )
+    if dedup_policy == "bucket":
+        return dedup_gate.run_gate_available_now
+    return dedup_gate.run_verified_gate_available_now
+
+
+def _run_dedup_stage(
+    spark: SparkSession,
+    schema: str,
+    p: dict[str, str],
+    id_col: str,
+    text_col: str,
+    runner: Callable[..., None],
+    dedup_kwargs: dict | None = None,
+) -> None:
+    """Stage 2 of every chain: the MinHash dedup gate (``runner``, from
+    :func:`_dedup_runner`) drains the drift gate's admitted dirs into
+    ``accepted/`` — skipped cleanly when no batch was admitted yet.
+    Shared so the chaining contract (the admitted glob, the skip guard,
+    the state/checkpoint wiring) lives in exactly one place across the
+    chain runners."""
     admitted = _batches(os.path.join(p["drift"], "admitted"))
     if admitted:
-        runner = (
-            dedup_gate.run_gate_available_now
-            if dedup_policy == "bucket"
-            else dedup_gate.run_verified_gate_available_now
-        )
         runner(
             spark,
             admitted,
@@ -245,12 +250,13 @@ def _chain(
     which differ only in stage 1: ``drift_runner`` (the scalar or the
     grouped drift gate, called with ``drift_kwargs``). Drift → dedup →
     sketches over ``accepted/``. Returns the path map."""
+    runner = _dedup_runner(dedup_policy)
     p = _paths(work_dir, _CHAIN_PATHS)
     drift_runner(
         spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
         text_col=text_col, threshold=psi_threshold, **drift_kwargs,
     )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
+    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
     _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
     return p
 
@@ -275,12 +281,13 @@ def _full_chain(
     exactly as :func:`_chain` is: drift → dedup → span gate → sketches
     over the span-cleaned corpus → the optional index stage. Returns
     the path map."""
+    runner = _dedup_runner(dedup_policy)
     p = _paths(work_dir, _FULL_CHAIN_PATHS)
     drift_runner(
         spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
         text_col=text_col, threshold=psi_threshold, **drift_kwargs,
     )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, dedup_policy, dedup_kwargs)
+    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
     _run_span_stage(spark, schema, p, id_col, text_col, span_k)
     _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
     _run_index_stage(spark, p, index_path)

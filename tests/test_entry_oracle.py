@@ -70,7 +70,11 @@ from reddit_apache_airflow_postgres_pipeline_spark.plans.registry import (
 )
 
 _BENCH_NAMES |= set(_hq().keys())
-_FAST = _DRIVER_CHECKED | _BENCH_NAMES
+# the ingest chain's grouped feed: the bench family times only the
+# scalar feed (q_ingest_chain_decisions), so one grouped row keeps the
+# feed table's second row oracle-checked by default
+_FEEDS_CHECKED = {"q_ingest_chain_by_group"}
+_FAST = _DRIVER_CHECKED | _BENCH_NAMES | _FEEDS_CHECKED
 
 
 @pytest.mark.parametrize(

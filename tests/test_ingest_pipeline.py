@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import hll_estimate
@@ -608,3 +609,29 @@ def test_chain_dedup_policy_verified_vs_bucket(spark, tmp_path):
             spark, inbox, SCHEMA, str(tmp_path / "work_verified"), ref,
             dedup_policy="bucket",
         )
+
+
+@pytest.mark.parametrize(
+    "runner",
+    [
+        ingest_pipeline.run_ingest_pipeline_available_now,
+        ingest_pipeline.run_full_ingest_available_now,
+    ],
+    ids=["chain", "full_chain"],
+)
+def test_unknown_dedup_policy_fails_before_stage_one(spark, tmp_path, runner):
+    """A bad ``dedup_policy`` raises before the drift gate drains the
+    inbox: no ``drift/`` output and no drift checkpoint are left behind
+    to be skipped on the corrected re-run."""
+    ref = str(tmp_path / "ref")
+    drift_gate.write_reference(
+        spark.createDataFrame([(i, NORMAL_A) for i in range(10)], SCHEMA), ref
+    )
+    inbox = str(tmp_path / "inbox")
+    os.makedirs(inbox)
+    _write(os.path.join(inbox, "f0.parquet"), [(1, NORMAL_A), (2, NORMAL_B)])
+    work = str(tmp_path / "work")
+    with pytest.raises(ValueError, match="unknown dedup_policy"):
+        runner(spark, inbox, SCHEMA, work, ref, dedup_policy="nope")
+    assert not os.path.exists(os.path.join(work, "drift"))
+    assert not os.path.exists(os.path.join(work, "ckpt_drift"))
