@@ -598,51 +598,98 @@ def psi_drift(ref: DataFrame, cur: DataFrame, bins: int = 10) -> DataFrame:
     )
 
 
-def psi_drift_counts(
-    ref_counts: DataFrame, cur_counts: DataFrame, bins: int = 10
+def _on(
+    left: DataFrame, right: DataFrame, key: tuple[str, ...], how: str = "inner"
 ) -> DataFrame:
-    """:func:`psi_drift` over PRE-AGGREGATED ``(bin, n)`` count
-    relations — the form a persisted reference snapshot should take
-    (≤ bins rows on disk instead of one row per document, so a gate
-    decision never re-scans the validated corpus; ADVICE r5). Same
-    output contract as psi_drift.
-    """
+    """``left`` joined to ``right`` on the feed ``key``; for ``key=()``
+    a cross join — ``right`` is then a one-row global aggregate."""
+    return left.join(right, list(key), how) if key else left.crossJoin(right)
+
+
+def _drift_frame(
+    ref_counts: DataFrame, cur_counts: DataFrame, bins: int, key: tuple[str, ...]
+) -> DataFrame:
+    """(*key, bin, n_ref, n_cur, tr, tc): the drift kernels' shared
+    frame — the ``bins``-row spine crossed with every key value seen on
+    either side, left-joined to both sides' counts, with each side's
+    per-key total (NULL where that side lacks the key). For
+    ``key=()`` the totals are two global aggregates, so the frame has
+    ``bins`` rows even when both sides are empty; with a key, a group
+    absent from both sides has no rows.
+
+    Scale shape: two (keys × bins)-bounded hash-aggs (re-aggregated
+    defensively: shard-merged count relations may carry the same bin
+    more than once), and a keys-row totals relation broadcast across
+    the bins spine — nothing corpus-sized survives the first
+    aggregate."""
     spark = ref_counts.sparkSession
     spine = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
-    # re-aggregate defensively: shard-merged count relations may carry
-    # the same bin more than once; the fold is over ≤ bins·shards rows
-    r = ref_counts.groupBy("bin").agg(F.sum("n").alias("n_ref"))
-    c = cur_counts.groupBy("bin").agg(F.sum("n").alias("n_cur"))
-    tot = r.agg(F.coalesce(F.sum("n_ref"), F.lit(0)).alias("tr")).crossJoin(
-        c.agg(F.coalesce(F.sum("n_cur"), F.lit(0)).alias("tc"))
+    r = ref_counts.groupBy(*key, "bin").agg(F.sum("n").alias("n_ref"))
+    c = cur_counts.groupBy(*key, "bin").agg(F.sum("n").alias("n_cur"))
+    tot = _on(
+        r.groupBy(*key).agg(F.sum("n_ref").alias("tr")),
+        c.groupBy(*key).agg(F.sum("n_cur").alias("tc")),
+        key,
+        "full",
     )
-    eps = F.lit(1e-4)
-
-    def _p(n: str, total: str) -> Column:
-        # an EMPTY snapshot (total 0) floors every bin at eps — "no
-        # evidence", PSI 0 against anything equally floored; the
-        # division is gated so ANSI mode never sees n/0
-        frac = F.when(
-            F.col(total) > 0, F.coalesce(F.col(n), F.lit(0)) / F.col(total)
-        ).otherwise(F.lit(0.0))
-        return F.round(F.greatest(frac, eps), 6)
-
-    p_ref = _p("n_ref", "tr")
-    p_cur = _p("n_cur", "tc")
+    on = [*key, "bin"]
     return (
-        spine.join(r, "bin", "left")
-        .join(c, "bin", "left")
-        .crossJoin(F.broadcast(tot))
+        spine.crossJoin(F.broadcast(tot))
+        .join(r, on, "left")
+        .join(c, on, "left")
         .select(
-            "bin",
+            *on,
             F.coalesce(F.col("n_ref"), F.lit(0)).cast("bigint").alias("n_ref"),
             F.coalesce(F.col("n_cur"), F.lit(0)).cast("bigint").alias("n_cur"),
-            p_ref.alias("p_ref"),
-            p_cur.alias("p_cur"),
-            F.round(
-                (p_cur - p_ref) * F.log(p_cur / p_ref), 6
-            ).alias("psi_term"),
+            "tr",
+            "tc",
         )
+    )
+
+
+def _share(num: Column, total: str) -> Column:
+    """``num / total``, 0 where the total is NULL or 0 — an EMPTY
+    snapshot is "no evidence"; the division is gated so ANSI mode never
+    sees n/0."""
+    return F.when(
+        F.coalesce(F.col(total), F.lit(0)) > 0, num / F.col(total)
+    ).otherwise(F.lit(0.0))
+
+
+def psi_drift_counts(
+    ref_counts: DataFrame,
+    cur_counts: DataFrame,
+    bins: int = 10,
+    key: tuple[str, ...] = (),
+) -> DataFrame:
+    """:func:`psi_drift` over PRE-AGGREGATED ``(*key, bin, n)`` count
+    relations — the form a persisted reference snapshot should take
+    (≤ bins rows per key value on disk instead of one row per document,
+    so a gate decision never re-scans the validated corpus; ADVICE r5).
+    Output, one row per (key value × bin):
+
+        (*key, bin, n_ref, n_cur, p_ref, p_cur, psi_term)
+
+    ``key=()`` is one pooled feed: the psi_drift contract, ``bins``
+    rows always (an empty side floors every bin at epsilon). A key
+    judges each feed (language, source) against ITS OWN reference,
+    because a pooled PSI washes out a single feed going bad (a 2%
+    source can drift to garbage while the pooled distribution barely
+    moves). Totals are per key value; a feed absent from one side
+    floors that side's every bin at epsilon (an unknown feed is "all
+    bins empty", maximally drifted against any occupied reference —
+    the conservative admission default)."""
+    eps = F.lit(1e-4)
+    p_ref = F.round(F.greatest(_share(F.col("n_ref"), "tr"), eps), 6)
+    p_cur = F.round(F.greatest(_share(F.col("n_cur"), "tc"), eps), 6)
+    return _drift_frame(ref_counts, cur_counts, bins, key).select(
+        *key,
+        "bin",
+        "n_ref",
+        "n_cur",
+        p_ref.alias("p_ref"),
+        p_cur.alias("p_cur"),
+        F.round((p_cur - p_ref) * F.log(p_cur / p_ref), 6).alias("psi_term"),
     )
 
 
@@ -652,283 +699,101 @@ def refreshed_reference_counts(
     window: int = 5,
     min_batches: int = 3,
     batch_col: str = "b",
+    key: tuple[str, ...] = (),
 ) -> DataFrame:
     """The drift gate's re-baselining policy as a pure relation: given
-    the per-ADMITTED-batch binned counts ``(batch, bin, n)`` and the
-    frozen reference ``(bin, n)``, return the new reference —
+    the per-ADMITTED-batch binned counts ``(*key, batch, bin, n)`` and
+    the frozen reference ``(*key, bin, n)``, return the new reference
+    — per key value (each feed re-baselines independently):
 
     * the summed counts of the NEWEST ``window`` admitted batches,
       when at least ``min_batches`` of them exist (the hysteresis: a
       gate that has been quarantining nearly everything must not
       re-baseline from the trickle that got through);
-    * the frozen reference UNCHANGED otherwise.
+    * the frozen reference UNCHANGED otherwise — including a feed with
+      NO admitted batches (one feed in a quarantine storm neither
+      blocks the healthy feeds' re-baseline nor poisons its own).
 
-    Fully declarative — the batch-id top-``window`` is a ≤window-row
-    sorted limit, the switch is a 1-row scalar cross-join — so the
-    registry query replays it in ANSI SQL and the streaming
-    :func:`drift_gate.refresh_reference` shares the exact policy.
-    Every relation here is bins-sized or window-sized; nothing
-    corpus-shaped survives past the input counts."""
+    Fully declarative, so the registry queries replay it in ANSI SQL
+    and :func:`drift_gate.refresh_reference` shares the exact policy.
+    The newest-window pick is a ≤window-row sorted limit for
+    ``key=()`` (no partition-less window) and a per-key row_number
+    otherwise; the switch is a broadcast keys-row join (a 1-row scalar
+    cross join for ``key=()``). Every relation here is bins-, keys- or
+    window-sized; nothing corpus-shaped survives past the input
+    counts."""
     if window <= 0 or min_batches <= 0:
         raise ValueError(
             f"window and min_batches must be positive, got {window}, "
             f"{min_batches}"
         )
+    b = batch_col
+    batches = batch_counts.select(*key, b).distinct()
     newest = (
-        batch_counts.select(batch_col)
-        .distinct()
-        .orderBy(F.desc(batch_col))
-        .limit(window)
-    )
-    in_win = batch_counts.join(F.broadcast(newest), batch_col)
-    cand = in_win.groupBy("bin").agg(F.sum("n").cast("bigint").alias("n"))
-    nwin = in_win.agg(
-        F.countDistinct(batch_col).cast("bigint").alias("__nb")
-    )
-    take_new = cand.crossJoin(F.broadcast(nwin)).filter(
-        F.col("__nb") >= min_batches
-    )
-    keep_old = ref_counts.select(
-        "bin", F.col("n").cast("bigint").alias("n")
-    ).crossJoin(F.broadcast(nwin)).filter(F.col("__nb") < min_batches)
-    return take_new.select("bin", "n").unionAll(keep_old.select("bin", "n"))
-
-
-def refreshed_reference_counts_by_group(
-    batch_counts: DataFrame,
-    ref_counts: DataFrame,
-    window: int = 5,
-    min_batches: int = 3,
-    group_col: str = "grp",
-    batch_col: str = "b",
-) -> DataFrame:
-    """:func:`refreshed_reference_counts` PER GROUP — each feed
-    re-baselines independently: given admitted per-batch counts
-    ``(group, batch, bin, n)`` and the frozen grouped reference
-    ``(group, bin, n)``, a group whose newest ``window`` admitted
-    batches number at least ``min_batches`` gets their summed counts
-    as its new reference; every other group (including groups with NO
-    admitted batches — e.g. one feed in a quarantine storm) keeps its
-    frozen rows unchanged. This is the property the scalar form can't
-    give a multi-source ingest: one drifting feed must not block the
-    healthy feeds' re-baseline, and a feed that got (almost) nothing
-    admitted must not poison its own reference.
-
-    Scale shape: the newest-window pick is a per-group row_number over
-    the ≤(groups × batches) distinct relation, the switch is a
-    groups-row join — nothing corpus-shaped, no global window."""
-    from pyspark.sql import Window
-
-    if window <= 0 or min_batches <= 0:
-        raise ValueError(
-            f"window and min_batches must be positive, got {window}, "
-            f"{min_batches}"
+        batches.withColumn(
+            "__rn",
+            F.row_number().over(Window.partitionBy(*key).orderBy(F.desc(b))),
         )
-    g, b = group_col, batch_col
-    win = Window.partitionBy(g).orderBy(F.desc(b))
-    newest = (
-        batch_counts.select(g, b)
-        .distinct()
-        .withColumn("__rn", F.row_number().over(win))
         .filter(F.col("__rn") <= window)
         .drop("__rn")
+        if key
+        else batches.orderBy(F.desc(b)).limit(window)
     )
-    in_win = batch_counts.join(newest, [g, b])
-    cand = in_win.groupBy(g, "bin").agg(
-        F.sum("n").cast("bigint").alias("n")
+    in_win = batch_counts.join(F.broadcast(newest), [*key, b])
+    cand = in_win.groupBy(*key, "bin").agg(F.sum("n").cast("bigint").alias("n"))
+    nwin = F.broadcast(
+        in_win.groupBy(*key).agg(F.countDistinct(b).cast("bigint").alias("__nb"))
     )
-    nwin = in_win.groupBy(g).agg(
-        F.countDistinct(b).cast("bigint").alias("__nb")
-    )
-    take_new = (
-        cand.join(nwin, g)
-        .filter(F.col("__nb") >= min_batches)
-        .select(g, "bin", "n")
-    )
-    keep_old = (
-        ref_counts.select(g, "bin", F.col("n").cast("bigint").alias("n"))
-        .join(nwin, g, "left")
-        .filter(F.coalesce(F.col("__nb"), F.lit(0)) < min_batches)
-        .select(g, "bin", "n")
-    )
-    return take_new.unionAll(keep_old)
-
-
-def psi_drift_counts_by_group(
-    ref_counts: DataFrame,
-    cur_counts: DataFrame,
-    group_col: str = "grp",
-    bins: int = 10,
-) -> DataFrame:
-    """:func:`psi_drift_counts` PER GROUP — the form a multi-source
-    ingest actually needs: each language/source/feed is monitored
-    against ITS OWN frozen reference distribution, because a global PSI
-    washes out a single feed going bad (a 2% source can drift to
-    garbage while the pooled distribution barely moves). Inputs are
-    ``(group, bin, n)`` count relations; output is one row per
-    (observed group × bin):
-
-        (group, bin, n_ref, n_cur, p_ref, p_cur, psi_term)
-
-    Same contract as the ungrouped form — 1e-4 probability smoothing,
-    6-dp rounding, per-GROUP totals in the denominators; a group absent
-    from one side floors that side's every bin at epsilon (an unknown
-    feed is "all bins empty", maximally drifted against any occupied
-    reference — the conservative admission default).
-
-    Scale shape: two (groups × bins)-bounded hash-aggs, a groups-row
-    total join, and a bins-row broadcast spine — per-group cumsum-free,
-    nothing corpus-sized survives the first aggregate; groups partition
-    the work so no single-partition step appears at ANY group count.
-    """
-    spark = ref_counts.sparkSession
-    bspine = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
-    g = group_col
-    r = ref_counts.groupBy(g, "bin").agg(F.sum("n").alias("n_ref"))
-    c = cur_counts.groupBy(g, "bin").agg(F.sum("n").alias("n_cur"))
-    groups = r.select(g).unionAll(c.select(g)).distinct()
-    tots = (
-        groups.join(
-            r.groupBy(g).agg(F.sum("n_ref").alias("tr")), g, "left"
-        ).join(c.groupBy(g).agg(F.sum("n_cur").alias("tc")), g, "left")
-    )
-    spine = tots.join(F.broadcast(bspine))
-    eps = F.lit(1e-4)
-
-    def _p(n: str, total: str) -> Column:
-        frac = F.when(
-            F.coalesce(F.col(total), F.lit(0)) > 0,
-            F.coalesce(F.col(n), F.lit(0)) / F.col(total),
-        ).otherwise(F.lit(0.0))
-        return F.round(F.greatest(frac, eps), 6)
-
-    p_ref = _p("n_ref", "tr")
-    p_cur = _p("n_cur", "tc")
-    return (
-        spine.join(r, [g, "bin"], "left")
-        .join(c, [g, "bin"], "left")
-        .select(
-            g,
-            "bin",
-            F.coalesce(F.col("n_ref"), F.lit(0)).cast("bigint").alias("n_ref"),
-            F.coalesce(F.col("n_cur"), F.lit(0)).cast("bigint").alias("n_cur"),
-            p_ref.alias("p_ref"),
-            p_cur.alias("p_cur"),
-            F.round((p_cur - p_ref) * F.log(p_cur / p_ref), 6).alias(
-                "psi_term"
-            ),
-        )
-    )
+    cols = [*key, "bin", "n"]
+    take_new = _on(cand, nwin, key).filter(F.col("__nb") >= min_batches)
+    keep_old = _on(
+        ref_counts.select(*key, "bin", F.col("n").cast("bigint").alias("n")),
+        nwin,
+        key,
+        "left",
+    ).filter(F.coalesce(F.col("__nb"), F.lit(0)) < min_batches)
+    return take_new.select(cols).unionAll(keep_old.select(cols))
 
 
 def ks_drift_counts(
-    ref_counts: DataFrame, cur_counts: DataFrame, bins: int = 10
+    ref_counts: DataFrame,
+    cur_counts: DataFrame,
+    bins: int = 10,
+    key: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Kolmogorov–Smirnov drift over pre-aggregated ``(bin, n)`` count
-    relations — the companion to :func:`psi_drift_counts` for the
+    """Kolmogorov–Smirnov drift over pre-aggregated ``(*key, bin, n)``
+    count relations — the companion to :func:`psi_drift_counts` for the
     drift signals PSI under-weights: PSI scores per-bin density RATIO
     (loud on tail bins, quiet on a small uniform shift of the whole
     mass), the KS statistic max|CDF_ref − CDF_cur| scores the worst
     cumulative displacement, which is exactly what a location shift
-    produces. Output, one row per bin:
+    produces. Output, one row per (key value × bin), with the same key
+    semantics as psi_drift_counts:
 
-        (bin, n_ref, n_cur, cdf_ref, cdf_cur, ks_term)
+        (*key, bin, n_ref, n_cur, cdf_ref, cdf_cur, ks_term)
 
     with cdf_* the cumulative fraction through that bin (6dp; an empty
     snapshot's CDF is all-zero — "no evidence") and ks_term =
-    |cdf_cur − cdf_ref| (6dp). max(ks_term) is the alerting metric —
-    no smoothing needed because CDFs never divide by a bin count.
+    |cdf_cur − cdf_ref| (6dp). max(ks_term) per key value is the
+    alerting metric — no smoothing needed because CDFs never divide by
+    a bin count.
 
-    Scale shape: ≤ bins·shards rows past the first aggregate; the
-    cumsum window runs over the bins-row spine (bounded, declared)."""
-    from pyspark.sql import Window
-
-    spark = ref_counts.sparkSession
-    spine = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
-    r = ref_counts.groupBy("bin").agg(F.sum("n").alias("n_ref"))
-    c = cur_counts.groupBy("bin").agg(F.sum("n").alias("n_cur"))
-    tot = r.agg(F.coalesce(F.sum("n_ref"), F.lit(0)).alias("tr")).crossJoin(
-        c.agg(F.coalesce(F.sum("n_cur"), F.lit(0)).alias("tc"))
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-
-    def _cdf(n: str, total: str) -> Column:
-        cum = F.sum(F.coalesce(F.col(n), F.lit(0))).over(w)
-        return F.round(
-            F.when(F.col(total) > 0, cum / F.col(total)).otherwise(F.lit(0.0)),
-            6,
-        )
-
-    cdf_ref, cdf_cur = _cdf("n_ref", "tr"), _cdf("n_cur", "tc")
-    return (
-        spine.join(r, "bin", "left")
-        .join(c, "bin", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "bin",
-            F.coalesce(F.col("n_ref"), F.lit(0)).cast("bigint").alias("n_ref"),
-            F.coalesce(F.col("n_cur"), F.lit(0)).cast("bigint").alias("n_cur"),
-            cdf_ref.alias("cdf_ref"),
-            cdf_cur.alias("cdf_cur"),
-            F.round(F.abs(cdf_cur - cdf_ref), 6).alias("ks_term"),
-        )
-    )
-
-
-def ks_drift_counts_by_group(
-    ref_counts: DataFrame,
-    cur_counts: DataFrame,
-    group_col: str = "grp",
-    bins: int = 10,
-) -> DataFrame:
-    """:func:`ks_drift_counts` PER GROUP (the
-    psi_drift_counts_by_group posture: each feed judged against its
-    own frozen reference; a group absent from one side gets an
-    all-zero CDF on that side, maximally displaced against any
-    occupied reference). Output: (group, bin, n_ref, n_cur, cdf_ref,
-    cdf_cur, ks_term); max(ks_term) per group is the gate metric.
-    The cumsum window is PARTITIONED by group — bins rows per
-    partition, so no global-window bottleneck at any group count."""
-    from pyspark.sql import Window
-
-    spark = ref_counts.sparkSession
-    bspine = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
-    g = group_col
-    r = ref_counts.groupBy(g, "bin").agg(F.sum("n").alias("n_ref"))
-    c = cur_counts.groupBy(g, "bin").agg(F.sum("n").alias("n_cur"))
-    groups = r.select(g).unionAll(c.select(g)).distinct()
-    tots = (
-        groups.join(
-            r.groupBy(g).agg(F.sum("n_ref").alias("tr")), g, "left"
-        ).join(c.groupBy(g).agg(F.sum("n_cur").alias("tc")), g, "left")
-    )
-    spine = tots.join(F.broadcast(bspine))
-    w = Window.partitionBy(g).orderBy("bin").rowsBetween(
+    Scale shape: the cumsum window is partitioned by the key — bins
+    rows per partition; for ``key=()`` it runs over the bins-row spine
+    (bounded, declared)."""
+    w = Window.partitionBy(*key).orderBy("bin").rowsBetween(
         Window.unboundedPreceding, 0
     )
-
-    def _cdf(n: str, total: str) -> Column:
-        cum = F.sum(F.coalesce(F.col(n), F.lit(0))).over(w)
-        return F.round(
-            F.when(
-                F.coalesce(F.col(total), F.lit(0)) > 0, cum / F.col(total)
-            ).otherwise(F.lit(0.0)),
-            6,
-        )
-
-    cdf_ref, cdf_cur = _cdf("n_ref", "tr"), _cdf("n_cur", "tc")
-    return (
-        spine.join(r, [g, "bin"], "left")
-        .join(c, [g, "bin"], "left")
-        .select(
-            g,
-            "bin",
-            F.coalesce(F.col("n_ref"), F.lit(0)).cast("bigint").alias("n_ref"),
-            F.coalesce(F.col("n_cur"), F.lit(0)).cast("bigint").alias("n_cur"),
-            cdf_ref.alias("cdf_ref"),
-            cdf_cur.alias("cdf_cur"),
-            F.round(F.abs(cdf_cur - cdf_ref), 6).alias("ks_term"),
-        )
+    cdf_ref = F.round(_share(F.sum("n_ref").over(w), "tr"), 6)
+    cdf_cur = F.round(_share(F.sum("n_cur").over(w), "tc"), 6)
+    return _drift_frame(ref_counts, cur_counts, bins, key).select(
+        *key,
+        "bin",
+        "n_ref",
+        "n_cur",
+        cdf_ref.alias("cdf_ref"),
+        cdf_cur.alias("cdf_cur"),
+        F.round(F.abs(cdf_cur - cdf_ref), 6).alias("ks_term"),
     )
 
 

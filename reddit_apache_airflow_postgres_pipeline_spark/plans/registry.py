@@ -24,6 +24,8 @@ plans — Catalyst chooses the physical strategy (verify with
 
 from __future__ import annotations
 
+import importlib
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -43,6 +45,7 @@ class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     headline: bool = False  # included in bench.py
+    module: str = __name__  # the registry module whose import registered it
 
 
 def _dec(col, scale: int = 2):
@@ -65,7 +68,12 @@ SPECS: list[QuerySpec] = []
 
 def _q(name: str, oracle: str | None, headline: bool = False):
     def deco(fn):
-        SPECS.append(QuerySpec(name, fn, oracle, headline))
+        # the innermost module body on the stack registers the row: a
+        # factory in one registry module may build rows for another
+        f = sys._getframe(1)
+        while f.f_code.co_name != "<module>":
+            f = f.f_back
+        SPECS.append(QuerySpec(name, fn, oracle, headline, f.f_globals["__name__"]))
         return fn
 
     return deco
@@ -2702,20 +2710,34 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Accessors (import registry_ml for its registration side effects)
+# Accessors (import the sub-registries for their registration side effects)
 # ---------------------------------------------------------------------------
+
+# the modules registering query rows, in queries() order
+_MODULES = (
+    "registry",
+    "registry_curation",
+    "registry_ingest",
+    "registry_ml",
+    "registry_mm",
+    "registry_stats",
+    "registry_tpch",
+    "registry_ts",
+)
 
 
 def all_specs() -> list[QuerySpec]:
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_curation  # noqa: F401  (registers SPECS)
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest  # noqa: F401  (registers SPECS)
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ml  # noqa: F401  (registers SPECS)
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_mm  # noqa: F401  (registers SPECS)
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_stats  # noqa: F401  (registers SPECS)
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_tpch  # noqa: F401  (registers SPECS)
-    import reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ts  # noqa: F401  (registers SPECS)
-
-    return list(SPECS)
+    """Every registered query: this module's rows first, then each
+    sub-registry's in ``_MODULES`` order, each module's rows in the
+    order it registers them. A sub-registry appends to ``SPECS`` when a
+    process first imports it (they import each other mid-file), so the
+    raw list order depends on which module the caller imported first;
+    ranking by the registering module makes it depend on the code
+    alone."""
+    rank = {f"{__package__}.{m}": i for i, m in enumerate(_MODULES)}
+    for m in _MODULES[1:]:
+        importlib.import_module(f"{__package__}.{m}")
+    return sorted(SPECS, key=lambda s: rank[s.module])
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

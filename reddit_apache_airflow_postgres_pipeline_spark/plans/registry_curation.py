@@ -845,12 +845,12 @@ def q_corpus_psi_drift_by_group(
     """Per-LANGUAGE PSI drift between the even-id snapshot (reference)
     and the odd-id snapshot (current) — each language judged against
     its own token-length distribution via
-    curation.psi_drift_counts_by_group, the monitor form a multi-source
+    curation.psi_drift_counts keyed by lang, the monitor form a multi-source
     100 TB ingest needs: a single feed drifting to garbage moves its
     own group's PSI immediately where the pooled q_corpus_psi_drift
     barely twitches. Output grain (lang, bin); Σ psi_term per lang is
     each feed's alerting metric. The streaming form
-    (drift_gate.run_group_drift_gate_available_now) quarantines only
+    (drift_gate.run_drift_gate_available_now, group_col="lang") quarantines only
     the drifted groups' rows."""
     from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import token_count
 
@@ -870,9 +870,7 @@ def q_corpus_psi_drift_by_group(
             .agg(F.count("*").cast("bigint").alias("n"))
         )
 
-    return curation.psi_drift_counts_by_group(
-        counts(0), counts(1), "lang", bins=10
-    )
+    return curation.psi_drift_counts(counts(0), counts(1), bins=10, key=("lang",))
 
 
 _SPAN_K = 8  # duplicated-substring grain (tokens)
@@ -1235,7 +1233,7 @@ def q_corpus_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_corpus_ks_drift_by_group(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Per-LANGUAGE KS drift (curation.ks_drift_counts_by_group): each
+    """Per-LANGUAGE KS drift (curation.ks_drift_counts keyed by lang): each
     feed's token-length CDF displacement against its own frozen
     reference — the location-shift detector the grouped PSI monitor
     under-weights, at the same (lang, bin) grain so the two gates
@@ -1258,7 +1256,7 @@ def q_corpus_ks_drift_by_group(
             .agg(F.count("*").cast("bigint").alias("n"))
         )
 
-    return curation.ks_drift_counts_by_group(counts(0), counts(1), "lang", bins=10)
+    return curation.ks_drift_counts(counts(0), counts(1), bins=10, key=("lang",))
 
 
 # ---------------------------------------------------------------------------
@@ -1334,9 +1332,13 @@ def _drift_refresh_sql(min_batches: int) -> str:
     """
 
 
-def _refresh_counts(spark: SparkSession, sf_dir: str):
-    """The refresh chain's two input count relations — frozen ref
-    (bin, n) and per-batch (b, bin, n) — as memoized localCheckpoints
+def _refresh_counts(
+    spark: SparkSession, sf_dir: str, key: tuple[str, ...] = ()
+):
+    """The refresh chain's input count relations — frozen ref
+    (*key, bin, n), per-batch (*key, b, bin, n) and the ADMITTED
+    per-batch counts (each (feed, batch) judged against its feed's
+    frozen ref) — as memoized localCheckpoints
     (the registry_ingest._meta contract): the policy pipeline consumes them in
     MANY lineage branches (per-batch psi ref+cur sides, admission,
     window, fallback, probe), and without the checkpoint each branch
@@ -1359,40 +1361,48 @@ def _refresh_counts(spark: SparkSession, sf_dir: str):
         d = load_table(spark, sf_dir, "documents")
         binned = d.select(
             "doc_id",
+            *key,
             F.least((token_count("text") / 20).cast("int"), F.lit(9)).alias(
                 "bin"
             ),
         )
         ref0 = (
             binned.filter(F.col("doc_id") % 2 == 0)
-            .groupBy("bin")
+            .groupBy(*key, "bin")
             .agg(F.count("*").cast("bigint").alias("n"))
             .localCheckpoint()
         )
         bt = (
             binned.filter(F.col("doc_id") % 2 == 1)
             .withColumn("b", F.expr("(doc_id div 2) % 5"))
-            .groupBy("b", "bin")
+            .groupBy(*key, "b", "bin")
             .agg(F.count("*").cast("bigint").alias("n"))
             .localCheckpoint()
         )
-        refg = (
-            bt.select("b").distinct()
-            .crossJoin(F.broadcast(ref0))
-            .select("b", "bin", "n")
-        )
-        psib = (
-            curation.psi_drift_counts_by_group(
-                refg, bt, group_col="b", bins=10
-            )
-            .groupBy("b")
-            .agg(F.round(F.sum("psi_term"), 6).alias("psi"))
-        )
-        adm = psib.filter(F.col("psi") <= 0.25).select("b")
-        admc = bt.join(F.broadcast(adm), "b").localCheckpoint()
+        admc = _admitted_counts(ref0, bt, key, 10, 0.25).localCheckpoint()
         return ref0, bt, admc
 
-    return _memo_replay(spark, sf_dir, "drift-refresh-counts", build)
+    kind = "-".join(("drift-refresh-counts", *key))
+    return _memo_replay(spark, sf_dir, kind, build)
+
+
+def _admitted_counts(
+    ref0: DataFrame, bt: DataFrame, key: tuple[str, ...], bins: int, threshold: float
+) -> DataFrame:
+    """(*key, b, bin, n): the batch counts ``bt`` whose PSI against
+    their feed's frozen reference ``ref0`` (*key, bin, n) is at most
+    ``threshold`` — the gate's admission replayed with (*key, b) as the
+    kernel key, so each (feed, batch) is judged alone."""
+    kb = [*key, "b"]
+    refs = bt.select(kb).distinct().join(F.broadcast(ref0), list(key) or None)
+    adm = (
+        curation.psi_drift_counts(refs, bt, bins=bins, key=tuple(kb))
+        .groupBy(kb)
+        .agg(F.round(F.sum("psi_term"), 6).alias("psi"))
+        .filter(F.col("psi") <= threshold)
+        .select(kb)
+    )
+    return bt.join(F.broadcast(adm), kb).select(*kb, "bin", "n")
 
 
 def _drift_refresh_pipeline(
@@ -1490,70 +1500,12 @@ def _group_refresh_sql(min_batches: int) -> str:
     """
 
 
-def _group_refresh_counts(spark: SparkSession, sf_dir: str):
-    """Grouped twin of _refresh_counts: checkpointed (lang, bin, n)
-    frozen reference and (lang, b, bin, n) ADMITTED batch counts,
-    memoized per (application × sf_dir) — same persisted-state
-    rationale (the real gate's reference file and admitted dirs),
-    same plan-explosion avoidance. Admission runs the grouped PSI
-    contract on a composite (lang:b) key so each (feed, batch) is
-    judged against the feed's own reference."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import token_count
-    from reddit_apache_airflow_postgres_pipeline_spark.plans.registry_ingest import _memo_replay
-
-    def build():
-        d = load_table(spark, sf_dir, "documents")
-        binned = d.select(
-            "doc_id",
-            "lang",
-            F.least((token_count("text") / 20).cast("int"), F.lit(9)).alias(
-                "bin"
-            ),
-        )
-        ref0 = (
-            binned.filter(F.col("doc_id") % 2 == 0)
-            .groupBy("lang", "bin")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .localCheckpoint()
-        )
-        bt = (
-            binned.filter(F.col("doc_id") % 2 == 1)
-            .withColumn("b", F.expr("(doc_id div 2) % 5"))
-            .groupBy("lang", "b", "bin")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .localCheckpoint()
-        )
-        key = F.concat_ws(":", "lang", F.col("b").cast("string"))
-        bset = bt.select("lang", "b").distinct()
-        refk = (
-            bset.join(ref0, "lang")
-            .select(key.alias("__k"), "bin", "n")
-        )
-        btk = bt.select(key.alias("__k"), "lang", "b", "bin", "n")
-        psib = (
-            curation.psi_drift_counts_by_group(
-                refk, btk.select("__k", "bin", "n"), group_col="__k", bins=10
-            )
-            .groupBy("__k")
-            .agg(F.round(F.sum("psi_term"), 6).alias("psi"))
-        )
-        adm = psib.filter(F.col("psi") <= 0.25).select("__k")
-        admc = (
-            btk.join(F.broadcast(adm), "__k")
-            .select("lang", "b", "bin", "n")
-            .localCheckpoint()
-        )
-        return ref0, admc
-
-    return _memo_replay(spark, sf_dir, "drift-refresh-counts-grouped", build)
-
-
 def _group_refresh_pipeline(
     spark: SparkSession, sf_dir: str, min_batches: int
 ) -> DataFrame:
-    ref0, admc = _group_refresh_counts(spark, sf_dir)
-    return curation.refreshed_reference_counts_by_group(
-        admc, ref0, window=3, min_batches=min_batches, group_col="lang"
+    ref0, _, admc = _refresh_counts(spark, sf_dir, ("lang",))
+    return curation.refreshed_reference_counts(
+        admc, ref0, window=3, min_batches=min_batches, key=("lang",)
     )
 
 
@@ -1561,8 +1513,8 @@ def _group_refresh_pipeline(
 def q_drift_ref_refresh_by_group(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Per-feed re-baselining (curation.refreshed_reference_counts_by_
-    group, the drift_gate.refresh_group_reference policy): each lang's
+    """Per-feed re-baselining (curation.refreshed_reference_counts
+    keyed by lang, the drift_gate.refresh_reference policy): each lang's
     batches are PSI-admitted against that lang's own frozen reference,
     and each lang whose newest-3 admitted batches number ≥ 2 gets a
     fresh (bin, n) reference from them — langs that don't (e.g. a feed
@@ -1768,7 +1720,7 @@ def _feed_psi(ref: DataFrame, cur: DataFrame, out: str) -> DataFrame:
     """(feed, <out>): total per-feed PSI of ``cur`` against ``ref`` —
     one grouped-PSI pass reduced to the per-feed scalar."""
     return (
-        curation.psi_drift_counts_by_group(ref, cur, group_col="feed", bins=5)
+        curation.psi_drift_counts(ref, cur, bins=5, key=("feed",))
         .groupBy("feed")
         .agg(F.round(F.sum("psi_term"), 6).alias(out))
     )
@@ -1781,7 +1733,7 @@ def q_drift_refresh_regate_by_group(
     """The composed admission loop the refresh machinery exists FOR,
     pinned end to end (r10 verdict #5): per-feed gate over 4 drifting
     batches → per-feed windowed refresh with hysteresis
-    (curation.refreshed_reference_counts_by_group, window=3,
+    (curation.refreshed_reference_counts keyed by feed, window=3,
     min_batches=2) → re-gate the NEXT batch against BOTH references.
     Output per feed: (psi_frozen, psi_refreshed, admitted_frozen,
     admitted_refreshed). On this fixture the ``en`` feed's probe is
@@ -1793,23 +1745,9 @@ def q_drift_refresh_regate_by_group(
     and hysteresis are joins on feeds-row relations — nothing
     corpus-shaped survives the first aggregates."""
     ref0, bt, probe = _regate_counts(spark, sf_dir)
-    # admission of each (feed, batch) against the feed's frozen ref:
-    # grouped PSI on a composite feed:b key (each batch judged alone)
-    key = F.concat_ws(":", "feed", F.col("b").cast("string"))
-    bset = bt.select("feed", "b").distinct()
-    refk = bset.join(ref0, "feed").select(key.alias("__k"), "bin", "n")
-    btk = bt.select(key.alias("__k"), "feed", "b", "bin", "n")
-    psib = (
-        curation.psi_drift_counts_by_group(
-            refk, btk.select("__k", "bin", "n"), group_col="__k", bins=5
-        )
-        .groupBy("__k")
-        .agg(F.round(F.sum("psi_term"), 6).alias("psi"))
-    )
-    adm = psib.filter(F.col("psi") <= _REGATE_ADM_T).select("__k")
-    admc = btk.join(F.broadcast(adm), "__k").select("feed", "b", "bin", "n")
-    newref = curation.refreshed_reference_counts_by_group(
-        admc, ref0, window=3, min_batches=2, group_col="feed"
+    admc = _admitted_counts(ref0, bt, ("feed",), 5, _REGATE_ADM_T)
+    newref = curation.refreshed_reference_counts(
+        admc, ref0, window=3, min_batches=2, key=("feed",)
     )
     out = _feed_psi(ref0, probe, "psi_frozen").join(
         _feed_psi(newref, probe, "psi_refreshed"), "feed"

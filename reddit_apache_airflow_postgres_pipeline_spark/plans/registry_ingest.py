@@ -27,6 +27,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_apache_airflow_postgres_pipeline_spark.operators import curation
 from reddit_apache_airflow_postgres_pipeline_spark.plans.registry import _TOKENS_SQL, _q
 from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sources.tables import load_table
@@ -91,8 +92,8 @@ def _stage_ctes() -> str:
 def _chain_ctes() -> str:
     """The shared CTE chain: batch split → per-batch PSI decisions →
     unrolled sequential dedup over the admitted batches → accepted
-    corpus. Mirrors, in order: drift_gate.token_length_bins /
-    batch_psi_stats (psi_drift_counts contract: 1e-4 smoothing, 6-dp
+    corpus. Mirrors, in order: drift_gate.reference_counts /
+    batch_stats (psi_drift_counts contract: 1e-4 smoothing, 6-dp
     rounding), then dedup_gate.gate_batch's two-join admission."""
     # AS MATERIALIZED: DuckDB otherwise inlines these multi-consumer
     # CTEs per consumer (the sketch oracle read atoks 4×: 27 s → 0.3 s
@@ -230,8 +231,6 @@ class _Feed(NamedTuple):
     long_b: str  # SQL: the batch a long doc lands in
     meta: tuple[str, ...]  # the checkpointed split's columns
     ref: str  # SQL over the split: the frozen reference's rows (short docs)
-    psi: str  # operators.curation drift kernels,
-    ks: str  # called (ref, cur, *key, bins=10)
 
 
 # each feed's name is its replay's _memo_replay kind; its split's is
@@ -239,7 +238,6 @@ class _Feed(NamedTuple):
 _FEEDS = {
     "scalar": _Feed(
         (), str(_ING_B - 1), ("doc", "b", "bin"), f"b <> {_ING_B - 1}",
-        "psi_drift_counts", "ks_drift_counts",
     ),
     # the drift feed's long docs land in batch 1, so batch 1 admits its
     # well-sampled short feeds while that feed quarantines alone
@@ -247,7 +245,6 @@ _FEEDS = {
         (_ING_G_COL,),
         f"CASE WHEN {_ING_G_COL} = '{_ING_G_DRIFT}' THEN 1 ELSE {_ING_B - 1} END",
         ("doc", _ING_G_COL, "b", "bin", "is_long"), "NOT is_long",
-        "psi_drift_counts_by_group", "ks_drift_counts_by_group",
     ),
 }
 
@@ -355,13 +352,11 @@ def _replay(
 
 
 def _per_batch(
-    spark: SparkSession, sf_dir: str, feed: str, kernel: str, *aggs
+    spark: SparkSession, sf_dir: str, feed: str, kernel: Callable, *aggs
 ) -> DataFrame:
     """(*key, b, <aggs>): per replay batch, the curation drift
-    ``kernel`` of the batch's binned counts against the frozen
-    reference's, aggregated per feed by ``aggs``."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators import curation
-
+    ``kernel`` (keyed by the feed's key) of the batch's binned counts
+    against the frozen reference's, aggregated per feed by ``aggs``."""
     f = _FEEDS[feed]
     meta = _meta(spark, sf_dir, feed)
 
@@ -370,9 +365,7 @@ def _per_batch(
 
     ref = counts(meta.filter(f.ref))
     return reduce(DataFrame.unionAll, [
-        getattr(curation, kernel)(
-            ref, counts(meta.filter(F.col("b") == i)), *f.key, bins=10
-        )
+        kernel(ref, counts(meta.filter(F.col("b") == i)), bins=10, key=f.key)
         .groupBy(*f.key)
         .agg(F.lit(i).alias("b"), *aggs)
         for i in range(_ING_B)
@@ -410,7 +403,7 @@ def _replay_build(
     on = ["b", *_FEEDS[feed].key]
     dec = (
         _per_batch(
-            spark, sf_dir, feed, _FEEDS[feed].psi,
+            spark, sf_dir, feed, curation.psi_drift_counts,
             F.sum("n_cur").cast("bigint").alias("n_docs"),
             F.round(F.sum("psi_term"), 6).alias("psi"),
         )
@@ -486,8 +479,7 @@ def _chain(
 def _decisions(spark: SparkSession, sf_dir: str, feed: str) -> DataFrame:
     """Stage 1+2 of the composed ingest chain as one relation: per
     replay batch and feed, the drift gate's decision-log row (psi,
-    admitted, n_docs — drift_gate.batch_psi_stats /
-    batch_group_psi semantics) extended with the dedup gate's outcome
+    admitted, n_docs — drift_gate.batch_stats semantics) extended with the dedup gate's outcome
     on the admitted rows (n_accepted, n_dup_rejected —
     dedup_gate.gate_batch's pessimistic first-wins policy with state
     accumulating across batches in order). The streaming chains write
@@ -597,8 +589,8 @@ q_ingest_chain_sketch_audit = _chain("q_ingest_chain_sketch_audit", _SKETCH_SQL,
 
 def _group_chain_ctes() -> str:
     """The grouped chain's CTE prefix: group-aware batch split →
-    per-(batch, group) PSI decisions (psi_drift_counts_by_group
-    contract: 1e-4 smoothing, 6-dp rounding, per-GROUP totals) →
+    per-(batch, group) PSI decisions (the psi_drift_counts contract
+    keyed by lang: 1e-4 smoothing, 6-dp rounding, per-GROUP totals) →
     unrolled sequential dedup over the admitted (batch, group) rows →
     accepted corpus. Routing: short docs hash into batches 0-2; long
     docs go to batch 3 — EXCEPT the drift feed's ('de') longs, which
@@ -672,9 +664,10 @@ _GROUP_DECISIONS_SQL = f"""
 
 
 # the grouped drift gate's decision row per (replay batch, feed): psi
-# against the feed's OWN frozen reference (drift_gate.batch_group_psi),
-# so one broken feed cannot hide inside the pooled distribution; the
-# streaming form is run_group_ingest_available_now
+# against the feed's OWN frozen reference (drift_gate.batch_stats with a
+# group_col), so one broken feed cannot hide inside the pooled
+# distribution; the streaming form is run_ingest_pipeline_available_now
+# with group_col
 q_ingest_chain_by_group = _chain("q_ingest_chain_by_group", _GROUP_DECISIONS_SQL, "group", _decisions)
 
 
@@ -830,7 +823,7 @@ _GROUP_SPANS_SQL = f"""
 
 def _feed_spans(spark: SparkSession, sf_dir: str, feed: str) -> DataFrame:
     """The grouped FULL chain's per-feed audit
-    (run_group_full_ingest_available_now): what a training run would
+    (run_full_ingest_available_now with group_col): what a training run would
     consume from each feed after the span stage — accepted docs,
     span-cut tokens, clean token count, exact distinct tokens. The span
     output and its feed re-attach are checkpointed here, so the two
@@ -914,7 +907,10 @@ def _decisions_ks(spark: SparkSession, sf_dir: str, feed: str) -> DataFrame:
     composes it."""
     f = _FEEDS[feed]
     dec, _ = _replay(spark, sf_dir, feed)
-    ks = _per_batch(spark, sf_dir, feed, f.ks, F.round(F.max("ks_term"), 6).alias("ks"))
+    ks = _per_batch(
+        spark, sf_dir, feed, curation.ks_drift_counts,
+        F.round(F.max("ks_term"), 6).alias("ks"),
+    )
     return dec.join(ks, ["b", *f.key]).select(
         F.col("b").alias("batch"),
         *f.key,

@@ -25,6 +25,13 @@ every decision appends a (batch_id, psi, admitted, n_docs) row to
 overwrite + the checkpoint give the same exactly-once/retry contract as
 the sibling gates.
 
+The feed key is a parameter, not a second gate: with ``group_col`` the
+reference holds one ``(group, bin, n)`` distribution per feed, each feed
+is judged against its own (curation's kernels with ``key=(group_col,)``),
+only the drifted feeds' rows quarantine, and the decision log carries
+one row per (batch, feed). Without it (``key=()``) one pooled feed is
+judged and the whole batch is routed as one.
+
 The one driver-side value is the (psi, n_docs) pair per batch (a 1-row
 aggregate collected to make the admit/quarantine control-flow decision
 — decision-sized, like the file-name lists in combine_stream.py; the
@@ -40,15 +47,15 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
+    ks_drift_counts,
     psi_drift_counts,
     refreshed_reference_counts,
-    refreshed_reference_counts_by_group,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import token_count
 from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
@@ -60,33 +67,25 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
 _PSI_THRESHOLD = 0.25  # the "major drift" alerting line
 
 
-def token_length_bins(
-    df: DataFrame,
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-    metric: Column | None = None,
-) -> DataFrame:
-    """The gate's default binning: integer fixed-width token-length bins
-    (the float-boundary-free contract q_corpus_psi_drift uses). Every
-    document lands in a bin in [0, bins) — token_count is never NULL —
-    so Σ bin-counts = document count.
-
-    ``metric`` swaps the per-row scalar being binned (default
-    ``token_count(text_col)``) — the seam that lets the SAME gate
-    monitor non-text modalities: :func:`payload_size_metric` bins
-    binary payload sizes, and any never-NULL integer Column works. The
-    metric is part of the reference's identity exactly like bin_width:
-    a reference and its gate must bin the same scalar."""
-    return df.select(_bin(text_col, bin_width, bins, metric))
+def _key(group_col: str | None) -> tuple[str, ...]:
+    """The feed key the gate judges apart: () for one pooled feed."""
+    return () if group_col is None else (group_col,)
 
 
 def _bin(
     text_col: str, bin_width: int, bins: int, metric: Column | None = None
 ) -> Column:
     """The gates' ``bin`` column: ``metric`` (default the token count
-    of ``text_col``) in fixed-width integer bins, the last one
-    open-ended."""
+    of ``text_col``, the float-boundary-free contract
+    q_corpus_psi_drift uses) in fixed-width integer bins, the last one
+    open-ended. Every document lands in a bin in [0, bins) — the
+    metric is never NULL — so Σ bin-counts = document count.
+
+    ``metric`` is the seam that lets the SAME gate monitor non-text
+    modalities: :func:`payload_size_metric` bins binary payload sizes,
+    and any never-NULL integer Column works. The metric is part of the
+    reference's identity exactly like bin_width: a reference and its
+    gate must bin the same scalar."""
     m = metric if metric is not None else token_count(text_col)
     return F.least((m / bin_width).cast("int"), F.lit(bins - 1)).alias("bin")
 
@@ -105,12 +104,18 @@ def reference_counts(
     bin_width: int = 20,
     bins: int = 10,
     metric: Column | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
-    """A snapshot's binned distribution as a ≤ ``bins``-row ``(bin, n)``
-    count relation — the gate's persisted-reference form."""
-    return token_length_bins(
-        df, text_col, bin_width, bins, metric
-    ).groupBy("bin").agg(F.count("*").cast("bigint").alias("n"))
+    """A snapshot's binned distribution as a ``(*key, bin, n)`` count
+    relation of ≤ ``bins`` rows per key value — the gate's
+    persisted-reference form. The key is ``group_col`` (one
+    distribution per feed) or nothing (one pooled distribution)."""
+    key = _key(group_col)
+    return (
+        df.select(*key, _bin(text_col, bin_width, bins, metric))
+        .groupBy(*key, "bin")
+        .agg(F.count("*").cast("bigint").alias("n"))
+    )
 
 
 def write_reference(
@@ -120,10 +125,12 @@ def write_reference(
     bin_width: int = 20,
     bins: int = 10,
     metric: Column | None = None,
+    group_col: str | None = None,
 ) -> None:
-    """Freeze a validated snapshot's binned distribution as the gate's
-    ≤ ``bins``-row pre-aggregated reference relation."""
-    reference_counts(df, text_col, bin_width, bins, metric).write.mode(
+    """Freeze a validated snapshot's binned distribution (per
+    ``group_col`` value, when given) as the gate's pre-aggregated
+    reference relation."""
+    reference_counts(df, text_col, bin_width, bins, metric, group_col).write.mode(
         "overwrite"
     ).parquet(ref_path)
 
@@ -158,49 +165,52 @@ def refresh_reference(
     bin_width: int = 20,
     bins: int = 10,
     metric: Column | None = None,
+    group_col: str | None = None,
 ) -> bool:
     """Re-baseline the gate's frozen reference from the newest
     ``window`` ADMITTED batches in ``out_dir`` — the refresh policy a
     real corpus monitor runs on a schedule: distributions legitimately
     move (seasonality, new sources), and a reference frozen forever
-    eventually quarantines the new normal.
+    eventually quarantines the new normal. With ``group_col`` each
+    feed re-baselines on its own.
 
-    Hysteresis: returns False (reference untouched) unless at least
-    ``min_batches`` admitted batches exist in the window — a gate that
-    has been quarantining nearly everything must not re-baseline from
-    the trickle that got through. Returns True only when the new
-    ≤ ``bins``-row (bin, n) reference actually DIFFERS from the frozen
-    one (the same no-op contract as :func:`refresh_group_reference`,
-    r10 ADVICE — callers keying re-gating or alerts off the bool get
-    one semantics across both APIs); a window-satisfied refresh that
-    reproduces the old counts leaves the file byte-untouched and
-    returns False.
+    Hysteresis: a feed keeps its frozen rows unless at least
+    ``min_batches`` of its admitted batches exist in the window — a
+    gate that has been quarantining nearly everything (or one feed in
+    a quarantine storm) must not re-baseline from the trickle that got
+    through. Returns True only when the new reference actually DIFFERS
+    from the frozen one (r10 ADVICE — callers keying re-gating or
+    alerts off the bool get one semantics); no admitted output, or a
+    refresh that reproduces the old counts, leaves the file
+    byte-untouched and returns False.
 
     The policy relation is :func:`curation.refreshed_reference_counts`
-    (oracle-paired in the registry as q_drift_ref_refresh) over the
-    admitted rows' per-batch ``(b, bin, n)`` counts; this wrapper only
-    does the store plumbing. Every relation past the admitted scan is
-    bins- or window-sized, and the no-op check stays Spark-side
+    (oracle-paired in the registry as q_drift_ref_refresh and
+    q_drift_ref_refresh_by_group) over the admitted rows' per-batch
+    ``(*key, b, bin, n)`` counts; this wrapper only does the store
+    plumbing. Every relation past the admitted scan is bins-, keys- or
+    window-sized, and the no-op check stays Spark-side
     (:func:`_swap_if_changed`) — same scan economics as
     :func:`write_reference`."""
     adm = _admitted_rows(spark, out_dir, window, min_batches)
     if adm is None:
         return False
+    key = _key(group_col)
     per_batch = (
         adm.select(
-            F.col("batch_id").alias("b"), _bin(text_col, bin_width, bins, metric)
+            *key, F.col("batch_id").alias("b"), _bin(text_col, bin_width, bins, metric)
         )
-        .groupBy("b", "bin")
+        .groupBy(*key, "b", "bin")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
     new_ref = refreshed_reference_counts(
-        per_batch, spark.read.parquet(ref_path), window, min_batches
+        per_batch, spark.read.parquet(ref_path), window, min_batches, key=key
     )
     return _swap_if_changed(spark, new_ref, ref_path)
 
 
 def _swap_if_changed(spark: SparkSession, new_ref: DataFrame, ref_path: str) -> bool:
-    """Shared refresh store plumbing: write the candidate reference to
+    """The refresh's store plumbing: write the candidate reference to
     a sibling tmp dir, compare the two FILES Spark-side (exceptAll
     emptiness both ways — multiset equality, no driver materialization
     of either relation: references are bins- or groups×bins-sized
@@ -230,76 +240,45 @@ def _swap_if_changed(spark: SparkSession, new_ref: DataFrame, ref_path: str) -> 
     return True
 
 
-def batch_psi_stats(
+def batch_stats(
     batch_df: DataFrame,
     ref_counts: DataFrame,
     text_col: str = "text",
     bin_width: int = 20,
     bins: int = 10,
     metric: Column | None = None,
-) -> tuple[float, int]:
-    """(total PSI, document count) of one batch against the reference
-    ``(bin, n)`` counts — ONE aggregate job yields both the admission
-    scalar and the decision-log count (every doc lands in a spine bin,
-    so Σ n_cur is the batch size). Pure function of two relations, so
-    the batch path is unit-testable without a stream."""
-    cur = reference_counts(batch_df, text_col, bin_width, bins, metric)
-    row = (
-        psi_drift_counts(ref_counts, cur, bins=bins)
-        .agg(
-            F.round(F.sum("psi_term"), 6).alias("psi"),
-            F.sum("n_cur").cast("bigint").alias("n_docs"),
+    group_col: str | None = None,
+    ks: bool = False,
+) -> DataFrame:
+    """(*key, psi, [ks,] n_docs): one batch's drift against the
+    reference counts, one row per key value present in the batch — or,
+    without ``group_col``, exactly one pooled row (also for an empty
+    batch). ``psi`` is the total PSI (curation.psi_drift_counts);
+    ``ks=True`` adds the KS statistic max|ΔCDF|
+    (curation.ks_drift_counts) from the SAME binned counts: PSI is loud
+    on per-bin density ratios, and a small location shift of the whole
+    mass moves KS first. Every doc lands in a spine bin, so Σ n_cur is
+    the batch's document count. A key value the reference has never
+    seen scores against an all-epsilon reference — maximally drifted,
+    the conservative admission default. Bounded: nothing past the
+    first aggregate exceeds keys × bins rows. A pure function of two
+    relations, so the batch path is unit-testable without a stream."""
+    key = _key(group_col)
+    cur = reference_counts(batch_df, text_col, bin_width, bins, metric, group_col)
+    terms = psi_drift_counts(ref_counts, cur, bins, key)
+    aggs = [F.round(F.sum("psi_term"), 6).alias("psi")]
+    if ks:
+        terms = terms.join(
+            ks_drift_counts(ref_counts, cur, bins, key).select(
+                *key, "bin", "ks_term"
+            ),
+            [*key, "bin"],
         )
-        .collect()[0]
+        aggs.append(F.round(F.max("ks_term"), 6).alias("ks"))
+    stats = terms.groupBy(*key).agg(
+        *aggs, F.sum("n_cur").cast("bigint").alias("n_docs")
     )
-    return float(row["psi"]), int(row["n_docs"])
-
-
-def batch_psi(
-    batch_df: DataFrame,
-    ref_counts: DataFrame,
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-) -> float:
-    """Total PSI of one batch against the reference counts — the scalar
-    the admission decision turns on."""
-    return batch_psi_stats(batch_df, ref_counts, text_col, bin_width, bins)[0]
-
-
-def batch_drift_stats(
-    batch_df: DataFrame,
-    ref_counts: DataFrame,
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-    metric: Column | None = None,
-) -> tuple[float, float, int]:
-    """(total PSI, KS statistic, document count) of one batch against
-    the reference counts — BOTH drift metrics from ONE binned-count
-    pass over the batch (the two aggregates then run on bins-row
-    relations, so the second metric costs nothing corpus-sized). PSI
-    is loud on per-bin density ratios, KS = max|ΔCDF| on cumulative
-    displacement — a small location shift of the whole mass moves KS
-    first (curation.ks_drift_counts)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
-        ks_drift_counts,
-    )
-
-    cur = local_df(
-        batch_df.sparkSession,
-        reference_counts(batch_df, text_col, bin_width, bins, metric).collect(),
-        "bin int, n bigint",
-    )
-    p = psi_drift_counts(ref_counts, cur, bins=bins).agg(
-        F.round(F.sum("psi_term"), 6).alias("psi"),
-        F.sum("n_cur").cast("bigint").alias("n_docs"),
-    )
-    k = ks_drift_counts(ref_counts, cur, bins=bins).agg(
-        F.round(F.max("ks_term"), 6).alias("ks")
-    )
-    row = p.crossJoin(k).collect()[0]
-    return float(row["psi"]), float(row["ks"]), int(row["n_docs"])
+    return stats.filter(F.col("n_docs") > 0) if key else stats
 
 
 def run_drift_gate_available_now(
@@ -318,9 +297,20 @@ def run_drift_gate_available_now(
     refresh_window: int = 5,
     refresh_min_batches: int = 3,
     metric: Column | None = None,
+    group_col: str | None = None,
 ) -> None:
     """Drain ``input_dir`` (parquet files) through the gate with an
     availableNow trigger; see the module docstring for the layout.
+
+    ``group_col`` judges each feed against its OWN reference (written
+    by :func:`write_reference` with the same ``group_col``): every
+    micro-batch is split so only the DRIFTED feeds' rows quarantine and
+    the rest of the batch is admitted — one broken feed must not
+    quarantine the other 99. Decision rows then carry the feed column,
+    typed as in the batch, one row per (batch, feed); rows with a NULL
+    feed quarantine (no reference to judge them against). Without it
+    the whole batch is admitted or quarantined as one.
+
     ``ks_threshold`` arms the second drift metric: admission then
     requires psi <= threshold AND ks <= ks_threshold, and the decision
     rows gain a ``ks`` column (None leaves schema and semantics exactly
@@ -329,339 +319,105 @@ def run_drift_gate_available_now(
     ``refresh_every`` arms PERIODIC RE-BASELINING inside the drain —
     the maintenance loop a long-running gate actually operates: after
     every ``refresh_every``-th micro-batch's decision is committed,
-    :func:`refresh_reference` re-baselines the frozen reference from
-    the newest ``refresh_window`` ADMITTED batches (hysteresis:
-    ``refresh_min_batches``), and subsequent batches gate against the
-    refreshed file — so a legitimately-moving distribution keeps
-    flowing instead of sliding into a quarantine storm, while the
-    min-batch hysteresis still blocks re-baselining onto a trickle.
-    Equivalence with the manual sequence (drain → refresh_reference →
-    drain) and the admission flip itself are pinned by
-    tests/test_drift_gate.py. Crash contract: the refresh is DERIVED
-    state (recomputable from admitted dirs) — a crash between the
-    decision commit and the refresh skips that boundary, and the next
-    one re-derives from the same windows; decisions themselves stay
-    exactly-once via the per-dir overwrite + checkpoint."""
-    ref = _load_reference(
-        spark, ref_path, ["n"], "pre-aggregated (bin, n) counts",
-        "write_reference",
-    )
+    :func:`refresh_reference` re-baselines the frozen reference (per
+    feed, with ``group_col``) from the newest ``refresh_window``
+    ADMITTED batches (hysteresis: ``refresh_min_batches``), and
+    subsequent batches gate against the refreshed file — so a
+    legitimately-moving distribution keeps flowing instead of sliding
+    into a quarantine storm, while the min-batch hysteresis still
+    blocks re-baselining onto a trickle. Equivalence with the manual
+    sequence (drain → refresh_reference → drain) and the admission
+    flip itself are pinned by tests/test_drift_gate.py. Crash
+    contract: the refresh is DERIVED state (recomputable from admitted
+    dirs) — a crash between the decision commit and the refresh skips
+    that boundary, and the next one re-derives from the same windows;
+    decisions themselves stay exactly-once via the per-dir overwrite +
+    checkpoint.
 
-    def _judge(batch_df: DataFrame, ref_counts: DataFrame):
-        stats = batch_psi_stats if ks_threshold is None else batch_drift_stats
-        psi, *ks, n = stats(
-            batch_df, ref_counts, text_col, bin_width, bins, metric
-        )
-        admitted = psi <= threshold and all(k <= ks_threshold for k in ks)
-        dest = "admitted" if admitted else "quarantined"
-        return [(dest, batch_df)], [(psi, *ks, admitted, n)]
-
-    _drift_drain(
-        spark, input_dir, schema, out_dir, ref_path, checkpoint_dir, ref,
-        _judge, _decision_schema("", ks_threshold is not None),
-        refresh_every,
-        lambda sp: refresh_reference(
-            sp, out_dir, ref_path, window=refresh_window,
-            min_batches=refresh_min_batches, text_col=text_col,
-            bin_width=bin_width, bins=bins, metric=metric,
-        ),
-    )
-
-
-def _load_reference(
-    spark: SparkSession, ref_path: str, cols: list[str], form: str,
-    writer: str,
-) -> DataFrame:
-    """Read a gate's frozen reference, failing loud when it lacks
-    ``cols`` — the r5 format persisted one (bin) row per DOCUMENT, and
-    rather than crash opaquely on every micro-batch, say what to do."""
-    ref = spark.read.parquet(ref_path)
-    if not set(cols) <= set(ref.columns):
-        raise ValueError(
-            f"reference at {ref_path!r} has columns {ref.columns} — "
-            f"expected the {form} form. Rebuild it once with {writer}() "
-            "on the validated snapshot."
-        )
-    return ref
-
-
-def _decision_schema(key: str, ks: bool) -> str:
-    """Decision-log row schema: the grouped gate's ``key`` column
-    (``"<group> string, "``, empty for the scalar gate), psi, ks when
-    armed, the admission flag and the batch's document count."""
-    return (
-        f"{key}psi double, {'ks double, ' if ks else ''}"
-        "admitted boolean, n_docs long"
-    )
-
-
-def _drift_drain(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    out_dir: str,
-    ref_path: str,
-    checkpoint_dir: str,
-    ref: DataFrame,
-    judge: Callable[[DataFrame, DataFrame], tuple[list, list]],
-    dschema: str,
-    refresh_every: int | None,
-    refresh: Callable[[SparkSession], bool],
-) -> None:
-    """The drift runners' shared batch body. ``judge(batch_df, ref)``
-    returns ``(routes, decision)``: ``routes`` pairs each output subdir
-    (``admitted``/``quarantined``) with the rows it receives, and
-    ``decision`` holds the decision-log rows (``dschema``). The batch
-    is persisted while it is judged and routed: the decision aggregate
-    populates the cache and the writes replay from it — ONE scan of
-    the batch's source files instead of three (ADVICE r5). After every
-    ``refresh_every``-th batch ``refresh(spark)`` re-baselines the
-    reference, and a True return swaps the refreshed file in for the
-    batches that follow."""
+    The batch is persisted while it is judged and routed: the decision
+    aggregate populates the cache and the writes replay from it — ONE
+    scan of the batch's source files instead of three (ADVICE r5)."""
+    key = _key(group_col)
+    ref = _load_reference(spark, ref_path, key)
+    armed = ks_threshold is not None
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal ref
+        sp = batch_df.sparkSession
         batch_df.persist()
         try:
-            routes, decision = judge(batch_df, ref)
-            for dest, rows in routes:
+            decision = []
+            for r in batch_stats(
+                batch_df, ref, text_col, bin_width, bins, metric, group_col, armed
+            ).collect():
+                ks = [r["ks"]] if armed else []
+                ok = r["psi"] <= threshold and all(k <= ks_threshold for k in ks)
+                decision.append(
+                    (*(r[c] for c in key), r["psi"], *ks, ok, r["n_docs"])
+                )
+            for dest, rows in _routes(batch_df, group_col, decision):
                 write_batch(rows, os.path.join(out_dir, dest), batch_id)
             # batch_id lives in the partition dir name — readers of the
             # decisions log get it back as the inferred partition column
             write_batch(
-                local_df(batch_df.sparkSession, decision, dschema),
+                local_df(sp, decision, _decision_schema(batch_df, key, armed)),
                 os.path.join(out_dir, "decisions"), batch_id,
             )
         finally:
             batch_df.unpersist()
         if refresh_every and (batch_id + 1) % refresh_every == 0:
-            if refresh(batch_df.sparkSession):
-                ref = batch_df.sparkSession.read.parquet(ref_path)
+            if refresh_reference(
+                sp, out_dir, ref_path, refresh_window, refresh_min_batches,
+                text_col, bin_width, bins, metric, group_col,
+            ):
+                ref = sp.read.parquet(ref_path)
 
     drain(spark, input_dir, schema, checkpoint_dir, _gate)
 
 
-# -- per-group gating (multi-source ingest) ---------------------------------
+def _routes(
+    batch_df: DataFrame, group_col: str | None, decision: list[tuple]
+) -> list[tuple[str, DataFrame]]:
+    """(subdir, rows) for one judged batch. Pooled: the whole batch
+    goes to exactly one of ``admitted``/``quarantined`` — one route dir
+    per batch, never an empty one. Keyed: the batch splits by the
+    admitted key values, and NULL-key rows quarantine."""
+    if group_col is None:
+        ((*_, ok, _n),) = decision
+        return [("admitted" if ok else "quarantined", batch_df)]
+    adm = F.col(group_col).isin([d[0] for d in decision if d[-2]])
+    return [
+        ("admitted", batch_df.filter(adm)),
+        ("quarantined", batch_df.filter(~adm | F.col(group_col).isNull())),
+    ]
 
 
-def group_reference_counts(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
+def _load_reference(
+    spark: SparkSession, ref_path: str, key: tuple[str, ...]
 ) -> DataFrame:
-    """A snapshot's per-group binned distribution as a
-    ≤ (groups × bins)-row ``(group, bin, n)`` relation — the grouped
-    gate's persisted-reference form."""
-    return (
-        df.select(F.col(group_col), _bin(text_col, bin_width, bins))
-        .groupBy(group_col, "bin")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-
-
-def write_group_reference(
-    df: DataFrame,
-    ref_path: str,
-    group_col: str = "lang",
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-) -> None:
-    """Freeze a validated snapshot's per-group distributions."""
-    group_reference_counts(df, group_col, text_col, bin_width, bins).write.mode(
-        "overwrite"
-    ).parquet(ref_path)
-
-
-def refresh_group_reference(
-    spark: SparkSession,
-    out_dir: str,
-    ref_path: str,
-    group_col: str = "lang",
-    window: int = 5,
-    min_batches: int = 3,
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-) -> bool:
-    """Per-feed re-baselining: each group whose newest ``window``
-    admitted batches number at least ``min_batches`` gets a fresh
-    reference from those batches' rows; every other group — including
-    one in a quarantine storm, which by construction has few admitted
-    batches — keeps its frozen rows. The policy relation is
-    :func:`curation.refreshed_reference_counts_by_group`
-    (oracle-paired as q_drift_ref_refresh_by_group); this wrapper does
-    the store plumbing over the grouped gate's ``admitted`` output.
-    Returns False (file untouched) when there is no admitted output or
-    the refresh is a no-op (no group qualifies); the no-op check stays
-    Spark-side — :func:`_swap_if_changed` writes the candidate to a
-    tmp dir and compares the two files with exceptAll, so nothing
-    reference-shaped ever crosses the driver (r10 verdict watch #2:
-    references grow with bins×groups×features in a real deployment)."""
-    adm = _admitted_rows(spark, out_dir, window, min_batches)
-    if adm is None:
-        return False
-    per_batch = (
-        adm.select(
-            F.col(group_col),
-            F.col("batch_id").alias("b"),
-            _bin(text_col, bin_width, bins),
+    """Read the gate's frozen reference, failing loud when it lacks a
+    ``(*key, bin, n)`` column — the r5 format persisted one (bin) row
+    per DOCUMENT, and a pooled reference has no feed column; rather
+    than crash opaquely on every micro-batch, say what to do."""
+    cols = [*key, "bin", "n"]
+    ref = spark.read.parquet(ref_path)
+    if not set(cols) <= set(ref.columns):
+        raise ValueError(
+            f"reference at {ref_path!r} has columns {ref.columns} — "
+            f"expected the pre-aggregated ({', '.join(cols)}) counts form. "
+            "Rebuild it once with write_reference() on the validated "
+            "snapshot."
         )
-        .groupBy(group_col, "b", "bin")
-        .agg(F.count("*").cast("bigint").alias("n"))
+    return ref
+
+
+def _decision_schema(
+    batch_df: DataFrame, key: tuple[str, ...], ks: bool
+) -> StructType:
+    """Decision-log row schema: the key columns typed as in the batch,
+    psi, ks when armed, the admission flag and the batch's document
+    count."""
+    tail = StructType.fromDDL(
+        f"psi double, {'ks double, ' if ks else ''}admitted boolean, n_docs long"
     )
-    old_ref = spark.read.parquet(ref_path)
-    new_ref = refreshed_reference_counts_by_group(
-        per_batch, old_ref, window, min_batches, group_col=group_col
-    )
-    return _swap_if_changed(spark, new_ref, ref_path)
-
-
-def batch_group_psi(
-    batch_df: DataFrame,
-    ref_counts: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-) -> DataFrame:
-    """(group, psi, n_docs) for every group PRESENT in the batch —
-    each group judged against its OWN reference distribution
-    (operators/curation.psi_drift_counts_by_group), so one feed going
-    bad cannot hide inside the pooled distribution. A batch group the
-    reference has never seen scores against an all-epsilon reference —
-    maximally drifted, the conservative admission default. Bounded:
-    nothing past the first aggregate exceeds groups × bins rows."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
-        psi_drift_counts_by_group,
-    )
-
-    cur = group_reference_counts(batch_df, group_col, text_col, bin_width, bins)
-    return (
-        psi_drift_counts_by_group(ref_counts, cur, group_col, bins=bins)
-        .groupBy(group_col)
-        .agg(
-            F.round(F.sum("psi_term"), 6).alias("psi"),
-            F.sum("n_cur").cast("bigint").alias("n_docs"),
-        )
-        .filter(F.col("n_docs") > 0)
-    )
-
-
-def batch_group_drift_stats(
-    batch_df: DataFrame,
-    ref_counts: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-) -> DataFrame:
-    """(group, psi, ks, n_docs) for every group present in the batch —
-    :func:`batch_group_psi` extended with each group's KS statistic
-    (curation.ks_drift_counts_by_group) from the SAME grouped count
-    pass, joined on the group key (both sides are ≤ |groups| rows)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.operators.curation import (
-        ks_drift_counts_by_group,
-        psi_drift_counts_by_group,
-    )
-
-    cur = local_df(
-        batch_df.sparkSession,
-        group_reference_counts(
-            batch_df, group_col, text_col, bin_width, bins
-        ).collect(),
-        f"{group_col} string, bin int, n bigint",
-    )
-    p = (
-        psi_drift_counts_by_group(ref_counts, cur, group_col, bins=bins)
-        .groupBy(group_col)
-        .agg(
-            F.round(F.sum("psi_term"), 6).alias("psi"),
-            F.sum("n_cur").cast("bigint").alias("n_docs"),
-        )
-        .filter(F.col("n_docs") > 0)
-    )
-    k = (
-        ks_drift_counts_by_group(ref_counts, cur, group_col, bins=bins)
-        .groupBy(group_col)
-        .agg(F.round(F.max("ks_term"), 6).alias("ks"))
-    )
-    return p.join(k, group_col).select(group_col, "psi", "ks", "n_docs")
-
-
-def run_group_drift_gate_available_now(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    out_dir: str,
-    ref_path: str,
-    checkpoint_dir: str,
-    group_col: str = "lang",
-    text_col: str = "text",
-    bin_width: int = 20,
-    bins: int = 10,
-    threshold: float = _PSI_THRESHOLD,
-    ks_threshold: float | None = None,
-    refresh_every: int | None = None,
-    refresh_window: int = 5,
-    refresh_min_batches: int = 3,
-) -> None:
-    """The drift gate at per-group granularity: each micro-batch is
-    split so only the DRIFTED GROUPS' rows quarantine — the rest of
-    the batch is admitted, which is the behavior a multi-source ingest
-    needs (one broken feed must not quarantine the other 99).
-    ``ks_threshold`` arms the KS co-metric exactly as in the scalar
-    gate: a group admits only if psi <= threshold AND ks <=
-    ks_threshold, and decision rows gain a ``ks`` column (None keeps
-    the original schema and semantics). ``refresh_every`` arms the
-    same in-drain periodic re-baselining as the scalar runner, per
-    feed (:func:`refresh_group_reference`): healthy feeds re-baseline
-    on schedule, feeds failing the per-group hysteresis keep their
-    frozen rows — a gate that both quarantines broken feeds AND
-    follows legitimately-moving ones, unattended.
-
-    Same layout as the ungrouped gate (``admitted/``, ``quarantined/``,
-    ``decisions/`` per batch dir, idempotent overwrite + checkpoint),
-    except decisions carry one row PER (batch, group):
-    (group, psi, n_docs, admitted). Rows with a NULL group quarantine
-    (no reference to judge them against). The per-group decision
-    relation is ≤ |groups| rows — decision-sized — and is the only
-    thing collected; binning and PSI run distributed."""
-    ref = _load_reference(
-        spark, ref_path, ["n", group_col],
-        f"({group_col}, bin, n) grouped counts", "write_group_reference",
-    )
-
-    def _judge(batch_df: DataFrame, ref_counts: DataFrame):
-        stats = (
-            batch_group_psi if ks_threshold is None else batch_group_drift_stats
-        )
-        decision = []
-        for r in stats(
-            batch_df, ref_counts, group_col, text_col, bin_width, bins
-        ).collect():
-            ks = [] if ks_threshold is None else [float(r["ks"])]
-            ok = r["psi"] <= threshold and all(k <= ks_threshold for k in ks)
-            decision.append(
-                (r[group_col], float(r["psi"]), *ks, bool(ok), int(r["n_docs"]))
-            )
-        admitted_groups = [d[0] for d in decision if d[-2]]
-        adm = batch_df.filter(F.col(group_col).isin(admitted_groups))
-        qua = batch_df.filter(
-            ~F.col(group_col).isin(admitted_groups) | F.col(group_col).isNull()
-        )
-        return [("admitted", adm), ("quarantined", qua)], decision
-
-    _drift_drain(
-        spark, input_dir, schema, out_dir, ref_path, checkpoint_dir, ref,
-        _judge,
-        _decision_schema(f"{group_col} string, ", ks_threshold is not None),
-        refresh_every,
-        lambda sp: refresh_group_reference(
-            sp, out_dir, ref_path, group_col=group_col,
-            window=refresh_window, min_batches=refresh_min_batches,
-            text_col=text_col, bin_width=bin_width, bins=bins,
-        ),
-    )
+    return StructType([batch_df.schema[c] for c in key] + tail.fields)

@@ -232,66 +232,26 @@ def _run_sketch_stage(
         )
 
 
-def _chain(
+def _run_drift_stage(
     spark: SparkSession,
     input_dir: str,
     schema: str,
-    work_dir: str,
+    p: dict[str, str],
     ref_path: str,
-    drift_runner: Callable[..., None],
-    drift_kwargs: dict,
-    id_col: str,
     text_col: str,
     psi_threshold: float,
-    dedup_policy: str,
-    dedup_kwargs: dict | None,
-) -> dict[str, str]:
-    """The ingest chain's body, shared by its scalar and grouped forms,
-    which differ only in stage 1: ``drift_runner`` (the scalar or the
-    grouped drift gate, called with ``drift_kwargs``). Drift → dedup →
-    sketches over ``accepted/``. Returns the path map."""
-    runner = _dedup_runner(dedup_policy)
-    p = _paths(work_dir, _CHAIN_PATHS)
-    drift_runner(
+    group_col: str | None,
+) -> None:
+    """Stage 1 of every text chain: the drift gate drains the inbox
+    into ``drift/`` — one pooled feed, or each ``group_col`` feed judged
+    against its own frozen reference (so a single broken feed
+    quarantines alone while the rest of the batch flows on). Called
+    through the ``drift_gate`` module attribute, so a wrapper installed
+    there sees every chain's drift stage."""
+    drift_gate.run_drift_gate_available_now(
         spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
-        text_col=text_col, threshold=psi_threshold, **drift_kwargs,
+        text_col=text_col, threshold=psi_threshold, group_col=group_col,
     )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
-    _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
-    return p
-
-
-def _full_chain(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    work_dir: str,
-    ref_path: str,
-    drift_runner: Callable[..., None],
-    drift_kwargs: dict,
-    id_col: str,
-    text_col: str,
-    psi_threshold: float,
-    dedup_policy: str,
-    dedup_kwargs: dict | None,
-    span_k: int,
-    index_path: str | None,
-) -> dict[str, str]:
-    """The full chain's body, shared by its scalar and grouped forms
-    exactly as :func:`_chain` is: drift → dedup → span gate → sketches
-    over the span-cleaned corpus → the optional index stage. Returns
-    the path map."""
-    runner = _dedup_runner(dedup_policy)
-    p = _paths(work_dir, _FULL_CHAIN_PATHS)
-    drift_runner(
-        spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
-        text_col=text_col, threshold=psi_threshold, **drift_kwargs,
-    )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
-    _run_span_stage(spark, schema, p, id_col, text_col, span_k)
-    _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
-    _run_index_stage(spark, p, index_path)
-    return p
 
 
 def run_ingest_pipeline_available_now(
@@ -305,6 +265,7 @@ def run_ingest_pipeline_available_now(
     psi_threshold: float = 0.25,
     dedup_policy: str = "bucket",
     dedup_kwargs: dict | None = None,
+    group_col: str | None = None,
 ) -> dict[str, str]:
     """Drain ``input_dir`` through drift gate → dedup gate → sketches.
 
@@ -312,45 +273,25 @@ def run_ingest_pipeline_available_now(
     decisions}``, ``accepted/`` (the surviving corpus), ``dedup_state``,
     ``cms``, ``hll`` + one checkpoint dir per stage. Returns the path
     map. Later stages are skipped cleanly when an earlier gate admitted
-    nothing yet (their input dir has no batches)."""
-    return _chain(
-        spark, input_dir, schema, work_dir, ref_path,
-        drift_gate.run_drift_gate_available_now, {},
-        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
-    )
+    nothing yet (their input dir has no batches).
 
-
-def run_group_ingest_available_now(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    work_dir: str,
-    ref_path: str,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    psi_threshold: float = 0.25,
-    dedup_policy: str = "bucket",
-    dedup_kwargs: dict | None = None,
-) -> dict[str, str]:
-    """The multi-source ingest chain: GROUPED drift gate → dedup gate →
-    sketches. Stage 1 is run_group_drift_gate_available_now — each
-    feed (``group_col``) is PSI-judged against its OWN frozen reference
-    (built once with drift_gate.write_group_reference), so a single
-    broken feed quarantines alone while the rest of the batch flows on.
-    Stages 2-3 are the shared chain: the dedup gate's first-wins state
-    spans feeds (a near-dup is a near-dup whichever feed resends it)
-    and the sketches summarize the one surviving corpus. Same directory
-    chaining, layout, and exactly-once/restart contract as
-    :func:`run_ingest_pipeline_available_now`; batch form replayed by
-    plans/registry_ingest.q_ingest_chain_by_group (oracle-paired),
-    parity-pinned by tests/test_ingest_pipeline.py."""
-    return _chain(
-        spark, input_dir, schema, work_dir, ref_path,
-        drift_gate.run_group_drift_gate_available_now,
-        {"group_col": group_col},
-        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
+    ``group_col`` makes it the multi-source chain: each feed is
+    PSI-judged against its OWN frozen reference (built once with
+    ``drift_gate.write_reference(..., group_col=...)``). The dedup
+    gate's first-wins state spans feeds (a near-dup is a near-dup
+    whichever feed resends it) and the sketches summarize the one
+    surviving corpus. Batch forms replayed by
+    plans/registry_ingest.q_ingest_chain_decisions and
+    q_ingest_chain_by_group (oracle-paired), parity-pinned by
+    tests/test_ingest_pipeline.py."""
+    runner = _dedup_runner(dedup_policy)
+    p = _paths(work_dir, _CHAIN_PATHS)
+    _run_drift_stage(
+        spark, input_dir, schema, p, ref_path, text_col, psi_threshold, group_col
     )
+    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
+    _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
+    return p
 
 
 def run_full_ingest_available_now(
@@ -366,66 +307,36 @@ def run_full_ingest_available_now(
     dedup_kwargs: dict | None = None,
     span_k: int = 8,
     index_path: str | None = None,
+    group_col: str | None = None,
 ) -> dict[str, str]:
     """The COMPLETE admission pipeline a Lee-et-al-style corpus run
     operates online: drift gate → MinHash near-dup gate → exact
     duplicated-substring (span) gate → sketch maintenance over the
     span-CLEANED corpus. Stages 1-2 are
-    :func:`run_ingest_pipeline_available_now`'s; stage 3 drains the
-    accepted corpus through streaming/span_gate.py (first-wins: a
-    passage's first sighting survives, every later copy is cut out of
-    its document), and the sketches summarize what a training run
+    :func:`run_ingest_pipeline_available_now`'s, ``group_col``
+    included; stage 3 drains the accepted corpus through
+    streaming/span_gate.py (first-wins: a passage's first sighting
+    survives, every later copy is cut out of its document, whichever
+    feed resends it), and the sketches summarize what a training run
     would actually consume — the cleaned text. ``index_path`` arms the
     optional stage 5 (:func:`_run_index_stage`): the span-cleaned
     corpus streams into a pre-built persisted text index, so an
     admitted document is served by the ANN store at the end of the
     same drain. Same directory chaining and exactly-once contract
-    throughout; batch form replayed by
-    plans/registry_ingest.q_ingest_chain_spans_audit
-    (full DuckDB oracle), parity-pinned by
+    throughout; batch forms replayed by
+    plans/registry_ingest.q_ingest_chain_spans_audit and
+    q_ingest_chain_group_spans (full DuckDB oracle), parity-pinned by
     tests/test_ingest_pipeline.py."""
-    return _full_chain(
-        spark, input_dir, schema, work_dir, ref_path,
-        drift_gate.run_drift_gate_available_now, {},
-        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
-        span_k, index_path,
+    runner = _dedup_runner(dedup_policy)
+    p = _paths(work_dir, _FULL_CHAIN_PATHS)
+    _run_drift_stage(
+        spark, input_dir, schema, p, ref_path, text_col, psi_threshold, group_col
     )
-
-
-def run_group_full_ingest_available_now(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    work_dir: str,
-    ref_path: str,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    psi_threshold: float = 0.25,
-    dedup_policy: str = "bucket",
-    dedup_kwargs: dict | None = None,
-    span_k: int = 8,
-    index_path: str | None = None,
-) -> dict[str, str]:
-    """The complete MULTI-FEED admission pipeline: grouped drift gate
-    (each feed PSI-judged against its own frozen reference — one broken
-    feed quarantines alone) → MinHash near-dup gate → exact
-    duplicated-substring (span) gate → sketch maintenance over the
-    span-cleaned corpus. The dedup and span gates keep ONE first-wins
-    state across feeds: a near-duplicate or a repeated passage is
-    rejected/cut whichever feed resends it, in batch order.
-    ``index_path`` arms the same optional serving stage 5 as
-    :func:`run_full_ingest_available_now`. Same directory chaining and
-    exactly-once/restart contract as the other chains; batch form
-    replayed by plans/registry_ingest.q_ingest_chain_group_spans (full
-    DuckDB oracle), parity-pinned by tests/test_ingest_pipeline.py."""
-    return _full_chain(
-        spark, input_dir, schema, work_dir, ref_path,
-        drift_gate.run_group_drift_gate_available_now,
-        {"group_col": group_col},
-        id_col, text_col, psi_threshold, dedup_policy, dedup_kwargs,
-        span_k, index_path,
-    )
+    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
+    _run_span_stage(spark, schema, p, id_col, text_col, span_k)
+    _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
+    _run_index_stage(spark, p, index_path)
+    return p
 
 
 # -- media modality chain -----------------------------------------------------

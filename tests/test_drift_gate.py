@@ -47,19 +47,25 @@ def _write(path, rows):
     _stamp(path)
 
 
+def _stats(batch, ref, **kw):
+    """The pooled gate's one batch_stats row: (psi, [ks,] n_docs)."""
+    (row,) = drift_gate.batch_stats(batch, ref, **kw).collect()
+    return tuple(row)
+
+
 def test_batch_psi_zero_on_identical_distribution(spark):
     ref_df = spark.createDataFrame([(i, NORMAL) for i in range(50)], SCHEMA)
     ref = drift_gate.reference_counts(ref_df)
-    psi, n = drift_gate.batch_psi_stats(ref_df, ref)
+    psi, n = _stats(ref_df, ref)
     assert psi == 0.0 and n == 50
     drifted = spark.createDataFrame([(i, SHORT) for i in range(50)], SCHEMA)
-    assert drift_gate.batch_psi(drifted, ref) > 0.25
+    assert _stats(drifted, ref)[0] > 0.25
 
 
 def test_write_reference_roundtrip_is_bounded_and_psi_zero(spark, tmp_path):
     # the persisted reference must be the PRE-AGGREGATED (bin, n) form
     # (<= bins rows however large the snapshot) and round-trip through
-    # batch_psi as exactly 0.0 on the same data (VERDICT r5 #3)
+    # batch_stats as PSI exactly 0.0 on the same data (VERDICT r5 #3)
     ref_path = str(tmp_path / "ref")
     snap = spark.createDataFrame(
         [(i, NORMAL) for i in range(80)] + [(100 + i, SHORT) for i in range(20)],
@@ -70,7 +76,7 @@ def test_write_reference_roundtrip_is_bounded_and_psi_zero(spark, tmp_path):
     assert persisted.count() <= 10
     assert sorted(persisted.columns) == ["bin", "n"]
     assert persisted.agg(F.sum("n")).collect()[0][0] == 100
-    assert drift_gate.batch_psi(snap, persisted) == 0.0
+    assert _stats(snap, persisted)[0] == 0.0
 
 
 def test_gate_admits_normal_quarantines_drifted_and_logs(spark, tmp_path):
@@ -98,6 +104,16 @@ def test_gate_admits_normal_quarantines_drifted_and_logs(spark, tmp_path):
     assert decisions[True]["psi"] <= 0.25 < decisions[False]["psi"]
     assert decisions[True]["n_docs"] == decisions[False]["n_docs"] == 20
 
+    def routes():
+        # the pooled gate writes ONE route dir per batch: never an empty
+        # admitted/ or quarantined/ batch dir (no extra write job)
+        return {
+            d: sorted(x for x in os.listdir(f"{out}/{d}") if x.startswith("batch_id="))
+            for d in ("admitted", "quarantined")
+        }
+
+    assert routes() == {"admitted": ["batch_id=0"], "quarantined": ["batch_id=1"]}
+
     # restart: nothing reprocessed, a new drifted file gates correctly
     _write(os.path.join(inbox, "f2.parquet"), [(200 + i, SHORT) for i in range(10)])
     drift_gate.run_drift_gate_available_now(
@@ -106,6 +122,10 @@ def test_gate_admits_normal_quarantines_drifted_and_logs(spark, tmp_path):
     assert spark.read.parquet(f"{out}/admitted").count() == 20  # unchanged
     assert spark.read.parquet(f"{out}/quarantined").count() == 30
     assert spark.read.parquet(f"{out}/decisions").count() == 3
+    assert routes() == {
+        "admitted": ["batch_id=0"],
+        "quarantined": ["batch_id=1", "batch_id=2"],
+    }
 
 
 GSCHEMA = "doc_id long, lang string, text string"
@@ -143,7 +163,7 @@ def test_group_gate_quarantines_only_the_drifted_group(spark, tmp_path):
     ref = str(tmp_path / "ref")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(inbox)
-    drift_gate.write_group_reference(_gref(spark), ref, group_col="lang")
+    drift_gate.write_reference(_gref(spark), ref, group_col="lang")
     # one mixed batch: en stays on-profile, de collapses to short docs,
     # fr is a feed the reference has never seen, one NULL-group row
     _gwrite(
@@ -152,7 +172,7 @@ def test_group_gate_quarantines_only_the_drifted_group(spark, tmp_path):
         + [(10 + i, "de", SHORT) for i in range(10)]
         + [(50, "fr", NORMAL), (60, None, NORMAL)],
     )
-    drift_gate.run_group_drift_gate_available_now(
+    drift_gate.run_drift_gate_available_now(
         spark, inbox, GSCHEMA, out, ref, ckpt, group_col="lang"
     )
     adm = spark.read.parquet(os.path.join(out, "admitted", "batch_id=*"))
@@ -171,7 +191,7 @@ def test_group_gate_quarantines_only_the_drifted_group(spark, tmp_path):
     assert not dec["fr"]["admitted"]  # unknown feed: all-epsilon reference
 
     # restart: checkpoint holds, nothing reprocessed
-    drift_gate.run_group_drift_gate_available_now(
+    drift_gate.run_drift_gate_available_now(
         spark, inbox, GSCHEMA, out, ref, ckpt, group_col="lang"
     )
     assert (
@@ -180,32 +200,149 @@ def test_group_gate_quarantines_only_the_drifted_group(spark, tmp_path):
     )
 
 
+def test_group_gate_int_key_keeps_its_type_in_decisions(spark, tmp_path):
+    """A non-string feed column: the decision rows take the key's type
+    from the batch schema, so an int-keyed feed drains, commits, and
+    reads back with int keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType
+
+    schema = "doc_id long, feed int, text string"
+    inbox = str(tmp_path / "inbox")
+    out = str(tmp_path / "out")
+    ref = str(tmp_path / "ref")
+    os.makedirs(inbox)
+    drift_gate.write_reference(
+        spark.createDataFrame(
+            [(i, 1 + i % 2, NORMAL) for i in range(100)], schema
+        ),
+        ref,
+        group_col="feed",
+    )
+    rows = [(i, 1, NORMAL) for i in range(10)] + [
+        (100 + i, 2, SHORT) for i in range(10)
+    ]
+    path = os.path.join(inbox, "f0.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "feed": pa.array([r[1] for r in rows], pa.int32()),
+                "text": pa.array([r[2] for r in rows], pa.string()),
+            }
+        ),
+        path,
+    )
+    drift_gate.run_drift_gate_available_now(
+        spark, inbox, schema, out, ref, str(tmp_path / "ckpt"), group_col="feed"
+    )
+    dec = spark.read.parquet(os.path.join(out, "decisions", "batch_id=*"))
+    assert dec.schema["feed"].dataType == IntegerType()
+    assert {r["feed"]: (r["admitted"], r["n_docs"]) for r in dec.collect()} == {
+        1: (True, 10),
+        2: (False, 10),
+    }
+    adm = spark.read.parquet(os.path.join(out, "admitted", "batch_id=*"))
+    assert {r["feed"] for r in adm.collect()} == {1}
+
+
 def test_group_gate_matches_per_group_scalar_psi(spark):
-    """Per-group stats equal running the ungrouped operator once per
-    group — the grouped relation is a partitioned computation, not a
-    different formula."""
+    """Per-group stats equal running the pooled form once per group —
+    the keyed relation is a partitioned computation, not a different
+    formula. The kernel contract underneath: for a key with one value,
+    the keyed PSI, KS and refresh rows minus the key column equal the
+    ``key=()`` rows; ``key=()`` emits ``bins`` epsilon-floored rows even
+    with an empty side (the pooled gate's empty-batch decision row
+    rests on it); a keyed kernel emits rows only for groups present on
+    some side."""
+    from reddit_apache_airflow_postgres_pipeline_spark.operators import curation
+
     ref_df = _gref(spark)
     batch = spark.createDataFrame(
         [(1, "en", NORMAL), (2, "en", NORMAL)]
         + [(10 + i, "de", SHORT) for i in range(10)],
         GSCHEMA,
     )
-    grouped = {
-        r["lang"]: (r["psi"], r["n_docs"])
-        for r in drift_gate.batch_group_psi(
-            batch,
-            drift_gate.group_reference_counts(ref_df, "lang"),
-            group_col="lang",
-        ).collect()
-    }
-    for lang in ("en", "de"):
-        psi, n = drift_gate.batch_psi_stats(
-            batch.filter(F.col("lang") == lang),
-            drift_gate.reference_counts(
-                ref_df.filter(F.col("lang") == lang)
-            ),
+    lang = ("lang",)
+    for ks in (False, True):
+        grouped = {
+            r["lang"]: tuple(r)[1:]
+            for r in drift_gate.batch_stats(
+                batch,
+                drift_gate.reference_counts(ref_df, group_col="lang"),
+                group_col="lang",
+                ks=ks,
+            ).collect()
+        }
+        assert set(grouped) == {"en", "de"}
+        for g in grouped:
+            want = _stats(
+                batch.filter(F.col("lang") == g),
+                drift_gate.reference_counts(ref_df.filter(F.col("lang") == g)),
+                ks=ks,
+            )
+            assert grouped[g] == want, (g, ks)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    # one key value: keyed rows minus the key == the key=() rows
+    ref_de = drift_gate.reference_counts(
+        ref_df.filter(F.col("lang") == "de"), group_col="lang"
+    )
+    cur_de = drift_gate.reference_counts(
+        batch.filter(F.col("lang") == "de"), group_col="lang"
+    )
+    for kernel in (curation.psi_drift_counts, curation.ks_drift_counts):
+        assert rows(kernel(ref_de, cur_de, key=lang).drop("lang")) == rows(
+            kernel(ref_de.drop("lang"), cur_de.drop("lang"))
         )
-        assert grouped[lang] == (psi, n), lang
+    per_batch = spark.createDataFrame(
+        [("de", b, b % 3, 5 + b) for b in range(4)],
+        "lang string, b int, bin int, n bigint",
+    )
+    for min_batches in (2, 5):  # window satisfied / hysteresis fallback
+        assert rows(
+            curation.refreshed_reference_counts(
+                per_batch, ref_de, window=3, min_batches=min_batches, key=lang
+            ).drop("lang")
+        ) == rows(
+            curation.refreshed_reference_counts(
+                per_batch.drop("lang"), ref_de.drop("lang"), window=3,
+                min_batches=min_batches,
+            )
+        )
+
+    # key=(): an empty current side, and both sides empty, still give
+    # `bins` rows floored at epsilon — one pooled decision per batch
+    pooled = ref_de.drop("lang")
+    empty = pooled.limit(0)
+    for r, c in ((pooled, empty), (empty, empty)):
+        psi = curation.psi_drift_counts(r, c, bins=10).collect()
+        assert sorted(x["bin"] for x in psi) == list(range(10))
+        assert all(x["n_cur"] == 0 and x["p_cur"] == 1e-4 for x in psi)
+        ks = curation.ks_drift_counts(r, c, bins=10).collect()
+        assert len(ks) == 10 and all(x["cdf_cur"] == 0.0 for x in ks)
+    assert curation.psi_drift_counts(empty, empty, bins=10).agg(
+        F.sum("psi_term")
+    ).collect()[0][0] == 0.0
+    assert _stats(batch.limit(0).drop("lang"), pooled)[-1] == 0
+
+    # keyed: rows exactly for the groups on either side, none for an
+    # absent group — and none at all when both sides are empty
+    full_ref = drift_gate.reference_counts(ref_df, group_col="lang")
+    got = curation.psi_drift_counts(full_ref, cur_de, key=lang).collect()
+    assert sorted({x["lang"] for x in got}) == ["de", "en"] and len(got) == 20
+    assert curation.psi_drift_counts(
+        full_ref.limit(0), cur_de.limit(0), key=lang
+    ).count() == 0
+    assert (
+        drift_gate.batch_stats(
+            batch.limit(0), full_ref, group_col="lang", ks=True
+        ).count()
+        == 0
+    )
 
 
 def test_group_reference_rejects_wrong_format(spark, tmp_path):
@@ -216,8 +353,8 @@ def test_group_reference_rejects_wrong_format(spark, tmp_path):
     drift_gate.write_reference(
         spark.createDataFrame([(i, NORMAL) for i in range(10)], SCHEMA), ref
     )
-    with pytest.raises(ValueError, match="grouped counts form"):
-        drift_gate.run_group_drift_gate_available_now(
+    with pytest.raises(ValueError, match=r"\(lang, bin, n\) counts form"):
+        drift_gate.run_drift_gate_available_now(
             spark, str(tmp_path / "in"), GSCHEMA, str(tmp_path / "o"),
             ref, str(tmp_path / "c"), group_col="lang",
         )
@@ -225,7 +362,7 @@ def test_group_reference_rejects_wrong_format(spark, tmp_path):
 
 def test_ks_metric_catches_location_shift_and_matches_operator(spark):
     """The KS co-metric's reason to exist: a one-bin location shift of
-    the WHOLE mass. Every doc moves bin 2 -> bin 3; batch_drift_stats'
+    the WHOLE mass. Every doc moves bin 2 -> bin 3; batch_stats'
     ks must equal curation.ks_drift_counts' max(ks_term) exactly, hit
     1.0 (complete CDF displacement at bin 2), and the PSI for the same
     shift is finite/comparable — two metrics, one binned-count pass."""
@@ -238,7 +375,7 @@ def test_ks_metric_catches_location_shift_and_matches_operator(spark):
     shifted = spark.createDataFrame(
         [(i, " ".join(["tok"] * 60)) for i in range(50)], SCHEMA  # bin 3
     )
-    psi, ks, n = drift_gate.batch_drift_stats(shifted, ref)
+    psi, ks, n = _stats(shifted, ref, ks=True)
     assert n == 50
     cur = drift_gate.reference_counts(shifted)
     want = (
@@ -248,7 +385,7 @@ def test_ks_metric_catches_location_shift_and_matches_operator(spark):
     )
     assert ks == want == 1.0
     # identical distribution: both metrics zero
-    psi0, ks0, _ = drift_gate.batch_drift_stats(ref_df, ref)
+    psi0, ks0, _ = _stats(ref_df, ref, ks=True)
     assert psi0 == 0.0 and ks0 == 0.0
 
 
@@ -302,7 +439,7 @@ def test_group_gate_ks_quarantines_only_the_shifted_feed(spark, tmp_path):
         + [(100 + i, "de", NORMAL) for i in range(50)],
         gschema,
     )
-    drift_gate.write_group_reference(snap, ref, "lang")
+    drift_gate.write_reference(snap, ref, group_col="lang")
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -319,8 +456,8 @@ def test_group_gate_ks_quarantines_only_the_shifted_feed(spark, tmp_path):
         ),
         os.path.join(inbox, "f0.parquet"),
     )
-    drift_gate.run_group_drift_gate_available_now(
-        spark, inbox, gschema, out, ref, ckpt, "lang",
+    drift_gate.run_drift_gate_available_now(
+        spark, inbox, gschema, out, ref, ckpt, group_col="lang",
         threshold=1e9, ks_threshold=0.5,
     )
     adm = spark.read.parquet(f"{out}/admitted")
@@ -339,7 +476,7 @@ def test_refresh_reference_rebaselines_from_admitted_window(spark, tmp_path):
     batches, and pin (a) the refreshed (bin, n) file equals the policy
     relation computed in batch (curation.refreshed_reference_counts),
     (b) gating a new batch against the refreshed file equals
-    batch_psi_stats against the batch-computed reference."""
+    batch_stats against the batch-computed reference."""
     from reddit_apache_airflow_postgres_pipeline_spark.operators import curation
 
     inbox = str(tmp_path / "inbox")
@@ -401,10 +538,8 @@ def test_refresh_reference_rebaselines_from_admitted_window(spark, tmp_path):
     probe = spark.createDataFrame(
         [(900 + i, NORMAL) for i in range(15)], SCHEMA
     )
-    psi_file, n_file = drift_gate.batch_psi_stats(
-        probe, spark.read.parquet(ref)
-    )
-    psi_rel, n_rel = drift_gate.batch_psi_stats(probe, want_rel)
+    psi_file, n_file = _stats(probe, spark.read.parquet(ref))
+    psi_rel, n_rel = _stats(probe, want_rel)
     assert (psi_file, n_file) == (psi_rel, n_rel)
     assert n_file == 15
 
@@ -441,7 +576,7 @@ def test_refresh_group_reference_per_feed_hysteresis(spark, tmp_path):
     ref = str(tmp_path / "ref")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(inbox)
-    drift_gate.write_group_reference(_gref(spark), ref, group_col="lang")
+    drift_gate.write_reference(_gref(spark), ref, group_col="lang")
     frozen = {
         (r["lang"], r["bin"]): r["n"]
         for r in spark.read.parquet(ref).collect()
@@ -452,14 +587,14 @@ def test_refresh_group_reference_per_feed_hysteresis(spark, tmp_path):
             [(100 * i + j, "en", NORMAL) for j in range(10)]
             + [(100 * i + 50 + j, "de", SHORT) for j in range(10)],
         )
-    drift_gate.run_group_drift_gate_available_now(
+    drift_gate.run_drift_gate_available_now(
         spark, inbox, GSCHEMA, out, ref, ckpt, group_col="lang"
     )
     adm = spark.read.parquet(f"{out}/admitted")
     assert {r["lang"] for r in adm.select("lang").distinct().collect()} == {"en"}
 
-    assert drift_gate.refresh_group_reference(
-        spark, out, ref, group_col="lang", window=3, min_batches=2
+    assert drift_gate.refresh_reference(
+        spark, out, ref, window=3, min_batches=2, group_col="lang"
     )
     got = {
         (r["lang"], r["bin"]): r["n"]
@@ -490,15 +625,15 @@ def test_refresh_group_reference_per_feed_hysteresis(spark, tmp_path):
     )
     want = {
         (r["lang"], r["bin"]): r["n"]
-        for r in curation.refreshed_reference_counts_by_group(
-            per_batch, frozen_df, window=3, min_batches=2, group_col="lang"
+        for r in curation.refreshed_reference_counts(
+            per_batch, frozen_df, window=3, min_batches=2, key=("lang",)
         ).collect()
     }
     assert got == want
 
     # idempotent second call: nothing new admitted → no-op, file stable
-    assert not drift_gate.refresh_group_reference(
-        spark, out, ref, group_col="lang", window=3, min_batches=3
+    assert not drift_gate.refresh_reference(
+        spark, out, ref, window=3, min_batches=3, group_col="lang"
     )
     assert {
         (r["lang"], r["bin"]): r["n"]
@@ -527,8 +662,9 @@ def test_refresh_reference_validates_params_and_noop_returns_false(
             spark, str(tmp_path / "o"), str(tmp_path / "r"), min_batches=0
         )
     with pytest.raises(ValueError, match="must be positive"):
-        drift_gate.refresh_group_reference(
-            spark, str(tmp_path / "o"), str(tmp_path / "r"), min_batches=-1
+        drift_gate.refresh_reference(
+            spark, str(tmp_path / "o"), str(tmp_path / "r"), min_batches=-1,
+            group_col="lang",
         )
 
     inbox = str(tmp_path / "inbox")
@@ -694,7 +830,7 @@ def test_in_drain_group_refresh_per_feed(spark, tmp_path):
     os.makedirs(inbox)
     ref = str(tmp_path / "ref")
     out = str(tmp_path / "out")
-    drift_gate.write_group_reference(snap, ref, group_col="lang")
+    drift_gate.write_reference(snap, ref, group_col="lang")
     frozen_ok = sorted(
         (r["bin"], r["n"])
         for r in spark.read.parquet(ref).filter(F.col("lang") == "ok").collect()
@@ -710,7 +846,7 @@ def test_in_drain_group_refresh_per_feed(spark, tmp_path):
         _gwrite(p, rows)
         past = time.time() - (10 - i) * 10
         os.utime(p, (past, past))
-    drift_gate.run_group_drift_gate_available_now(
+    drift_gate.run_drift_gate_available_now(
         spark, inbox, GSCHEMA, out, ref, str(tmp_path / "ckpt"),
         group_col="lang",
         refresh_every=3, refresh_window=3, refresh_min_batches=2,

@@ -233,7 +233,7 @@ def test_group_chain_matches_batch_replay(spark, tmp_path):
     ref = str(tmp_path / "ref")
     os.makedirs(inbox)
     base = ri.group_chain_batches(spark, sf)
-    drift_gate.write_group_reference(
+    drift_gate.write_reference(
         base.filter(~F.col("is_long")).select(
             F.col("doc").alias("doc_id"), "lang", "text"
         ),
@@ -260,7 +260,7 @@ def test_group_chain_matches_batch_replay(spark, tmp_path):
         )
         past = time.time() - (ri._ING_B - b) * 10
         os.utime(path, (past, past))  # pin file order = batch order
-    p = ingest_pipeline.run_group_ingest_available_now(
+    p = ingest_pipeline.run_ingest_pipeline_available_now(
         spark, inbox, schema_g, work, ref, group_col="lang"
     )
 
@@ -435,7 +435,7 @@ def test_group_full_chain_matches_batch_replay(spark, tmp_path):
     ref = str(tmp_path / "ref")
     os.makedirs(inbox)
     base = ri.group_chain_batches(spark, sf)
-    drift_gate.write_group_reference(
+    drift_gate.write_reference(
         base.filter(~F.col("is_long")).select(
             F.col("doc").alias("doc_id"), "lang", "text"
         ),
@@ -462,7 +462,7 @@ def test_group_full_chain_matches_batch_replay(spark, tmp_path):
         )
         past = time.time() - (ri._ING_B - b) * 10
         os.utime(path, (past, past))
-    p = ingest_pipeline.run_group_full_ingest_available_now(
+    p = ingest_pipeline.run_full_ingest_available_now(
         spark, inbox, schema_g, work, ref, group_col="lang"
     )
 
@@ -521,7 +521,7 @@ def test_group_full_chain_matches_batch_replay(spark, tmp_path):
 def test_ks_decisions_match_streaming_gate_stats(spark):
     """Two-metric parity (the KS analog of the chain parity tests):
     q_ingest_chain_decisions_ks's per-batch (psi, ks) must equal
-    drift_gate.batch_drift_stats run on the SAME replay batches
+    drift_gate.batch_stats(ks=True) run on the SAME replay batches
     against the same frozen reference — the registry replay and the
     streaming gate compute the two metrics through the same operator
     contracts, so a rounding/reference drift on either side fails
@@ -546,9 +546,9 @@ def test_ks_decisions_match_streaming_gate_stats(spark):
         with_text.filter(F.col("b") != _ING_B - 1), "text"
     )
     for i in range(_ING_B):
-        psi, ks, n = drift_gate.batch_drift_stats(
-            with_text.filter(F.col("b") == i), ref, "text"
-        )
+        ((psi, ks, n),) = drift_gate.batch_stats(
+            with_text.filter(F.col("b") == i), ref, "text", ks=True
+        ).collect()
         assert got[i] == (psi, ks, n), (i, got[i], (psi, ks, n))
 
 

@@ -14,7 +14,10 @@ from __future__ import annotations
 import hashlib
 import json
 import pathlib
+import subprocess
 import sys
+
+import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PIN = pathlib.Path(__file__).with_name("oracle_pin.json")
@@ -36,6 +39,34 @@ def _current() -> dict:
 
 def test_query_keys_and_order_pinned():
     assert _current()["keys"] == json.loads(PIN.read_text())["keys"]
+
+
+_PKG = "reddit_apache_airflow_postgres_pipeline_spark.plans"
+
+
+@pytest.mark.parametrize(
+    "first",
+    ["__spark_entry__", f"{_PKG}.registry"]
+    + [
+        f"{_PKG}.registry_{m}"
+        for m in ("curation", "ingest", "ml", "mm", "stats", "tpch", "ts")
+    ],
+    ids=lambda m: m.rsplit(".", 1)[-1],
+)
+def test_query_order_independent_of_first_import(first):
+    """The sub-registries register their rows on first import and
+    import each other mid-file; whichever a fresh process imports
+    first, ``queries()`` keeps the pinned order."""
+    code = (
+        f"import {first}\n"
+        "import json, __spark_entry__ as e\n"
+        "print(json.dumps(list(e.queries())))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    assert json.loads(out) == json.loads(PIN.read_text())["keys"]
 
 
 def test_oracle_sql_bytes_pinned():
