@@ -336,6 +336,14 @@ def hll_estimate(
 # raise ``bins`` if the tails matter).
 
 
+def qsketch_geometry(lo: float, hi: float, bins: int) -> None:
+    """Reject a bin geometry no value can be binned under."""
+    if not lo < hi:
+        raise ValueError(f"need lo < hi, got [{lo}, {hi})")
+    if bins < 1:
+        raise ValueError(f"bins must be >= 1, got {bins}")
+
+
 def qsketch_build(
     values: DataFrame,
     value_col: str,
@@ -350,10 +358,7 @@ def qsketch_build(
     into the top edge bin and silently inflate upper quantiles). One
     map-side bin expression + one hash-agg keyed on ≤ bins cells per
     group — the same bounded-exchange shape as cms_build."""
-    if not lo < hi:
-        raise ValueError(f"need lo < hi, got [{lo}, {hi})")
-    if bins < 1:
-        raise ValueError(f"bins must be >= 1, got {bins}")
+    qsketch_geometry(lo, hi, bins)
     group_cols = group_cols or []
     width = (hi - lo) / bins
     x = F.col(value_col).cast("double")

@@ -140,15 +140,19 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
         with open(gmeta_path) as f:
             meta = json.load(f)
         fmt = meta.get("format", "")
-        if fmt == _CORPUS_FORMAT or fmt in _sg.STATES:
+        if fmt == _CORPUS_FORMAT:
             rows = spark.read.parquet(path).count() if _batch_dirs(path) else 0
-            if fmt == _CORPUS_FORMAT:
-                category, modality = "corpus", meta.get("modality")
-            else:
-                category, modality = "gate-state", _sg.STATES[fmt].modality
             return _entry(
-                name, category, fmt, modality, meta, rows,
+                name, "corpus", fmt, meta.get("modality"), meta, rows,
                 len(_batch_dirs(path)),
+            )
+        if fmt in _sg.STATES:
+            # the store's own live read: a crash-interrupted fold's
+            # leftover dirs are neither rows nor live dirs
+            st = _sg.STATES[fmt]
+            return _entry(
+                name, "gate-state", fmt, st.modality, meta,
+                st.load(spark, path, meta).count(), _cs.live_dir_count(path),
             )
         raise ValueError(
             f"estate root {path!r} is a {fmt!r} state store — not a "

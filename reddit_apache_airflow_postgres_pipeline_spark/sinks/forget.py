@@ -15,12 +15,10 @@ Per family:
 - **vector-index** — tombstone the ids, then FULL compaction: the fold
   physically drops the rows and absorbs the tombstone (the documented
   erase → compact → re-add lifecycle, now driven estate-wide).
-- **gate-state** — filtered fold: rewrite the store as one generation
-  dir WITHOUT the ids' signature rows (same crash-safe tmp → rename →
-  delete-subsumed sequence as compaction; a crash mid-delete leaves a
-  superset of dirs whose next fold finishes the job — and unlike
-  compaction the interim superset still contains no forgotten rows,
-  because they were filtered before the rename).
+- **gate-state** — filtered fold: the store's generation fold with the
+  ids' signature rows dropped (compaction's crash-safe tmp → rename
+  with manifest → delete-subsumed sequence; a crash mid-delete leaves
+  folded dirs the manifest already hides, and the next fold GCs them).
 - **decision-log / attribution-log** — per-dir rewrite dropping every
   row that MENTIONS a forgotten id (``doc``, and ``odoc`` in
   attribution logs: "your upload duplicated document X" leaks X's
@@ -53,12 +51,12 @@ Scale posture: an erasure request is decision-sized (a list of ids —
 the reference's analog is a row-level GDPR delete against the loaded
 table); every data-sized operation below is one filtered scan + one
 write per store, shuffled only where the store's own compactor already
-shuffles. All rewrite temp dirs are underscore-prefixed INSIDE the
-store root and carry no "=" (Spark's file index exempts =-bearing
-names from its underscore filter), so a crash mid-rewrite leaves
-nothing Spark listing,
-catalog._batch_dirs, or snapshots._corpus_batch_ids can mistake for a
-live batch dir (r12 advice).
+shuffles. All log and corpus rewrite temp dirs are underscore-prefixed
+INSIDE the store root and carry no "=" (Spark's file index exempts
+=-bearing names from its underscore filter), so a crash mid-rewrite
+leaves nothing Spark listing, catalog._batch_dirs, or
+snapshots._corpus_batch_ids can mistake for a live batch dir (r12
+advice); a fold's temp dir sits beside the store, as in compaction.
 """
 
 from __future__ import annotations
@@ -80,9 +78,6 @@ from reddit_apache_airflow_postgres_pipeline_spark.sinks import (
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     signature_gate as _sg,
 )
-from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
-    state_subdirs,
-)
 
 _TMP_PREFIX = "_forget_tmp_"
 
@@ -101,26 +96,16 @@ def _clean_stray_tmps(path: str) -> None:
 def _erase_gate_state(
     spark: SparkSession, path: str, kind: str, params: dict, ids: list[int]
 ) -> int:
-    """Filtered fold of a gate state store: one new generation dir
-    containing every surviving row, forgotten rows dropped BEFORE the
-    rename, subsumed dirs deleted after. Skips the fold entirely when
-    no forgotten row is present (the re-sweep passes' cheap probe).
-    Returns rows removed."""
+    """Filtered fold of a gate state store: the store's one generation
+    fold (counting_state.compact_counts) with the forgotten docs as
+    ``drop_keys``, so they are dropped BEFORE the rename. Skips the fold
+    entirely when no forgotten row is live (the re-sweep passes' cheap
+    probe). Returns rows removed."""
     state = _sg.STATES[kind]
-    full = state.load(spark, path, params)
-    removed = full.filter(F.col("doc").isin(ids)).count()
-    if removed == 0:
-        return 0
-    survivors = full.filter(~F.col("doc").isin(ids))
-    all_dirs = state_subdirs(path)
-    next_gen = min(min(all_dirs.values(), default=0), 0) - 1
-    _clean_stray_tmps(path)
-    tmp = os.path.join(path, _TMP_PREFIX + "fold")
-    folded = survivors.distinct().repartition(state.key)
-    folded.write.mode("overwrite").parquet(tmp)
-    os.replace(tmp, os.path.join(path, f"batch_id={next_gen}"))
-    for d in all_dirs:
-        shutil.rmtree(d, ignore_errors=True)
+    removed = state.load(spark, path, params).filter(F.col("doc").isin(ids)).count()
+    if removed:
+        drop = local_df(spark, [(int(i),) for i in ids], "doc long")
+        state.compact(spark, path, params, drop_keys=drop)
     return removed
 
 

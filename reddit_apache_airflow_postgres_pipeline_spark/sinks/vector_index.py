@@ -248,7 +248,6 @@ def compact_store(
         agg="distinct",
         partition_by=list(KINDS[kind].partition_by) or None,
         drop_keys=drop,
-        drop_on=["neighbor_id"] if drop is not None else None,
     )
     if folded and tdirs:
         # the folded generation no longer contains the dropped ids and

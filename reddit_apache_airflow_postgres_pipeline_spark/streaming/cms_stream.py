@@ -13,10 +13,9 @@ because its state is a SET consumed through distinct semi-joins —
 duplicate rows never change a decision, so "write generation, then
 delete subsumed dirs" tolerates a crash between the two steps. A
 counting state has no such absorption: a generation PLUS a lingering
-subsumed dir double-counts. The manifest machinery handling that lives
-in streaming/counting_state.py (shared with the quantile-sketch
-stream); this module supplies the CMS cell schema and the per-batch
-sketch builder.
+subsumed dir double-counts. The store is streaming/counting_state.py's
+``CMS`` row, whose generation fold carries the manifest handling that;
+this module supplies the per-batch sketch builder.
 
 At 100 TB/day the same layout holds: each micro-batch contributes a
 ≤(d×w)-row sketch (the batch's own aggregation is the only shuffle,
@@ -35,18 +34,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import cms
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     COMPACT_AFTER_DIRS,
-    compact_if_due,
-    drain,
-    write_batch,
 )
-
-_CELLS = "row int, col int, c long"
-_KEYS = ["row", "col"]
-_MANIFEST = _cs.MANIFEST
-
-# thin aliases: tests and callers address the store through this module
-_state_subdirs = _cs.state_subdirs
-_subsumed_ids = _cs.subsumed_ids
 
 
 def occurrences_from_batch(
@@ -64,19 +52,6 @@ def occurrences_from_batch(
     return batch_df.select(F.col(key_col))
 
 
-def _meta(d: int | None = None, w: int | None = None) -> dict:
-    """Store format marker (counting_state.stamp_meta): geometry is
-    part of the cell semantics — summing stores built under different
-    (d, w) is silent garbage the one-sided runtime extent guard cannot
-    always catch."""
-    m: dict = {"format": "cms-cells"}
-    if d is not None:
-        m["d"] = d
-    if w is not None:
-        m["w"] = w
-    return m
-
-
 def read_sketch(
     spark: SparkSession,
     state_dir: str,
@@ -88,10 +63,8 @@ def read_sketch(
     dir — see counting_state.read_counts for the liveness/retry
     contract. Pass ``d``/``w`` to reject a store stamped with a
     different geometry."""
-    _cs.check_meta(state_dir, _meta(d, w))
-    return _cs.read_counts(
-        spark, state_dir, _CELLS, _KEYS, "c", before_batch=before_batch
-    )
+    _cs.CMS.check(state_dir, {"d": d, "w": w})
+    return _cs.CMS.read(spark, state_dir, {}, before_batch)
 
 
 def compact_state(
@@ -100,9 +73,7 @@ def compact_state(
     """Fold live dirs (and prior generations) into one new generation
     with a transitive ``_subsumed.json`` manifest; see
     counting_state.compact_counts for the crash-safety argument."""
-    _cs.compact_counts(
-        spark, state_dir, _CELLS, _KEYS, "c", exclude_from=exclude_from
-    )
+    _cs.CMS.compact(spark, state_dir, {}, exclude_from)
 
 
 def run_cms_available_now(
@@ -123,14 +94,10 @@ def run_cms_available_now(
     one count increment; otherwise each input row is one occurrence of
     its ``key_col`` value. Per-batch overwrite + the checkpoint give
     exactly-once counting across restarts and retries."""
-    _cs.stamp_meta(state_dir, _meta(d, w))
-
-    def _update(batch_df: DataFrame, batch_id: int) -> None:
-        occ = occurrences_from_batch(batch_df, key_col, text_col)
-        write_batch(cms_build(occ, key_col, d=d, w=w), state_dir, batch_id)
-        compact_if_due(
-            state_dir, compact_after_dirs, compact_state,
-            batch_df.sparkSession, state_dir, exclude_from=batch_id,
-        )
-
-    drain(spark, input_dir, schema, checkpoint_dir, _update)
+    _cs.CMS.drain(
+        spark, input_dir, schema, state_dir, checkpoint_dir, {"d": d, "w": w},
+        lambda b: cms_build(
+            occurrences_from_batch(b, key_col, text_col), key_col, d=d, w=w
+        ),
+        compact_after_dirs,
+    )

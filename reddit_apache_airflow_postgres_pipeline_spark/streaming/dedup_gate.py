@@ -53,17 +53,13 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     drain,
     write_batch,
 )
-from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
-    state_subdirs as _state_subdirs,  # tests use it
-)
 
 
 def _load_state(
     spark: SparkSession, state_dir: str, before_batch: int | None = None
 ) -> DataFrame:
-    """Read the accepted-band-key store (signature_gate.GateState.load:
-    empty while nothing was written, a retried batch's own rows
-    excluded)."""
+    """Read the accepted-band-key store (counting_state.read_live: empty
+    while nothing was written, a retried batch's own rows excluded)."""
     return _sg.RAW_STATE.load(spark, state_dir, {}, before_batch)
 
 
@@ -73,10 +69,10 @@ def compact_state(
     exclude_from: int | None = None,
     num_partitions: int | None = None,
 ) -> None:
-    """Fold the raw gate's (doc, bk) store — signature_gate.fold_state
-    on the bucket key, the store's probe key."""
-    _sg.fold_state(
-        spark, state_dir, _sg.RAW_STATE, {}, exclude_from, num_partitions
+    """Fold the raw gate's (doc, bk) store — counting_state.compact_counts
+    clustered on the bucket key, the store's probe key."""
+    _sg.RAW_STATE.compact(
+        spark, state_dir, {}, exclude_from, num_partitions=num_partitions
     )
 
 
@@ -238,9 +234,8 @@ def run_gate_available_now(
     legacy state of unknown geometry — rebuild them, or stamp once via
     counting_state.stamp_meta(..., migrate=True) if their parameters
     are known."""
-    _cs.stamp_meta(
-        state_dir,
-        _sg.RAW_STATE.meta({"n": n, "num_hashes": num_hashes, "bands": bands}),
+    _sg.RAW_STATE.stamp(
+        state_dir, {"n": n, "num_hashes": num_hashes, "bands": bands}
     )
     _cs.stamp_corpus_meta(out_dir, id_col, "text")
 

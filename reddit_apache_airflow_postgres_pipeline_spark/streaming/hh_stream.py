@@ -7,15 +7,15 @@ candidates fall away as the stream total grows.
 State = two stores under one root:
 
 * ``cms/``   — the counting state (per-batch ≤(d×w)-row sketch dirs,
-  manifest-guarded generation folds; exactly cms_stream's layout via
-  streaming/counting_state.py). The stream TOTAL needs no separate
+  manifest-guarded generation folds: streaming/counting_state.py's
+  ``CMS`` row, cms_stream's store). The stream TOTAL needs no separate
   counter: every increment lands once per hash row, so
   ``N = Σ_col c[row=0][col]``.
 * ``cands/`` — per-batch relations of keys whose estimate met the
   ``φ·N`` bar when the batch ran. SET semantics (read = distinct
-  union), so duplicate dirs are absorbed on read; compaction still
-  writes the subsumption manifest (counting_state's distinct contract,
-  for raw set-readers) but this reader never needs it.
+  union; the ``HH_CANDIDATES`` row), so duplicate dirs are absorbed on
+  read; its generations carry the subsumption manifest like every set
+  store's, which this reader never needs.
 
 Guarantee (one-sided, inherited from CMS): a TRUE heavy hitter is
 never missed — when key k last appears, est(k) ≥ true_now(k) ≥ φ·N_now
@@ -49,18 +49,9 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     write_batch,
 )
 
-_CAND_SCHEMA = "key string"
-
 
 def _cms_dir(state_dir: str) -> str:
     return os.path.join(state_dir, "cms")
-
-
-def _cand_meta(phi: float) -> dict:
-    """Candidate-store marker: φ is stamped in its quantized K/2³²
-    form (the exact value _meets_bar compares with) so two floats that
-    quantize identically are the same bar."""
-    return {"format": "hh-candidates", "phi_k": int(phi * (1 << 32))}
 
 
 def _cand_dir(state_dir: str) -> str:
@@ -73,15 +64,7 @@ def read_candidates(
     """The distinct candidate keys — counting_state.read_counts in its
     ``distinct`` mode: set semantics (duplicate dirs absorb), same
     liveness/retry contract as the sum/max siblings."""
-    return _cs.read_counts(
-        spark,
-        _cand_dir(state_dir),
-        _CAND_SCHEMA,
-        ["key"],
-        None,
-        before_batch=before_batch,
-        agg="distinct",
-    )
+    return _cs.HH_CANDIDATES.read(spark, _cand_dir(state_dir), {}, before_batch)
 
 
 def compact_candidates(
@@ -92,15 +75,7 @@ def compact_candidates(
     are absorbed by the distinct read, and the generation carries the
     standard manifest. ``exclude_from`` keeps the in-flight batch's dir out of the
     fold so read_candidates' retry exclusion keeps working."""
-    _cs.compact_counts(
-        spark,
-        _cand_dir(state_dir),
-        _CAND_SCHEMA,
-        ["key"],
-        None,
-        exclude_from=exclude_from,
-        agg="distinct",
-    )
+    _cs.HH_CANDIDATES.compact(spark, _cand_dir(state_dir), {}, exclude_from)
 
 
 def stream_total(sketch: DataFrame) -> DataFrame:
@@ -111,6 +86,12 @@ def stream_total(sketch: DataFrame) -> DataFrame:
     )
 
 
+def _phi_k(phi: float) -> int:
+    # the candidate store stamps this form: floats that quantize
+    # identically are the same bar
+    return int(phi * (1 << 32))
+
+
 def _meets_bar(est_col, n_col, phi: float):
     """``est ≥ φ·N`` evaluated EXACTLY: φ quantizes to K/2³² (floor)
     and the comparison runs in DECIMAL integer arithmetic —
@@ -118,7 +99,7 @@ def _meets_bar(est_col, n_col, phi: float):
     by an ulp (0.1·30 → 3.0000000000000004) and silently drop a key
     whose count equals the bar exactly, violating the no-miss
     guarantee (review r6)."""
-    k = int(phi * (1 << 32))
+    k = _phi_k(phi)
     dec = "decimal(38,0)"
     return est_col.cast(dec) * F.lit(1 << 32).cast(dec) >= F.lit(k).cast(
         dec
@@ -139,7 +120,7 @@ def heavy_hitters(
     store built under a DIFFERENT φ (a lowered φ breaks the no-miss
     argument for keys that met the new bar before the change but were
     never flagged)."""
-    _cs.check_meta(_cand_dir(state_dir), _cand_meta(phi))
+    _cs.HH_CANDIDATES.check(_cand_dir(state_dir), {"phi_k": _phi_k(phi)})
     sketch = cms_stream.read_sketch(spark, _cms_dir(state_dir), d=d, w=w)
     cands = read_candidates(spark, state_dir)
     est = cms_estimate(sketch, cands, "key", d=d, w=w)
@@ -170,8 +151,8 @@ def run_hh_available_now(
     against the up-to-date sketch meets φ·N. Per-batch overwrite of
     both dirs + the checkpoint give exactly-once behavior; a retried
     batch's reads exclude its own failed attempt in BOTH stores."""
-    _cs.stamp_meta(_cms_dir(state_dir), cms_stream._meta(d, w))
-    _cs.stamp_meta(_cand_dir(state_dir), _cand_meta(phi))
+    _cs.CMS.stamp(_cms_dir(state_dir), {"d": d, "w": w})
+    _cs.HH_CANDIDATES.stamp(_cand_dir(state_dir), {"phi_k": _phi_k(phi)})
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
         # persist: the sketch write and the candidate flagging both

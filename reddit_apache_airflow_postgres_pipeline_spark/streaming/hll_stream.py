@@ -40,33 +40,11 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import _HL
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     COMPACT_AFTER_DIRS,
-    compact_if_due,
-    drain,
-    write_batch,
 )
 
 
-def _registers_schema(group_cols: list[str] | None) -> str:
-    """Store schema. Group columns are pinned to string in the stream
-    store (cast them before the gate if needed) so reads are
-    schema-stable without inference."""
-    cols = "".join(f"{g} string, " for g in (group_cols or []))
-    return cols + "register int, maxrank int"
-
-
-# thin aliases: tests and callers address the store through this module
-_state_subdirs = _cs.state_subdirs
-
-
-def _meta(p: int | None = None) -> dict:
-    """Store format marker: the 32→60-bit hash change keeps old
-    sketches INSIDE the runtime register/rank guard (32-bit geometry is
-    a subset) while hashing keys to different registers — only this
-    marker catches a stale pre-change store (ADVICE r6)."""
-    m = {"format": "hll-registers", "hash_bits": _HLL_BITS}
-    if p is not None:
-        m["p"] = p
-    return m
+def _params(p: int | None, group_cols: list[str] | None) -> dict:
+    return {"hash_bits": _HLL_BITS, "p": p, "group_cols": group_cols or []}
 
 
 def read_sketch(
@@ -83,17 +61,8 @@ def read_sketch(
     path) excludes the failed attempt's own dir; generations (negative
     ids) always pass, as in cms_stream. Pass ``p`` to also reject a
     store stamped with a different precision."""
-    group_cols = group_cols or []
-    _cs.check_meta(state_dir, _meta(p))
-    return _cs.read_counts(
-        spark,
-        state_dir,
-        _registers_schema(group_cols),
-        [*group_cols, "register"],
-        "maxrank",
-        before_batch=before_batch,
-        agg="max",
-    )
+    _cs.HLL.check(state_dir, _params(p, group_cols))
+    return _cs.HLL.read(spark, state_dir, _params(p, group_cols), before_batch)
 
 
 def compact_state(
@@ -110,16 +79,7 @@ def compact_state(
     alone — the absorption the CMS stream's counting state lacks.
     ``exclude_from`` keeps the in-flight batch's dir out of the fold so
     it survives for retry exclusion."""
-    group_cols = group_cols or []
-    _cs.compact_counts(
-        spark,
-        state_dir,
-        _registers_schema(group_cols),
-        [*group_cols, "register"],
-        "maxrank",
-        exclude_from=exclude_from,
-        agg="max",
-    )
+    _cs.HLL.compact(spark, state_dir, _params(None, group_cols), exclude_from)
 
 
 def run_hll_available_now(
@@ -142,21 +102,23 @@ def run_hll_available_now(
     exactly-once semantics across restarts and retries — and max-merge
     would forgive even a double-applied batch."""
     group_cols = group_cols or []
-    _cs.stamp_meta(state_dir, _meta(p))
+    # group columns are pinned to string in the store schema: cast them
+    # where the batch is written, or a non-string group column writes
+    # dirs the store can never read back
+    groups = [F.col(g).cast("string").alias(g) for g in group_cols]
 
-    def _update(batch_df: DataFrame, batch_id: int) -> None:
+    def _build(batch_df: DataFrame) -> DataFrame:
         if text_col is not None:
             from reddit_apache_airflow_postgres_pipeline_spark.operators.textstats import tokens
 
             occ = batch_df.select(
-                *group_cols, F.explode(tokens(text_col)).alias(key_col)
+                *groups, F.explode(tokens(text_col)).alias(key_col)
             )
         else:
-            occ = batch_df.select(*group_cols, key_col)
-        write_batch(hll_build(occ, key_col, group_cols, p=p), state_dir, batch_id)
-        compact_if_due(
-            state_dir, compact_after_dirs, compact_state,
-            batch_df.sparkSession, state_dir, group_cols, exclude_from=batch_id,
-        )
+            occ = batch_df.select(*groups, key_col)
+        return hll_build(occ, key_col, group_cols, p=p)
 
-    drain(spark, input_dir, schema, checkpoint_dir, _update)
+    _cs.HLL.drain(
+        spark, input_dir, schema, state_dir, checkpoint_dir,
+        _params(p, group_cols), _build, compact_after_dirs,
+    )

@@ -5,10 +5,10 @@ O(bins) state.
 
 Fourth member of the streaming sketch family (dedup gate: membership;
 CMS: frequency; HLL: cardinality; this: distribution/quantiles), and
-the second client of the shared counting-state store
+the ``QSKETCH`` row of the per-batch store table
 (streaming/counting_state.py): bin counts SUM-merge exactly like CMS
 cells, so they need the same ``_subsumed.json`` manifest discipline —
-one abstraction, two sketches, identical crash-safety argument.
+one fold, identical crash-safety argument.
 
 Each micro-batch contributes a ≤ bins-row (bin, n) dir; the folded
 state feeds sketches.qsketch_quantiles unchanged (read_sketch returns
@@ -21,37 +21,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import qsketch_build
+from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import (
+    qsketch_build,
+    qsketch_geometry,
+)
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     COMPACT_AFTER_DIRS,
-    compact_if_due,
-    drain,
-    write_batch,
 )
-
-_CELLS = "bin int, n long"
-_KEYS = ["bin"]
-
-_state_subdirs = _cs.state_subdirs
-_subsumed_ids = _cs.subsumed_ids
-
-
-def _meta(
-    lo: float | None = None, hi: float | None = None, bins: int | None = None
-) -> dict:
-    """Store format marker (counting_state.stamp_meta): bin counts are
-    meaningless outside their (lo, hi, bins) geometry, and NOTHING in
-    the (bin, n) rows themselves reveals a mismatch — only the marker
-    does."""
-    m: dict = {"format": "qsketch-bins"}
-    if lo is not None:
-        m["lo"] = float(lo)
-    if hi is not None:
-        m["hi"] = float(hi)
-    if bins is not None:
-        m["bins"] = bins
-    return m
 
 
 def read_sketch(
@@ -65,10 +42,8 @@ def read_sketch(
     """The current stream sketch as the standard (bin, n) relation —
     drop-in input for sketches.qsketch_quantiles/qsketch_merge. Pass
     the geometry to reject a store stamped with a different one."""
-    _cs.check_meta(state_dir, _meta(lo, hi, bins))
-    return _cs.read_counts(
-        spark, state_dir, _CELLS, _KEYS, "n", before_batch=before_batch
-    )
+    _cs.QSKETCH.check(state_dir, {"lo": lo, "hi": hi, "bins": bins})
+    return _cs.QSKETCH.read(spark, state_dir, {}, before_batch)
 
 
 def compact_state(
@@ -76,9 +51,7 @@ def compact_state(
 ) -> None:
     """Generation fold with the transitive manifest; see
     counting_state.compact_counts."""
-    _cs.compact_counts(
-        spark, state_dir, _CELLS, _KEYS, "n", exclude_from=exclude_from
-    )
+    _cs.QSKETCH.compact(spark, state_dir, {}, exclude_from)
 
 
 def run_qsketch_available_now(
@@ -98,15 +71,12 @@ def run_qsketch_available_now(
     bins clamp outliers) and land as one ≤ bins-row dir. Per-batch
     overwrite + the checkpoint give exactly-once counting across
     restarts and retries."""
-    _cs.stamp_meta(state_dir, _meta(lo, hi, bins))
-
-    def _update(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch(
-            qsketch_build(batch_df, value_col, lo, hi, bins), state_dir, batch_id
-        )
-        compact_if_due(
-            state_dir, compact_after_dirs, compact_state,
-            batch_df.sparkSession, state_dir, exclude_from=batch_id,
-        )
-
-    drain(spark, input_dir, schema, checkpoint_dir, _update)
+    # validated before the marker is stamped: a geometry every batch
+    # would reject must not claim the state dir
+    qsketch_geometry(lo, hi, bins)
+    _cs.QSKETCH.drain(
+        spark, input_dir, schema, state_dir, checkpoint_dir,
+        {"lo": float(lo), "hi": float(hi), "bins": bins},
+        lambda b: qsketch_build(b, value_col, lo, hi, bins),
+        compact_after_dirs,
+    )

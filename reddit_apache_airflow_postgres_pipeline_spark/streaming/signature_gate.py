@@ -26,9 +26,10 @@ signatures the package keeps:
 
 :data:`STATES` is the gate-state table: every gate store kind the
 estate sinks meet — the two rows above plus the raw bucket gate's
-``dedup-gate/v1`` (doc, bk) store — with its loader, fold key and
-catalog modality. forget, maintenance and the catalog read it instead
-of importing the gates.
+``dedup-gate/v1`` (doc, bk) store — each a row of the per-batch store
+table (counting_state.Store: a set store folded clustered on its probe
+key) carrying its catalog modality. forget, maintenance and the catalog
+read it instead of importing the gates.
 
 Admission policy (the family rule, identical for every row): a doc is
 REJECTED iff a verified blocker exists — from the accepted state, or a
@@ -50,23 +51,22 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import dataclass
 from functools import reduce
 from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.neardup import (
     band_keys_of_signature,
     minhash_signature,
     signature_band_keys,
 )
-from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
-from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-    counting_state as _cs,
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.counting_state import (
+    META,
+    Store,
+    stamp_corpus_meta,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     COMPACT_AFTER_DIRS,
@@ -75,49 +75,6 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     state_subdirs,
     write_batch,
 )
-
-
-@dataclass(frozen=True)
-class GateState:
-    fmt: str  # the store's format marker (counting_state.stamp_meta)
-    params: tuple[str, ...]  # the frozen params, in meta order
-    modality: str  # the estate catalog's modality cell
-    key: str  # the fold's partition key: the column every probe joins on
-    cols: Callable[[dict], list[str]]  # frozen params -> row columns after doc
-    col_type: str
-
-    def meta(self, p: dict) -> dict:
-        """The store's marker: format plus the frozen params."""
-        return {"format": self.fmt, **{k: p[k] for k in self.params}}
-
-    def schema(self, p: dict) -> str:
-        return "doc long, " + ", ".join(f"{c} {self.col_type}" for c in self.cols(p))
-
-    def load(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        p: dict,
-        before_batch: int | None = None,
-        since: int | None = None,
-    ) -> DataFrame:
-        """The store's rows — empty while nothing was written.
-        ``before_batch`` excludes state written by batch ids ≥ that id:
-        a RETRIED micro-batch must not see its own failed attempt's rows
-        (it would reject every one of its docs as a duplicate of
-        itself). Generations (negative ids) fold only batches that
-        committed earlier, so ``before_batch=0`` reads exactly the
-        generations and ``since=0`` exactly the per-batch tail."""
-        schema = self.schema(p)
-        try:
-            df = spark.read.schema(schema + ", batch_id long").parquet(state_dir)
-        except AnalysisException:
-            return local_df(spark, [], schema)
-        if since is not None:
-            df = df.filter(F.col("batch_id") >= since)
-        if before_batch is not None:
-            df = df.filter(F.col("batch_id") < before_batch)
-        return df.drop("batch_id")
 
 
 def _est_sql(p: dict) -> str:
@@ -159,7 +116,7 @@ def _ahash(batch_df: DataFrame, id_col: str, text_col: str, p: dict) -> DataFram
 @dataclass(frozen=True)
 class Modality:
     name: str
-    state: GateState
+    state: Store
     # (batch, id_col, text_col, p) -> the batch's (doc, signature cols)
     sign: Callable[[DataFrame, str, str, dict], DataFrame]
     band_keys: Callable[[DataFrame, dict], DataFrame]  # -> (doc, bk)
@@ -169,18 +126,22 @@ class Modality:
     floor: Callable[[dict, str], Column | None]  # (p, text_col) -> floor
 
 
-RAW_STATE = GateState(
-    "dedup-gate/v1", ("n", "num_hashes", "bands"), "text", "bk",
-    lambda p: ["bk"], "string",
+# a gate store is a SET store (merge ``distinct``) whose fold clusters on
+# its probe key: the column every per-batch probe joins on
+RAW_STATE = Store(
+    "dedup-gate/v1", ("n", "num_hashes", "bands"),
+    lambda p: "doc long, bk string", "distinct", key="bk", modality="text",
 )
 
 MODALITIES = {
     "text": Modality(
         "text",
-        GateState(
+        Store(
             "verified-dedup-gate/v1", ("n", "num_hashes", "bands", "threshold"),
-            "text", "doc",
-            lambda p: [f"mh_{i}" for i in range(int(p["num_hashes"]))], "string",
+            lambda p: "doc long, " + ", ".join(
+                f"mh_{i} string" for i in range(int(p["num_hashes"]))
+            ),
+            "distinct", key="doc", modality="text",
         ),
         lambda b, id_col, text_col, p: minhash_signature(
             b, id_col, text_col, p["n"], p["num_hashes"]
@@ -193,9 +154,10 @@ MODALITIES = {
     ),
     "media": Modality(
         "media",
-        GateState(
-            "media-gate/v1", ("bits", "max_hamming"), "media", "doc",
-            lambda p: ["sig"], "long",
+        Store(
+            "media-gate/v1", ("bits", "max_hamming"),
+            lambda p: "doc long, sig long", "distinct", key="doc",
+            modality="media",
         ),
         _ahash,
         lambda sig, p: signature_band_keys(sig, p["bits"], p["max_hamming"]),
@@ -214,71 +176,11 @@ STATES = {
 
 
 def _stamped(state_dir: str) -> dict:
-    with open(os.path.join(state_dir, _cs.META)) as f:
+    with open(os.path.join(state_dir, META)) as f:
         return json.load(f)
 
 
 # -- state lifecycle ----------------------------------------------------------
-
-
-def fold_state(
-    spark: SparkSession,
-    state_dir: str,
-    state: GateState,
-    p: dict,
-    exclude_from: int | None = None,
-    num_partitions: int | None = None,
-) -> None:
-    """THE one copy of the gate family's state fold: per-batch state
-    dirs become one generation dir.
-
-    Generations occupy reserved NEGATIVE batch_id partitions (real
-    micro-batch ids are checkpoint-monotonic and never negative), each
-    one lower than the last, so a generation can never collide with a
-    future batch write. The sequence is crash-safe because every gate
-    state is a SET consumed through distinct joins — duplicates never
-    change admission decisions — so it only needs superset-monotonic
-    steps:
-
-    1. read the whole store, write it (distinct, hash-partitioned on
-       the store's probe key with normal parallelism — the fold is a
-       full shuffle across the cluster, never a single task) to a tmp
-       dir OUTSIDE the store;
-    2. rename tmp into the store as the new generation (duplicate rows
-       now exist — harmless);
-    3. delete the subsumed per-batch dirs (a crash mid-delete leaves a
-       superset — harmless, next compaction finishes the job).
-
-    Local-FS ops here (the streaming tests' hermetic path); on a real
-    deployment these become storage renames/deletes, or the state store
-    is a table format (Delta/Iceberg) whose OPTIMIZE does the same fold
-    transactionally.
-
-    ``exclude_from`` (set to the in-flight batch id by the streaming
-    caller) keeps not-yet-committed state OUT of the fold: the current
-    batch's rows must stay in their own ``batch_id=<i>`` dir so a retry
-    can still exclude them. With ``num_partitions=None`` AQE sizes the
-    shuffle by bytes; an explicit ``num_partitions`` pins the task
-    count. Repartitioning on the probe key also pre-clusters the store
-    for the bucketed layout."""
-    ids = state_subdirs(state_dir)
-    old_dirs = [
-        d for d, i in ids.items() if exclude_from is None or i < exclude_from
-    ]
-    if len(old_dirs) < 2:
-        return  # nothing to fold
-    next_gen = min(min(ids.values()), 0) - 1
-    tmp = state_dir.rstrip("/") + "__compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    folded = state.load(spark, state_dir, p, exclude_from).distinct()
-    if num_partitions is not None:
-        folded = folded.repartition(num_partitions, state.key)
-    else:
-        folded = folded.repartition(state.key)
-    folded.write.mode("overwrite").parquet(tmp)
-    os.replace(tmp, os.path.join(state_dir, f"batch_id={next_gen}"))
-    for d in old_dirs:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def compact_gate_state(
@@ -287,12 +189,15 @@ def compact_gate_state(
     exclude_from: int | None = None,
     num_partitions: int | None = None,
 ) -> None:
-    """Fold any stamped gate store (:func:`fold_state`), with the kind
-    and frozen params its ``_meta.json`` declares."""
+    """Fold any stamped gate store, with the kind and frozen params its
+    ``_meta.json`` declares: the one generation fold
+    (counting_state.compact_counts) in ``distinct`` mode, clustered on
+    the store's probe key. ``exclude_from`` (the in-flight batch id on
+    the drain path) keeps not-yet-committed state out of the fold so a
+    retry can still exclude it."""
     meta = _stamped(state_dir)
-    fold_state(
-        spark, state_dir, STATES[meta["format"]], meta, exclude_from,
-        num_partitions,
+    STATES[meta["format"]].compact(
+        spark, state_dir, meta, exclude_from, num_partitions=num_partitions
     )
 
 
@@ -330,7 +235,7 @@ def bucket_gate_state(
     per batch, the candidate join reads only matching ``bk`` buckets
     and the signature join only matching ``doc`` buckets, neither side
     re-shuffling the store. ``before_batch`` as in
-    :meth:`GateState.load` (0: the folded generations only, what
+    :meth:`Store.load <counting_state.Store.load>` (0: the folded generations only, what
     :func:`refresh_bucketed` mirrors). Returns (keys_table,
     sigs_table)."""
     from reddit_apache_airflow_postgres_pipeline_spark.sinks.bucketed import (
@@ -455,7 +360,7 @@ def blockers(
     if ordered:
         cand = cand.filter(F.col("odoc") < F.col("doc"))
     cand = cand.distinct()
-    cols = mod.state.cols(p)
+    cols = mod.state.cols(p)[1:]  # the signature columns after doc
     sa = sig.selectExpr("doc", *[f"{c} AS __a{i}" for i, c in enumerate(cols)])
     sb = other_sig.selectExpr(
         "doc AS odoc", *[f"{c} AS __b{i}" for i, c in enumerate(cols)]
@@ -592,9 +497,9 @@ def run_signature_gate(
     "path", "num_buckets"}`` — arms the hybrid layout
     (:func:`load_state`), refreshed at every fold."""
     for mod, p, state_dir in stores:
-        _cs.stamp_meta(state_dir, mod.state.meta(p))
+        mod.state.stamp(state_dir, p)
     corpus = stores[0][0].name if len(stores) == 1 else "multimodal"
-    _cs.stamp_corpus_meta(out_dir, id_col, corpus)
+    stamp_corpus_meta(out_dir, id_col, corpus)
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -614,10 +519,10 @@ def run_signature_gate(
             write_batch(decisions, decisions_dir, batch_id)
         if dup_of_dir is not None:
             write_batch(blk, dup_of_dir, batch_id)
-        for _, _, state_dir in stores:
+        for mod, p, state_dir in stores:
             if compact_if_due(
-                state_dir, compact_after_dirs, compact_gate_state,
-                sp, state_dir, exclude_from=batch_id,
+                state_dir, compact_after_dirs, mod.state.compact,
+                sp, state_dir, p, exclude_from=batch_id,
             ) and bucketed is not None:
                 refresh_bucketed(
                     sp, state_dir, bucketed["table_prefix"], bucketed["path"],

@@ -14,8 +14,8 @@ flushed — so the FIRST copy (emitted while the gram was still below the
 bar) survives and every later copy is dropped. A single-batch drain is
 exactly the batch operator (tests pin both properties).
 
-State = corpus-wide ``(gram, c)`` counts on the shared crash-safe
-counting store (streaming/counting_state.py, ``sum`` mode): per-batch
+State = corpus-wide ``(gram, c)`` counts, the ``SPAN_GRAMS`` row of the
+per-batch store table (streaming/counting_state.py, ``sum``): per-batch
 idempotent dirs, retry exclusion via ``before_batch``, manifest-guarded
 generation folds, and a format marker carrying ``k`` so stores built
 under a different gram width refuse to merge. The state is
@@ -40,20 +40,6 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     write_batch,
 )
 
-_GRAM_SCHEMA = "gram string, c long"
-_KEYS = ["gram"]
-
-
-def _meta(k: int, min_occurrences: int) -> dict:
-    """Store format marker: the gram width and occurrence bar are part
-    of the count semantics — summing stores built under a different
-    ``k`` silently mixes incomparable gram universes."""
-    return {
-        "format": "span-gram-counts",
-        "k": k,
-        "min_occurrences": min_occurrences,
-    }
-
 
 def read_gram_counts(
     spark: SparkSession,
@@ -63,19 +49,7 @@ def read_gram_counts(
     """The cumulative ``(gram, c)`` corpus counts: key-wise sum over
     every live state dir — counting_state.read_counts' liveness/retry
     contract."""
-    return _cs.read_counts(
-        spark, state_dir, _GRAM_SCHEMA, _KEYS, "c", before_batch=before_batch
-    )
-
-
-def compact_state(
-    spark: SparkSession, state_dir: str, exclude_from: int | None = None
-) -> None:
-    """Fold live dirs into one manifest-guarded generation (sum state —
-    see counting_state.compact_counts)."""
-    _cs.compact_counts(
-        spark, state_dir, _GRAM_SCHEMA, _KEYS, "c", exclude_from=exclude_from
-    )
+    return _cs.SPAN_GRAMS.read(spark, state_dir, {}, before_batch)
 
 
 def gate_batch(
@@ -140,7 +114,8 @@ def run_span_gate_available_now(
     micro-batch idempotent (its failed attempt's counts are excluded on
     read via ``before_batch``), and the checkpoint guarantees each
     input file is gated exactly once across restarts."""
-    _cs.stamp_meta(state_dir, _meta(k, min_occurrences))
+    p = {"k": k, "min_occurrences": min_occurrences}
+    _cs.SPAN_GRAMS.stamp(state_dir, p)
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -154,8 +129,8 @@ def run_span_gate_available_now(
             write_batch(cleaned, out_dir, batch_id)
             write_batch(counts, state_dir, batch_id)
             compact_if_due(
-                state_dir, compact_after_dirs, compact_state,
-                batch_df.sparkSession, state_dir, exclude_from=batch_id,
+                state_dir, compact_after_dirs, _cs.SPAN_GRAMS.compact,
+                batch_df.sparkSession, state_dir, p, exclude_from=batch_id,
             )
         finally:
             batch_df.unpersist()

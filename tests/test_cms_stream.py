@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import cms_build
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import cms_stream
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import drain
 
 SCHEMA = "doc_id long, text string"
 
@@ -111,7 +112,7 @@ def test_compaction_preserves_estimates_even_mid_crash(spark, tmp_path):
     shutil.copytree(os.path.join(state, "batch_id=0"), keep_copy)
 
     cms_stream.compact_state(spark, state)
-    dirs = cms_stream._state_subdirs(state)
+    dirs = drain.state_subdirs(state)
     assert set(dirs.values()) == {-1}  # everything folded into one gen
     assert _cells(cms_stream.read_sketch(spark, state)) == expect
 
@@ -125,7 +126,7 @@ def test_compaction_preserves_estimates_even_mid_crash(spark, tmp_path):
     # live generation left there is nothing to fold
     cms_stream.compact_state(spark, state)
     assert _cells(cms_stream.read_sketch(spark, state)) == expect
-    assert set(cms_stream._state_subdirs(state).values()) == {-1}
+    assert set(drain.state_subdirs(state).values()) == {-1}
     assert not os.path.isdir(os.path.join(state, "batch_id=0"))
 
 
@@ -142,7 +143,7 @@ def test_second_generation_manifest_is_transitive(spark, tmp_path):
             os.path.join(state, f"batch_id={bid}")
         )
     cms_stream.compact_state(spark, state)  # gen -2 subsumes {-1, 2, 3}
-    assert cms_stream._subsumed_ids(state) == {-1, 0, 1, 2, 3}
+    assert drain.subsumed_ids(state) == {-1, 0, 1, 2, 3}
     assert _cells(cms_stream.read_sketch(spark, state)) == _cells(
         _batch_sketch(spark, rows)
     )
@@ -162,8 +163,8 @@ def test_streaming_compaction_threshold(spark, tmp_path):
     )
     live = [
         i
-        for i in cms_stream._state_subdirs(state).values()
-        if i not in cms_stream._subsumed_ids(state)
+        for i in drain.state_subdirs(state).values()
+        if i not in drain.subsumed_ids(state)
     ]
     assert len(live) <= 4  # folds kept the live-dir count bounded
     assert _cells(cms_stream.read_sketch(spark, state)) == _cells(

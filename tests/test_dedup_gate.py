@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import dedup_gate
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import drain
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import signature_gate as sg
 
 SCHEMA = "doc_id long, text string"
@@ -134,11 +135,11 @@ def test_state_compaction_preserves_gate_decisions(spark, tmp_path):
     assert got_compact == got_plain  # identical admissions
     # compaction actually folded: only the generation + at most the
     # final batch's dir remain (maxFilesPerTrigger=1 → 4 batches)
-    n_dirs = len(dedup_gate._state_subdirs(state_c))
+    n_dirs = len(drain.state_subdirs(state_c))
     assert n_dirs <= 2, f"expected folded state, found {n_dirs} dirs"
     # a generation dir (negative batch_id) exists
     gen_dirs = [
-        d for d in dedup_gate._state_subdirs(state_c) if "batch_id=-" in d
+        d for d in drain.state_subdirs(state_c) if "batch_id=-" in d
     ]
     assert gen_dirs
 
@@ -173,7 +174,7 @@ def test_compact_state_standalone_and_rerun_safe(spark, tmp_path):
         for r in dedup_gate._load_state(spark, state).collect()
     )
     assert before == after
-    assert len(dedup_gate._state_subdirs(state)) == 1
+    assert len(drain.state_subdirs(state)) == 1
 
     dedup_gate.compact_state(spark, state)  # no-op on a single dir
     again = sorted(
@@ -212,9 +213,9 @@ def test_compact_state_multi_file_fold_preserves_decisions(spark, tmp_path):
 
     dedup_gate.compact_state(spark, state, num_partitions=8)
     gen_dirs = [
-        d for d in dedup_gate._state_subdirs(state) if "batch_id=-" in d
+        d for d in drain.state_subdirs(state) if "batch_id=-" in d
     ]
-    assert len(dedup_gate._state_subdirs(state)) == 1 and gen_dirs
+    assert len(drain.state_subdirs(state)) == 1 and gen_dirs
     part_files = [
         f for f in os.listdir(gen_dirs[0]) if f.startswith("part-")
     ]

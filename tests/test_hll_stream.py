@@ -17,6 +17,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import (
     hll_estimate,
     hll_merge,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import drain
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import hll_stream
 
 SCHEMA = "doc_id long, text string"
@@ -119,7 +120,7 @@ def test_compaction_is_crash_safe_without_a_manifest(spark, tmp_path):
     shutil.copytree(os.path.join(state, "batch_id=0"), keep_copy)
 
     hll_stream.compact_state(spark, state)
-    assert set(hll_stream._state_subdirs(state).values()) == {-1}
+    assert set(drain.state_subdirs(state).values()) == {-1}
     assert _regs(hll_stream.read_sketch(spark, state)) == expect
 
     # crash-before-GC: a folded dir reappears beside the generation —
@@ -184,7 +185,7 @@ def test_streaming_compaction_threshold(spark, tmp_path):
         spark, inbox, SCHEMA, state, ckpt,
         text_col="text", p=5, compact_after_dirs=2,
     )
-    assert len(hll_stream._state_subdirs(state)) <= 4
+    assert len(drain.state_subdirs(state)) <= 4
     assert _regs(hll_stream.read_sketch(spark, state)) == _regs(
         _batch_sketch(spark, rows)
     )
@@ -210,10 +211,54 @@ def test_stale_hash_width_store_is_rejected(spark, tmp_path):
         hll_stream.read_sketch(spark, state, p=5)
     # and a fresh writer refuses to extend it
     with pytest.raises(ValueError, match="format mismatch"):
-        cs.stamp_meta(state, hll_stream._meta(5))
+        cs.HLL.stamp(state, {"hash_bits": 60, "p": 5})
     # matching marker reads fine
     with open(os.path.join(state, "_meta.json"), "w") as f:
-        json.dump(hll_stream._meta(5), f)
+        json.dump(cs.HLL.meta({"hash_bits": 60, "p": 5}), f)
     assert _regs(hll_stream.read_sketch(spark, state, p=5)) == _regs(
         _batch_sketch(spark, _all_rows())
     )
+
+
+def test_int_group_column_drain_matches_string_keyed_drain(spark, tmp_path):
+    """Group columns are pinned to string in the store: an int-keyed
+    drain casts them where the batch is written, so its store reads,
+    compacts and estimates exactly like the string-keyed drain's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def _sketch(state):
+        return {
+            (r["g"], r["register"]): r["maxrank"]
+            for r in hll_stream.read_sketch(spark, state, ["g"]).collect()
+        }
+
+    def _estimates(state):
+        sk = hll_stream.read_sketch(spark, state, ["g"])
+        return {r["g"]: r["est"] for r in hll_estimate(sk, ["g"], p=5).collect()}
+
+    got = {}
+    for typ, arrow in [("int", pa.int32()), ("string", pa.string())]:
+        inbox = str(tmp_path / typ / "inbox")
+        state = str(tmp_path / typ / "state")
+        os.makedirs(inbox)
+        for f in range(3):
+            ids = range(f * 10, f * 10 + 10)
+            g = [i % 2 for i in ids]
+            pq.write_table(
+                pa.table({
+                    "g": pa.array(g if typ == "int" else [str(x) for x in g], arrow),
+                    "k": pa.array([f"u{i % 7}" for i in ids], pa.string()),
+                }),
+                os.path.join(inbox, f"f{f}.parquet"),
+            )
+        hll_stream.run_hll_available_now(
+            spark, inbox, f"g {typ}, k string", state, str(tmp_path / typ / "ckpt"),
+            key_col="k", group_cols=["g"], p=5, compact_after_dirs=1,
+        )
+        drained = (_sketch(state), _estimates(state))
+        hll_stream.compact_state(spark, state, ["g"])
+        assert len(drain.state_subdirs(state)) == 1
+        got[typ] = drained + (_sketch(state), _estimates(state))
+    assert got["int"] == got["string"]
+    assert got["int"][0] == got["int"][2] and set(got["int"][1]) == {"0", "1"}

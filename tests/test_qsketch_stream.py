@@ -12,6 +12,7 @@ from reddit_apache_airflow_postgres_pipeline_spark.operators.sketches import (
     qsketch_build,
     qsketch_quantiles,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import drain
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import qsketch_stream
 
 SCHEMA = "event_id long, value double"
@@ -83,7 +84,7 @@ def test_compaction_manifest_prevents_double_counting(spark, tmp_path):
     shutil.copytree(os.path.join(state, "batch_id=0"), keep)
 
     qsketch_stream.compact_state(spark, state)
-    assert set(qsketch_stream._state_subdirs(state).values()) == {-1}
+    assert set(drain.state_subdirs(state).values()) == {-1}
     assert _bins(qsketch_stream.read_sketch(spark, state)) == expect
 
     # crash-before-GC: the folded dir reappears — the manifest must
@@ -105,3 +106,33 @@ def test_retry_excludes_failed_attempt(spark, tmp_path):
         )
     pre = _bins(qsketch_stream.read_sketch(spark, state, before_batch=1))
     assert pre == _bins(_batch_sketch(spark, b0))
+
+
+def test_invalid_geometry_is_refused_before_the_marker(spark, tmp_path):
+    """A geometry every batch would reject must not claim the state dir:
+    the drain refuses it before stamping, so the corrected call on the
+    same state dir drains normally."""
+    import pytest
+
+    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+        counting_state as cs,
+    )
+
+    inbox = str(tmp_path / "inbox")
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(inbox)
+    rows = _all_rows()
+    _write(os.path.join(inbox, "f0.parquet"), rows)
+    for lo, hi, bins in [(5.0, 1.0, BINS), (LO, HI, 0)]:
+        with pytest.raises(ValueError):
+            qsketch_stream.run_qsketch_available_now(
+                spark, inbox, SCHEMA, state, ckpt, "value", lo, hi, bins
+            )
+        assert not os.path.exists(os.path.join(state, cs.META))
+    qsketch_stream.run_qsketch_available_now(
+        spark, inbox, SCHEMA, state, ckpt, "value", LO, HI, BINS
+    )
+    assert _bins(qsketch_stream.read_sketch(spark, state)) == _bins(
+        _batch_sketch(spark, rows)
+    )

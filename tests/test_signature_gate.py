@@ -1,8 +1,10 @@
 """The signature admission gates (streaming/signature_gate.py) in the
 default tier: one drain → decisions → dup_of → compaction pass,
 parametrized over the modality table's rows (text, media, and both as
-the unified multimodal gate) on 12 hand-built rows in 2 files; and a
-source guard that keeps the gate-state formats in one module."""
+the unified multimodal gate) on 12 hand-built rows in 2 files; a source
+guard that keeps every per-batch store format in one module; the
+stores' marker bytes; and a gate fold's crash leftover staying
+invisible."""
 
 from __future__ import annotations
 
@@ -17,9 +19,15 @@ import pytest
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import catalog as cat
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import maintenance
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+    counting_state as cs,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     dedup_gate,
     media_gate,
     multimodal_gate,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
+    signature_gate as sg,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
     state_subdirs,
@@ -183,6 +191,95 @@ def test_gate_formats_live_in_one_module():
 
     for fmt in ("dedup-gate/v1", "verified-dedup-gate/v1", "media-gate/v1"):
         assert _literal_modules(fmt) == ["streaming/signature_gate.py"], fmt
+    for fmt in (
+        "cms-cells", "hll-registers", "qsketch-bins", "span-gram-counts",
+        "hh-candidates",
+    ):
+        assert _literal_modules(fmt) == ["streaming/counting_state.py"], fmt
     for consumer in ("forget.py", "maintenance.py", "catalog.py"):
         imported = _imported_modules(PKG / "sinks" / consumer)
         assert not imported & {"media_gate", "multimodal_gate"}, consumer
+
+
+# every store row's marker for fixed params, byte for byte as stores
+# written before the rows existed carry it — those stores must keep
+# passing check_meta
+MARKERS = [
+    (cs.CMS, {"d": 4, "w": 256}, '{"d": 4, "format": "cms-cells", "w": 256}'),
+    (
+        cs.HLL, {"hash_bits": 60, "p": 5, "group_cols": ["g"]},
+        '{"format": "hll-registers", "hash_bits": 60, "p": 5}',
+    ),
+    (
+        cs.QSKETCH, {"lo": 0.0, "hi": 10.0, "bins": 8},
+        '{"bins": 8, "format": "qsketch-bins", "hi": 10.0, "lo": 0.0}',
+    ),
+    (
+        cs.SPAN_GRAMS, {"k": 3, "min_occurrences": 2},
+        '{"format": "span-gram-counts", "k": 3, "min_occurrences": 2}',
+    ),
+    (
+        cs.HH_CANDIDATES, {"phi_k": 214748364},
+        '{"format": "hh-candidates", "phi_k": 214748364}',
+    ),
+    (
+        sg.RAW_STATE, {"n": 3, "num_hashes": 16, "bands": 4},
+        '{"bands": 4, "format": "dedup-gate/v1", "n": 3, "num_hashes": 16}',
+    ),
+    (
+        sg.MODALITIES["text"].state,
+        {"n": 3, "num_hashes": 12, "bands": 4, "threshold": 0.5, "min_quality": None},
+        '{"bands": 4, "format": "verified-dedup-gate/v1", "n": 3, '
+        '"num_hashes": 12, "threshold": 0.5}',
+    ),
+    (
+        sg.MODALITIES["media"].state, {"bits": 60, "max_hamming": 5},
+        '{"bits": 60, "format": "media-gate/v1", "max_hamming": 5}',
+    ),
+]
+
+
+@pytest.mark.parametrize("store,p,marker", MARKERS, ids=[m[0].fmt for m in MARKERS])
+def test_store_marker_bytes_pinned(tmp_path, store, p, marker):
+    state = str(tmp_path / "state")
+    store.stamp(state, p)
+    with open(os.path.join(state, cs.META)) as f:
+        assert f.read() == marker
+    store.check(state, p)
+
+
+def test_gate_fold_crash_leftover_is_invisible(spark, tmp_path):
+    """A crash between a gate fold's rename and its GC leaves a folded
+    batch dir beside the generation; the generation's manifest keeps it
+    out of the raw read, so the store's rows, the gate's decisions and
+    the estate catalog's counts are the pre-fold ones."""
+    schema = "doc_id long, text string"
+    state = str(tmp_path / "state")
+    sg.RAW_STATE.stamp(state, {"n": 3, "num_hashes": 16, "bands": 4})
+    for bid, rows in enumerate(FILES):
+        batch = spark.createDataFrame([(d, TEXTS[t]) for d, t, _ in rows], schema)
+        _, keys = dedup_gate.gate_batch(batch, dedup_gate._load_state(spark, state))
+        keys.write.mode("overwrite").parquet(os.path.join(state, f"batch_id={bid}"))
+    probe = spark.createDataFrame(
+        [(100, TEXTS[0]), (101, "an entirely novel text that no batch ever held")],
+        schema,
+    )
+
+    def _seen():
+        st = dedup_gate._load_state(spark, state)
+        acc, _ = dedup_gate.gate_batch(probe, st)
+        return (
+            sorted(tuple(r) for r in st.collect()),
+            sorted(r["doc_id"] for r in acc.collect()),
+        )
+
+    before = _seen()
+    assert len(set(before[0])) == len(before[0]) and before[1] == [101]
+    keep = str(tmp_path / "keep")
+    shutil.copytree(os.path.join(state, "batch_id=0"), keep)
+    dedup_gate.compact_state(spark, state)
+    assert list(state_subdirs(state).values()) == [-1]
+    shutil.copytree(keep, os.path.join(state, "batch_id=0"))
+    assert _seen() == before
+    ent = cat.catalog_entry(spark, "s", state)
+    assert (ent["n_rows"], ent["live_dirs"]) == (len(before[0]), 1)

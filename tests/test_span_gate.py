@@ -166,7 +166,7 @@ def test_restart_is_idempotent_and_marker_guards(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="format mismatch"):
-        cs.stamp_meta(state, span_gate._meta(8, 2))
+        cs.SPAN_GRAMS.stamp(state, {"k": 8, "min_occurrences": 2})
 
 
 def test_stream_equals_online_relational_form(spark, tmp_path):
