@@ -967,7 +967,8 @@ q_ingest_chain_by_group_ks = _chain("q_ingest_chain_by_group_ks", _GROUP_DECISIO
 
 
 # -- the chain's serving tail: admitted corpus -> embed -> IVFPQ top-k -------
-# (the batch replay of streaming stage 5, ingest_pipeline._run_index_stage)
+# (the batch replay of streaming stage 5: the text _index row of
+# ingest_pipeline.run_full_ingest_available_now)
 
 from reddit_apache_airflow_postgres_pipeline_spark.plans import registry_ml as _ML
 

@@ -33,6 +33,15 @@ from pyspark.sql.types import StructType, _make_type_verifier
 _LONE_SURROGATE = re.compile("[\ud800-\udfff]")
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half of the
+    host's physical memory, at most 16 GiB, in MiB — so that a second
+    session beside a busy one cannot ask for more heap than the host
+    holds."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "reddit-apache-airflow-postgres-pipeline-spark",
     master: str | None = None,
@@ -84,7 +93,10 @@ def get_spark(
         # Stable timestamp behavior for the DuckDB oracle comparison.
         .config("spark.sql.datetime.java8API.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -38,6 +38,9 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     signature_gate as _sg,
 )
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    state_subdirs,
+)
 
 CATALOG_SCHEMA = (
     "name string, category string, kind string, modality string, "
@@ -79,16 +82,6 @@ def _entry(
         "n_admitted": n_admitted,
         "n_rejected": n_rejected,
     }
-
-
-def _batch_dirs(path: str) -> list[str]:
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        d
-        for d in os.listdir(path)
-        if d.startswith("batch_id=") and os.path.isdir(os.path.join(path, d))
-    )
 
 
 def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
@@ -135,16 +128,16 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
             name, "vector-index", kind, modality, meta,
             st["rows"], st["live_dirs"], st["tombstones"],
         )
+    n_dirs = len(state_subdirs(path))
     gmeta_path = os.path.join(path, _cs.META)
     if os.path.exists(gmeta_path):
         with open(gmeta_path) as f:
             meta = json.load(f)
         fmt = meta.get("format", "")
         if fmt == _CORPUS_FORMAT:
-            rows = spark.read.parquet(path).count() if _batch_dirs(path) else 0
+            rows = spark.read.parquet(path).count() if n_dirs else 0
             return _entry(
-                name, "corpus", fmt, meta.get("modality"), meta, rows,
-                len(_batch_dirs(path)),
+                name, "corpus", fmt, meta.get("modality"), meta, rows, n_dirs
             )
         if fmt in _sg.STATES:
             # the store's own live read: a crash-interrupted fold's
@@ -158,7 +151,7 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
             f"estate root {path!r} is a {fmt!r} state store — not a "
             "serving-estate member (index, gate state, or decision log)"
         )
-    if _batch_dirs(path):
+    if n_dirs:
         df = spark.read.parquet(path)
         if "admitted" in df.columns:
             agg = df.agg(
@@ -169,7 +162,7 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
             adm = int(agg["adm"] or 0)
             return _entry(
                 name, "decision-log", "decisions", None, {}, n,
-                len(_batch_dirs(path)), n_admitted=adm, n_rejected=n - adm,
+                n_dirs, n_admitted=adm, n_rejected=n - adm,
             )
         if "odoc" in df.columns:
             modality = (
@@ -180,7 +173,7 @@ def catalog_entry(spark: SparkSession, name: str, path: str) -> dict:
             )
             return _entry(
                 name, "attribution-log", "dup_of", modality, {}, df.count(),
-                len(_batch_dirs(path)),
+                n_dirs,
             )
     raise ValueError(
         f"estate root {path!r} matches no known layout (text/media index "

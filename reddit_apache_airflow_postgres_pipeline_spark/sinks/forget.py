@@ -54,9 +54,10 @@ write per store, shuffled only where the store's own compactor already
 shuffles. All log and corpus rewrite temp dirs are underscore-prefixed
 INSIDE the store root and carry no "=" (Spark's file index exempts
 =-bearing names from its underscore filter), so a crash mid-rewrite
-leaves nothing Spark listing, catalog._batch_dirs, or
-snapshots._corpus_batch_ids can mistake for a live batch dir (r12
-advice); a fold's temp dir sits beside the store, as in compaction.
+leaves nothing Spark listing or drain.state_subdirs (the one
+``batch_id=*`` scan the catalog, the snapshots and the ingest chains
+share) can mistake for a live batch dir (r12 advice); a fold's temp
+dir sits beside the store, as in compaction.
 """
 
 from __future__ import annotations

@@ -70,6 +70,9 @@ from pyspark.sql import functions as F
 from reddit_apache_airflow_postgres_pipeline_spark.session import local_df
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import served_index as _si
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as _vi
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    state_subdirs,
+)
 
 SNAPSHOTS_SUBDIR = "_snapshots"
 SNAPSHOT_FORMAT = "corpus-snapshot/v1"
@@ -80,18 +83,6 @@ def _snap_path(corpus_dir: str, name: str) -> str:
     if "/" in name or name.startswith("_") or not name:
         raise ValueError(f"invalid snapshot name {name!r}")
     return os.path.join(corpus_dir, SNAPSHOTS_SUBDIR, f"{name}.json")
-
-
-def _corpus_batch_ids(corpus_dir: str) -> list[int]:
-    if not os.path.isdir(corpus_dir):
-        return []
-    out = []
-    for d in os.listdir(corpus_dir):
-        if d.startswith("batch_id=") and os.path.isdir(
-            os.path.join(corpus_dir, d)
-        ):
-            out.append(int(d.split("=", 1)[1]))
-    return sorted(out)
 
 
 def _batch_stats(
@@ -191,7 +182,7 @@ def create_snapshot(
     those ``<= upto_batch``) with its row count + content fingerprints.
     Atomic, idempotent-iff-identical (see :func:`_write_manifest`).
     Returns the manifest."""
-    ids = _corpus_batch_ids(corpus_dir)
+    ids = sorted(state_subdirs(corpus_dir).values())
     if upto_batch is not None:
         ids = [b for b in ids if b <= upto_batch]
     if not ids:

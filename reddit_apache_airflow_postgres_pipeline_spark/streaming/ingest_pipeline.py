@@ -1,18 +1,27 @@
-"""The full streaming ingest stack, composed: distribution gate →
-content gate → sketch maintenance — the pipeline a production
+"""The streaming ingest chains — the pipelines a production
 training-data ingest actually runs, wired from the engine's existing
-monitors by DIRECTORY CHAINING (each stage is an availableNow drain
-with its own checkpoint, reading the previous stage's output dirs):
+monitors by DIRECTORY CHAINING. Each chain is an ordered list of stage
+rows (:class:`_Stage`: the dir it reads, the dirs it owns under
+``work_dir``, the call that drains it) run by one loop,
+:func:`_run_chain`. Every stage is an availableNow drain with its own
+checkpoint, reading the previous stage's ``batch_id=*`` dirs:
 
 1. **drift gate** (streaming/drift_gate.py): PSI-gates every batch
    against the frozen reference — drifted batches quarantined with a
-   decisions log, never silently dropped;
-2. **dedup gate** (streaming/dedup_gate.py): MinHash-LSH admission on
-   the admitted docs — near-duplicates of the accepted corpus (or of
+   decisions log, never silently dropped (token length for text,
+   payload size for media; the multimodal chain runs both);
+2. **near-dup gate** (streaming/dedup_gate.py for text,
+   media_gate.py, multimodal_gate.py): signature admission on the
+   admitted docs — near-duplicates of the accepted corpus (or of
    earlier docs in the same drain) rejected exactly-once;
-3. **sketch maintenance** (cms_stream + hll_stream): token frequencies
-   and distinct-token cardinality over the SURVIVING corpus, kept
-   queryable in bounded state.
+3. **span gate** (full text chain, streaming/span_gate.py): exact
+   duplicated passages cut out, first sighting wins;
+4. **sketch maintenance** (text chains, cms_stream + hll_stream): token
+   frequencies and distinct-token cardinality over the SURVIVING
+   corpus, kept queryable in bounded state;
+5. **index append** (optional, armed by an index path,
+   streaming/vector_index_stream.py): the admitted corpus becomes
+   servable at the end of the same drain.
 
 Each stage's checkpoint makes the whole chain restartable at any
 point: re-running the pipeline drains only files the respective stage
@@ -21,12 +30,17 @@ its parts. Directory chaining (not one mega-stream) is deliberate:
 every intermediate corpus stays inspectable on disk, stages can be
 re-run or backfilled independently, and each keeps its own bounded
 state — how multi-stage ingest is actually operated at 100 TB/day.
+
+Every row looks its runner up on the runner's module when the stage
+runs, so a wrapper rebound there (perfbench/layertrace.py's per-stage
+spans) sees every chain's stages.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Callable
+from types import ModuleType
+from typing import Callable, NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -35,28 +49,118 @@ from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
     dedup_gate,
     drift_gate,
     hll_stream,
+    media_gate,
+    multimodal_gate,
     span_gate,
+    vector_index_stream,
+)
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import (
+    state_subdirs,
 )
 
 
-def _batches(path: str) -> str | None:
-    """The glob over ``path``'s batch dirs — the next stage's input —
-    or None while the previous stage has written no batch there."""
-    if os.path.isdir(path) and any(
-        d.startswith("batch_id=") for d in os.listdir(path)
-    ):
-        return os.path.join(path, "batch_id=*")
-    return None
+class _Stage(NamedTuple):
+    """One row of a chain. ``source`` is the dir under ``work_dir`` the
+    stage reads (None: the chain's inbox), ``schema`` that input's
+    schema, ``owns`` the dirs under ``work_dir`` it writes (output,
+    state, ``ckpt_*``; they make up the chain's path map), and
+    ``run(p, spark, input_glob, schema)`` the drain call — None while
+    the stage is unarmed (an optional index with no index path)."""
+
+    source: str | None
+    schema: str
+    owns: tuple[str, ...]
+    run: Callable[..., None] | None
 
 
-def _paths(work_dir: str, names: tuple[str, ...]) -> dict[str, str]:
-    return {name: os.path.join(work_dir, name) for name in names}
+def _run_chain(
+    spark: SparkSession,
+    input_dir: str,
+    work_dir: str,
+    stages: list[_Stage],
+) -> dict[str, str]:
+    """Run ``stages`` in order and return the path map ({owned dir:
+    its path under ``work_dir``}). A stage whose source has no
+    ``batch_id=*`` dir yet (an earlier gate admitted nothing) is
+    skipped cleanly, as is an unarmed one."""
+    p = {d: os.path.join(work_dir, d) for s in stages for d in s.owns}
+    for s in stages:
+        src = input_dir
+        if s.source is not None:
+            src = os.path.join(work_dir, s.source)
+            if not state_subdirs(src):
+                continue
+            src = os.path.join(src, "batch_id=*")
+        if s.run is not None:
+            s.run(p, spark, src, s.schema)
+    return p
 
 
-def _dedup_runner(dedup_policy: str) -> Callable[..., None]:
-    """The dedup gate runner ``dedup_policy`` names, checked before any
-    stage runs so a bad policy leaves no drift output or checkpoint
-    behind.
+def _row(
+    source: str | None,
+    schema: str,
+    owns: tuple[str, ...],
+    module: ModuleType,
+    runner: str,
+    /,
+    *lead,
+    **kw,
+) -> _Stage:
+    """The row whose call is ``module.runner(spark, input_glob, schema,
+    *lead, *<owned paths>, **kw)``."""
+    return _Stage(
+        source, schema, owns,
+        lambda p, *a: getattr(module, runner)(
+            *a, *lead, *(p[d] for d in owns), **kw
+        ),
+    )
+
+
+def _drift(
+    source: str | None, schema: str, out: str, ref_path: str, **kw
+) -> _Stage:
+    """The drift gate draining ``source`` into ``out/{admitted,
+    quarantined,decisions}`` against the frozen reference at
+    ``ref_path`` — one pooled feed, or each ``group_col`` feed judged
+    against its own reference (so a single broken feed quarantines
+    alone while the rest of the batch flows on)."""
+    ckpt = f"ckpt_{out}"
+    return _Stage(
+        source, schema, (out, ckpt),
+        lambda p, *a: drift_gate.run_drift_gate_available_now(
+            *a, p[out], ref_path, p[ckpt], **kw
+        ),
+    )
+
+
+def _size_drift(
+    source: str | None,
+    schema: str,
+    out: str,
+    ref_path: str,
+    psi_threshold: float,
+    bin_width: int,
+    bins: int,
+) -> _Stage:
+    """The drift gate binning payload size (the media reference's
+    metric, :func:`drift_gate.payload_size_metric`)."""
+    return _drift(
+        source, schema, out, ref_path, bin_width=bin_width, bins=bins,
+        threshold=psi_threshold, metric=drift_gate.payload_size_metric(),
+    )
+
+
+def _dedup(
+    schema: str,
+    id_col: str,
+    text_col: str,
+    dedup_policy: str,
+    dedup_kwargs: dict | None,
+) -> _Stage:
+    """The MinHash dedup gate draining the drift gate's admitted dirs
+    into ``accepted/``. ``dedup_policy`` is checked here, while the
+    chain's rows are built, so a bad policy leaves no drift output or
+    checkpoint behind.
 
     ``dedup_policy`` picks the admission rule: ``"bucket"`` (default,
     the raw band-collision gate — cheapest state, strictest rejects) or
@@ -71,69 +175,68 @@ def _dedup_runner(dedup_policy: str) -> Callable[..., None]:
     (num_hashes/bands, the verified gate's threshold, min_quality) —
     note the two gates' different k defaults (16 bucket, 12 verified),
     so a policy comparison at fixed geometry must pin them here."""
-    if dedup_policy not in ("bucket", "verified"):
+    runners = {
+        "bucket": "run_gate_available_now",
+        "verified": "run_verified_gate_available_now",
+    }
+    if dedup_policy not in runners:
         raise ValueError(
             f"unknown dedup_policy {dedup_policy!r} (bucket | verified)"
         )
-    if dedup_policy == "bucket":
-        return dedup_gate.run_gate_available_now
-    return dedup_gate.run_verified_gate_available_now
+    return _row(
+        "drift/admitted", schema, ("accepted", "dedup_state", "ckpt_dedup"),
+        dedup_gate, runners[dedup_policy],
+        id_col=id_col, text_col=text_col, **(dedup_kwargs or {}),
+    )
 
 
-def _run_dedup_stage(
-    spark: SparkSession,
+def _sketches(corpus: str, schema: str, text_col: str) -> list[_Stage]:
+    """CMS + HLL maintenance over whatever corpus dir the previous
+    stage produced."""
+    return [
+        _row(corpus, schema, ("cms", "ckpt_cms"), cms_stream,
+             "run_cms_available_now", text_col=text_col),
+        _row(corpus, schema, ("hll", "ckpt_hll"), hll_stream,
+             "run_hll_available_now", text_col=text_col),
+    ]
+
+
+def _index(
+    modality: str,
+    corpus: str,
     schema: str,
-    p: dict[str, str],
-    id_col: str,
-    text_col: str,
-    runner: Callable[..., None],
-    dedup_kwargs: dict | None = None,
-) -> None:
-    """Stage 2 of every chain: the MinHash dedup gate (``runner``, from
-    :func:`_dedup_runner`) drains the drift gate's admitted dirs into
-    ``accepted/`` — skipped cleanly when no batch was admitted yet.
-    Shared so the chaining contract (the admitted glob, the skip guard,
-    the state/checkpoint wiring) lives in exactly one place across the
-    chain runners."""
-    admitted = _batches(os.path.join(p["drift"], "admitted"))
-    if admitted:
-        runner(
-            spark,
-            admitted,
-            schema,
-            p["accepted"],
-            p["dedup_state"],
-            p["ckpt_dedup"],
-            id_col=id_col,
-            text_col=text_col,
-            **(dedup_kwargs or {}),
-        )
+    index_path: str | None,
+    ckpt: str,
+    **kw,
+) -> _Stage:
+    """The optional serving stage: stream ``corpus`` into the persisted
+    ``modality`` ("text" | "media") index at ``index_path``
+    (streaming/vector_index_stream.run_{modality}_index_append_available_now),
+    unarmed while ``index_path`` is None. For the text chains this
+    closes the operational loop: a document that survives drift →
+    near-dup → span admission becomes SERVABLE (embed → append → probe)
+    with no manual embed hop, which is what the reference's cron-driven
+    fetch → combine → load pipeline (dags/Combine_send_to_postgresql.py:301)
+    would demand of this engine at 100 TB. The index must pre-exist
+    (sinks/text_index.write_text_index or media_index.write_media_index
+    on the validated snapshot — the same snapshot that froze the drift
+    reference trains the quantizers); featurizer params come from the
+    index's own meta, so the chains add NO embedding knobs.
 
-
-def _run_span_stage(
-    spark: SparkSession,
-    schema: str,
-    p: dict[str, str],
-    id_col: str,
-    text_col: str,
-    span_k: int,
-) -> None:
-    """Stage 3 of the full chains: the exact duplicated-substring gate
-    drains ``accepted/`` into ``spanned/`` — first-wins passage cuts
-    with state shared across whatever feeds produced the corpus."""
-    accepted = _batches(p["accepted"])
-    if accepted:
-        span_gate.run_span_gate_available_now(
-            spark,
-            accepted,
-            schema,
-            p["spanned"],
-            p["span_state"],
-            p["ckpt_span"],
-            id_col=id_col,
-            text_col=text_col,
-            k=span_k,
-        )
+    Id contract (r11 review): the chains' gates dedup by CONTENT
+    (MinHash bands, exact spans, aHash), never by doc id — the appends'
+    disjoint-id contract therefore falls on the FEED: doc ids must be
+    unique across the snapshot that built the index and every batch
+    (the reference pipeline's content-addressed ``thing_key`` gives
+    exactly this). A feed that re-mints an already-indexed id with new
+    content would be served twice under that id until the next rebuild
+    — same caveat as the raw-vector append stream, stated here because
+    the chain makes it easy to forget the snapshot counts too."""
+    row = _row(
+        corpus, schema, (ckpt,), vector_index_stream,
+        f"run_{modality}_index_append_available_now", index_path, **kw,
+    )
+    return row if index_path is not None else row._replace(run=None)
 
 
 # the span stage NORMALIZES the id column: dedup_spans' output relation
@@ -143,115 +246,6 @@ def _run_span_stage(
 _SPANNED_SCHEMA = (
     "doc_id long, n_tokens long, dropped_tokens long, text_clean string"
 )
-
-_CHAIN_PATHS = (
-    "drift", "accepted", "dedup_state", "cms", "hll",
-    "ckpt_drift", "ckpt_dedup", "ckpt_cms", "ckpt_hll",
-)
-
-_FULL_CHAIN_PATHS = (
-    "drift",
-    "accepted",
-    "dedup_state",
-    "spanned",
-    "span_state",
-    "cms",
-    "hll",
-    "ckpt_drift",
-    "ckpt_dedup",
-    "ckpt_span",
-    "ckpt_cms",
-    "ckpt_hll",
-    "ckpt_index",
-)
-
-
-def _run_index_stage(
-    spark: SparkSession, p: dict[str, str], index_path: str | None
-) -> None:
-    """Optional stage 5 of the full chains: stream the span-CLEANED
-    corpus into a persisted text index
-    (streaming/vector_index_stream.run_text_index_append_available_now)
-    — the composition that closes the operational loop: a document
-    that survives drift → near-dup → span admission becomes SERVABLE
-    (embed → append → probe) with no manual embed hop, which is what
-    the reference's cron-driven fetch → combine → load pipeline
-    (dags/Combine_send_to_postgresql.py:301) would demand of this
-    engine at 100 TB. The index must pre-exist
-    (sinks/text_index.write_text_index on the validated snapshot — the
-    same snapshot that froze the drift reference trains the
-    quantizers); featurizer params come from the index's own meta, so
-    the chain adds NO embedding knobs. Skipped cleanly while no span
-    batch exists yet; its own checkpoint keeps it exactly-once and
-    independently re-runnable like every other stage.
-
-    Id contract (r11 review): the chain's gates dedup by CONTENT
-    (MinHash bands, exact spans), never by doc id — the appends'
-    disjoint-id contract therefore falls on the FEED: doc ids must be
-    unique across the snapshot that built the index and every batch
-    (the reference pipeline's content-addressed ``thing_key`` gives
-    exactly this). A feed that re-mints an already-indexed id with new
-    text would be served twice under that id until the next rebuild —
-    same caveat as the raw-vector append stream, stated here because
-    the chain makes it easy to forget the snapshot counts too."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        vector_index_stream,
-    )
-
-    spanned = _batches(p["spanned"])
-    if index_path is not None and spanned:
-        vector_index_stream.run_text_index_append_available_now(
-            spark,
-            spanned,
-            _SPANNED_SCHEMA,
-            index_path,
-            p["ckpt_index"],
-            id_col="doc_id",
-            text_col="text_clean",
-        )
-
-
-def _run_sketch_stage(
-    spark: SparkSession,
-    corpus_dir: str,
-    schema: str,
-    p: dict[str, str],
-    text_col: str,
-) -> None:
-    """Stage N of every chain: CMS + HLL maintenance over whatever
-    corpus directory the previous stage produced."""
-    corpus_glob = _batches(corpus_dir)
-    if corpus_glob:
-        cms_stream.run_cms_available_now(
-            spark, corpus_glob, schema, p["cms"], p["ckpt_cms"],
-            text_col=text_col,
-        )
-        hll_stream.run_hll_available_now(
-            spark, corpus_glob, schema, p["hll"], p["ckpt_hll"],
-            text_col=text_col,
-        )
-
-
-def _run_drift_stage(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    p: dict[str, str],
-    ref_path: str,
-    text_col: str,
-    psi_threshold: float,
-    group_col: str | None,
-) -> None:
-    """Stage 1 of every text chain: the drift gate drains the inbox
-    into ``drift/`` — one pooled feed, or each ``group_col`` feed judged
-    against its own frozen reference (so a single broken feed
-    quarantines alone while the rest of the batch flows on). Called
-    through the ``drift_gate`` module attribute, so a wrapper installed
-    there sees every chain's drift stage."""
-    drift_gate.run_drift_gate_available_now(
-        spark, input_dir, schema, p["drift"], ref_path, p["ckpt_drift"],
-        text_col=text_col, threshold=psi_threshold, group_col=group_col,
-    )
 
 
 def run_ingest_pipeline_available_now(
@@ -284,14 +278,12 @@ def run_ingest_pipeline_available_now(
     plans/registry_ingest.q_ingest_chain_decisions and
     q_ingest_chain_by_group (oracle-paired), parity-pinned by
     tests/test_ingest_pipeline.py."""
-    runner = _dedup_runner(dedup_policy)
-    p = _paths(work_dir, _CHAIN_PATHS)
-    _run_drift_stage(
-        spark, input_dir, schema, p, ref_path, text_col, psi_threshold, group_col
-    )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
-    _run_sketch_stage(spark, p["accepted"], schema, p, text_col)
-    return p
+    return _run_chain(spark, input_dir, work_dir, [
+        _drift(None, schema, "drift", ref_path, text_col=text_col,
+               threshold=psi_threshold, group_col=group_col),
+        _dedup(schema, id_col, text_col, dedup_policy, dedup_kwargs),
+        *_sketches("accepted", schema, text_col),
+    ])
 
 
 def run_full_ingest_available_now(
@@ -319,7 +311,7 @@ def run_full_ingest_available_now(
     survives, every later copy is cut out of its document, whichever
     feed resends it), and the sketches summarize what a training run
     would actually consume — the cleaned text. ``index_path`` arms the
-    optional stage 5 (:func:`_run_index_stage`): the span-cleaned
+    optional stage 5 (the text :func:`_index` row): the span-cleaned
     corpus streams into a pre-built persisted text index, so an
     admitted document is served by the ANN store at the end of the
     same drain. Same directory chaining and exactly-once contract
@@ -327,16 +319,17 @@ def run_full_ingest_available_now(
     plans/registry_ingest.q_ingest_chain_spans_audit and
     q_ingest_chain_group_spans (full DuckDB oracle), parity-pinned by
     tests/test_ingest_pipeline.py."""
-    runner = _dedup_runner(dedup_policy)
-    p = _paths(work_dir, _FULL_CHAIN_PATHS)
-    _run_drift_stage(
-        spark, input_dir, schema, p, ref_path, text_col, psi_threshold, group_col
-    )
-    _run_dedup_stage(spark, schema, p, id_col, text_col, runner, dedup_kwargs)
-    _run_span_stage(spark, schema, p, id_col, text_col, span_k)
-    _run_sketch_stage(spark, p["spanned"], _SPANNED_SCHEMA, p, "text_clean")
-    _run_index_stage(spark, p, index_path)
-    return p
+    return _run_chain(spark, input_dir, work_dir, [
+        _drift(None, schema, "drift", ref_path, text_col=text_col,
+               threshold=psi_threshold, group_col=group_col),
+        _dedup(schema, id_col, text_col, dedup_policy, dedup_kwargs),
+        _row("accepted", schema, ("spanned", "span_state", "ckpt_span"),
+             span_gate, "run_span_gate_available_now",
+             id_col=id_col, text_col=text_col, k=span_k),
+        *_sketches("spanned", _SPANNED_SCHEMA, "text_clean"),
+        _index("text", "spanned", _SPANNED_SCHEMA, index_path, "ckpt_index",
+               id_col="doc_id", text_col="text_clean"),
+    ])
 
 
 # -- media modality chain -----------------------------------------------------
@@ -392,59 +385,15 @@ def run_media_ingest_available_now(
     (``min_bytes``), the monitoring logs (``decisions_dir``,
     ``dup_of_dir``), or compaction tuning, without the chain spelling
     every gate option."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        media_gate,
-        vector_index_stream,
-    )
-
-    p = _paths(
-        work_dir,
-        (
-            "drift",
-            "accepted",
-            "media_state",
-            "ckpt_drift",
-            "ckpt_media",
-            "ckpt_index",
-        ),
-    )
-    drift_gate.run_drift_gate_available_now(
-        spark,
-        input_dir,
-        schema,
-        p["drift"],
-        ref_path,
-        p["ckpt_drift"],
-        bin_width=size_bin_width,
-        bins=size_bins,
-        threshold=psi_threshold,
-        metric=drift_gate.payload_size_metric(),
-    )
-    admitted = _batches(os.path.join(p["drift"], "admitted"))
-    if admitted:
-        media_gate.run_media_gate_available_now(
-            spark,
-            admitted,
-            schema,
-            p["accepted"],
-            p["media_state"],
-            p["ckpt_media"],
-            id_col=id_col,
-            bits=bits,
-            max_hamming=max_hamming,
-            **(gate_kwargs or {}),
-        )
-    accepted = _batches(p["accepted"])
-    if index_path is not None and accepted:
-        vector_index_stream.run_media_index_append_available_now(
-            spark,
-            accepted,
-            schema,
-            index_path,
-            p["ckpt_index"],
-            id_col=id_col,
-        )
-    return p
+    return _run_chain(spark, input_dir, work_dir, [
+        _size_drift(None, schema, "drift", ref_path, psi_threshold,
+                    size_bin_width, size_bins),
+        _row("drift/admitted", schema, ("accepted", "media_state", "ckpt_media"),
+             media_gate, "run_media_gate_available_now", id_col=id_col,
+             bits=bits, max_hamming=max_hamming, **(gate_kwargs or {})),
+        _index("media", "accepted", schema, index_path, "ckpt_index",
+               id_col=id_col),
+    ])
 
 
 # -- unified multimodal chain -------------------------------------------------
@@ -492,87 +441,19 @@ def run_multimodal_ingest_available_now(
     (oracle-paired), parity-pinned by tests/test_multimodal_gate.py.
     ``gate_kwargs`` passes through to the unified gate runner
     (monitoring logs, compaction tuning, broadcast_batch)."""
-    from reddit_apache_airflow_postgres_pipeline_spark.streaming import (
-        multimodal_gate,
-        vector_index_stream,
-    )
-
-    p = _paths(
-        work_dir,
-        (
-            "drift",
-            "mdrift",
-            "accepted",
-            "text_state",
-            "media_state",
-            "ckpt_drift",
-            "ckpt_mdrift",
-            "ckpt_gate",
-            "ckpt_tindex",
-            "ckpt_mindex",
-        ),
-    )
-    drift_gate.run_drift_gate_available_now(
-        spark,
-        input_dir,
-        schema,
-        p["drift"],
-        text_ref_path,
-        p["ckpt_drift"],
-        text_col=text_col,
-        threshold=psi_threshold,
-    )
-    adm_text = _batches(os.path.join(p["drift"], "admitted"))
-    if adm_text:
-        drift_gate.run_drift_gate_available_now(
-            spark,
-            adm_text,
-            schema,
-            p["mdrift"],
-            media_ref_path,
-            p["ckpt_mdrift"],
-            bin_width=size_bin_width,
-            bins=size_bins,
-            threshold=psi_threshold,
-            metric=drift_gate.payload_size_metric(),
-        )
-    adm_both = _batches(os.path.join(p["mdrift"], "admitted"))
-    if adm_both:
-        multimodal_gate.run_multimodal_gate_available_now(
-            spark,
-            adm_both,
-            schema,
-            p["accepted"],
-            p["text_state"],
-            p["media_state"],
-            p["ckpt_gate"],
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            threshold=threshold,
-            bits=bits,
-            max_hamming=max_hamming,
-            **(gate_kwargs or {}),
-        )
-    accepted = _batches(p["accepted"])
-    if text_index_path is not None and accepted:
-        vector_index_stream.run_text_index_append_available_now(
-            spark,
-            accepted,
-            schema,
-            text_index_path,
-            p["ckpt_tindex"],
-            id_col=id_col,
-            text_col=text_col,
-        )
-    if media_index_path is not None and accepted:
-        vector_index_stream.run_media_index_append_available_now(
-            spark,
-            accepted,
-            schema,
-            media_index_path,
-            p["ckpt_mindex"],
-            id_col=id_col,
-        )
-    return p
+    return _run_chain(spark, input_dir, work_dir, [
+        _drift(None, schema, "drift", text_ref_path, text_col=text_col,
+               threshold=psi_threshold),
+        _size_drift("drift/admitted", schema, "mdrift", media_ref_path,
+                    psi_threshold, size_bin_width, size_bins),
+        _row("mdrift/admitted", schema,
+             ("accepted", "text_state", "media_state", "ckpt_gate"),
+             multimodal_gate, "run_multimodal_gate_available_now",
+             id_col=id_col, text_col=text_col, num_hashes=num_hashes,
+             bands=bands, threshold=threshold, bits=bits,
+             max_hamming=max_hamming, **(gate_kwargs or {})),
+        _index("text", "accepted", schema, text_index_path, "ckpt_tindex",
+               id_col=id_col, text_col=text_col),
+        _index("media", "accepted", schema, media_index_path, "ckpt_mindex",
+               id_col=id_col),
+    ])

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import snapshots as snap
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import text_index as ti
 from reddit_apache_airflow_postgres_pipeline_spark.sinks import vector_index as vi
+from reddit_apache_airflow_postgres_pipeline_spark.streaming.drain import state_subdirs
 
 DSCHEMA = "doc_id long, text string"
 
@@ -124,7 +125,7 @@ def test_stray_forget_tmp_dirs_are_invisible(spark, tmp_path):
         "overwrite"
     ).parquet(stray)
     # listing, snapshotting, and reading all ignore the underscore dir
-    assert snap._corpus_batch_ids(corpus) == [0, 1]
+    assert sorted(state_subdirs(corpus).values()) == [0, 1]
     m = snap.create_snapshot(spark, corpus, "v1")
     assert [e["batch_id"] for e in m["batches"]] == [0, 1]
     assert snap.read_snapshot(spark, corpus, "v1").count() == 12
