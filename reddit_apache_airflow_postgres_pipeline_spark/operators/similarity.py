@@ -1,28 +1,46 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two strategies, same contract (query_id, neighbor_id, score):
+Every top-k operator here returns ``(query_id, neighbor_id, <metric>)``
+with ``metric`` one of ``score`` (cosine, best first), ``dist`` (L2²,
+best first) or ``hamming`` (sign-bit distance), cut per query by one
+rule, :func:`top_k`: rank by the metric, ties by ascending
+``neighbor_id``, keep ``k``. Self-matches are excluded and real-valued
+metrics are rounded 6dp, the engine's cross-engine contract that lets
+the DuckDB oracles (plans/registry_ml.py) replay every answer.
 
-* ``knn_bruteforce`` — exact top-k cosine for a (small) set of query
-  vectors against the full corpus. The join is
-  ``corpus × broadcast(queries)`` — a map-only pass over the corpus, so it
-  scales linearly in corpus size at any cluster width (queries ≪ corpus).
-* ``lsh_candidates`` / ``knn_lsh`` — sign-random-projection (SimHash-LSH)
-  bucketing: vectors agreeing on all ``bits`` signs of deterministic
-  hyperplanes land in a bucket; cosine is computed only within buckets.
-  At 100 TB this replaces the corpus-wide scan per query with a
-  bucket-equi-join (shuffle on bucket id, AQE handles skew).
+The kernels, by index kind:
+
+* exact scans: ``knn_bruteforce`` (cosine), ``exact_l2_topk_set`` (the
+  recall-audit truth set), ``mine_hard_negatives``;
+* IVF: ``ivf_knn`` — coarse cells, then cosine within the probed
+  cells (:func:`ivf_probe`);
+* PQ / IVFPQ: ``pq_adc_topk``, ``pq_opq_topk``, ``ivfpq_topk`` —
+  asymmetric distances from per-query lookup tables
+  (:func:`ivfpq_probe`);
+* SQ8 / IVFSQ: ``sq8_topk``, ``ivfsq_topk`` — L2² against uint8
+  bucket-midpoint reconstructions;
+* binary and staged: ``binary_hamming_topk`` (:func:`hamming_probe`),
+  ``binary_rerank_topk`` and ``matryoshka_topk``, funnels whose second
+  stage is :func:`exact_l2_rerank`.
+
+A probe takes the index relations (centroids, postings, codebooks,
+codes, signatures) as arguments: the ad-hoc operator builds them in
+memory, and sinks/vector_index.py runs the same probe on the relations
+it reads from disk. Alongside: banded SRP-LSH candidates
+(``lsh_candidates``, ``embedding_near_dups``), SemDeDup, the int8
+quantization audit, ranking metrics and the ``embed_text`` featurizer.
 
 Everything is built-in expressions (``zip_with``/``aggregate`` — JVM,
-codegen); hyperplanes are deterministic pseudo-random literals derived
-from a seed via a splitmix64-style integer mix, reproducible in ANSI SQL
-for the oracle (plans/registry.py).
+codegen); hyperplanes and seeds are deterministic, reproducible in ANSI
+SQL for the oracle.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -48,6 +66,84 @@ def norm(a: Column | str) -> Column:
 
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def top_k(scored: DataFrame, k: int, metric: str, desc: bool = False) -> DataFrame:
+    """(query_id, neighbor_id, ``metric``): the ``k`` best rows of
+    ``scored`` per query, ranked by ``metric`` (ascending, or descending
+    with ``desc``) with ties broken by ascending neighbor id. The one
+    top-k cut of every operator here and of every served-index query
+    (sinks/vector_index.py)."""
+    return _ranked(scored, k, metric, desc).select("query_id", "neighbor_id", metric)
+
+
+def _ranked(scored: DataFrame, k: int, metric: str, desc: bool = False) -> DataFrame:
+    """``scored`` cut to :func:`top_k`'s rows, each with its rank
+    ``__rn`` (1..k) — the cut's body, which :func:`ranking_metrics`
+    reads the rank from."""
+    order = F.desc(metric) if desc else F.asc(metric)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+
+
+def _sides(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(corpus as (neighbor_id, __c), queries as (query_id, __q)), the
+    vectors cast to array<double> — the two sides of every scan."""
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("__c"),
+    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("__q"),
+    )
+    return c, q
+
+
+def _checked(q: str, c: str, what: str = "vector") -> Column:
+    """Column ``q``, failing its row when its length differs from column
+    ``c``'s: the query-side dimension check of every probe. Unchecked, a
+    query of the wrong dimension scores NULL against everything
+    (``zip_with`` pads the shorter side) and the NULLs rank first."""
+    return F.when(
+        F.assert_true(
+            F.coalesce(F.size(q) == F.size(c), F.lit(True)),
+            F.concat(
+                F.lit(f"query {what} dim "),
+                F.size(q).cast("string"),
+                F.lit(f" != corpus {what} dim "),
+                F.size(c).cast("string"),
+            ),
+        ).isNull(),
+        F.col(q),
+    )
+
+
+_Scorer = Callable[[Column, Column], Column]
+
+
+def _round6(fn: _Scorer) -> _Scorer:
+    return lambda a, b: F.round(fn(a, b), 6)
+
+
+def _scored(
+    c: DataFrame,
+    q: DataFrame,
+    metric: str,
+    fn: _Scorer,
+    on: str | None = None,
+) -> DataFrame:
+    """The probe scan: corpus rows ``c`` (neighbor_id, __c[, on]) against
+    the broadcast query rows ``q`` (query_id, __q[, on]) — every pair, or
+    the pairs sharing ``on`` — self-matches dropped and ``metric`` =
+    ``fn(__c, __q)``, the query vector checked against the corpus's."""
+    return (
+        c.join(F.broadcast(q), on)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn(metric, fn(F.col("__c"), _checked("__q", "__c")))
+    )
 
 
 def hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -85,34 +181,13 @@ def knn_bruteforce(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 6,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    Output: (query_id, neighbor_id, score) — score rounded for
-    cross-engine reproducibility; ranking is by (rounded score desc,
-    neighbor_id asc) so ties are deterministic. Self-matches excluded.
-    """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    score = cosine(F.col("__cv"), F.col("__qv"))
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", score)
-        .drop("__qv", "__cv")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "score")
-    )
+    """Exact top-k cosine neighbors for each query vector: (query_id,
+    neighbor_id, score), cut by :func:`top_k` on the 6dp score, best
+    first. The join is ``corpus × broadcast(queries)`` — a map-only pass
+    over the corpus, linear in its size at any cluster width."""
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    return top_k(_scored(c, q, "score", _round6(cosine)), k, "score", desc=True)
 
 
 def lsh_candidates(
@@ -221,8 +296,6 @@ def ivf_assign(
     the downstream Lloyd/encode work across cores, so deleting it
     serializes the pipeline; the aggregate keeps the parallelism while
     cutting the shuffled rows ×n_cells."""
-    from pyspark.sql import Window
-
     scored = vectors.select(
         F.col(id_col).alias(out_id), F.col(vec_col).alias("__v")
     ).join(F.broadcast(centroids)).withColumn(
@@ -323,11 +396,11 @@ def ivf_knn(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """IVF approximate top-k: coarse-quantize the corpus into ``n_cells``
     inverted lists, probe each query's ``n_probe`` nearest cells, exact
-    cosine only within probed cells.
+    cosine only within probed cells (:func:`ivf_probe` over the
+    in-memory centroids and postings).
 
     The 100 TB story: assignment is map-only (broadcast centroids); the
     search shuffles corpus and probes on ``cell`` — each query touches
@@ -339,25 +412,32 @@ def ivf_knn(
     Output (query_id, neighbor_id, score), ranked by (score desc,
     neighbor_id) per query.
     """
-    from pyspark.sql import Window
-
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    assign = ivf_assign(corpus, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id")
-    probes = ivf_assign(queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id")
-    qv = probes.select("query_id", F.col(vec_col).alias("__qv"), "cell")
-    cv = assign.select("neighbor_id", F.col(vec_col).alias("__cv"), "cell")
-    score = F.round(cosine(F.col("__cv"), F.col("__qv")), round_digits)
-    scored = (
-        cv.join(qv, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", score)
+    postings = ivf_assign(corpus, cents, id_col, vec_col, out_id="neighbor_id")
+    return ivf_probe(cents, postings, queries, n_probe, k, id_col, vec_col)
+
+
+def ivf_probe(
+    cents: DataFrame,
+    postings: DataFrame,
+    queries: DataFrame,
+    n_probe: int = 4,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, neighbor_id, score): the IVF kind's probe — each
+    query's ``n_probe`` nearest cells of ``cents`` (cell, cv), then
+    6dp cosine against the ``postings`` (neighbor_id, ``vec_col``, cell)
+    of those cells only, cut by :func:`top_k`. A persisted postings
+    scan receives the probed cells as a partition filter."""
+    probes = ivf_assign(
+        queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "score")
-    )
+    q = probes.select("query_id", F.col(vec_col).alias("__q"), "cell")
+    c = postings.select("neighbor_id", F.col(vec_col).alias("__c"), "cell")
+    scored = _scored(c, q, "score", _round6(cosine), on="cell")
+    return top_k(scored, k, "score", desc=True)
 
 
 def embedding_near_dups(
@@ -369,18 +449,14 @@ def embedding_near_dups(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded LSH + exact
     verify. Output (id_a, id_b, score ≥ threshold), no false positives;
     pairs split by every band are missed — the recall/cost trade is the
     (bits_per_band, bands) knob."""
     cand = lsh_candidates(vectors, bits_per_band, bands, seed, dim, id_col, vec_col)
-    score = cosine(F.col("__va"), F.col("__vb"))
-    if round_digits is not None:
-        score = F.round(score, round_digits)
     return (
-        cand.withColumn("score", score)
+        cand.withColumn("score", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
         .filter(F.col("score") >= threshold)
         .select("id_a", "id_b", "score")
     )
@@ -390,7 +466,6 @@ def quantize_audit(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Symmetric int8 quantization audit: per vector, the max-abs scale,
     the quantized-then-dequantized reconstruction MSE, and the count of
@@ -417,7 +492,7 @@ def quantize_audit(
     return vectors.select(
         F.col(id_col),
         F.size(v).cast("long").alias("n_dims"),
-        F.round(F.when(zero, F.lit(0.0)).otherwise(maxabs), round_digits).alias(
+        F.round(F.when(zero, F.lit(0.0)).otherwise(maxabs), 6).alias(
             "max_abs"
         ),
         F.when(zero, F.lit(0)).otherwise(n_sat).cast("long").alias("n_saturated"),
@@ -431,7 +506,6 @@ def semantic_dedup(
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, then threshold
@@ -481,7 +555,7 @@ def semantic_dedup(
     b = assign.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"), "cell"
     )
-    score = F.round(cosine(F.col("__va"), F.col("__vb")), round_digits)
+    score = F.round(cosine(F.col("__va"), F.col("__vb")), 6)
     dup = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -510,7 +584,6 @@ def mine_hard_negatives(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Contrastive-training hard negatives: each query's top-``k`` most
     similar corpus vectors that are NOT in ``dup_pairs`` — easy
@@ -521,24 +594,13 @@ def mine_hard_negatives(
     ``dup_pairs`` is any (id_a, id_b) relation (e.g.
     :func:`embedding_near_dups`); both orientations are excluded with
     one skinny anti-join on (query, neighbor) before the per-query
-    top-k window. Scoring is the map-only corpus × broadcast(queries)
-    pass; at scale swap it for the IVF probe exactly as with kNN.
-    Output: (query_id, neighbor_id, score).
+    top-k cut. Scoring is :func:`knn_bruteforce`'s map-only
+    corpus × broadcast(queries) scan; at scale swap it for the IVF
+    probe. Output: (query_id, neighbor_id, score).
     """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score", F.round(cosine(F.col("__cv"), F.col("__qv")), round_digits)
-        )
-        .select("query_id", "neighbor_id", "score")
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    scored = _scored(c, q, "score", _round6(cosine)).select(
+        "query_id", "neighbor_id", "score"
     )
     both = dup_pairs.select(
         F.col("id_a").alias("x"), F.col("id_b").alias("y")
@@ -548,12 +610,7 @@ def mine_hard_negatives(
         (scored.query_id == both.x) & (scored.neighbor_id == both.y),
         "left_anti",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        filt.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "score")
-    )
+    return top_k(filt, k, "score", desc=True)
 
 
 # ---------------------------------------------------------------------------
@@ -640,8 +697,6 @@ def pq_codebooks(
     :func:`kmeans_refine`, trained for all subspaces in ONE plan (the
     assignment is a broadcast join keyed on ``sub``; the recompute is
     a (sub, code, component) hash agg — never per-subspace jobs)."""
-    from pyspark.sql import Window
-
     sv = pq_subvectors(corpus, m, id_col, vec_col, out_id="__id")
     # Seeds = "the n_codes lowest-__id subvectors per sub". Every vector
     # contributes exactly one row to every sub, so that set is just the
@@ -761,29 +816,40 @@ def pq_adc_topk(
     hash agg folds them back map-side. Memory per vector: m codes, not
     d floats — the reason PQ is how billion-vector corpora are
     actually served."""
-    from pyspark.sql import Window
-
     cb = pq_codebooks(corpus, m, n_codes, iters, id_col, vec_col)
     codes = pq_encode(corpus, cb, m, id_col, vec_col, out_id="neighbor_id")
-    qsv = pq_subvectors(queries, m, id_col, vec_col, out_id="query_id")
-    dtab = qsv.join(F.broadcast(cb), "sub").select(
-        "query_id",
+    dtab = _adc_table(pq_subvectors(queries, m, id_col, vec_col, out_id="query_id"), cb)
+    return _adc_top_k(codes.join(F.broadcast(dtab), ["sub", "code"]), k)
+
+
+def _adc_table(qsv: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """(*keys, sub, code, __term): the ADC lookup table of the query
+    subvectors ``qsv`` (*keys, sub, svec) against the broadcast
+    ``codebooks`` (sub, code, cv) — one L2² term per (query, sub, code),
+    rounded 9dp and held as DECIMAL(28,12) so the sum over subspaces is
+    an order-free exact reduce. The subvector is checked against the
+    code vector's length."""
+    keys = [c for c in qsv.columns if c not in ("sub", "svec")]
+    return qsv.join(F.broadcast(codebooks), "sub").select(
+        *keys,
         "sub",
         "code",
-        F.round(l2sq("svec", "cv"), 9).cast("decimal(28,12)").alias("__term"),
+        F.round(l2sq(_checked("svec", "cv", "subvector"), "cv"), 9)
+        .cast("decimal(28,12)")
+        .alias("__term"),
     )
-    scored = (
-        codes.join(F.broadcast(dtab), ["sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+
+
+def _adc_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, dist): the ADC term fold — codes joined
+    to their table terms, self-matches dropped, the m terms of each
+    (query, neighbor) summed and rounded 6dp — cut by :func:`top_k`."""
+    dist = (
+        scored.filter(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("__term").cast("double"), 6).alias("dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
-    )
+    return top_k(dist, k, "dist")
 
 
 def _residuals(
@@ -810,7 +876,7 @@ def _residuals(
         out_id,
         "cell",
         F.zip_with(
-            F.col(vec_col).cast("array<double>"),
+            _checked(vec_col, "cv").cast("array<double>"),
             F.col("cv").cast("array<double>"),
             lambda x, c: x - c,
         ).alias(vec_col),
@@ -855,83 +921,81 @@ def ivfpq_topk(
     if its cell isn't probed (n_probe knob) OR its codes collide
     poorly (m/n_codes knob); audit against exact L2 like
     q_sim_pq_recall before trusting a configuration."""
-    from pyspark.sql import Window
-
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    if by_residual:
-        rcorp = _residuals(corpus, cents, id_col, vec_col, "neighbor_id")
-        # codebook seeding must EXCLUDE the coarse-seed vectors: a
-        # seed's residual against its own centroid is the zero vector,
-        # so the lowest-id seeding rule would otherwise hand Lloyd
-        # n_codes degenerate near-zero codes and the codebook never
-        # spreads (they are still ENCODED, just not seeds)
-        rtrain = rcorp.join(
-            cents.select(F.col("cell").alias("neighbor_id")),
-            "neighbor_id",
-            "left_anti",
-        )
-        cb = pq_codebooks(rtrain, m, n_codes, iters, "neighbor_id", vec_col)
-        # cell carried through encoding: (neighbor_id, cell, sub, code)
-        # in ONE corpus pass — no corpus-sized re-join to attach cells
-        codes = pq_encode(
-            rcorp, cb, m, "neighbor_id", vec_col,
-            out_id="neighbor_id", carry=("cell",),
-        )
-        rq = _residuals(
-            queries, cents, id_col, vec_col, "query_id", n_probe=n_probe
-        )
-        v = F.col(vec_col)
-        sublen = (F.size(v) / m).cast("int")
-        subs = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda j: F.slice(v, j * sublen + 1, sublen),
-        )
-        qsv = rq.select(
-            "query_id", "cell", F.posexplode(subs).alias("sub", "svec")
-        )
-        dtab = qsv.join(F.broadcast(cb), "sub").select(
-            "query_id",
-            "cell",
-            "sub",
-            "code",
-            F.round(l2sq("svec", "cv"), 9).cast("decimal(28,12)").alias("__term"),
-        )
-        scored = codes.join(F.broadcast(dtab), ["cell", "sub", "code"])
-    else:
-        assigned = ivf_assign(
-            corpus, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
-        )
+    if not by_residual:
         cb = pq_codebooks(corpus, m, n_codes, iters, id_col, vec_col)
-        # same one-pass layout as the persisted store
-        # (sinks/vector_index.py codes/): cell-partitioned codes
-        codes = pq_encode(
-            assigned, cb, m, "neighbor_id", vec_col,
-            out_id="neighbor_id", carry=("cell",),
-        )
-        probes = ivf_assign(
-            queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id"
-        ).select("query_id", "cell")
-        qsv = pq_subvectors(queries, m, id_col, vec_col, out_id="query_id")
-        dtab = qsv.join(F.broadcast(cb), "sub").select(
-            "query_id",
-            "sub",
-            "code",
-            F.round(l2sq("svec", "cv"), 9).cast("decimal(28,12)").alias("__term"),
-        )
-        scored = (
-            codes.join(F.broadcast(probes), "cell")
-            .join(F.broadcast(dtab), ["query_id", "sub", "code"])
-        )
-    scored = (
-        scored.filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("__term").cast("double"), 6).alias("dist"))
+        codes = ivfpq_encode(corpus, cents, cb, m, id_col, vec_col)
+        return ivfpq_probe(cents, cb, codes, queries, m, n_probe, k, id_col, vec_col)
+    rcorp = _residuals(corpus, cents, id_col, vec_col, "neighbor_id")
+    # codebook seeding must EXCLUDE the coarse-seed vectors: a seed's
+    # residual against its own centroid is the zero vector, so the
+    # lowest-id seeding rule would otherwise hand Lloyd n_codes
+    # degenerate near-zero codes and the codebook never spreads (they
+    # are still ENCODED, just not seeds)
+    rtrain = rcorp.join(
+        cents.select(F.col("cell").alias("neighbor_id")), "neighbor_id", "left_anti"
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
+    cb = pq_codebooks(rtrain, m, n_codes, iters, "neighbor_id", vec_col)
+    # cell carried through encoding: (neighbor_id, cell, sub, code) in
+    # ONE corpus pass — no corpus-sized re-join to attach cells
+    codes = pq_encode(
+        rcorp, cb, m, "neighbor_id", vec_col, out_id="neighbor_id", carry=("cell",)
+    )
+    rq = _residuals(queries, cents, id_col, vec_col, "query_id", n_probe=n_probe)
+    qsv = pq_subvectors(rq, m, "query_id", vec_col, out_id="query_id", carry=("cell",))
+    dtab = _adc_table(qsv, cb)
+    return _adc_top_k(codes.join(F.broadcast(dtab), ["cell", "sub", "code"]), k)
+
+
+def ivfpq_encode(
+    vectors: DataFrame,
+    cents: DataFrame,
+    codebooks: DataFrame,
+    m: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(neighbor_id, cell, sub, code): the IVFPQ kind's rows — each
+    vector's coarse cell assigned and carried through PQ encoding in
+    ONE pass, the layout the persisted ``codes/`` store partitions by
+    cell (no corpus-sized join to re-attach the cell)."""
+    assigned = ivf_assign(
+        vectors, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
+    )
+    return pq_encode(
+        assigned, codebooks, m, "neighbor_id", vec_col,
+        out_id="neighbor_id", carry=("cell",),
+    )
+
+
+def ivfpq_probe(
+    cents: DataFrame,
+    codebooks: DataFrame,
+    codes: DataFrame,
+    queries: DataFrame,
+    m: int,
+    n_probe: int = 4,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, neighbor_id, dist): the IVFPQ kind's probe — each
+    query's ``n_probe`` nearest cells of ``cents``, then the ADC terms
+    of its lookup table summed over the ``codes`` (neighbor_id, cell,
+    sub, code) of those cells only, cut by :func:`top_k`. A persisted
+    codes scan receives the probed cells as a partition filter, and
+    each surviving candidate costs m table additions."""
+    probes = ivf_assign(
+        queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id"
+    ).select("query_id", "cell")
+    dtab = _adc_table(
+        pq_subvectors(queries, m, id_col, vec_col, out_id="query_id"), codebooks
+    )
+    return _adc_top_k(
+        codes.join(F.broadcast(probes), "cell").join(
+            F.broadcast(dtab), ["query_id", "sub", "code"]
+        ),
+        k,
     )
 
 
@@ -960,8 +1024,6 @@ def pq_variance_perm(
     One corpus pass (posexplode → per-dim moment agg on d keys), then
     window ranking over a d-row relation — the training cost is a
     scan, like every other *_codebooks call here."""
-    from pyspark.sql import Window
-
     x = corpus.select(
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "v")
     )
@@ -1161,28 +1223,19 @@ def sq8_topk(
     codes; the scan is still brute-force, so at 100 TB compose it with
     the IVF cells exactly like ivfpq_topk (the operator is the
     encode/score contract, not the pruning)."""
-    from pyspark.sql import Window
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    recon = _sq8_recon(c, corpus, vec_col).select("neighbor_id", "__c")
+    return top_k(_scored(recon, q, "dist", _round6(l2sq)), k, "dist")
 
-    # train once: ONE corpus scan for the d-row params, shared by
-    # encode and dequant (each would otherwise re-run the min/max agg)
+
+def _sq8_recon(vectors: DataFrame, corpus: DataFrame, vec_col: str) -> DataFrame:
+    """``vectors`` with ``__c`` replaced by its SQ8 reconstruction, under
+    params trained on ``corpus``'s ``vec_col`` — trained once: ONE
+    corpus scan for the d-row params, shared by encode and dequant
+    (each would otherwise re-run the min/max agg)."""
     pars = _sq8_params(sq8_minmax(corpus, vec_col))
-    recon = sq8_dequant(
-        sq8_encode(corpus, pars, vec_col, "__codes"), pars, "__codes", "__recon"
-    ).select(F.col(id_col).alias("neighbor_id"), "__recon")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__q"),
-    )
-    scored = (
-        recon.join(F.broadcast(qv))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dist", F.round(l2sq("__recon", "__q"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
+    return sq8_dequant(
+        sq8_encode(vectors, pars, "__c", "__codes"), pars, "__codes", "__c"
     )
 
 
@@ -1270,68 +1323,62 @@ def binary_hamming_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, neighbor_id, hamming): top-k by sign-signature
-    Hamming distance (id-asc ties — Hamming ties are dense, so the
-    tie-break is load-bearing for determinism). The coarse stage of
-    binary serving; see binary_rerank_topk for the production shape."""
-    from pyspark.sql import Window
+    Hamming distance (:func:`hamming_probe` over the in-memory
+    signatures). The coarse stage of binary serving; see
+    binary_rerank_topk for the production shape."""
+    sigs = binary_sigs(corpus, id_col, vec_col)
+    return hamming_probe(sigs, queries, k, id_col, vec_col)
 
-    c = sign_signature(corpus, vec_col, "__sc").select(
-        F.col(id_col).alias("neighbor_id"), "__sc"
-    )
-    q = sign_signature(queries, vec_col, "__sq").select(
-        F.col(id_col).alias("query_id"), "__sq"
-    )
-    scored = (
-        c.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("hamming", hamming("__sc", "__sq"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "hamming")
+
+def binary_sigs(
+    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """(neighbor_id, sig): the binary kind's rows — each vector's
+    :func:`sign_signature`."""
+    return sign_signature(vectors, vec_col, "sig").select(
+        F.col(id_col).alias("neighbor_id"), "sig"
     )
 
 
-def _l2_sides(
-    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(corpus as (neighbor_id, __c), queries as (query_id, __q)), the
-    vectors cast to array<double> for an exact L2 stage."""
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__c"),
+def hamming_probe(
+    sigs: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, neighbor_id, hamming): the binary kind's probe — the
+    query signatures against every corpus signature of ``sigs``
+    (neighbor_id, sig), cut by :func:`top_k` (Hamming ties are dense,
+    so the id-asc tie-break is load-bearing for determinism). The scan
+    reads every signature by design: XOR + popcount is the cheapest
+    whole-corpus metric."""
+    c = sigs.select("neighbor_id", F.col("sig").alias("__c"))
+    q = binary_sigs(queries, id_col, vec_col).select(
+        F.col("neighbor_id").alias("query_id"), F.col("sig").alias("__q")
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__q"),
-    )
-    return cv, qv
+    return top_k(_scored(c, q, "hamming", hamming), k, "hamming")
 
 
-def _exact_l2_rerank(
-    cand: DataFrame, cv: DataFrame, qv: DataFrame, k: int
+def exact_l2_rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, neighbor_id, dist): the second stage of the staged
-    funnels — the (query_id, neighbor_id) candidates re-scored with
-    exact 6dp L2² over the _l2_sides vectors, top-k per query with
-    id-asc ties."""
-    from pyspark.sql import Window
-
+    funnels — the (query_id, neighbor_id) candidates ``cand`` re-scored
+    with exact 6dp L2² over the raw ``corpus`` and ``queries`` vectors,
+    cut by :func:`top_k`."""
+    c, q = _sides(corpus, queries, id_col, vec_col)
     scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("dist", F.round(l2sq("__c", "__q"), 6))
+        cand.join(c, "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("dist", F.round(l2sq("__c", _checked("__q", "__c")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
-    )
+    return top_k(scored, k, "dist")
 
 
 def binary_rerank_topk(
@@ -1352,8 +1399,7 @@ def binary_rerank_topk(
     cand = binary_hamming_topk(corpus, queries, rerank, id_col, vec_col).select(
         "query_id", "neighbor_id"
     )
-    cv, qv = _l2_sides(corpus, queries, id_col, vec_col)
-    return _exact_l2_rerank(cand, cv, qv, k)
+    return exact_l2_rerank(cand, corpus, queries, k, id_col, vec_col)
 
 
 def matryoshka_topk(
@@ -1374,30 +1420,15 @@ def matryoshka_topk(
     the bulk of the scan — the I/O win matters most at 100 TB where
     the scan is storage-bound. Same funnel shape as binary_rerank_topk
     with the prefix metric swapped in."""
-    from pyspark.sql import Window
-
-    cv, qv = _l2_sides(corpus, queries, id_col, vec_col)
-    coarse = (
-        cv.select(
-            "neighbor_id", F.slice("__c", 1, prefix_dims).alias("__cp")
-        )
-        .join(
-            F.broadcast(
-                qv.select(
-                    "query_id", F.slice("__q", 1, prefix_dims).alias("__qp")
-                )
-            )
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("__cd", F.round(l2sq("__cp", "__qp"), 6))
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    coarse = _scored(
+        c.select("neighbor_id", F.slice("__c", 1, prefix_dims).alias("__c")),
+        q.select("query_id", F.slice("__q", 1, prefix_dims).alias("__q")),
+        "__cd",
+        _round6(l2sq),
     )
-    wc = Window.partitionBy("query_id").orderBy(F.asc("__cd"), F.asc("neighbor_id"))
-    cand = (
-        coarse.withColumn("__rn", F.row_number().over(wc))
-        .filter(F.col("__rn") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_l2_rerank(cand, cv, qv, k)
+    cand = top_k(coarse, rerank, "__cd").select("query_id", "neighbor_id")
+    return exact_l2_rerank(cand, corpus, queries, k, id_col, vec_col)
 
 
 def ivfsq_topk(
@@ -1417,38 +1448,23 @@ def ivfsq_topk(
     codes). Same determinism contract as the siblings: 6dp params and
     distances, id-asc ties; the cell is carried through encoding in
     the same one-pass layout as ivfpq_topk."""
-    from pyspark.sql import Window
-
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    assigned = ivf_assign(
-        corpus, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
+    assigned = ivf_assign(corpus, cents, id_col, vec_col, out_id="neighbor_id")
+    recon = _sq8_recon(
+        assigned.select("neighbor_id", F.col(vec_col).alias("__c"), "cell"),
+        corpus,
+        vec_col,
     )
-    pars = _sq8_params(sq8_minmax(corpus, vec_col))
-    recon = sq8_dequant(
-        sq8_encode(assigned, pars, vec_col, "__codes"), pars, "__codes", "__recon"
-    ).select("neighbor_id", "cell", "__recon")
     probes = ivf_assign(
         queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id"
     ).select("query_id", F.col(vec_col).cast("array<double>").alias("__q"), "cell")
-    scored = (
-        recon.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dist", F.round(l2sq("__recon", "__q"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "dist")
-    )
+    return top_k(_scored(recon, probes, "dist", _round6(l2sq), on="cell"), k, "dist")
 
 
 def ranking_metrics(
     approx: DataFrame,
     truth: DataFrame,
     k: int = 5,
-    order_col: str = "dist",
-    ascending: bool = True,
 ) -> DataFrame:
     """(query_id, mrr, ndcg): ranking-quality metrics of an ANN answer
     against an exact ground truth — the evaluation pair recall@k can't
@@ -1456,11 +1472,11 @@ def ranking_metrics(
     WHERE (a funnel that finds all 5 but ranks them last scores
     recall 1.0 and nDCG well below it).
 
-    ``approx``: (query_id, neighbor_id, <order_col>) — ranked by
-    (<order_col> asc|desc, neighbor_id asc), the engine's standard tie
-    contract. ``truth``: (query_id, neighbor_id) — the exact top-k set
-    (binary relevance). MRR = 1/rank of the first relevant result
-    (0 when none surface); nDCG@k = Σ rel_i/log2(i+1) normalized by
+    ``approx``: (query_id, neighbor_id, dist) — ranked by the
+    :func:`top_k` order (dist asc, neighbor_id asc). ``truth``:
+    (query_id, neighbor_id) — the exact top-k set (binary relevance).
+    MRR = 1/rank of the first relevant result (0 when none surface);
+    nDCG@k = Σ rel_i/log2(i+1) normalized by
     the all-relevant ideal. Per-term values are rounded 9dp and summed
     as DECIMAL(28,12) — the order-free reduce every cross-engine sum
     here uses — then rounded 6dp.
@@ -1468,13 +1484,8 @@ def ranking_metrics(
     Scale shape: one window over the |q|×k approx rows, one broadcast
     semi-join against the ≤|q|×k truth set, one hash agg on query_id —
     evaluation never touches the corpus."""
-    from pyspark.sql import Window
-
-    direction = F.asc(order_col) if ascending else F.desc(order_col)
-    w = Window.partitionBy("query_id").orderBy(direction, F.asc("neighbor_id"))
     ranked = (
-        approx.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= k)
+        _ranked(approx, k, "dist")
         .join(
             truth.select("query_id", "neighbor_id", F.lit(1).alias("__rel")),
             ["query_id", "neighbor_id"],
@@ -1483,10 +1494,10 @@ def ranking_metrics(
     )
     rel = F.coalesce(F.col("__rel"), F.lit(0))
     dcg_term = (
-        F.round(rel / F.log2(F.col("__r") + 1), 9).cast("decimal(28,12)")
+        F.round(rel / F.log2(F.col("__rn") + 1), 9).cast("decimal(28,12)")
     )
     rr_term = F.when(
-        rel == 1, F.round(F.lit(1.0) / F.col("__r"), 9)
+        rel == 1, F.round(F.lit(1.0) / F.col("__rn"), 9)
     ).otherwise(F.lit(0.0)).cast("decimal(28,12)")
     idcg = ideal_dcg(k)
     return (
@@ -1504,8 +1515,6 @@ def ideal_dcg(k: int) -> float:
     """The all-relevant DCG@k normalizer, rounded 9dp so both engines
     divide by the identical double literal (the oracle SQL embeds this
     same value — one definition, no drift)."""
-    import math
-
     return round(sum(1.0 / math.log2(i + 1) for i in range(1, k + 1)), 9)
 
 
@@ -1638,23 +1647,7 @@ def exact_l2_topk_set(
     all consume this, so every recall number in the repo is measured
     against the identical ground truth. Queries broadcast (the probe
     set is bounded); the corpus side stays partitioned."""
-    from pyspark.sql import Window
-
-    qv = q.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    scored = (
-        e.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-        )
-        .join(F.broadcast(qv))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("__d", F.round(l2sq("__cv", "__qv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("__d"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id")
+    c, qv = _sides(e, q, id_col, vec_col)
+    return top_k(_scored(c, qv, "dist", _round6(l2sq)), k, "dist").select(
+        "query_id", "neighbor_id"
     )

@@ -1614,9 +1614,9 @@ def _topk_cte(
 # ties, self-excluded) as ``exl2``/``extop`` CTEs — the single SQL
 # copy every recall / ranking / budget-curve audit embeds, so the
 # baseline contract cannot drift between them (the Spark twin is
-# _exact_l2_topk_set). ``src`` names the (vec_id, embedding) relation
-# the truth is computed over — ``embeddings`` for the fixture-table
-# family, the ``temb`` CTE for the text-featurized loop.
+# similarity.exact_l2_topk_set). ``src`` names the (vec_id, embedding)
+# relation the truth is computed over — ``embeddings`` for the
+# fixture-table family, the ``temb`` CTE for the text-featurized loop.
 def _exl2_base_sql(src: str = "embeddings", qpred: str = "vec_id < 8") -> str:
     return f"""
     exl2 AS (
@@ -1650,12 +1650,12 @@ def _recall_vs_exact_l2(
 ) -> DataFrame:
     """Spark side of the same audit: per-query recall@k of ``approx``
     (query_id, neighbor_id) against the exact L2 top-k over ``e`` —
-    the truth set comes from :func:`_exact_l2_topk_set`, the ONE Spark
+    the truth set comes from similarity.exact_l2_topk_set, the ONE Spark
     copy of the baseline (mirroring _EXL2_BASE_SQL)."""
     approx = approx.select(
         "query_id", "neighbor_id", F.lit(1).alias("__hit")
     )
-    exact = _exact_l2_topk_set(e, q, k)
+    exact = similarity.exact_l2_topk_set(e, q, k)
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -2307,7 +2307,7 @@ def q_sim_eval_funnel_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = similarity.binary_rerank_topk(
         e, q, k=_PQ_K, rerank=_BIN_RERANK
     )
-    truth = _exact_l2_topk_set(e, q)
+    truth = similarity.exact_l2_topk_set(e, q, _PQ_K)
     return similarity.ranking_metrics(approx, truth, k=_PQ_K)
 
 
@@ -2328,17 +2328,8 @@ def q_sim_eval_hamming_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = similarity.binary_hamming_topk(e, q, k=_PQ_K).withColumnRenamed(
         "hamming", "dist"
     )
-    truth = _exact_l2_topk_set(e, q)
+    truth = similarity.exact_l2_topk_set(e, q, _PQ_K)
     return similarity.ranking_metrics(approx, truth, k=_PQ_K)
-
-
-def _exact_l2_topk_set(e: DataFrame, q: DataFrame, k: int = _PQ_K) -> DataFrame:
-    """(query_id, neighbor_id): the exact-L2 truth set, mirroring
-    _EXL2_BASE_SQL. Now a thin delegate to
-    similarity.exact_l2_topk_set — the ONE Spark copy of the baseline,
-    shared with the persisted stores' staleness audit
-    (sinks/vector_index.index_recall)."""
-    return similarity.exact_l2_topk_set(e, q, k)
 
 
 _FUNNEL_BUDGETS = (8, 16, 32)
@@ -2403,27 +2394,12 @@ def q_sim_funnel_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.asc("hamming"), F.asc("neighbor_id")
     )
     ranked = ham.withColumn("rn", F.row_number().over(w)).localCheckpoint()
-    truth = _exact_l2_topk_set(e, q)
-    cv = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__c")
-    )
-    qv = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__q")
-    )
-    wrr = Window.partitionBy("query_id").orderBy(
-        F.asc("__d"), F.asc("neighbor_id")
-    )
+    truth = similarity.exact_l2_topk_set(e, q, _PQ_K)
     parts = []
     for b in _FUNNEL_BUDGETS:
-        top = (
-            ranked.filter(F.col("rn") <= b)
-            .select("query_id", "neighbor_id")
-            .join(cv, "neighbor_id")
-            .join(F.broadcast(qv), "query_id")
-            .withColumn("__d", F.round(similarity.l2sq("__c", "__q"), 6))
-            .withColumn("__rn2", F.row_number().over(wrr))
-            .filter(F.col("__rn2") <= _PQ_K)
-            .select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
+        cand = ranked.filter(F.col("rn") <= b).select("query_id", "neighbor_id")
+        top = similarity.exact_l2_rerank(cand, e, q, _PQ_K).select(
+            "query_id", "neighbor_id", F.lit(1).alias("__hit")
         )
         parts.append(
             truth.join(top, ["query_id", "neighbor_id"], "left")

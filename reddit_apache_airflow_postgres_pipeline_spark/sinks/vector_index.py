@@ -14,6 +14,11 @@ store kinds, declared once in :data:`KINDS`:
 * ``binary`` — ``<path>/sigs`` (neighbor_id, sig array<bigint>), the
   32x-compressed sign-bit form, with no trained parameters at all.
 
+Each kind's query runs the probe its in-memory operator runs
+(``similarity.ivf_probe`` / ``ivfpq_probe`` / ``hamming_probe``, all
+cut by ``similarity.top_k``) on the relations read from disk; this
+module scores nothing itself.
+
 Every data store is a counting_state SET store (``batch_id=<i>/…``
 dirs — build writes batch 0, each append adds the next batch id). The
 IVF stores partition each batch dir **by cell**, so a query probing
@@ -41,21 +46,20 @@ import shutil
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
-    cosine,
+    binary_sigs,
     exact_l2_topk_set,
-    hamming,
+    hamming_probe,
     ivf_assign,
     ivf_centroids,
+    ivf_probe,
+    ivfpq_encode,
+    ivfpq_probe,
     kmeans_refine,
-    l2sq,
     pq_codebooks,
-    pq_encode,
-    pq_subvectors,
-    sign_signature,
 )
 from reddit_apache_airflow_postgres_pipeline_spark.streaming import counting_state as _cs
 
@@ -258,18 +262,6 @@ def compact_store(
             shutil.rmtree(p, ignore_errors=True)
 
 
-def _top_k(scored: DataFrame, k: int, metric: str, desc: bool = False) -> DataFrame:
-    """(query_id, neighbor_id, metric): the ``k`` best neighbors per
-    query, ties broken by ascending neighbor id."""
-    order = F.desc(metric) if desc else F.asc(metric)
-    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", metric)
-    )
-
-
 # -- ivf: raw vectors in cell-partitioned postings -----------------------------
 
 
@@ -322,50 +314,18 @@ def query_ivf_index(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
-    """(query_id, neighbor_id, score): exact cosine top-k within the
-    probed cells of a persisted index. The ``cell IN (probed)`` join
-    key reaches the postings scan as a partition filter — only the
-    probed directories are read."""
+    """(query_id, neighbor_id, score): similarity.ivf_probe — the probe
+    ivf_knn runs — over the persisted centroids and postings. The
+    ``cell IN (probed)`` join key reaches the postings scan as a
+    partition filter — only the probed directories are read."""
     cents = spark.read.parquet(f"{path}/centroids")
     postings = read_postings(spark, path)
-    probes = ivf_assign(
-        queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id"
-    )
-    qv = probes.select("query_id", F.col(vec_col).alias("__qv"), "cell")
-    cv = postings.select("neighbor_id", F.col(vec_col).alias("__cv"), "cell")
-    score = F.round(cosine(F.col("__cv"), F.col("__qv")), round_digits)
-    scored = (
-        cv.join(F.broadcast(qv), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", score)
-    )
-    return _top_k(scored, k, "score", desc=True)
+    return ivf_probe(cents, postings, queries, n_probe, k, id_col, vec_col)
 
 
 # -- ivfpq: the coarse cells prune, the PQ codes shrink each posting to m
 # small ints — the layout a billion-vector served index actually stores.
-
-
-def _pq_codes(
-    vectors: DataFrame,
-    cents: DataFrame,
-    cb: DataFrame,
-    m: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(neighbor_id, sub, code, cell): the cell assigned and carried
-    through encoding in ONE pass — no corpus-sized join to re-attach it
-    before the partitioned write."""
-    assigned = ivf_assign(
-        vectors, cents, id_col, vec_col, n_probe=1, out_id="neighbor_id"
-    )
-    return pq_encode(
-        assigned, cb, m, "neighbor_id", vec_col,
-        out_id="neighbor_id", carry=("cell",),
-    )
 
 
 def write_ivfpq_index(
@@ -384,7 +344,7 @@ def write_ivfpq_index(
     store."""
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
     cb = pq_codebooks(corpus, m, n_codes, iters, id_col, vec_col)
-    codes = _pq_codes(corpus, cents, cb, m, id_col, vec_col)
+    codes = ivfpq_encode(corpus, cents, cb, m, id_col, vec_col)
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     cb.write.mode("overwrite").parquet(f"{path}/codebooks")
     _replace_store(path, "ivfpq", codes, n_cells=n_cells, m=m, n_codes=n_codes)
@@ -404,7 +364,7 @@ def append_to_ivfpq_index(
         cents = spark.read.parquet(f"{path}/centroids")
         cb = spark.read.parquet(f"{path}/codebooks")
         m = _codes_m(spark, path, cb)
-        return _pq_codes(new_vectors, cents, cb, m, id_col, vec_col)
+        return ivfpq_encode(new_vectors, cents, cb, m, id_col, vec_col)
 
     _append_delta(new_vectors, path, "ivfpq", id_col, batch_id, encode)
 
@@ -426,35 +386,17 @@ def query_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(query_id, neighbor_id, dist): ADC top-k within the probed cells
-    of a persisted IVFPQ index. The ``cell`` membership of the probed
-    set reaches the codes scan as a partition filter, and each
-    surviving candidate costs m lookup-table additions — the pruning
-    AND the compression of a served big-corpus index, with the same
-    rounding ladder as similarity.ivfpq_topk (equality pinned by
-    tests/test_vector_index.py)."""
+    """(query_id, neighbor_id, dist): similarity.ivfpq_probe — the probe
+    ivfpq_topk runs — over the persisted centroids, codebooks and
+    codes. The ``cell`` membership of the probed set reaches the codes
+    scan as a partition filter, and each surviving candidate costs m
+    lookup-table additions."""
     cents = spark.read.parquet(f"{path}/centroids")
     cb = spark.read.parquet(f"{path}/codebooks")
     m = _codes_m(spark, path, cb)
-    codes = read_codes(spark, path)
-    probes = ivf_assign(
-        queries, cents, id_col, vec_col, n_probe=n_probe, out_id="query_id"
-    ).select("query_id", "cell")
-    qsv = pq_subvectors(queries, m, id_col, vec_col, out_id="query_id")
-    dtab = qsv.join(F.broadcast(cb), "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        F.round(l2sq("svec", "cv"), 9).cast("decimal(28,12)").alias("__term"),
+    return ivfpq_probe(
+        cents, cb, read_codes(spark, path), queries, m, n_probe, k, id_col, vec_col
     )
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(dtab), ["query_id", "sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("__term").cast("double"), 6).alias("dist"))
-    )
-    return _top_k(scored, k, "dist")
 
 
 # -- binary: sign-bit signatures (operators/similarity.sign_signature). The
@@ -464,12 +406,6 @@ def query_ivfpq_index(
 # which is why the store keeps no inner partitioning to prune by.
 
 
-def _signatures(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return sign_signature(vectors, vec_col, "sig").select(
-        F.col(id_col).alias("neighbor_id"), "sig"
-    )
-
-
 def write_binary_index(
     corpus: DataFrame,
     path: str,
@@ -477,7 +413,7 @@ def write_binary_index(
     vec_col: str = "embedding",
 ) -> None:
     """Build and persist the ``sigs/`` signature store."""
-    _replace_store(path, "binary", _signatures(corpus, id_col, vec_col), word_bits=32)
+    _replace_store(path, "binary", binary_sigs(corpus, id_col, vec_col), word_bits=32)
 
 
 def append_to_binary_index(
@@ -492,7 +428,7 @@ def append_to_binary_index(
     pinned by tests/test_vector_index.py)."""
     _append_delta(
         new_vectors, path, "binary", id_col, batch_id,
-        lambda spark: _signatures(new_vectors, id_col, vec_col),
+        lambda spark: binary_sigs(new_vectors, id_col, vec_col),
     )
 
 
@@ -504,20 +440,11 @@ def query_binary_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(query_id, neighbor_id, hamming): Hamming top-k of the query
-    signatures against the stored corpus signatures (id-asc ties). For
-    the exact-rerank funnel, feed these candidates to the caller's raw
-    corpus exactly like similarity.binary_rerank_topk's second stage."""
-    sigs = read_sigs(spark, path)
-    q = sign_signature(queries, vec_col, "__sq").select(
-        F.col(id_col).alias("query_id"), "__sq"
-    )
-    scored = (
-        sigs.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("hamming", hamming("sig", "__sq"))
-    )
-    return _top_k(scored, k, "hamming")
+    """(query_id, neighbor_id, hamming): similarity.hamming_probe — the
+    probe binary_hamming_topk runs — over the stored signatures. For
+    the exact-rerank funnel, feed these candidates to
+    similarity.exact_l2_rerank with the caller's raw corpus."""
+    return hamming_probe(read_sigs(spark, path), queries, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------

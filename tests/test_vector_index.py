@@ -678,3 +678,46 @@ def test_full_compaction_equals_rebuild_from_survivors(spark, tmp_path):
         map(tuple, query_binary_index(spark, fresh_bx, q, k=5).collect())
     )
     assert served  # ivfpq probe produced rows (sanity on the earlier compare)
+
+
+def test_query_dim_mismatch_fails_loudly(spark, tmp_path):
+    """A query whose vector length differs from the corpus's fails with
+    both dimensions named — in the in-memory operators and in the
+    served probe — instead of returning the lowest neighbor ids with
+    NULL distances (zip_with pads the shorter side, and the NULLs rank
+    first)."""
+    import pytest
+
+    from reddit_apache_airflow_postgres_pipeline_spark.operators.similarity import (
+        exact_l2_topk_set,
+        knn_bruteforce,
+        pq_adc_topk,
+    )
+    from reddit_apache_airflow_postgres_pipeline_spark.sinks.vector_index import (
+        query_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 11) - 4.5 for j in range(8)])
+         for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(100 + i, [float((i + j) % 5) - 1.5 for j in range(6)]) for i in range(2)],
+        "vec_id long, embedding array<double>",
+    )
+    whole = r"query vector dim 6 != corpus vector dim 8"
+    halves = r"query subvector dim 3 != corpus subvector dim 4"
+    with pytest.raises(Exception, match=halves):
+        pq_adc_topk(corpus, queries, m=2, n_codes=4, k=3).collect()
+    with pytest.raises(Exception, match=whole):
+        exact_l2_topk_set(corpus, queries, k=3).collect()
+    with pytest.raises(Exception, match=whole):
+        knn_bruteforce(corpus, queries, k=3).collect()
+    path = str(tmp_path / "pq")
+    write_ivfpq_index(corpus, path, n_cells=4, m=2, n_codes=4)
+    with pytest.raises(Exception, match=halves):
+        query_ivfpq_index(spark, path, queries, n_probe=2, k=3).collect()
+    # a query of the corpus's own dimension still serves
+    assert query_ivfpq_index(spark, path, corpus.limit(2), n_probe=2, k=3).count() == 6
